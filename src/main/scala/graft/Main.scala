@@ -2,7 +2,8 @@ package graft
 
 import graft.report.AdvisorReport
 import graft.sources.{MetricsCsv, MetricsProm, MetricsTar}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The CLI the reference exposes (`python metrics_advisor.py <bundle>`,
   * metrics_advisor.py main): metrics bundle in → markdown advisor
@@ -47,8 +48,14 @@ object Main {
     if (mode.isEmpty) 3600L else mode(0).getLong(0)
   }
 
+  /** One advisor pass, each layer computed once: the cleaned signals
+    * feed step inference and the grid build from one scan, and one
+    * objective anomaly pass feeds both the advice join and the chart
+    * markers. Every frame persisted here is released before returning,
+    * also when the pass throws.
+    */
   def run(spark: SparkSession, input: String, objNames: Seq[String]): String = {
-    val signals =
+    val signals = (
       // any tar spelling routes to the sniffing tar reader — the
       // shipped bundles include plain-tar `cluster-4048.gz.tar`
       if (input.endsWith(".tar.gz") || input.endsWith(".tgz") ||
@@ -57,17 +64,29 @@ object Main {
       else if (input.endsWith(".prom") || input.endsWith(".txt"))
         MetricsProm.signals(spark, input)
       else MetricsCsv.read(spark, input)
-    // bucket = 40 samples, the reference's count_bucket × sample step
-    // (metrics_advisor.py:124-125: 40 × 15 s = 10 min on its bundles)
-    val step = inferStepSec(signals)
-    val cfg = AdvisorReport.Config(objNames = objNames,
-      stepSec = step, bucketSec = 40L * step)
-    val grid = AdvisorReport.gatedGrid(signals, cfg)
-    val advice = AdvisorReport.adviseOnGrid(grid, cfg)
-    val report = AdvisorReport.renderMarkdown(advice, Some(grid), cfg = cfg)
-    // render collected everything it needs — release the cached grid
-    AdvisorReport.release(grid)
-    report
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    var grid: Option[DataFrame] = None
+    var anomalies: Option[DataFrame] = None
+    try {
+      // bucket = 40 samples, the reference's count_bucket × sample step
+      // (metrics_advisor.py:124-125: 40 × 15 s = 10 min on its bundles)
+      val step = inferStepSec(signals)
+      val cfg = AdvisorReport.Config(objNames = objNames,
+        stepSec = step, bucketSec = 40L * step)
+      val g = AdvisorReport.gatedGrid(signals, cfg)
+      grid = Some(g)
+      val a = AdvisorReport.objectiveAnomalies(g, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+      anomalies = Some(a)
+      // the detector's series-length stash has scanned, and so cached,
+      // the whole grid: nothing reads the signals again
+      signals.unpersist()
+      val advice = AdvisorReport.adviseOnGrid(g, cfg, a)
+      AdvisorReport.renderMarkdown(advice, Some(g), cfg = cfg, anomalies = Some(a))
+    } finally {
+      signals.unpersist()
+      grid.foreach(AdvisorReport.release)
+      anomalies.foreach(_.unpersist())
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -12,13 +12,16 @@ import org.apache.spark.sql.functions._
   * metrics_advisor.py:146-164 gates and detects level shifts, so a
   * drift detector is the missing third verdict).
   *
-  * Both statistics are pairwise over each signal's dense grid — a
-  * deliberate bounded quadratic: the 1-h resampled grid holds at most
-  * (retention / 3600) points per signal regardless of corpus size, so
-  * the per-signal pair count is a constant set by the retention
-  * window, not by data scale; signals parallelize embarrassingly. The
-  * self-join is an equi-join on the signal key (one shuffle), and the
-  * pair predicate `ta < tb` prunes inside each hash bucket.
+  * Both statistics are pairwise over each signal's dense grid, and the
+  * grid holds at most (retention / step) points per signal regardless
+  * of corpus size; signals parallelize embarrassingly.
+  *   - Mann-Kendall needs only the integer S = Σ sign(x_j − x_i), n and
+  *     the tie term, so it is one per-signal kernel (SignalKernel): the
+  *     series is ranked by value and S counted with a Fenwick tree in
+  *     time order — O(n log n), no pair is ever materialized.
+  *   - Theil-Sen needs the median of every pairwise slope, so it keeps
+  *     the self-join: an equi-join on the signal key (one shuffle), with
+  *     the pair predicate `ta < tb` pruning inside each hash bucket.
   *
   * Determinism: S, n, and the tie correction are exact integers;
   * slopes and z ride fixed IEEE sequences over bit-identical grid
@@ -27,10 +30,9 @@ import org.apache.spark.sql.functions._
   */
 object Trend {
 
-  /** The grid projection fans out to both self-join sides (and, for
-    * Mann-Kendall, the n and tie aggregates) — persist it so the
-    * upstream events→resample→fill pipeline runs once, not once per
-    * consumer (same contract as spearmanMatrix: released by
+  /** The grid projection fans out to both self-join sides — persist it
+    * so the upstream events→resample→fill pipeline runs once, not once
+    * per side (same contract as spearmanMatrix: released by
     * `spark.catalog.clearCache()`).
     */
   private def gridOnce(grid: DataFrame): DataFrame =
@@ -45,35 +47,101 @@ object Trend {
     a.join(b, Seq("name", "node")).filter(col("ta") < col("tb"))
   }
 
-  /** Mann-Kendall trend test per signal: S = Σ_{i<j} sign(x_j − x_i),
-    * tie-corrected variance, and the standard normal statistic
-    * z = (S∓1)/√Var(S). `trend` classifies on the ROUNDED z against
-    * `zCrit` (two-sided 5% by default) so the verdict row set is
-    * engine-deterministic. Signals with fewer than two samples carry
-    * no pairs and drop out.
+  /** Mann-Kendall trend test per signal: S = Σ_{i<j} sign(x_j − x_i)
+    * over the pairs with t_i < t_j, tie-corrected variance, and the
+    * standard normal statistic z = (S∓1)/√Var(S). `trend` classifies on
+    * the ROUNDED z against `zCrit` (two-sided 5% by default) so the
+    * verdict row set is engine-deterministic. Signals without a pair
+    * (fewer than two distinct timestamps) drop out.
+    *
+    * One kernel pass per signal computes the exact integers (n, S, tie
+    * term) — value-identical to summing sign(x_j − x_i) in SQL over the
+    * self-joined pairs, including its edge cases: ties group by value
+    * with −0.0 ≡ 0.0 (Spark's grouping), and a NaN difference (a NaN
+    * sample, or equal infinities) poisons the double sum, whose cast
+    * to BIGINT is 0. z and `trend` are column expressions over these
+    * integers. Values must be non-null (every grid is).
     */
   def mannKendall(grid: DataFrame, zCrit: Double = 1.96): DataFrame = {
-    val g = gridOnce(grid)
-    val sAgg = pairs(g).groupBy("name", "node")
-      .agg(sum(signum(col("vb") - col("va"))).cast("bigint").as("s"))
-    val nAgg = g.groupBy("name", "node").agg(count(lit(1)).as("n"))
-    val ties = g.groupBy("name", "node", "gval")
-      .agg(count(lit(1)).as("t")).filter(col("t") > 1)
-      .groupBy("name", "node")
-      .agg(sum(col("t") * (col("t") - 1) * (lit(2) * col("t") + 5)).as("tie_num"))
+    val spark = grid.sparkSession
+    import spark.implicits._
+    val stats = SignalKernel.perSignalD(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) {
+      (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
+        val pts = it.map(r => (r._3, r._4)).toArray
+        // S boxed: a nullable BIGINT like the SQL sum it replaces, so
+        // the output schema (and any parquet written from it) is unchanged
+        mannKendallS(pts).map { case (s, tieNum) =>
+          (key._1, key._2, pts.length.toLong, java.lang.Long.valueOf(s), tieNum)
+        }
+    }.toDF("name", "node", "n", "s", "tie_num")
     val varS = (col("n") * (col("n") - 1) * (lit(2) * col("n") + 5) -
-      coalesce(col("tie_num"), lit(0L))).cast("double") / lit(18.0)
+      col("tie_num")).cast("double") / lit(18.0)
     val sd = col("s").cast("double")
     val z = when(col("s") > 0, (sd - 1.0) / sqrt(col("var_s")))
       .when(col("s") < 0, (sd + 1.0) / sqrt(col("var_s")))
       .otherwise(lit(0.0))
-    nAgg.join(sAgg, Seq("name", "node"))
-      .join(ties, Seq("name", "node"), "left")
+    stats
       .withColumn("var_s", varS)
       .withColumn("z", r4(z))
       .withColumn("trend",
         when(col("z") > zCrit, 1).when(col("z") < -zCrit, -1).otherwise(0))
       .select("name", "node", "n", "s", "z", "trend")
+  }
+
+  /** (S, Σ t(t−1)(2t+5) over tied-value groups) of one series of
+    * (time, value) samples, or None when no two samples differ in time.
+    */
+  private def mannKendallS(pts: Array[(Long, Double)]): Option[(Long, Long)] = {
+    val n = pts.length
+    val byTime = pts.sortBy(_._1)
+    val t = byTime.map(_._1)
+    if (t(0) == t(n - 1)) return None
+    // Spark's value grouping: −0.0 ≡ 0.0, every NaN equal (Double.compare)
+    val v = byTime.map(p => if (p._2 == 0.0) 0.0 else p._2)
+    val sorted = v.clone()
+    java.util.Arrays.sort(sorted)
+    val distinct = Array.newBuilder[Double]
+    var tieNum = 0L
+    var i = 0
+    while (i < n) {
+      var j = i + 1
+      while (j < n && java.lang.Double.compare(sorted(j), sorted(i)) == 0) j += 1
+      val c = (j - i).toLong
+      tieNum += c * (c - 1) * (2 * c + 5)
+      distinct += sorted(i)
+      i = j
+    }
+    // a NaN difference (a NaN sample, or one infinity at two times) makes
+    // the SQL sum NaN, and NaN casts to BIGINT 0
+    def pairedAt(x: Double) = byTime.iterator.filter(_._2 == x).map(_._1).distinct.size > 1
+    if (v.exists(_.isNaN) || pairedAt(Double.PositiveInfinity) ||
+        pairedAt(Double.NegativeInfinity)) return Some((0L, tieNum))
+    // otherwise sign(x_j − x_i) is the order of the two values: count the
+    // smaller and larger earlier samples with a Fenwick tree over value
+    // ranks, inserting each timestamp group only after it is scored so
+    // equal-time samples never pair
+    val values = distinct.result()
+    val rank = v.map(x => java.util.Arrays.binarySearch(values, x) + 1)
+    val tree = new Array[Long](values.length + 1)
+    def below(r: Int): Long = {
+      var k = r; var c = 0L
+      while (k > 0) { c += tree(k); k -= k & -k }
+      c
+    }
+    var s = 0L
+    var g = 0
+    while (g < n) {
+      var e = g
+      while (e < n && t(e) == t(g)) e += 1
+      for (k <- g until e) s += below(rank(k) - 1) - (g - below(rank(k)))
+      for (k <- g until e) {
+        var r = rank(k)
+        while (r < tree.length) { tree(r) += 1; r += r & -r }
+      }
+      g = e
+    }
+    Some((s, tieNum))
   }
 
   /** Theil-Sen slope per signal: the median of all pairwise slopes —

@@ -15,10 +15,15 @@ import org.apache.spark.storage.StorageLevel
   * correlation table plus the normalized per-bucket series the
   * reference plots (metrics_advisor.py:198-224).
   *
-  * Caching contract: `adviseSignals` persists the shared grid
-  * (MEMORY_AND_DISK). It is released on `spark.catalog.clearCache()`;
-  * batch callers (Main, Bench) clear after consuming the result, and a
-  * long-lived session can call [[release]] explicitly.
+  * Caching contract: [[gatedGrid]] persists the shared grid
+  * (MEMORY_AND_DISK); a caller releases it with [[release]] once the
+  * report is rendered. `Main.run` runs each layer once and owns three
+  * persisted frames: the cleaned signals (read by step inference and
+  * the grid build, released as soon as the grid is cached), the grid,
+  * and the [[objectiveAnomalies]] frame that both the advice join and
+  * the chart markers read. It releases all three in a `finally`, so a
+  * failed pass leaves nothing cached. Operator-internal persists are
+  * tracked by `graft.Caches` and freed by `Caches.release()`.
   */
 object AdvisorReport {
 
@@ -98,25 +103,36 @@ object AdvisorReport {
     gateSignals(buildGridFromSignals(signals, cfg), cfg)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+  /** The anomaly union (outliers ∪ change points) of the objective
+    * signals, with the config's detector knobs.
+    *
+    * Detection runs on the OBJECTIVE slice only. The reference detects
+    * on every signal because candidate anomalies gate its per-bucket
+    * candidate lists; this pipeline's pinned deviation (SURVEY §4)
+    * replaces that gate with the per-bucket range gate, so objective
+    * anomalies are the only consumed output — running the
+    * permutation-test detector on non-objective signals would be pure
+    * waste (it was the dominant cost of the end-to-end query: the
+    * candidate population is |signals|, the objective set is O(1)).
+    */
+  def objectiveAnomalies(grid: DataFrame, cfg: Config = Config()): DataFrame =
+    ChangePoints.anomalyUnion(
+      grid.filter(col("name").isin(cfg.objNames: _*))
+        .select("name", "node", "tsb", "gval"), bucket = cfg.bucketSec,
+      permutations = cfg.permutations, maxPoints = cfg.maxPoints)
+
   /** Advisor core over an already-gated grid: the grid feeds three
     * independent analyses (outliers, change points, correlation), which
     * is why callers persist it.
     */
-  def adviseOnGrid(grid: DataFrame, cfg: Config = Config()): DataFrame = {
-    // Anomaly detection runs on the OBJECTIVE slice only. The reference
-    // detects on every signal because candidate anomalies gate its
-    // per-bucket candidate lists; this pipeline's pinned deviation
-    // (SURVEY §4) replaces that gate with the per-bucket range gate, so
-    // objective anomalies are the only consumed output — running the
-    // permutation-test detector on non-objective signals would be pure
-    // waste (it was the dominant cost of the end-to-end query: the
-    // candidate population is |signals|, the objective set is O(1)).
-    val anomalies = ChangePoints.anomalyUnion(
-      grid.filter(col("name").isin(cfg.objNames: _*))
-        .select("name", "node", "tsb", "gval"), bucket = cfg.bucketSec,
-      permutations = cfg.permutations, maxPoints = cfg.maxPoints)
+  def adviseOnGrid(grid: DataFrame, cfg: Config = Config()): DataFrame =
+    adviseOnGrid(grid, cfg, objectiveAnomalies(grid, cfg))
+
+  /** [[adviseOnGrid]] over an [[objectiveAnomalies]] frame the caller
+    * already holds (and also hands to [[renderMarkdown]]).
+    */
+  def adviseOnGrid(grid: DataFrame, cfg: Config, anomalies: DataFrame): DataFrame = {
     val anomalousObjBuckets = anomalies
-      .filter(col("name").isin(cfg.objNames: _*))
       .select(col("name").as("obj_name"), col("node").as("obj_node"), col("b"))
       .distinct()
     val ranked = Correlate.topCorr(
@@ -233,9 +249,13 @@ object AdvisorReport {
     * involved, both as data lines and as a rendered inline-SVG chart
     * (what the reference's PNGs draw). Collects only the
     * ranked table and the gated per-bucket series — both top-k-bounded.
+    * The chart markers come from `anomalies`, the [[objectiveAnomalies]]
+    * frame the advice was joined against; without it the detector runs
+    * once more here with the same config.
     */
   def renderMarkdown(advice: DataFrame, grid: Option[DataFrame] = None,
-                     limit: Int = 500, cfg: Config = Config()): String = {
+                     limit: Int = 500, cfg: Config = Config(),
+                     anomalies: Option[DataFrame] = None): String = {
     val rows = advice.limit(limit).collect()
     val sb = new StringBuilder
     sb.append("# Metrics advisor report\n\n")
@@ -288,13 +308,9 @@ object AdvisorReport {
       sb.append("\n")
       // anomaly positions for the vline markers: the reference draws
       // its axvlines at the CHANGEPOINT timestamps of the objective
-      // (metrics_advisor.py:156 builds anomaly_ts from cp only) — the
-      // objective-slice detector rerun here is O(objectives), tiny
+      // (metrics_advisor.py:156 builds anomaly_ts from cp only)
       val anomTs: Map[(String, String, Long), Seq[Long]] =
-        ChangePoints.anomalyUnion(
-            g.filter(col("name").isin(cfg.objNames: _*))
-              .select("name", "node", "tsb", "gval"),
-            bucket = cfg.bucketSec)
+        anomalies.getOrElse(objectiveAnomalies(g, cfg))
           .filter(col("kind") === "changepoint")
           .collect()
           .groupBy(r => (r.getAs[String]("name"), r.getAs[String]("node"),
@@ -329,7 +345,7 @@ object AdvisorReport {
       }
     }
     grid.foreach { g =>
-      val causal = causalSignals(g).limit(50).collect()
+      val causal = causalSignals(g, cfg).limit(50).collect()
       if (causal.nonEmpty) {
         sb.append("\n## Likely drivers (Granger)\n\n")
         sb.append("| objective | candidate | F | p |\n")

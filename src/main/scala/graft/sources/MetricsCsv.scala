@@ -1,8 +1,12 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Reader for the reference's reshaped-metrics bundles
   * (metrics_advisor.py:38-48): a directory of wide CSVs, one per metric,
@@ -14,8 +18,29 @@ import org.apache.spark.sql.functions._
   * the per-file DataFrames are lazy scans, and the union is one job. A
   * bundle has hundreds of metrics (small files); the heavy data lives in
   * the rows, which stream through the melt without materializing wide.
+  *
+  * `read` itself launches no Spark job: each file's header line is read
+  * in-process through the Hadoop FileSystem and named exactly as
+  * Spark's own header inference names it (same line filter, tokenizer
+  * and duplicate/empty-name rules), then handed to the scan as an
+  * explicit all-string schema. Letting Spark infer it instead costs one
+  * `take(1)` job per file — a bundle's worth of jobs before any data
+  * moves.
   */
 object MetricsCsv {
+
+  /** Column names Spark's `header=true` inference (without
+    * `inferSchema`) gives the file at `path`; none for a file with no
+    * non-empty line.
+    */
+  private def headerColumns(spark: SparkSession, path: Path): Array[String] = {
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(Map("header" -> "true"), true, conf.sessionLocalTimeZone)
+    CSVUtils.readHeaderLine(path, opts, spark.sparkContext.hadoopConfiguration)
+      .flatMap(line => Option(new CsvParser(opts.asParserSettings).parseLine(line)))
+      .map(CSVUtils.makeSafeHeader(_, conf.caseSensitiveAnalysis, opts))
+      .getOrElse(Array.empty)
+  }
 
   /** All signals from `*.csv` under `dir` with more than `minSamples`
     * rows per file (reference keeps files with > 20 rows).
@@ -32,21 +57,23 @@ object MetricsCsv {
     lazy val linkDir = java.nio.file.Files.createTempDirectory("graft_metrics_csv")
     val parts = files.toSeq.flatMap { p =>
       val name = p.getName.stripSuffix(".csv")
-      val readablePath =
+      val readable =
         if (p.getName.contains(":") && p.toUri.getScheme == "file") {
           val link = linkDir.resolve(p.getName.replace(":", "__"))
           if (!java.nio.file.Files.exists(link))
             java.nio.file.Files.createSymbolicLink(link, java.nio.file.Paths.get(p.toUri))
-          link.toUri.toString
-        } else p.toUri.toString
-      val df = spark.read.option("header", "true").option("inferSchema", "false")
-        .csv(readablePath)
-      val valueCols = df.columns.filter(_ != "timestamp")
+          new Path(link.toUri)
+        } else p
+      val columns = headerColumns(spark, readable)
+      val valueCols = columns.filter(_ != "timestamp")
       // a metric exported with zero node columns (cluster-4048 ships
       // one such file) carries no data — skip it rather than emit a
       // zero-arg stack() the parser rejects
-      if (valueCols.isEmpty || !df.columns.contains("timestamp")) None
+      if (valueCols.isEmpty || !columns.contains("timestamp")) None
       else {
+        val df = spark.read.option("header", "true")
+          .schema(StructType(columns.map(StructField(_, StringType))))
+          .csv(readable.toUri.toString)
         val stackArgs = valueCols.map(c => s"'${c.replace("'", "")}', CAST(`$c` AS DOUBLE)").mkString(", ")
         Some(df.selectExpr(
           s"'${name.replace("'", "")}' AS name",

@@ -143,6 +143,30 @@ class AdvisorReportSpec extends SparkTestBase {
     assert(md.contains("| click/n0 | queue/n0 |"))
   }
 
+  test("causal section uses the config's objectives, not the defaults") {
+    // neither objective is a default (click/error): the Granger section
+    // must still test the lagged driver against them
+    val rng = new scala.util.Random(41)
+    val n = 96
+    val drv = Array.tabulate(n)(_ => rng.nextGaussian() * 5.0)
+    val obj = new Array[Double](n)
+    for (t <- 2 until n)
+      obj(t) = 0.3 * obj(t - 1) + 0.9 * drv(t - 2) + rng.nextGaussian() * 0.2
+    def mk(name: String, xs: Array[Double]) =
+      (0 until n).map(i => (name, "n0", T0 + i * 3600L, xs(i)))
+    val sig = (mk("p99_latency", obj) ++ mk("queue", drv) ++
+      mk("noisefloor", Array.tabulate(n)(_ => rng.nextGaussian() * 5.0)))
+      .toDF("name", "node", "tsec", "value")
+    val own = AdvisorReport.Config(objNames = Seq("p99_latency", "heap_size"))
+    val grid = AdvisorReport.gatedGrid(sig, own)
+    try {
+      val md = AdvisorReport.renderMarkdown(
+        AdvisorReport.adviseOnGrid(grid, own), Some(grid), cfg = own)
+      assert(md.contains("## Likely drivers (Granger)"), md.takeRight(400))
+      assert(md.contains("| p99_latency/n0 | queue/n0 |"), md.takeRight(400))
+    } finally AdvisorReport.release(grid)
+  }
+
   test("outlier-only anomalies assign buckets (cp ∪ outliers semantics, SURVEY §4)") {
     // the objective spikes once in day 2 — an outlier with NO
     // distributional change. The reference gates anomalies on

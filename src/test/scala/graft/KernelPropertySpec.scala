@@ -336,4 +336,73 @@ class KernelPropertySpec extends SparkTestBase {
       assert(got == Set((1L, 2L)), s"cap=$cap: $got")
     }
   }
+
+  test("mannKendall kernel equals the self-join formula over 60 random grids") {
+    // the pre-kernel formulation, kept verbatim as the reference: S by
+    // self-join over ta < tb, ties by value grouping, z by the same
+    // column sequence
+    def reference(g: org.apache.spark.sql.DataFrame) = {
+      val a = g.select(col("name"), col("node"), col("tsb").as("ta"), col("gval").as("va"))
+      val b = g.select(col("name"), col("node"), col("tsb").as("tb"), col("gval").as("vb"))
+      val sAgg = a.join(b, Seq("name", "node")).filter(col("ta") < col("tb"))
+        .groupBy("name", "node")
+        .agg(sum(signum(col("vb") - col("va"))).cast("bigint").as("s"))
+      val nAgg = g.groupBy("name", "node").agg(count(lit(1)).as("n"))
+      val ties = g.groupBy("name", "node", "gval")
+        .agg(count(lit(1)).as("t")).filter(col("t") > 1)
+        .groupBy("name", "node")
+        .agg(sum(col("t") * (col("t") - 1) * (lit(2) * col("t") + 5)).as("tie_num"))
+      val varS = (col("n") * (col("n") - 1) * (lit(2) * col("n") + 5) -
+        coalesce(col("tie_num"), lit(0L))).cast("double") / lit(18.0)
+      val sd = col("s").cast("double")
+      val z = when(col("s") > 0, (sd - 1.0) / sqrt(col("var_s")))
+        .when(col("s") < 0, (sd + 1.0) / sqrt(col("var_s")))
+        .otherwise(lit(0.0))
+      nAgg.join(sAgg, Seq("name", "node"))
+        .join(ties, Seq("name", "node"), "left")
+        .withColumn("var_s", varS)
+        .withColumn("z", Num.r4(z))
+        .withColumn("trend",
+          when(col("z") > 1.96, 1).when(col("z") < -1.96, -1).otherwise(0))
+        .select("name", "node", "n", "s", "z", "trend")
+    }
+    val rng = new scala.util.Random(0x3a4bL)
+    // few distinct values → many ties; −0.0 beside 0.0 must tie
+    val palette = Array(-2.5, -1.0, -0.0, 0.0, 0.5, 1.0, 3.25)
+    val special = Array(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val rows = (0 until 60).flatMap { gi =>
+      val len = gi % 6 match {
+        case 0 => 1
+        case 1 => 2
+        case _ => 3 + rng.nextInt(40)
+      }
+      val constant = gi % 7 == 3
+      // every tenth grid repeats timestamps (no pair within a repeat);
+      // every ninth carries a NaN or an infinity
+      val ts = (0 until len).map(i => if (gi % 10 == 4) (i / 2) * 60L else i * 60L)
+      val vs = (0 until len).map { i =>
+        if (constant) 1.5
+        else if (gi % 9 == 5 && i == len / 2) special(rng.nextInt(special.length))
+        else if (rng.nextInt(4) == 0) rng.nextGaussian()
+        else palette(rng.nextInt(palette.length)) + (if (gi % 5 == 2) i * 0.25 else 0.0)
+      }
+      ts.zip(vs).map { case (t, v) => (s"s$gi", "n" + (gi % 3), t, v) }
+    }
+    val g = rng.shuffle(rows).toDF("name", "node", "tsb", "gval")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("name", "node").as[(String, String, Long, Long, Double, Int)].collect().toSeq
+    val kernel = graft.operators.Trend.mannKendall(g)
+    assert(kernel.schema == reference(g).schema)
+    val got = sorted(kernel)
+    val want = sorted(reference(g))
+    assert(got.map(_._1).toSet.size >= 40, s"too few signals survive: ${got.size}")
+    assert(got.exists(_._6 != 0), "no grid drifts")
+    assert(got.exists(r => r._4 == 0 && r._3 > 2), "no grid has a zero S")
+    assert(got.size == want.size, s"signal sets differ: ${got.map(_._1)} vs ${want.map(_._1)}")
+    got.zip(want).foreach { case (a, b) =>
+      // z compares by bits: exact equality, NaN included
+      assert(a.copy(_5 = 0.0) == b.copy(_5 = 0.0) &&
+        java.lang.Double.compare(a._5, b._5) == 0, s"kernel $a vs self-join $b")
+    }
+  }
 }

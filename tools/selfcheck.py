@@ -12,6 +12,9 @@ OUTDIR = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 FLAGS = set(a for a in sys.argv[3:] if a.startswith("--"))
 ONLY = [a for a in sys.argv[3:] if not a.startswith("--")]
 
+# the checkout this script belongs to: graft.Verify is built and run there
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -24,7 +27,7 @@ def run_verify():
         # previous full dump are compared as-is — pass a fresh OUTDIR if
         # that matters)
         env["SPARK_GRAFT_VERIFY_ONLY"] = ",".join(ONLY)
-    r = subprocess.run(cmd, cwd="/root/repo", env=env, capture_output=True, text=True, timeout=1800)
+    r = subprocess.run(cmd, cwd=REPO, env=env, capture_output=True, text=True, timeout=1800)
     for line in (r.stdout + r.stderr).splitlines():
         if "[verify]" in line:
             print(line)
