@@ -26,17 +26,21 @@ object Bench {
     Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
       .foreach(t => Tables.table(spark, sfDir, t).count())
 
-    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // one run of a query: its wall, or the failure message if it
+    // threw (a failed query is never timed)
+    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Either[String, Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val d = (System.nanoTime() - t0) / 1e9
+      val out =
+        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Left(e.toString.linesIterator.next()) }
       // operators persist intra-query intermediates; drop them so later
       // runs aren't timed under earlier runs' cache pressure (release
       // covers the tracked operator persists; clearCache is the
       // belt-and-braces sweep for anything session-level)
       Caches.release()
       spark.catalog.clearCache()
-      d
+      out
     }
     // optional comma-separated subset for focused profiling runs; the
     // driver never sets it, so the committed artifact is always the
@@ -81,36 +85,39 @@ object Bench {
       // both runs (the r6 driver artifact's +125 s) still gets one
       // clean measurement.
       val started = (System.nanoTime() - benchT0) / 1e9
-      val first = timed(fn)
-      val best =
-        if (first <= 0.75) first
-        else {
-          val second = timed(fn)
+      val best = timed(fn).flatMap { first =>
+        if (first <= 0.75) Right(first)
+        else timed(fn).flatMap { second =>
           val m2 = math.min(first, second)
-          if (math.abs(first - second) > 0.5 * m2) math.min(m2, timed(fn)) else m2
+          if (math.abs(first - second) > 0.5 * m2) timed(fn).map(math.min(m2, _)) else Right(m2)
         }
+      }
+      best.left.foreach(msg => System.err.println(s"query $name failed: $msg"))
       (name, best, started)
     }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    val failedJson = results.collect { case (k, Left(msg), _) => "\"" + k + "\":\"" + jsonEscape(msg) + "\"" }
+      .mkString("{", ",", "}")
+    val timedOk = results.collect { case (k, Right(v), s0) => (k, v, s0) }
+    val qs = timedOk.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // per-query start offsets (seconds into the bench, 0.1 s grain):
     // lets a post-hoc reader attribute a timing burst to its wall-clock
     // window instead of guessing which queries a host stall hit
-    val t0s = results.map { case (k, _, s0) =>
+    val t0s = timedOk.map { case (k, _, s0) =>
       s"\"" + k + "\":" + (math.round(s0 * 10.0) / 10.0) }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"t0":$t0s,"sf":"$sfDir"}"""
+    val total = if (timedOk.nonEmpty) timedOk.map(_._2).sum else 0.0
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"t0":$t0s,"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
     // the full 303-query line above is ~15 KB and the driver's
     // artifact keeps only a few-KB stdout TAIL (BENCH_r6/r7 both show
     // `parsed: null` with the line's head cut off) — ALSO print a
     // compact summary LAST so a tail-window parse always sees one
     // complete JSON line; the untruncated map lives in BENCH_full.json
-    val slowest = results.sortBy(-_._2).take(25)
+    val slowest = timedOk.sortBy(-_._2).take(25)
       .map { case (k, v, _) => s"\"" + k + "\":" + (math.round(v * 1000.0) / 1000.0) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${math.round(total * 1000.0) / 1000.0},"unit":"sec","queries":$slowest,"n_queries":${results.length},"full":"BENCH_full.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${math.round(total * 1000.0) / 1000.0},"unit":"sec","queries":$slowest,"n_queries":${timedOk.length},"failed":$failedJson,"full":"BENCH_full.json","sf":"$sfDir"}""")
     // the driver's committed artifact truncates long stdout tails — also
     // persist the untruncated per-query map where it can be committed
     try {
@@ -127,5 +134,13 @@ object Bench {
         System.err.println(s"BENCH_full.json write failed: $e")
     }
     spark.stop()
+  }
+
+  /** `s` as the body of a JSON string literal. */
+  private def jsonEscape(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
   }
 }

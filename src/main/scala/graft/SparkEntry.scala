@@ -1000,9 +1000,12 @@ object SparkEntry {
       |  floor((t.gval - t.trend - s.seasonal + 1e-9) * 1e4 + 0.5) / 1e4 AS noise
       | FROM dtr t JOIN dsx s ON s.name = t.name AND s.node = t.node AND s.idx = t.idx)""".stripMargin
 
-  /** Exact-integer-moment NCC cells (mirrors Correlate.nccLag: quantize
-    * gval to ×1e4 HUGEINT, exact order-independent sums, fixed IEEE
-    * Pearson sequence). `cr` = rounded r per (obj, cand, bucket, lag).
+  /** Exact-integer-moment NCC cells: the equi-join formulation of
+    * Correlate.nccLag (quantize gval at 1e-9 of the series' max |gval|
+    * into HUGEINT, explode the lags, join on (bucket, index + lag),
+    * exact order-independent sums, fixed IEEE Pearson sequence) — an
+    * independent replay of the Spark per-candidate kernel, which must
+    * agree bit for bit. `cr` = rounded r per (obj, cand, bucket, lag).
     */
   private def SQL_NCC_CR_FROM(src: String): String =
     s"""mx AS (SELECT name, node, b, i, gval,

@@ -13,25 +13,26 @@ import org.apache.spark.sql.types.DecimalType
   * `ncc(a, b, lag_max=3)` then rank by |corr|).
   *
   * The reference loops obj×candidate×lag in Python on one core (~320 s).
-  * Here it is one equi-join: explode the small lag set, join the grids on
-  * (bucket, index+lag), and let a single hash-aggregate compute every
-  * (obj, cand, bucket, lag) Pearson cell. The obj side is a handful of
-  * metric names → broadcast; the cand side streams, so at 100 TB the
-  * cost is one shuffle of the candidate grid.
+  * Here [[nccLag]] is a per-candidate kernel: the objective slice (a
+  * handful of metric names × nodes × retention) is quantized once on the
+  * driver and broadcast; every candidate series is scored inside its own
+  * (name, node) group on the grid's existing signal partitioning, so at
+  * 100 TB the candidate grid is streamed in place — no exchange, no
+  * joined-row fan-out, no pair-keyed aggregate.
   *
   * Cross-engine determinism: the built-in `corr` aggregate is a parallel
   * double co-moment whose summation order (and algorithm) differs per
   * engine — ill-conditioned series (large mean, small variance) amplify
   * the divergence far past any rounding epsilon. Instead the grid value
-  * is quantized to an exact scaled integer (×1e4) and Pearson is computed
-  * from exact integer moment sums: Σx, Σy, Σxy, Σx², Σy² are
-  * order-independent in any engine, their int→double casts are correctly
-  * rounded (verified for Spark's BigDecimal and DuckDB's HUGEINT), and
-  * the final Pearson formula is a fixed IEEE-754 op sequence mirrored
-  * verbatim in the oracle SQL — so both engines produce bit-identical r.
-  * Pearson is invariant under positive affine maps, so quantization scale
-  * drops out; only the 1e-4 quantization of the inputs is a (declared)
-  * semantic contract.
+  * is quantized to an exact scaled integer ([[withQuant]]) and Pearson
+  * is computed from exact integer moment sums: Σx, Σy, Σxy, Σx², Σy² are
+  * order-independent in any engine, their int→double conversions are
+  * correctly rounded (Spark's BigDecimal, the JDK's BigInteger, DuckDB's
+  * HUGEINT), and the final Pearson formula is a fixed IEEE-754 op
+  * sequence mirrored verbatim in the oracle SQL — so every engine
+  * produces bit-identical r. Pearson is invariant under positive affine
+  * maps, so quantization scale drops out; only the 1e-9 relative
+  * quantization of the inputs is a (declared) semantic contract.
   */
 object Correlate {
 
@@ -83,41 +84,121 @@ object Correlate {
   }
 
   /** NCC cells: one row per (obj signal, cand signal, bucket, lag) with
-    * Pearson r over aligned grid samples. `minOverlap` drops cells whose
-    * aligned sample count is too small to be meaningful.
+    * Pearson r over aligned grid samples — objective sample i against
+    * candidate sample i + lag of the same bucket. `minOverlap` drops
+    * cells whose aligned sample count is too small to be meaningful.
+    *
+    * Exact-integer contract: each series is quantized as [[withQuant]]
+    * does; per (objective, bucket, lag) the kernel sums n, Σx, Σy, Σxy,
+    * Σx², Σy² in exact signed 128-bit integers ([[Sum128]]; Σx² passes
+    * 2⁶³ after about ten samples near the series' magnitude), converts
+    * each sum to double with one correctly rounded conversion, and
+    * hands the moments to [[pearsonFromMoments]] — the same values the
+    * DECIMAL sums of the equi-join formulation produce, bit for bit.
+    *
+    * Precondition: one row per (name, node, i) with a finite `gval`,
+    * which every `TimeSeries.gridOnePass` grid (and any bucket-gated
+    * slice of one) meets. The objective slice is collected to the
+    * driver when this is called.
+    *
+    * The DuckDB oracle (`SparkEntry.SQL_NCC_CR_FROM`) still replays the
+    * equi-join formulation — explode the lags, join on (bucket,
+    * index + lag), aggregate exact moments — as the independent check.
     */
   def nccLag(indexedGrid: DataFrame, objNames: Seq[String], lagMax: Int = 3,
-             minOverlap: Int = 8, pinBroadcast: Boolean = true): DataFrame = {
-    // obj and cand branches split the same quantized grid; persisted so
-    // the grid-build pipeline runs once, not once per branch. The
-    // result is lazy, so release follows the prefixJaccard convention:
-    // batch callers clearCache() after consuming, long-lived sessions
-    // rely on the ContextCleaner GC-ing the unreferenced frame.
-    val q = withQuant(indexedGrid).persist().tracked
-    val obj = q.filter(col("name").isin(objNames: _*))
-      .select(col("name").as("obj_name"), col("node").as("obj_node"),
-        col("b"), col("i"), col("qv").as("ov"))
-    val cand = q.filter(!col("name").isin(objNames: _*))
-      .select(col("name").as("cand_name"), col("node").as("cand_node"),
-        col("b").as("cb"), col("i").as("ci"), col("qv").as("cv"))
-    val moments = momentAggs("ov", "cv")
-    // the obj×lags side is a handful of signals (objNames × nodes ×
-    // retention) — pin the broadcast so the plan stays a
-    // BroadcastHashJoin with the candidate grid streaming regardless of
-    // what AQE estimates at 100× the data. `pinBroadcast = false` is
-    // the escape hatch for deployments whose objective set × retention
-    // outgrows the broadcast limit (the hint would then OOM where an
-    // AQE-chosen sort-merge join completes). Lags fan out inline on the
-    // obj rows (a generator in the same stage) rather than via a
-    // range-frame cross join — one fewer stage and broadcast build.
-    val objLags = obj.withColumn("lag",
-      explode(sequence(lit(-lagMax.toLong), lit(lagMax.toLong))))
-    val build = if (pinBroadcast) broadcast(objLags) else objLags
-    val cells = build
-      .join(cand, col("ci") === col("i") + col("lag") && col("cb") === col("b"))
-      .groupBy("obj_name", "obj_node", "cand_name", "cand_node", "b", "lag")
-      .agg(moments.head, moments.tail: _*)
+             minOverlap: Int = 8): DataFrame = {
+    val spark = indexedGrid.sparkSession
+    import spark.implicits._
+    val isObj = col("name").isin(objNames: _*)
+    val cols = Seq("name", "node", "b", "i", "gval").map(col)
+    val objs = indexedGrid.filter(isObj).select(cols: _*)
+      .as[(String, String, Long, Long, Double)].collect()
+      .groupBy(r => (r._1, r._2)).toArray
+      .map { case ((name, node), rs) => quantSeries(name, node, rs.map(r => (r._3, r._4, r._5))) }
+    val objBc = spark.sparkContext.broadcast(objs)
+    val lags = (-lagMax.toLong to lagMax.toLong).toArray
+    val cells = SignalKernel.perSignalBI(indexedGrid.filter(!isObj).select(cols: _*)) {
+      (key: (String, String), it: Iterator[(String, String, Long, Long, Double)]) =>
+        val c = quantSeries(key._1, key._2, it.map(r => (r._3, r._4, r._5)).toArray)
+        for {
+          o <- objBc.value.iterator
+          (b, (oi, oq)) <- o.buckets.iterator
+          (ci, cq) <- c.buckets.get(b).iterator
+          lag <- lags.iterator
+          m <- lagMoments(oi, oq, ci, cq, lag)
+        } yield (o.name, o.node, c.name, c.node, b, lag, m._1, m._2, m._3, m._4, m._5, m._6)
+    }.toDF("obj_name", "obj_node", "cand_name", "cand_node", "b", "lag",
+      "n", "sx", "sy", "sxy", "sxx", "syy")
     pearsonFromMoments(cells, minOverlap)
+  }
+
+  /** One series of the [[nccLag]] kernel: per bucket, the ascending
+    * sample indices and their [[withQuant]] values.
+    */
+  private final case class QSeries(name: String, node: String,
+                                   buckets: Map[Long, (Array[Long], Array[Long])])
+
+  /** [[withQuant]] over one whole series of (b, i, gval) rows: M is the
+    * series' max |gval| (1 if that is 0), q = floor(gval / M · 1e9 + 0.5)
+    * — the same IEEE op sequence, so the same integers.
+    */
+  private def quantSeries(name: String, node: String,
+                          rows: Array[(Long, Long, Double)]): QSeries = {
+    var mRaw = 0.0
+    rows.foreach(r => mRaw = math.max(mRaw, math.abs(r._3)))
+    val m = if (mRaw > 0) mRaw else 1.0
+    QSeries(name, node, rows.groupBy(_._1).map { case (b, rs) =>
+      val sorted = rs.sortBy(_._2)
+      b -> (sorted.map(_._2), sorted.map(r => math.floor(r._3 / m * 1e9 + 0.5).toLong))
+    })
+  }
+
+  /** Exact moments (n, Σx, Σy, Σxy, Σx², Σy²) of the pairs (x at index
+    * i, y at index i + lag), the sums correctly rounded to double; None
+    * when no index pairs up. Both index arrays are ascending.
+    */
+  private def lagMoments(xi: Array[Long], xq: Array[Long], yi: Array[Long],
+                         yq: Array[Long], lag: Long)
+      : Option[(Long, Double, Double, Double, Double, Double)] = {
+    val sx = new Sum128; val sy = new Sum128
+    val sxy = new Sum128; val sxx = new Sum128; val syy = new Sum128
+    var n = 0L; var p = 0; var r = 0
+    while (p < xi.length && r < yi.length) {
+      val d = yi(r) - (xi(p) + lag)
+      if (d < 0) r += 1
+      else if (d > 0) p += 1
+      else {
+        val x = xq(p); val y = yq(r)
+        n += 1; sx.add(x); sy.add(y)
+        sxy.addProduct(x, y); sxx.addProduct(x, x); syy.addProduct(y, y)
+        p += 1; r += 1
+      }
+    }
+    if (n == 0) None
+    else Some((n, sx.toDouble, sy.toDouble, sxy.toDouble, sxx.toDouble, syy.toDouble))
+  }
+
+  /** Exact signed 128-bit accumulator (two's complement hi:lo). */
+  private final class Sum128 {
+    private var hi = 0L
+    private var lo = 0L
+
+    def add(v: Long): Unit = add(v >> 63, v)
+
+    /** Adds the exact 128-bit product a·b. */
+    def addProduct(a: Long, b: Long): Unit = add(Math.multiplyHigh(a, b), a * b)
+
+    private def add(h: Long, l: Long): Unit = {
+      val s = lo + l
+      hi += h + (if (java.lang.Long.compareUnsigned(s, lo) < 0) 1L else 0L)
+      lo = s
+    }
+
+    /** The sum, correctly rounded to the nearest double. */
+    def toDouble: Double =
+      if (hi == (lo >> 63)) lo.toDouble
+      else new java.math.BigInteger(
+        java.nio.ByteBuffer.allocate(16).putLong(hi).putLong(lo).array()).doubleValue
   }
 
   /** For each (obj, cand, bucket): the lag with max |r| (mathbox max_corr,

@@ -38,7 +38,8 @@ import org.apache.spark.sql.functions.col
   *
   * Input: exactly 4 columns — name (string), node (string), a long
   * sort/time column, and the value column (Double for [[perSignalD]],
-  * Long for [[perSignalL]]).
+  * Long for [[perSignalL]]) — or 5 for [[perSignalBI]]: name, node,
+  * bucket (long), sample index (long), value (double).
   */
 private[operators] object SignalKernel {
   private implicit val keyEnc: Encoder[(String, String)] =
@@ -49,22 +50,27 @@ private[operators] object SignalKernel {
   private val rowEncL: Encoder[(String, String, Long, Long)] =
     Encoders.tuple(Encoders.STRING, Encoders.STRING,
       Encoders.scalaLong, Encoders.scalaLong)
+  private val rowEncBI: Encoder[(String, String, Long, Long, Double)] =
+    Encoders.tuple(Encoders.STRING, Encoders.STRING,
+      Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble)
 
   def perSignalD[U: Encoder](rows: DataFrame)(
       f: ((String, String), Iterator[(String, String, Long, Double)]) => IterableOnce[U])
-      : Dataset[U] =
-    rows.toDF("_1", "_2", "_3", "_4")
-      .as[(String, String, Long, Double)](rowEncD)
-      .groupBy(col("_1"), col("_2"))
-      .as[(String, String), (String, String, Long, Double)](keyEnc, rowEncD)
-      .flatMapGroups((k, it) => f(k, it).iterator)
+      : Dataset[U] = perSignal(rows, rowEncD)(f)
 
   def perSignalL[U: Encoder](rows: DataFrame)(
       f: ((String, String), Iterator[(String, String, Long, Long)]) => IterableOnce[U])
-      : Dataset[U] =
-    rows.toDF("_1", "_2", "_3", "_4")
-      .as[(String, String, Long, Long)](rowEncL)
+      : Dataset[U] = perSignal(rows, rowEncL)(f)
+
+  def perSignalBI[U: Encoder](rows: DataFrame)(
+      f: ((String, String), Iterator[(String, String, Long, Long, Double)]) => IterableOnce[U])
+      : Dataset[U] = perSignal(rows, rowEncBI)(f)
+
+  private def perSignal[T, U: Encoder](rows: DataFrame, rowEnc: Encoder[T])(
+      f: ((String, String), Iterator[T]) => IterableOnce[U]): Dataset[U] =
+    rows.toDF(rowEnc.schema.fieldNames.toIndexedSeq: _*)
+      .as[T](rowEnc)
       .groupBy(col("_1"), col("_2"))
-      .as[(String, String), (String, String, Long, Long)](keyEnc, rowEncL)
+      .as[(String, String), T](keyEnc, rowEnc)
       .flatMapGroups((k, it) => f(k, it).iterator)
 }

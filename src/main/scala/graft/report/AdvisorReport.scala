@@ -49,11 +49,6 @@ object AdvisorReport {
     // the operator-composed form pinned by TimeSeriesSpec)
     TimeSeries.gridOnePass(signals, cfg.stepSec, cfg.bucketSec)
 
-  /** Dense forward-filled grid from the events table. */
-  def buildGrid(events: DataFrame, cfg: Config = Config()): DataFrame =
-    buildGridFromSignals(
-      TimeSeries.signalsFromEvents(events, cfg.nodeMod), cfg)
-
   /** The reference's validity gate (metrics_advisor.py:146): drop
     * signals whose whole-series range is ≤ minRange — flat signals
     * carry no information and must not reach anomaly detection.

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -43,7 +44,9 @@ object MetricsCsv {
   }
 
   /** All signals from `*.csv` under `dir` with more than `minSamples`
-    * rows per file (reference keeps files with > 20 rows).
+    * non-NaN samples per (name, node) series (the reference keeps files
+    * with > 20 rows). One file scan per usable CSV; the gate is a
+    * `count(*) OVER (PARTITION BY name, node)` filter.
     */
   def read(spark: SparkSession, dir: String, minSamples: Int = 20): DataFrame = {
     // metric file names contain ':' (node_cpu:by_instance.csv), which
@@ -97,9 +100,10 @@ object MetricsCsv {
     // aggregates. Dropped BEFORE the sample gate so signal validity
     // counts real samples only.
     val clean = all.filter(col("value").isNotNull && !isnan(col("value")))
-    val keep = clean.groupBy("name", "node").agg(count(lit(1)).as("n_samples"))
+    // the sample gate is a window count, not an aggregate joined back to
+    // the rows: the join would scan (and parse) every CSV twice
+    clean.withColumn("n_samples", count(lit(1)).over(Window.partitionBy("name", "node")))
       .filter(col("n_samples") > minSamples)
-      .select("name", "node")
-    clean.join(keep, Seq("name", "node"))
+      .drop("n_samples")
   }
 }

@@ -282,16 +282,6 @@ object EventStream {
                key: String = "user_id"): DataFrame =
     events.join(org.apache.spark.sql.functions.broadcast(dim), Seq(key), "left")
 
-  /** Batch-equivalent per-user hourly activity for parity testing. */
-  def userActivity(events: DataFrame): DataFrame = {
-    val withTs = events
-      .withColumn("tstamp", timestamp_seconds(expr("ts div 1000000000")))
-    val wm = if (events.isStreaming) withTs.withWatermark("tstamp", "2 hours") else withTs
-    wm.groupBy(window(col("tstamp"), "1 hour"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("hour_start"), col("user_id"), col("n_events"))
-  }
-
   /** Streaming distinct-users sketch: the HLL registers of
     * [[graft.operators.Sketches.hllRegisters]] maintained AS the
     * streaming state — `max(ρ)` per (day window, bucket) is a plain

@@ -405,4 +405,83 @@ class KernelPropertySpec extends SparkTestBase {
         java.lang.Double.compare(a._5, b._5) == 0, s"kernel $a vs self-join $b")
     }
   }
+
+  test("nccLag kernel equals the exact-moment equi-join over random grids") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    // the pre-kernel formulation, kept as the reference: quantize per
+    // series, explode the lags on the objective rows, join on (bucket,
+    // index + lag), exact DECIMAL moment sums, the shared Pearson step
+    def reference(g: DataFrame, objNames: Seq[String], lagMax: Int, minOverlap: Int) = {
+      val mRaw = max(abs(col("gval"))).over(Window.partitionBy("name", "node"))
+      val q = g.withColumn("qv", floor((col("gval") / when(mRaw > 0, mRaw).otherwise(lit(1.0))) *
+        lit(1e9) + lit(0.5)).cast(org.apache.spark.sql.types.DecimalType(18, 0)))
+      val obj = q.filter(col("name").isin(objNames: _*))
+        .select(col("name").as("obj_name"), col("node").as("obj_node"),
+          col("b"), col("i"), col("qv").as("ov"))
+        .withColumn("lag", explode(sequence(lit(-lagMax.toLong), lit(lagMax.toLong))))
+      val cand = q.filter(!col("name").isin(objNames: _*))
+        .select(col("name").as("cand_name"), col("node").as("cand_node"),
+          col("b").as("cb"), col("i").as("ci"), col("qv").as("cv"))
+      val moments = graft.operators.Correlate.momentAggs("ov", "cv")
+      val cells = broadcast(obj)
+        .join(cand, col("ci") === col("i") + col("lag") && col("cb") === col("b"))
+        .groupBy("obj_name", "obj_node", "cand_name", "cand_node", "b", "lag")
+        .agg(moments.head, moments.tail: _*)
+      graft.operators.Correlate.pearsonFromMoments(cells, minOverlap)
+    }
+    val rng = new scala.util.Random(0x5cc1L)
+    val palette = Array(-3.0, -1.0, -0.0, 0.0, 0.5, 1.0, 2.0)
+    val objNames = Seq("o1", "o2")
+    for (trial <- 0 until 3) {
+      val width = Seq(6, 10, 24)(trial)
+      val rows = for {
+        name <- objNames ++ (0 until 6).map(c => s"c$c")
+        node <- Seq("n0", "n1")
+        series = rng.nextInt(1000)
+        // series start mid-bucket and end anywhere, so objective and
+        // candidate bucket sets differ and edge buckets are short
+        start = rng.nextInt(3 * width)
+        i <- start until start + 5 + rng.nextInt(8 * width)
+        b = i / width * width * 60L
+        // gated-out buckets: whole buckets missing from a series
+        if (b / 60 / width + series) % 7 != 3
+      } yield {
+        val gval = series % 5 match {
+          // ties, −0.0 beside 0.0
+          case 0 => palette(rng.nextInt(palette.length))
+          // ±M square wave: every q is ±1e9, so Σq² passes 2⁶³ within a bucket
+          case 1 => if ((i + series) % 3 == 0) -7.5 else 7.5
+          // constant within some buckets (zero variance there)
+          case 2 => if ((b / 60 / width + series) % 2 == 0) 4.0 else rng.nextGaussian()
+          // all zero: M = 0 quantizes with M = 1
+          case 3 => if (series % 2 == 0) 0.0 else -0.0
+          case _ => rng.nextGaussian() * 1e3
+        }
+        (name, node, i * 60L, gval, i.toLong, b)
+      }
+      val g = rng.shuffle(rows).toDF("name", "node", "tsb", "gval", "i", "b").repartition(3)
+      for ((lagMax, minOverlap) <- Seq((3, 8), (0, 1), (1, 3), (5, 12))) {
+        val tracked = Caches.trackedCount
+        val kernel = graft.operators.Correlate.nccLag(g, objNames, lagMax, minOverlap)
+        assert(Caches.trackedCount == tracked, "nccLag persisted a frame")
+        val want = reference(g, objNames, lagMax, minOverlap)
+        assert(kernel.schema == want.schema)
+        def sorted(df: DataFrame) =
+          df.as[(String, String, String, String, Long, Long, Long, Double)].collect()
+            .sortBy(r => (r._1, r._2, r._3, r._4, r._5, r._6)).toSeq
+        val got = sorted(kernel)
+        val exp = sorted(want)
+        assert(exp.nonEmpty || minOverlap > width, s"trial $trial lagMax $lagMax: no reference cells")
+        assert(got.size == exp.size, s"trial $trial lagMax $lagMax minOverlap $minOverlap: " +
+          s"${got.size} kernel cells vs ${exp.size} join cells")
+        got.zip(exp).foreach { case (a, e) =>
+          // r compares by bits
+          assert(a.copy(_8 = 0.0) == e.copy(_8 = 0.0) &&
+            java.lang.Double.doubleToRawLongBits(a._8) == java.lang.Double.doubleToRawLongBits(e._8),
+            s"kernel $a vs join $e")
+        }
+      }
+    }
+  }
 }

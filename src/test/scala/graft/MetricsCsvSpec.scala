@@ -93,6 +93,24 @@ class MetricsCsvSpec extends SparkTestBase {
       ("empty_name", "_c1"), ("empty_name", "h2")))
   }
 
+  test("read plans one file scan per usable CSV") {
+    val dir = Files.createTempDirectory("metrics_csv_scans")
+    val rows = (0 until 30).map(i => s"${1640588307L + i * 15},$i,${i * 0.5}")
+    for (f <- Seq("node_cpu:by_instance.csv", "qps.csv", "disk_io.csv"))
+      Files.writeString(dir.resolve(f), ("timestamp,h1,h2" +: rows).mkString("\n"))
+    // below the sample gate, but usable: scanned like the others
+    Files.writeString(dir.resolve("tiny.csv"), "timestamp,h\n1,2\n3,4\n")
+    // no value columns: skipped before planning
+    Files.writeString(dir.resolve("no_values.csv"), "timestamp\n1\n2\n")
+    val plan = MetricsCsv.read(spark, dir.toString).queryExecution.sparkPlan
+    val scanned = plan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.getName).mkString(",")
+    }
+    assert(scanned.sorted == Seq("disk_io.csv", "node_cpu__by_instance.csv", "qps.csv", "tiny.csv"),
+      s"file scans in the plan: $scanned")
+  }
+
   test("reads wide reshape CSVs into long signals with min-sample gate") {
     val dir = Files.createTempDirectory("metrics_csv").toFile
     val f1 = new java.io.File(dir, "node_cpu:by_instance.csv")
