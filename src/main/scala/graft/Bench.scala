@@ -1,47 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing runs at DEFAULTS: every exchange whose width
-      // matters for compute density (the signal grid, the tiled pair
-      // kernels) carries an explicit AQE-exempt repartition in code
-      // (SparkEntry.grid/corrGrid, Dedup.bucketPairs, Clustering
-      // kernels), so the r11 session-wide minPartitionSize=64kb floor
-      // — which also forced 32 near-empty tasks onto every tiny
-      // exchange of the other ~200 queries — is gone. Same settings
-      // local and cluster; partitioning is scale-adaptive.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.prepare(spark)
+    val spark = GraftSession.build()
     // Untimed warmup: JIT + codegen + parquet footer caches. Keeps the
     // timed section measuring the queries, not JVM cold start.
     Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
       .foreach(t => Tables.table(spark, sfDir, t).count())
 
-    // one run of a query: its wall, or the failure message if it
-    // threw (a failed query is never timed)
-    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Either[String, Double] = {
-      val t0 = System.nanoTime()
-      val out =
-        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable => Left(e.toString.linesIterator.next()) }
-      // operators persist intra-query intermediates; drop them so later
-      // runs aren't timed under earlier runs' cache pressure (release
-      // covers the tracked operator persists; clearCache is the
-      // belt-and-braces sweep for anything session-level)
-      Caches.release()
-      spark.catalog.clearCache()
-      out
-    }
+    // one timed run: the wall, or the failure message
+    def run(fn: (SparkSession, String) => DataFrame): Either[String, Double] =
+      timed(spark, sfDir, fn).map(_._1)
+
     // optional comma-separated subset for focused profiling runs; the
     // driver never sets it, so the committed artifact is always the
     // full suite
@@ -85,11 +57,11 @@ object Bench {
       // both runs (the r6 driver artifact's +125 s) still gets one
       // clean measurement.
       val started = (System.nanoTime() - benchT0) / 1e9
-      val best = timed(fn).flatMap { first =>
+      val best = run(fn).flatMap { first =>
         if (first <= 0.75) Right(first)
-        else timed(fn).flatMap { second =>
+        else run(fn).flatMap { second =>
           val m2 = math.min(first, second)
-          if (math.abs(first - second) > 0.5 * m2) timed(fn).map(math.min(m2, _)) else Right(m2)
+          if (math.abs(first - second) > 0.5 * m2) run(fn).map(math.min(m2, _)) else Right(m2)
         }
       }
       best.left.foreach(msg => System.err.println(s"query $name failed: $msg"))
@@ -136,8 +108,30 @@ object Bench {
     spark.stop()
   }
 
+  /** One run of a query at `dir`: its wall seconds and row count, or
+    * the first line of the failure message if it threw (a failed query
+    * is never timed). Operators persist intra-query intermediates, so
+    * every cache is dropped afterwards and later runs are not timed
+    * under earlier runs' cache pressure (`Caches.release` covers the
+    * tracked operator persists; `clearCache` is the sweep for anything
+    * session-level). Shared by this main and [[StageAudit]].
+    */
+  private[graft] def timed(spark: SparkSession, dir: String,
+                           fn: (SparkSession, String) => DataFrame)
+      : Either[String, (Double, Long)] = {
+    val t0 = System.nanoTime()
+    val out =
+      try {
+        val rows = fn(spark, dir).count()
+        Right(((System.nanoTime() - t0) / 1e9, rows))
+      } catch { case e: Throwable => Left(e.toString.linesIterator.next()) }
+    Caches.release()
+    spark.catalog.clearCache()
+    out
+  }
+
   /** `s` as the body of a JSON string literal. */
-  private def jsonEscape(s: String): String = s.flatMap {
+  private[graft] def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"

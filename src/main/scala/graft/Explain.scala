@@ -13,7 +13,7 @@ object Explain {
     val names = if (args.length > 2) args.drop(2).toSeq
       else Seq("q01_agg", "q02_join_agg", "q05_star_broadcast", "ts_resample",
         "corr_ncc_lag", "dedup_minhash_lsh", "knn_brute_cosine", "ad_ksigma")
-    val spark = GraftSession.build("local[4]", 8)
+    val spark = GraftSession.build()
     val sb = new StringBuilder
     names.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>

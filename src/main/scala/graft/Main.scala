@@ -103,15 +103,7 @@ object Main {
     val objNames =
       if (!curate && rest.length > 2) rest(2).split(",").toSeq
       else RefObjectives
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.prepare(spark)
+    val spark = GraftSession.build()
     val report =
       if (curate) graft.report.CurationReport.run(spark, input)
       else run(spark, input, objNames)

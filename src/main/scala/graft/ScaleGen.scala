@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** One-decade scaling audit generator: writes a `factor`× replica of an
@@ -104,13 +104,7 @@ object ScaleGen {
     val skew = args.length > 3 && args(3) == "skew"
     val embskew = args.length > 3 && args(3) == "embskew"
     val nearverb = args.length > 3 && args(3) == "nearverb"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     val alphabet = "abcdefghijklmnopqrstuvwxyz"
     // deterministic per-replica permutation (replica 0 = identity)

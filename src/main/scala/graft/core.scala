@@ -167,27 +167,21 @@ object EsdLamStash {
   *
   * The budget is COMPUTE density, not shuffle-byte optimum: StageAudit
   * measured ≈1 s of kernel CPU per MB of scan estimate on these
-  * kernels, so the 256 KB default ≈ 250 ms tasks — big enough to
-  * amortize a task launch, small enough never to straggle. A cluster
-  * deployment can retune via spark.graft.kernelBytesPerTask without
-  * touching code; width still saturates to the session's shuffle
-  * parallelism either way.
+  * kernels, so the 256 KB budget ≈ 250 ms tasks — big enough to
+  * amortize a task launch, small enough never to straggle.
   */
 object Widths {
-  private val DefaultBytesPerTask = 256L << 10
-  private val DefaultCacheBytesPerTask = 4L << 20
-  private val DefaultDenseBytesPerTask = 2L << 10
+  private val KernelBytesPerTask = 256L << 10
+  private val CacheBytesPerTask = 4L << 20
+  private val DenseBytesPerTask = 2L << 10
 
-  private def width(df: DataFrame, confKey: String, default: Long): Int = {
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val per = spark.conf.getOption(confKey).map(_.toLong).getOrElse(default)
+  private def width(df: DataFrame, per: Long): Int = {
+    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     ((bytes + per - 1) / per).min(BigInt(parts)).max(BigInt(1)).toInt
   }
 
-  def forFrame(df: DataFrame): Int =
-    width(df, "spark.graft.kernelBytesPerTask", DefaultBytesPerTask)
+  def forFrame(df: DataFrame): Int = width(df, KernelBytesPerTask)
 
   /** Width for the DENSE kernels — per-doc text digests (shingle /
     * minhash / winnowing / bigram-verify) and the O(n²)-per-group
@@ -209,8 +203,7 @@ object Widths {
     * warmup-scale corpus (~10 KB estimate) still runs ~5 wide
     * instead of paying 32 near-empty tasks per exchange.
     */
-  def forDense(df: DataFrame): Int =
-    width(df, "spark.graft.denseBytesPerTask", DefaultDenseBytesPerTask)
+  def forDense(df: DataFrame): Int = width(df, DenseBytesPerTask)
 
   /** Width for a `.repartition(key).persist()` frame whose DOWNSTREAM
     * consumers reuse the cache's hashpartitioning (self-joins, keyed
@@ -224,18 +217,33 @@ object Widths {
     * under a second each), not the compute-density budget; any real
     * corpus saturates to the session width either way.
     */
-  def forCached(df: DataFrame): Int =
-    width(df, "spark.graft.cacheBytesPerTask", DefaultCacheBytesPerTask)
+  def forCached(df: DataFrame): Int = width(df, CacheBytesPerTask)
 }
 
+/** The one Spark session behind every graft main: `Bench`, `Verify`,
+  * `Main` (advisor and `--curate`), `Explain`, `ScaleGen` and
+  * `StageAudit` all call [[build]], so a probe measures exactly the
+  * session that `Bench` and `Verify` run.
+  *
+  * The width comes from `SPARK_GRAFT_CPUS` (default 4), the variable
+  * `Bench` and `Verify` already read: `local[n]` with `n` shuffle
+  * partitions. On a cluster only these two change.
+  *
+  * AQE runs at its defaults. Every exchange whose width matters for
+  * compute density (the signal grid, the per-doc text digests, the
+  * tiled pair kernels) carries an explicit workload-derived
+  * repartition in code ([[Widths]], `Dedup.bucketPairs`, the
+  * `Clustering` kernels), which AQE's byte-based coalescing leaves
+  * alone. So no session-wide coalescing floor is set: a floor such
+  * as `minPartitionSize=64kb` forces near-empty tasks onto every tiny
+  * exchange of the other queries (measured in r12).
+  */
 object GraftSession {
-  /** Session tuned for the local[32] harness; on a real cluster only
-    * master/shuffle-partitions change (driver passes them in).
-    */
-  def build(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
+  def build(): SparkSession = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
     val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
@@ -291,7 +299,7 @@ object Tables {
   /** Schema memo for single-file tables (the driver testdata shape):
     * `spark.read.parquet` without a schema runs a footer-inference JOB
     * on every call — measured 60 ms/call vs 6 ms with an explicit
-    * schema (FooterProbe, r12) — and every query pays it 1-3× inside
+    * schema (r12 probe) — and every query pays it 1-3× inside
     * the bench's timed region. A real deployment reads catalog tables
     * whose schema is known without touching data files; this memo is
     * that, scoped to one JVM (guide §6 — the same class as Spark's own

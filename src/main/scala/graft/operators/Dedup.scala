@@ -841,6 +841,13 @@ object Dedup {
     */
   private val EdgesPerPart = 1L << 20
 
+  /** The long-keyed rounds on pair RDDs. Each round's labels are
+    * locally checkpointed (persisted, lineage cut by the round's
+    * `count`), so once a round has counted, the previous round's labels
+    * are released; only the returned final labels stay persisted. When
+    * a round throws or the loop does not converge, every cache the loop
+    * made is released.
+    */
   private[graft] def minLabelLoopRdd(edges: DataFrame, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -858,65 +865,74 @@ object Dedup {
     // persist default; a 100 TB edge sliver spills instead of OOMing.
     val ed0 = edges.select(col("doc1"), col("doc2")).as[(Long, Long)].rdd
       .persist(lvl)
-    val nEdges = ed0.count()
-    val parts = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      (nEdges + EdgesPerPart - 1) / EdgesPerPart)).toInt
-    val partitioner = new org.apache.spark.HashPartitioner(parts)
-    val ed = ed0.partitionBy(partitioner).persist(lvl)
-    // seed folds in each vertex's neighbor minimum (one round for free);
-    // reduceByKey reuses ed's partitioning — no shuffle
-    var labels = ed.reduceByKey(partitioner, math.min(_: Long, _: Long))
-      .mapPartitions(_.map { case (d, m) => (d, math.min(d, m)) },
-        preservesPartitioning = true)
-    labels.localCheckpoint()
-    labels.count()
-    ed0.unpersist(false)
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
-      val doJump = round >= 3 && !sys.env.contains("SPARK_GRAFT_CC_NOJUMP")
-      val acc = sc.longAccumulator(s"graft.cc.changed.r$round")
-      // one hop: neighbor labels arrive via the narrow join against the
-      // cached pre-partitioned edges and fold map-side into the per-
-      // vertex neighbor min — the round's ONE shuffle, bare (id, label)
-      // pairs. least(old, nbr_min) then rides a NARROW rejoin: labels
-      // and nbrMin share the partitioner, so the rejoin the DataFrame
-      // form paid two exchanges for is exchange-free here (the reason
-      // the r12 DF round folded the old label in as a unioned self row
-      // — an extra union stage + a 3-field aggregate value — does not
-      // apply to co-partitioned RDDs).
-      val nbrMin = ed.join(labels, partitioner)
-        .map { case (_, (d2, lab)) => (d2, lab) }
-        .reduceByKey(partitioner, math.min(_: Long, _: Long))
-      val hopped = labels.leftOuterJoin(nbrMin, partitioner)
-        .mapValues { case (old, nm) => (math.min(old, nm.getOrElse(old)), old) }
-      val jumped =
-        if (!doJump) hopped
-        else hopped
-          .map { case (d, (lab, old)) => (lab, (d, old)) }
-          .leftOuterJoin(labels, partitioner)
-          .map { case (lab, ((d, old), j)) => (d, (math.min(lab, j.getOrElse(lab)), old)) }
-          .partitionBy(partitioner)
-      val next = jumped.mapPartitions(_.map { case (d, (lab, old)) =>
-        if (lab != old) acc.add(1L)
-        (d, lab)
-      }, preservesPartitioning = true)
-      next.localCheckpoint()
-      next.count()
-      changed = acc.value
-      labels = next
-      round += 1
+    // both name the raw edge cache until the loop builds its own
+    var ed = ed0
+    var labels = ed0
+    try {
+      val nEdges = ed0.count()
+      val parts = math.max(1L, math.min(
+        spark.sessionState.conf.numShufflePartitions.toLong,
+        (nEdges + EdgesPerPart - 1) / EdgesPerPart)).toInt
+      val partitioner = new org.apache.spark.HashPartitioner(parts)
+      ed = ed0.partitionBy(partitioner).persist(lvl)
+      // seed folds in each vertex's neighbor minimum (one round for free);
+      // reduceByKey reuses ed's partitioning — no shuffle
+      labels = ed.reduceByKey(partitioner, math.min(_: Long, _: Long))
+        .mapPartitions(_.map { case (d, m) => (d, math.min(d, m)) },
+          preservesPartitioning = true)
+      labels.localCheckpoint()
+      labels.count()
+      ed0.unpersist(false)
+      var changed = 1L
+      var round = 0
+      while (changed > 0 && round < maxRounds) {
+        val acc = sc.longAccumulator(s"graft.cc.changed.r$round")
+        // one hop: neighbor labels arrive via the narrow join against the
+        // cached pre-partitioned edges and fold map-side into the per-
+        // vertex neighbor min — the round's ONE shuffle, bare (id, label)
+        // pairs. least(old, nbr_min) then rides a NARROW rejoin: labels
+        // and nbrMin share the partitioner, so the rejoin the DataFrame
+        // form paid two exchanges for is exchange-free here (the reason
+        // the r12 DF round folded the old label in as a unioned self row
+        // — an extra union stage + a 3-field aggregate value — does not
+        // apply to co-partitioned RDDs).
+        val nbrMin = ed.join(labels, partitioner)
+          .map { case (_, (d2, lab)) => (d2, lab) }
+          .reduceByKey(partitioner, math.min(_: Long, _: Long))
+        val hopped = labels.leftOuterJoin(nbrMin, partitioner)
+          .mapValues { case (old, nm) => (math.min(old, nm.getOrElse(old)), old) }
+        val jumped =
+          if (round < 3) hopped
+          else hopped
+            .map { case (d, (lab, old)) => (lab, (d, old)) }
+            .leftOuterJoin(labels, partitioner)
+            .map { case (lab, ((d, old), j)) => (d, (math.min(lab, j.getOrElse(lab)), old)) }
+            .partitionBy(partitioner)
+        val next = jumped.mapPartitions(_.map { case (d, (lab, old)) =>
+          if (lab != old) acc.add(1L)
+          (d, lab)
+        }, preservesPartitioning = true)
+        next.localCheckpoint()
+        next.count()
+        // next's lineage is cut at its checkpoint: nothing reads the
+        // previous round's labels any more
+        labels.unpersist(false)
+        changed = acc.value
+        labels = next
+        round += 1
+      }
+      if (changed > 0)
+        throw new IllegalStateException(
+          s"minLabelLoop did not converge after $maxRounds rounds " +
+            s"($changed labels still changing) — component labels would be " +
+            "non-canonical; raise maxRounds")
+      labels.toDF("doc_id", "lab")
+    } catch {
+      case e: Throwable => labels.unpersist(false); throw e
+    } finally {
+      ed0.unpersist(false)
+      ed.unpersist(false)
     }
-    ed.unpersist()
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"minLabelLoop did not converge after $maxRounds rounds " +
-          s"($changed labels still changing) — component labels would be " +
-          "non-canonical; raise maxRounds")
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      println(s"[cc] minLabelLoop (rdd) converged in $round rounds")
-    labels.toDF("doc_id", "lab")
   }
 
   private[graft] def minLabelLoopDF(edges: DataFrame, maxRounds: Int): DataFrame = {
@@ -937,7 +953,6 @@ object Dedup {
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxRounds) {
-      val doJump = round >= 3 && !sys.env.contains("SPARK_GRAFT_CC_NOJUMP")
       val obs = org.apache.spark.sql.Observation(s"graft.cc.r$round")
       // one hop: neighbor labels arrive via the (cached, pre-
       // partitioned) edge join; each vertex's OWN previous label rides
@@ -955,7 +970,7 @@ object Dedup {
           min(when(col("self"), col("nlab"))).as("old"))
       val jump = labels.select(col("doc_id").as("jid"), col("lab").as("jlab"))
       val jumped =
-        if (!doJump) hopped
+        if (round < 3) hopped
         else hopped.join(jump, hopped("lab") === jump("jid"), "left")
           .select(hopped("doc_id"),
             least(hopped("lab"), coalesce(col("jlab"), hopped("lab"))).as("lab"),
@@ -975,10 +990,6 @@ object Dedup {
         s"minLabelLoop did not converge after $maxRounds rounds " +
           s"($changed labels still changing) — component labels would be " +
           "non-canonical; raise maxRounds")
-    // opt-in diagnostics for round-budget tuning (the jump-deferral
-    // threshold above was set from these numbers on the sf0.1 graphs)
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      println(s"[cc] minLabelLoop converged in $round rounds")
     labels
   }
 

@@ -52,4 +52,17 @@ class MinLabelLoopSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("did not converge"))
   }
+
+  test("the RDD loop keeps only its final labels persisted") {
+    // 120 hops run ~15 rounds; each round's localCheckpoint persists a
+    // labels RDD, and every one but the returned labels must be released
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val labels = Dedup.minLabelLoopRdd(sym((0L until 119L).map(i => (i, i + 1))),
+      maxRounds = 50).collect()
+    assert(labels.map(_.getLong(1)).distinct.toSeq == Seq(0L))
+    val added = sc.getPersistentRDDs.keySet -- before
+    added.foreach(id => sc.getPersistentRDDs(id).unpersist())
+    assert(added.size <= 1, s"persisted RDDs left behind: $added")
+  }
 }
