@@ -90,14 +90,14 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.isEmpty) {
+    val curate = args.headOption.contains("--curate")
+    val rest = if (curate) args.drop(1) else args
+    if (rest.isEmpty) {
       System.err.println(
         "usage: graft.Main <bundle.tar.gz | csv-dir> [out.md] [obj1,obj2,...]\n" +
         "       graft.Main --curate <docs.jsonl | parquet-path> [out.md]")
       sys.exit(2)
     }
-    val curate = args(0) == "--curate"
-    val rest = if (curate) args.drop(1) else args
     val input = rest(0)
     val outPath = if (rest.length > 1) rest(1) else "report.md"
     val objNames =

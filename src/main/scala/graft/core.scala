@@ -148,40 +148,64 @@ object EsdLamStash {
 }
 
 /** Workload-derived exchange widths (guide §2.2/§2.5: partition counts
-  * scale with the DATA, not the session). The byte signal is the
-  * frame's own optimized-plan size estimate — file-size-based at the
-  * scan, propagated by Spark's per-operator visitors, computed on the
-  * driver with NO job — divided by a per-task byte budget and clamped
-  * to [1, numShufflePartitions].
+  * scale with the DATA, not the session). Every derived width in graft
+  * is one rule, [[derive]]: `clamp(⌈work / perTask⌉, 1, session width)`,
+  * where the session width ([[session]], `spark.sql.shuffle.partitions`)
+  * is read here and nowhere else. The five budgets below are the only
+  * calibrations; a caller picks the one whose work unit it has.
   *
   * Why: the compute-dense exchanges (per-signal grid kernels, per-doc
-  * shingle/digest spreads) carry explicit AQE-exempt repartitions so
-  * byte-based coalescing cannot serialize their kernels onto 1-2 tasks
-  * (the r12 mm_phash finding). r12 pinned them to the session constant
-  * `numShufflePartitions`, which is right at scale but pays ~32 task
-  * launches + 32-way AQE bookkeeping per exchange on a few-MB bench
+  * shingle/digest spreads, the tiled pair kernels) carry explicit
+  * AQE-exempt repartitions so byte-based coalescing cannot serialize
+  * their kernels onto 1-2 tasks (the r12 mm_phash finding). r12 pinned
+  * them to the session constant, which is right at scale but pays ~32
+  * task launches + 32-way AQE bookkeeping per exchange on a few-MB bench
   * input — the driver-measured 32c>8c inversion (PERF_r12: 13 of 14
   * scaling ratios ≤ 1.0). Deriving the width from the measured input
   * keeps the 100 TB plan identical (any real corpus saturates the
   * clamp) while a laptop-scale input sizes its exchange honestly.
   *
-  * The budget is COMPUTE density, not shuffle-byte optimum: StageAudit
-  * measured ≈1 s of kernel CPU per MB of scan estimate on these
-  * kernels, so the 256 KB budget ≈ 250 ms tasks — big enough to
-  * amortize a task launch, small enough never to straggle.
+  * The byte signal of [[forFrame]], [[forDense]] and [[forCached]] is the
+  * frame's own optimized-plan size estimate — file-size-based at the
+  * scan, propagated by Spark's per-operator visitors, computed on the
+  * driver with NO job. Its budget is COMPUTE density, not shuffle-byte
+  * optimum: StageAudit measured ≈1 s of kernel CPU per MB of scan
+  * estimate on these kernels, so the 256 KB budget ≈ 250 ms tasks — big
+  * enough to amortize a task launch, small enough never to straggle.
   */
 object Widths {
   private val KernelBytesPerTask = 256L << 10
   private val CacheBytesPerTask = 4L << 20
   private val DenseBytesPerTask = 2L << 10
 
-  private def width(df: DataFrame, per: Long): Int = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    ((bytes + per - 1) / per).min(BigInt(parts)).max(BigInt(1)).toInt
-  }
+  /** Per-task pair-enumeration budget for the cold in-cell kernels
+    * ([[forPairs]]): ~1M dot products is tens of ms of kernel compute
+    * at d = 64 — small enough that a task never straggles, large enough
+    * that toy-scale inputs stop paying 32 task launches for
+    * microseconds of work each.
+    */
+  private val PairsPerTask = 1L << 20
 
-  def forFrame(df: DataFrame): Int = width(df, KernelBytesPerTask)
+  /** Edges per label-loop round partition ([[forEdges]]): 1M edge rows
+    * ≈ 16 MB of bare (id, label) pairs — tasks stay well under a second
+    * while a toy graph stops paying session-width barriers per round.
+    */
+  private val EdgesPerPart = 1L << 20
+
+  /** The session width: the upper clamp of every derived width, and the
+    * width a hot tiled kernel always takes.
+    */
+  def session(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
+  /** `clamp(⌈work / perTask⌉, 1, session width)`. */
+  private def derive(spark: SparkSession, work: BigInt, perTask: Long): Int =
+    ((work + perTask - 1) / perTask).min(BigInt(session(spark))).max(BigInt(1)).toInt
+
+  private def planBytes(df: DataFrame, perTask: Long): Int =
+    derive(df.sparkSession, df.queryExecution.optimizedPlan.stats.sizeInBytes, perTask)
+
+  def forFrame(df: DataFrame): Int = planBytes(df, KernelBytesPerTask)
 
   /** Width for the DENSE kernels — per-doc text digests (shingle /
     * minhash / winnowing / bigram-verify) and the O(n²)-per-group
@@ -203,7 +227,7 @@ object Widths {
     * warmup-scale corpus (~10 KB estimate) still runs ~5 wide
     * instead of paying 32 near-empty tasks per exchange.
     */
-  def forDense(df: DataFrame): Int = width(df, DenseBytesPerTask)
+  def forDense(df: DataFrame): Int = planBytes(df, DenseBytesPerTask)
 
   /** Width for a `.repartition(key).persist()` frame whose DOWNSTREAM
     * consumers reuse the cache's hashpartitioning (self-joins, keyed
@@ -217,7 +241,13 @@ object Widths {
     * under a second each), not the compute-density budget; any real
     * corpus saturates to the session width either way.
     */
-  def forCached(df: DataFrame): Int = width(df, CacheBytesPerTask)
+  def forCached(df: DataFrame): Int = planBytes(df, CacheBytesPerTask)
+
+  /** Width for a cold tiled cell kernel from its exact pair count. */
+  def forPairs(spark: SparkSession, pairs: Long): Int = derive(spark, pairs, PairsPerTask)
+
+  /** Round width of the RDD label loop from its counted edge rows. */
+  def forEdges(spark: SparkSession, edges: Long): Int = derive(spark, edges, EdgesPerPart)
 }
 
 /** The one Spark session behind every graft main: `Bench`, `Verify`,
@@ -232,9 +262,8 @@ object Widths {
   * AQE runs at its defaults. Every exchange whose width matters for
   * compute density (the signal grid, the per-doc text digests, the
   * tiled pair kernels) carries an explicit workload-derived
-  * repartition in code ([[Widths]], `Dedup.bucketPairs`, the
-  * `Clustering` kernels), which AQE's byte-based coalescing leaves
-  * alone. So no session-wide coalescing floor is set: a floor such
+  * repartition in code ([[Widths]], `graft.operators.Tiles`), which
+  * AQE's byte-based coalescing leaves alone. So no session-wide coalescing floor is set: a floor such
   * as `minPartitionSize=64kb` forces near-empty tasks onto every tiny
   * exchange of the other queries (measured in r12).
   */

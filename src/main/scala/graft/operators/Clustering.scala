@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Caches._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExpressions.vecDot
 
@@ -30,28 +31,6 @@ object Clustering {
     * the kernel.
     */
   private val LiteralKMax = 32
-
-  /** Per-task pair-enumeration budget for [[kernelWidth]]: ~1M dot
-    * products is tens of ms of kernel compute at d = 64 — small enough
-    * that a task never straggles, large enough that toy-scale inputs
-    * stop paying 32 task launches for microseconds of work each.
-    */
-  private val PairsPerTask = 1L << 20
-
-  /** Workload-derived width for the tiled cell kernels (guide §2 —
-    * partitioning scales with the data, not with the session): any
-    * salted cell (over saltCap) takes the FULL session width — the
-    * tiles exist precisely to spread a mega-cell, and every hot-corpus
-    * audit/spec runs through this arm unchanged — while a cold corpus
-    * sizes its exchange by the exact pair volume the cell-size collect
-    * already priced. Saturates to numShufflePartitions as Σ|cell|²
-    * grows: identical plans at 100 TB, fewer near-empty task launches
-    * at bench scale.
-    */
-  private def kernelWidth(parts: Int, hot: Boolean, pairs: Long): Int =
-    if (hot) parts
-    else math.max(1L, math.min(parts.toLong,
-      (pairs + PairsPerTask - 1) / PairsPerTask)).toInt
 
   /** Engine-exact Lloyd's k-means over the embedding column.
     *
@@ -537,22 +516,46 @@ object Clustering {
         graft.Num.r4(col("dist2q") / lit(1e12)).as("min_dist2"))
   }
 
+  /** The salted layout both in-cell kernels walk: the typed cell rows,
+    * each cell's salt count ([[Tiles.salts]] over one cell-size collect
+    * — bounded driver state, one count per cell, k = O(√n) cells),
+    * broadcast, and the kernel width. A hot corpus (any cell over
+    * saltCap) takes the session width — the tiles exist to spread it —
+    * while a cold one is sized by its exact pair count
+    * (`Widths.forPairs`), so a toy input stops fanning 32 near-empty
+    * tasks and a 100 TB one saturates to the same plan.
+    */
+  private def saltedCells(av: DataFrame, saltCap: Int)
+      : (Dataset[(Int, Long, Seq[Double], Double)], Broadcast[Map[Int, Int]], Int) = {
+    val spark = av.sparkSession
+    import spark.implicits._
+    val cellsDf = av.select(col("cell").cast("int").as("cell"),
+      col("vec_id").cast("long").as("vec_id"), col("v"), col("nrm"))
+    val sizes = cellsDf.groupBy("cell").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1))
+    val salts = Tiles.salts(spark, sizes, saltCap)
+    val width =
+      if (salts.values.exists(_ > 1)) graft.Widths.session(spark)
+      else graft.Widths.forPairs(spark, sizes.iterator.map { case (_, n) => n * (n - 1) / 2 }.sum)
+    (cellsDf.as[(Int, Long, Seq[Double], Double)], spark.sparkContext.broadcast(salts), width)
+  }
+
   /** In-cell cosine pairs ≥ `threshold` via SALTED per-cell kernels —
     * the shared scale path for [[semDedup]] and the IVF near-dup
     * family. Cells at or under `saltCap` run as one task (the r6
     * streamed kernel, O(|cell|·d) memory). A MEGA-CELL — real 100 TB
     * corpora have boilerplate-dense cells holding a double-digit share
-    * of the corpus — is split into s = ⌈|cell|/saltCap⌉ salts by
-    * vec_id mod s and its pair triangle is tiled into s·(s+1)/2
-    * independent tasks (diagonal tasks pair within one salt, cross
-    * tasks pair across two), so the hot cell's |cell|²/2 dot products
-    * parallelize across the cluster and per-task state stays
-    * ≤ 2·saltCap·(d+2) doubles. The PAIR SET is identical to the
-    * unsalted kernel — every i<j pair is computed exactly once with
-    * the identical IEEE sequence (dot products are term-commutative
-    * exactly) — so oracles and downstream components are unchanged
-    * (SaltedPairsSpec pins salted ≡ unsalted on a manufactured hot
-    * cell). Replication cost: a row in an s-salted cell is shipped s
+    * of the corpus — is salted by vec_id mod s and its pair triangle
+    * is tiled into independent tasks ([[Tiles]]: the salt rule, the
+    * triangle fan-out and the explicit-width run walk; diagonal tiles
+    * pair within one salt, cross tiles across two), so the hot cell's
+    * |cell|²/2 dot products parallelize across the cluster and
+    * per-task state stays ≤ 2·saltCap·(d+2) doubles. The PAIR SET is
+    * identical to the unsalted kernel — every i<j pair is computed
+    * exactly once with the identical IEEE sequence (dot products are
+    * term-commutative exactly) — so oracles and downstream components
+    * are unchanged (SaltedPairsSpec pins salted ≡ unsalted on a
+    * manufactured hot cell). Replication cost: a row in an s-salted cell is shipped s
     * times — the price of fanning the triangle out.
     *
     * `av` columns: cell (int), vec_id (long), v (array<double>),
@@ -563,34 +566,7 @@ object Clustering {
                                  saltCap: Int = 4096): DataFrame = {
     val spark = av.sparkSession
     import spark.implicits._
-    val cellsDf = av.select(col("cell").cast("int").as("cell"),
-      col("vec_id").cast("long").as("vec_id"), col("v"), col("nrm"))
-    // bounded driver state: one count per cell (k = O(√n) cells).
-    // A hot cell gets at least √(8·parts) salts (≈ 4 tiles per shuffle
-    // partition): ceil(n/saltCap) alone hands a cell just over the cap
-    // only 2-3 salts, and the kernel stage then waits on one
-    // saltCap²/2-dot straggler tile (the r12 mm_phash finding, same
-    // mechanism here). The pair set is s-invariant.
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sMin = math.max(2, math.ceil(math.sqrt(8.0 * parts)).toInt)
-    val sizes = cellsDf.groupBy("cell").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val salts = sizes.map { case (c, n) =>
-      val s0 = ((n + saltCap - 1) / saltCap).toInt
-      c -> (if (s0 > 1) math.max(s0, sMin) else 1)
-    }
-    // kernel width is WORKLOAD-derived, not a constant (guide §2 —
-    // partitioning scales with the data): the cell-size collect above
-    // already prices the kernel exactly, so a hot-cell corpus (any
-    // cell over saltCap — tiles exist precisely to spread) takes the
-    // full session width, while a cold corpus sizes the exchange by
-    // its true pair volume (~1M dot products ≈ tens of ms per task)
-    // instead of fanning 32 near-empty tasks at toy scale. Saturates
-    // to numShufflePartitions as Σ|cell|² grows — identical plans at
-    // 100 TB, fewer task launches on a laptop-scale input.
-    val width = kernelWidth(parts, salts.values.exists(_ > 1),
-      sizes.values.iterator.map(n => n * (n - 1) / 2).sum)
-    val bc = spark.sparkContext.broadcast(salts)
+    val (cells, bc, width) = saltedCells(av, saltCap)
     val thr = threshold
     // threshold ≤ −1 means "keep every pair": a rounded cosine is
     // ≥ −1, but a zero-norm vector's cosine is NaN (or ±Inf), and
@@ -646,45 +622,11 @@ object Clustering {
           }
         }
     }
-    // EXPLICIT repartition by tile key (not groupByKey): tiles are
-    // compute-dense relative to their shuffle bytes, and AQE's
-    // size-based partition coalescing folds a small exchange into one
-    // task — re-serializing the very triangle the salts fan out (the
-    // r11 bucketPairs finding; 64-dim rows are ~550 B so the audit
-    // corpora stayed wide organically, but a short-embedding or
-    // sampled-calibration input is one coalesce away from the
-    // collapse). User-specified partition counts are exempt.
-    cellsDf
-      .as[(Int, Long, Seq[Double], Double)]
-      .flatMap { case (c, id, v, nrm) =>
-        val s = bc.value.getOrElse(c, 1)
-        if (s <= 1) Iterator.single(((c, 0, 0), (id, v, nrm, 0)))
-        else {
-          val my = java.lang.Math.floorMod(id, s.toLong).toInt
-          // the diagonal task plus one cross task per other salt; side
-          // tags which half of a cross task this row belongs to
-          Iterator.single(((c, my, my), (id, v, nrm, 0))) ++
-            (0 until my).iterator.map(b1 => ((c, b1, my), (id, v, nrm, 1))) ++
-            ((my + 1) until s).iterator.map(b2 => ((c, my, b2), (id, v, nrm, 0)))
-        }
-      }
-      .repartition(width, col("_1"))
-      .sortWithinPartitions(col("_1"))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new scala.collection.AbstractIterator[(Long, Long, Double)] {
-          private var cur: Iterator[(Long, Long, Double)] = Iterator.empty
-          private def load(): Unit =
-            while (!cur.hasNext && buf.hasNext) {
-              val key = buf.head._1
-              val rows = scala.collection.mutable.ArrayBuffer
-                .empty[(Long, Seq[Double], Double, Int)]
-              while (buf.hasNext && buf.head._1 == key) rows += buf.next()._2
-              cur = tilePairs(key._2 == key._3, rows.toArray)
-            }
-          override def hasNext: Boolean = { load(); cur.hasNext }
-          override def next(): (Long, Long, Double) = { load(); cur.next() }
-        }
+    val fanned = cells.flatMap { case (c, id, v, nrm) =>
+      Tiles.triangle(c, id, bc.value.getOrElse(c, 1))(side => (id, v, nrm, side))
+    }
+    Tiles.walk(fanned, width, Seq(col("_1")))(_._1, _._2) {
+        (k, rows) => tilePairs(k._2 == k._3, rows)
       }
       .toDF("id1", "id2", "cos_sim")
   }
@@ -698,9 +640,11 @@ object Clustering {
     * rows for 50+ minutes while 31 cores idled (the exact failure a
     * boilerplate-dense cell produces at 100 TB; the dedup family never
     * had it because inCellPairs tiles). Here every (query-salt,
-    * neighbor-salt) tile is an independent task: a row ships 2s−1
-    * times (once per tile it participates in), each task streams its
-    * ≤saltCap×saltCap sims keeping a k-slot selection per query, and
+    * neighbor-salt) tile is an independent task (the salt rule and the
+    * run walk are [[Tiles]]'s; the fan-out is a square, not the
+    * triangle): a row ships 2s−1 times (once per tile it participates
+    * in), each task streams its ≤saltCap×saltCap sims keeping a k-slot
+    * selection per query, and
     * only s·k candidate rows per vector reach the final global top-k
     * window — so the mega-cell's |cell|² dot products parallelize and
     * NOTHING quadratic is ever materialized, shuffled or sorted.
@@ -722,22 +666,7 @@ object Clustering {
                                 saltCap: Int = 4096): DataFrame = {
     val spark = av.sparkSession
     import spark.implicits._
-    val cellsDf = av.select(col("cell").cast("int").as("cell"),
-      col("vec_id").cast("long").as("vec_id"), col("v"), col("nrm"))
-    // hot cells get at least √(8·parts) salts — same straggler-tile
-    // reasoning as inCellPairs; top-k merge is s-invariant
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sMin = math.max(2, math.ceil(math.sqrt(8.0 * parts)).toInt)
-    val sizes = cellsDf.groupBy("cell").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val salts = sizes.map { case (c, n) =>
-      val s0 = ((n + saltCap - 1) / saltCap).toInt
-      c -> (if (s0 > 1) math.max(s0, sMin) else 1)
-    }
-    // workload-derived kernel width — see [[kernelWidth]] / inCellPairs
-    val width = kernelWidth(parts, salts.values.exists(_ > 1),
-      sizes.values.iterator.map(n => n * (n - 1) / 2).sum)
-    val bc = spark.sparkContext.broadcast(salts)
+    val (cells, bc, width) = saltedCells(av, saltCap)
     val kk = k
     // per-tile k-slot selection, shared by every tile walk below
     def tileTopK(cell: Int, diagonal: Boolean,
@@ -787,42 +716,25 @@ object Clustering {
           (0 until used).iterator.map(i => (cell, qid, selNid(i), selSim(i)))
         }
     }
-    // explicit repartition by tile key — same AQE-coalescing pin as
-    // inCellPairs (see the note there)
-    cellsDf
-      .as[(Int, Long, Seq[Double], Double)]
-      .flatMap { case (c, id, v, nrm) =>
-        val s = bc.value.getOrElse(c, 1)
-        if (s <= 1) Iterator.single(((c, 0, 0), (id, v, nrm, 0)))
-        else {
-          val my = java.lang.Math.floorMod(id, s.toLong).toInt
-          // the diagonal copy serves both roles; elsewhere side 0 =
-          // query member of tile (c, my, ns), side 1 = neighbor member
-          // of tile (c, qs, my)
-          Iterator.single(((c, my, my), (id, v, nrm, 0))) ++
-            (0 until s).iterator.filter(_ != my)
-              .map(ns => ((c, my, ns), (id, v, nrm, 0))) ++
-            (0 until s).iterator.filter(_ != my)
-              .map(qs => ((c, qs, my), (id, v, nrm, 1)))
-        }
+    // a SQUARE fan-out, not the triangle: a row is a query in every
+    // tile of its salt's row and a neighbor in every tile of its column
+    val fanned = cells.flatMap { case (c, id, v, nrm) =>
+      val s = bc.value.getOrElse(c, 1)
+      if (s <= 1) Iterator.single(((c, 0, 0), (id, v, nrm, 0)))
+      else {
+        val my = java.lang.Math.floorMod(id, s.toLong).toInt
+        // the diagonal copy serves both roles; elsewhere side 0 =
+        // query member of tile (c, my, ns), side 1 = neighbor member
+        // of tile (c, qs, my)
+        Iterator.single(((c, my, my), (id, v, nrm, 0))) ++
+          (0 until s).iterator.filter(_ != my)
+            .map(ns => ((c, my, ns), (id, v, nrm, 0))) ++
+          (0 until s).iterator.filter(_ != my)
+            .map(qs => ((c, qs, my), (id, v, nrm, 1)))
       }
-      .repartition(width, col("_1"))
-      .sortWithinPartitions(col("_1"))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new scala.collection.AbstractIterator[(Int, Long, Long, Double)] {
-          private var cur: Iterator[(Int, Long, Long, Double)] = Iterator.empty
-          private def load(): Unit =
-            while (!cur.hasNext && buf.hasNext) {
-              val key = buf.head._1
-              val rows = scala.collection.mutable.ArrayBuffer
-                .empty[(Long, Seq[Double], Double, Int)]
-              while (buf.hasNext && buf.head._1 == key) rows += buf.next()._2
-              cur = tileTopK(key._1, key._2 == key._3, rows.toArray)
-            }
-          override def hasNext: Boolean = { load(); cur.hasNext }
-          override def next(): (Int, Long, Long, Double) = { load(); cur.next() }
-        }
+    }
+    Tiles.walk(fanned, width, Seq(col("_1")))(_._1, _._2) {
+        (k, rows) => tileTopK(k._1, k._2 == k._3, rows)
       }
       .toDF("cell", "vec_id", "nid", "sim")
       .withColumn("rn", row_number().over(

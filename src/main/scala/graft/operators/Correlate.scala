@@ -274,6 +274,28 @@ object Correlate {
     corrMatrix(ranked, minOverlap)
   }
 
+  /** Shared cell walker for the O(n²)-per-cell matrix kernels
+    * ([[kendallMatrix]], [[dcorMatrix]]): the aligned pair rows go
+    * through [[Tiles.walk]] keyed on the (pair, bucket) cell, at the
+    * caller's workload-derived width (`Widths.forFrame` of the persisted
+    * quantized-grid frame — the cells frame itself is a join whose size
+    * estimate is a row-count product, useless as a signal). Per-cell
+    * compute is order-independent (symmetric integer sums), so
+    * sorted-run grouping is value-identical to flatMapGroups.
+    */
+  private def cellWalk(cells: DataFrame, width: Int)(
+      f: ((String, String, String, String, Long), Array[(Long, Long)])
+        => Option[(Double, Long)]): DataFrame = {
+    val spark = cells.sparkSession
+    import spark.implicits._
+    Tiles.walk(cells.as[(String, String, String, String, Long, Long, Long)], width,
+        Seq("a_name", "a_node", "b_name", "b_node", "b").map(col))(
+        r => (r._1, r._2, r._3, r._4, r._5), r => (r._6, r._7)) { (k, pts) =>
+        f(k, pts).iterator.map(v => (k._1, k._2, k._3, k._4, k._5, v._1, v._2))
+      }
+      .toDF("a_name", "a_node", "b_name", "b_node", "b", "stat", "n")
+  }
+
   /** Kendall tau-b matrix per bucket: rank-concordance association,
     * the third leg of the correlation family (Pearson = linear,
     * Spearman = monotone-via-ranks, Kendall = pairwise concordance —
@@ -296,60 +318,6 @@ object Correlate {
     * aggregate. At 1000 signals × a year this is the same
     * signals²·buckets cell count every matrix query here carries.
     */
-  /** Shared cell walker for the O(n²)-per-cell matrix kernels
-    * ([[kendallMatrix]], [[dcorMatrix]]): the aligned pair rows are
-    * hash-spread over an EXPLICIT numShufflePartitions-wide exchange
-    * on the (pair, bucket) cell key and walked as sorted runs in-task.
-    * A typed groupByKey here plans the same exchange — but behind an
-    * opaque tuple key that AQE's byte-based coalescing is free to
-    * collapse (the cell frame is a few MB at bench scale while each
-    * cell carries O(n²) integer/BigInt work, the exact compute-dense
-    * sub-MB shape the r11 mm_phash finding showed AQE serializing onto
-    * 1-3 tasks). User-specified repartition is exempt from AQE
-    * coalescing (SURVEY §3 architecture rule), so kernel width here is
-    * code, not a session constant. Per-cell compute is order-
-    * independent (symmetric integer sums), so sorted-run grouping is
-    * value-identical to flatMapGroups.
-    */
-  private def cellWalk(cells: DataFrame, width: Int)(
-      f: ((String, String, String, String, Long), Array[(Long, Long)])
-        => Option[(Double, Long)]): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    // r13: width is the caller's workload-derived count (Widths.forFrame
-    // of the persisted quantized-grid frame — the cells frame itself is
-    // a join whose size estimate is a row-count product, useless as a
-    // signal). Saturates to the session width on any real corpus;
-    // still AQE-exempt (explicit count) so the compute-dense cell
-    // kernel can never be byte-coalesced onto 1-2 tasks.
-    cells
-      .repartition(width, col("a_name"), col("a_node"),
-        col("b_name"), col("b_node"), col("b"))
-      .sortWithinPartitions("a_name", "a_node", "b_name", "b_node", "b")
-      .as[(String, String, String, String, Long, Long, Long)]
-      .mapPartitions { it =>
-        val b = it.buffered
-        val runs = new scala.collection.AbstractIterator[
-            ((String, String, String, String, Long), Array[(Long, Long)])] {
-          def hasNext: Boolean = b.hasNext
-          def next(): ((String, String, String, String, Long), Array[(Long, Long)]) = {
-            val h = b.head
-            val key = (h._1, h._2, h._3, h._4, h._5)
-            val pts = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-            while (b.hasNext && (b.head._1, b.head._2, b.head._3,
-                b.head._4, b.head._5) == key) {
-              val r = b.next(); pts += ((r._6, r._7))
-            }
-            (key, pts.toArray)
-          }
-        }
-        runs.flatMap { case (k, pts) =>
-          f(k, pts).map(v => (k._1, k._2, k._3, k._4, k._5, v._1, v._2))
-        }
-      }
-      .toDF("a_name", "a_node", "b_name", "b_node", "b", "stat", "n")
-  }
-
   def kendallMatrix(indexedGrid: DataFrame, minOverlap: Int = 8): DataFrame = {
     val spark = indexedGrid.sparkSession
     import spark.implicits._
@@ -605,7 +573,7 @@ object Correlate {
     // signal), pair moments are computed IN-TASK by merge-intersecting
     // the two sorted series, and only the width²/2 exact moment rows
     // ever exist. Width past `widthCap` tiles the pair triangle across
-    // ⌈width/widthCap⌉ salts (the inCellPairs device), so one bucket
+    // ⌈width/widthCap⌉ salts (Tiles.triangle), so one bucket
     // never pins one task and task memory stays ≤ 2·widthCap series.
     // The moments are the SAME order-independent exact integers as the
     // old momentAggs (Long/BigInt sums, one correctly-rounded toDouble
@@ -644,12 +612,8 @@ object Correlate {
         (key._1, key._2, key._3, pts.map(_._1), qs, sk)
       }
     val tiled = ser.flatMap { case (b, name, node, is, qs, sk) =>
-      val my = java.lang.Math.floorMod(
-        (name + "|" + node).hashCode.toLong, tiles.toLong).toInt
-      if (tiles <= 1) Iterator.single(((b, 0, 0), (name, node, is, qs, sk, 0)))
-      else Iterator.single(((b, my, my), (name, node, is, qs, sk, 0))) ++
-        (0 until my).iterator.map(t1 => ((b, t1, my), (name, node, is, qs, sk, 1))) ++
-        ((my + 1) until tiles).iterator.map(t2 => ((b, my, t2), (name, node, is, qs, sk, 0)))
+      Tiles.triangle(b, (name + "|" + node).hashCode.toLong, tiles)(
+        side => (name, node, is, qs, sk, side))
     }
     val cells = tiled.groupByKey(_._1)
       .flatMapGroups { (key: (Long, Int, Int), it: Iterator[((Long, Int, Int), (String, String, Array[Long], Array[Long], Array[Double], Int))]) =>

@@ -305,13 +305,13 @@ object Dedup {
     * (id1 < id2, pay1, pay2). Buckets at or under `saltCap` enumerate
     * in one task; a MEGA-BUCKET — a band slice or pigeonhole block
     * shared by a near-verbatim document family, the shape a
-    * 30%-mirrored crawl corpus produces — tiles its pair triangle into
-    * s·(s+1)/2 independent tasks (s = ⌈|bucket|/saltCap⌉, salt =
-    * id mod s), so |bucket|²/2 enumerations parallelize across the
-    * cluster instead of serializing onto the single task a self-equijoin
-    * hashes one join key to. Per-task state is ≤ 2·saltCap (id, pay)
-    * tuples — 16 bytes each; a row in an s-salted bucket ships s times
-    * (the triangle fan-out price).
+    * 30%-mirrored crawl corpus produces — tiles its pair triangle by
+    * salt = id mod s ([[Tiles]]: the salt rule, the triangle fan-out
+    * and the explicit-width run walk), so |bucket|²/2 enumerations
+    * parallelize across the cluster instead of serializing onto the
+    * single task a self-equijoin hashes one join key to. Per-task
+    * state is ≤ 2·saltCap (id, pay) tuples — 16 bytes each; a row in
+    * an s-salted bucket ships s times (the triangle fan-out price).
     *
     * The PAIR SET is identical to the self-equijoin it replaces
     * (`a.bkey = b.bkey AND a.id < b.id`): each unordered in-bucket pair
@@ -399,22 +399,11 @@ object Dedup {
         col("id").cast("long").as("id"), col("pay").cast("long").as("pay"))
       .filter(col("bkey").isNotNull)
       .persist().tracked
-    // minimum salt count for a HOT bucket: ceil(n/saltCap) alone gives
-    // a bucket just over the cap only 2-3 salts → 3-6 tiles of up to
-    // saltCap²/2 enumerations each, and the whole kernel waits on one
-    // ~9 s tile (measured: mm_phash on the nearverb family, s = 2, one
-    // 9 M-pair cross tile = the stage straggler). Tiling to ≈ 4 tiles
-    // per shuffle partition (s(s+1)/2 ≥ 4·parts ⇒ s ≈ √(8·parts))
-    // keeps every tile a sub-second task; the price is s× fan-out of
-    // the bucket's rows, bounded because the bump only applies to
-    // buckets in (saltCap, saltCap·s_min) — bigger buckets already
-    // exceed it organically. The pair set is s-invariant.
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sMin = math.max(2, math.ceil(math.sqrt(8.0 * parts)).toInt)
-    val hot = in.groupBy(xxhash64(col("bkey")).as("bh")).count()
-      .filter(col("count") > saltCap.toLong)
-      .collect().map(r => r.getLong(0) ->
-        math.max(((r.getLong(1) + saltCap - 1) / saltCap).toInt, sMin)).toMap
+    // hot buckets and their salt counts (the salt rule: Tiles.salts)
+    val hot = Tiles.salts(spark,
+      in.groupBy(xxhash64(col("bkey")).as("bh")).count()
+        .filter(col("count") > saltCap.toLong)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)), saltCap)
     require(hot.size <= (1 << 22),
       s"bucketPairs: ${hot.size} buckets over saltCap=$saltCap — the hot-" +
         "bucket map no longer fits driver state; raise saltCap or pre-split")
@@ -449,50 +438,14 @@ object Dedup {
           }
         }
     }
-    // diagonal tile + one cross tile per other salt; side tags which
-    // half of a cross tile this row belongs to
-    def fanOut[K](bk: K, id: Long, pay: Long, bh: Long)
-        : Iterator[((K, Int, Int), (Long, Long, Int))] = {
-      val s = bc.value.getOrElse(bh, 1)
-      if (s <= 1) Iterator.single(((bk, 0, 0), (id, pay, 0)))
-      else {
-        val my = java.lang.Math.floorMod(id, s.toLong).toInt
-        Iterator.single(((bk, my, my), (id, pay, 0))) ++
-          (0 until my).iterator.map(b1 => ((bk, b1, my), (id, pay, 1))) ++
-          ((my + 1) until s).iterator.map(b2 => ((bk, my, b2), (id, pay, 0)))
-      }
-    }
-    // EXPLICIT repartition by tile key, not groupByKey: the fan-out
-    // rows are 16 bytes but each tile is up to saltCap²/2 enumerations
-    // — so compute-dense relative to shuffle bytes that AQE's
-    // byte-sized partition coalescing folds the whole exchange into
-    // ONE task (measured on the near-verbatim sf0.1 corpus: mm_phash
-    // 27.8 s in a single task = 89% of the query — the exact collapse
-    // the tiling exists to prevent, reintroduced by the optimizer).
-    // A user-specified partition count is exempt from AQE coalescing;
-    // the sort-then-walk is the same shuffle+sort groupByKey plans.
+    def fanOut[K](bk: K, id: Long, pay: Long, bh: Long) =
+      Tiles.triangle(bk, id, bc.value.getOrElse(bh, 1))(side => (id, pay, side))
+    // the walk keeps the session width: only hot buckets reach it
     def walk[K](fanned: org.apache.spark.sql.Dataset[((K, Int, Int), (Long, Long, Int))])
         : DataFrame =
-      fanned
-        .repartition(parts, col("_1"))
-        .sortWithinPartitions(col("_1"))
-        .mapPartitions { it =>
-          val buf = it.buffered
-          new scala.collection.AbstractIterator[(Long, Long, Long, Long)] {
-            private var cur: Iterator[(Long, Long, Long, Long)] = Iterator.empty
-            private def advance(): Unit =
-              while (!cur.hasNext && buf.hasNext) {
-                val key = buf.head._1
-                val rows = scala.collection.mutable.ArrayBuffer
-                  .empty[(Long, Long, Int)]
-                while (buf.hasNext && buf.head._1 == key) rows += buf.next()._2
-                cur = tilePairs(key._2 == key._3, rows.toArray)
-              }
-            override def hasNext: Boolean = { advance(); cur.hasNext }
-            override def next(): (Long, Long, Long, Long) = { advance(); cur.next() }
-          }
-        }
-        .toDF("id1", "pay1", "id2", "pay2")
+      Tiles.walk(fanned, graft.Widths.session(spark), Seq(col("_1")))(_._1, _._2) {
+        (k, rows) => tilePairs(k._2 == k._3, rows)
+      }.toDF("id1", "pay1", "id2", "pay2")
     val withH = in.withColumn("bh", xxhash64(col("bkey")))
     if (keyIsLong)
       walk(withH.as[(Long, Long, Long, Long)]
@@ -835,18 +788,14 @@ object Dedup {
     else minLabelLoopDF(edges, maxRounds)
   }
 
-  /** Edges per round-shuffle partition: 1M edge rows ≈ 16 MB of bare
-    * (id, label) pairs — tasks stay well under a second while a toy
-    * graph stops paying session-width barriers per round.
-    */
-  private val EdgesPerPart = 1L << 20
-
   /** The long-keyed rounds on pair RDDs. Each round's labels are
     * locally checkpointed (persisted, lineage cut by the round's
     * `count`), so once a round has counted, the previous round's labels
-    * are released; only the returned final labels stay persisted. When
-    * a round throws or the loop does not converge, every cache the loop
-    * made is released.
+    * are released; only the returned final labels stay persisted, and
+    * they are tracked, so `Caches.release()` frees them with every other
+    * operator cache. When a round throws or the loop does not converge,
+    * every cache the loop made is released. The round width is
+    * `Widths.forEdges` of the counted edges.
     */
   private[graft] def minLabelLoopRdd(edges: DataFrame, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
@@ -870,10 +819,8 @@ object Dedup {
     var labels = ed0
     try {
       val nEdges = ed0.count()
-      val parts = math.max(1L, math.min(
-        spark.sessionState.conf.numShufflePartitions.toLong,
-        (nEdges + EdgesPerPart - 1) / EdgesPerPart)).toInt
-      val partitioner = new org.apache.spark.HashPartitioner(parts)
+      val partitioner = new org.apache.spark.HashPartitioner(
+        graft.Widths.forEdges(spark, nEdges))
       ed = ed0.partitionBy(partitioner).persist(lvl)
       // seed folds in each vertex's neighbor minimum (one round for free);
       // reduceByKey reuses ed's partitioning — no shuffle
@@ -926,7 +873,7 @@ object Dedup {
           s"minLabelLoop did not converge after $maxRounds rounds " +
             s"($changed labels still changing) — component labels would be " +
             "non-canonical; raise maxRounds")
-      labels.toDF("doc_id", "lab")
+      labels.tracked.toDF("doc_id", "lab")
     } catch {
       case e: Throwable => labels.unpersist(false); throw e
     } finally {

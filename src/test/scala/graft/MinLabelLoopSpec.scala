@@ -65,4 +65,18 @@ class MinLabelLoopSpec extends SparkTestBase {
     added.foreach(id => sc.getPersistentRDDs(id).unpersist())
     assert(added.size <= 1, s"persisted RDDs left behind: $added")
   }
+
+  test("Caches.release frees the labels a long-keyed Dedup.clusters leaves persisted") {
+    val sc = spark.sparkContext
+    Caches.release()
+    val before = sc.getPersistentRDDs.keySet
+    val docs = (0L until 40L).toDF("doc_id")
+    val pairs = (0L until 30L).map(i => (i, i + 1)).toDF("doc1", "doc2")
+    val n = Dedup.clusters(docs, precomputedPairs = Some(pairs)).count()
+    assert(n == 40)
+    Caches.release()
+    val added = sc.getPersistentRDDs.keySet -- before
+    added.foreach(id => sc.getPersistentRDDs(id).unpersist())
+    assert(added.isEmpty, s"persisted RDDs left after Caches.release: $added")
+  }
 }

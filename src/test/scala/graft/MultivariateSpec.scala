@@ -264,6 +264,41 @@ class MultivariateSpec extends SparkTestBase {
     }
   }
 
+  test("corrMatrix over several tiles equals the one-tile matrix") {
+    // a random fleet of 16 signals (8 names × 2 nodes) over 3 buckets:
+    // widthCap = 4 tiles the pair triangle 4 ways, so every pair is
+    // scored in a diagonal or a cross tile; the matrix must not depend
+    // on which. Offset, gappy and constant series exercise the
+    // merge-intersect and the zero-variance drop; strongly coupled
+    // pairs give the 0.8 prune something to keep.
+    val rnd = new scala.util.Random(2024)
+    val shared = Array.fill(72)(rnd.nextGaussian())
+    val rows = for {
+      sig <- 0 until 8; node <- Seq("n0", "n1"); t <- 0 until 72
+      if !(sig == 5 && t < 9) && !(sig == 6 && t % 4 == 2)
+    } yield {
+      val w = (sig - 3.5) / 3.5
+      val v =
+        if (sig == 7 && node == "n1") 3.0
+        else w * shared(t) + (1.0 - math.abs(w)) * rnd.nextGaussian()
+      (f"s$sig%02d", node, (t / 24).toLong, t.toLong, v)
+    }
+    val grid = rows.toDF("name", "node", "b", "i", "gval")
+    val cap = 4
+    val width = grid.select("name", "node").distinct().count()
+    assert(math.ceil(width.toDouble / cap) >= 3, "the small cap must give 3+ tiles")
+    def matrix(widthCap: Int, same: Boolean, prune: Option[Double]) =
+      graft.operators.Correlate.corrMatrix(grid, sameNodeOnly = same,
+          widthCap = widthCap, pruneAbsR = prune)
+        .collect().map(_.toString).sorted.toSeq
+    for ((same, prune) <- Seq((false, None), (true, None), (false, Some(0.8)))) {
+      val one = matrix(512, same, prune)
+      val tiled = matrix(cap, same, prune)
+      assert(one.nonEmpty, s"same=$same prune=$prune: empty matrix")
+      assert(tiled == one, s"same=$same prune=$prune: tiled matrix diverged")
+    }
+  }
+
   test("corrCluster groups co-moving signals and leaves the independent one alone") {
     // a and b move together; c is independent noise. indexed-grid shape
     // (name, node, b, i, qv consumed via withQuant → needs gval, i, b)

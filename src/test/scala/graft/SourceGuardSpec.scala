@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source-level guards on `src/main/scala`: every main builds its
-  * session through `GraftSession.build` (core.scala), and operator,
-  * function, source and report code never reads the process
+  * session through `GraftSession.build` (core.scala), every derived
+  * width reads the session width through `Widths` (core.scala), and
+  * operator, function, source and report code never reads the process
   * environment. Each rule stops one kind of config drift from coming
   * back a file at a time.
   */
@@ -32,5 +33,14 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       case (p, src) if src.contains("sys.env") || src.contains("System.getenv") => p.toString
     }
     assert(hits.isEmpty, s"env reads in $hits")
+  }
+
+  test("conf.numShufflePartitions is read only in core.scala") {
+    // every derived width, the tile walks' and the label loop's too,
+    // reads the session width through Widths
+    val hits = sources(root).collect {
+      case (p, src) if src.contains("conf.numShufflePartitions") => p.getFileName.toString
+    }
+    assert(hits == Seq("core.scala"))
   }
 }
