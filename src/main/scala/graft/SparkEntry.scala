@@ -6051,12 +6051,9 @@ object SparkEntry {
         |FROM ev GROUP BY event_type, hour_start ORDER BY event_type, hour_start""".stripMargin)),
 
     Q("stream_session_window", (s, dir) => {
-      // native session_window — the streaming-capable session op (with
-      // a watermark the SAME expression runs on readStream, state
-      // merged and evicted by the engine instead of hand-rolled
-      // mapGroupsWithState). min/max/count aggregates keep the output
-      // engine-neutral: window.end embeds the gap padding, the span
-      // does not.
+      // native session_window: the engine merges the sessions.
+      // min/max/count aggregates keep the output engine-neutral:
+      // window.end embeds the gap padding, the span does not.
       val ev = Tables.events(s, dir)
         .select(col("user_id"),
           timestamp_seconds(expr("ts div 1000000000")).as("tstamp"),
@@ -6083,8 +6080,7 @@ object SparkEntry {
     Q("stream_sliding_agg", (s, dir) => {
       // batch equivalent of window(ts, "1 hour", slide "15 minutes"):
       // each event lands in 4 overlapping windows (explode in-task, no
-      // extra shuffle beyond the aggregate); the streaming variant is
-      // the EventStream hourly agg with a slide — identical cells
+      // extra shuffle beyond the aggregate)
       Tables.events(s, dir)
         .select(col("event_type"), expr("ts div 1000000000").as("tsec"), col("value"))
         .select(col("event_type"), col("tsec"), col("value"),

@@ -18,6 +18,14 @@ object Dedup {
 
   private def words(text: Column): Column = split(lower(text), "\\s+")
 
+  /** Sorted distinct bigram shingles from a word array. Caller
+    * guarantees size(w) ≥ 2 (sequence(1, 0) DESCENDS and
+    * element_at(w, 0) throws).
+    */
+  private def bigramShingles(w: Column): Column =
+    sort_array(array_distinct(transform(sequence(lit(1), size(w) - 1),
+      i => concat(element_at(w, i), lit(" "), element_at(w, i + 1)))))
+
   /** Word k-shingles (k=2) — with a tiny vocabulary single words are
     * shared by every document; bigrams discriminate.
     *
@@ -28,18 +36,6 @@ object Dedup {
     * Sorted ONCE per document so every downstream pair verification is
     * an allocation-free merge scan (see sorted_intersect_count).
     */
-  /** Sorted distinct bigram shingles from a word array — ONE builder
-    * shared by the batch pipeline ([[withShingles]]) and the streaming
-    * probe (CurationStream.incrementalGate): the stream's
-    * no-false-negative contract is only valid while both sides
-    * shingle bit-identically, so there is exactly one definition to
-    * drift. Caller guarantees size(w) ≥ 2 (sequence(1, 0) DESCENDS
-    * and element_at(w, 0) throws).
-    */
-  private[graft] def bigramShingles(w: Column): Column =
-    sort_array(array_distinct(transform(sequence(lit(1), size(w) - 1),
-      i => concat(element_at(w, i), lit(" "), element_at(w, i + 1)))))
-
   private[graft] def withShingles(docs: DataFrame): DataFrame =
     spread(docs).select(col("doc_id"), words(col("text")).as("w"))
       // single-word docs have no bigrams
@@ -198,82 +194,6 @@ object Dedup {
         (docId, mins.toSeq)
       }
       .toDF("doc_id", "sig")
-  }
-
-  /** The low 64 bits of md5 per shingle as a signed bigint — the base
-    * hash of the MinHash pipeline, as a per-row expression over the
-    * shingle array (no explode). Bit-identical to the exploded form in
-    * [[signatures]]. Materialize the result in its own projection
-    * before feeding [[rowSig]]: referencing the md5 transform inside
-    * the 64-permutation lambda would re-run it per permutation (no CSE
-    * across lambda boundaries — the withShingles lesson).
-    */
-  private[graft] def shingleHash64(sh: Column): Column =
-    // inner transform materializes each digest ONCE; slicing both
-    // halves of `d` in the outer lambda would otherwise re-run md5
-    // per half (no CSE across lambda boundaries — the withShingles
-    // lesson, and this is the streaming ingest hot path)
-    transform(transform(sh, s => md5(s)), d =>
-      shiftleft(conv(substring(d, 17, 8), 16, 10).cast("long"), 32) +
-        conv(substring(d, 25, 8), 16, 10).cast("long"))
-
-  /** Per-row MinHash signature as ONE expression — the STREAM-SAFE
-    * formulation: [[signatures]] groups exploded shingles (a shuffle +
-    * stateful aggregation, fine at rest, illegal in an append-mode
-    * stream without watermark state), this computes the identical
-    * 64-long signature inside a stateless projection: for each
-    * permutation p, the signed min over splitmix64(h0 ^ p·C) of the
-    * row's shingle hashes. Java-wrap multiplication (non-ANSI) and
-    * `shiftrightunsigned` reproduce the JVM mix exactly —
-    * KernelPropertySpec pins rowSig == signatures over a random
-    * corpus, which is what makes the streaming bloom probe's
-    * no-false-negative contract hold against the batch band index.
-    */
-  private[graft] def rowSig(hs: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), p => {
-      val pl = p.cast("long")
-      array_min(transform(hs, h => {
-        val z0 = h.bitwiseXOR(pl * lit(0x9E3779B97F4A7C15L))
-        val z1 = z0.bitwiseXOR(shiftrightunsigned(z0, 30)) *
-          lit(0xBF58476D1CE4E5B9L)
-        val z2 = z1.bitwiseXOR(shiftrightunsigned(z1, 27)) *
-          lit(0x94D049BB133111EBL)
-        z2.bitwiseXOR(shiftrightunsigned(z2, 31))
-      }))
-    })
-
-  /** One xxhash64 per (band, raw signature slice) — the band key in
-    * probe-sketch form, shared by the batch sketch builder and the
-    * streaming probe (same expression → same bits on both sides).
-    */
-  private[graft] def bandHash64(sig: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      xxhash64(b, slice(sig, b * rows + 1, lit(rows))))
-
-  /** The corpus band index as xxhash64 probe values — (doc_id, bh64),
-    * one row per (doc, band). Feeds the ingest-side bloom sketch
-    * (streaming.CurationStream.corpusDedupSketch); the same per-row
-    * signature expression runs on the stream side.
-    */
-  /** rowSig's splitmix mix is Column-level long multiplication relying
-    * on Java-wrap overflow; under ANSI mode it would throw
-    * ARITHMETIC_OVERFLOW deep inside the first micro-batch — fail loud
-    * at plan time instead (Tables.prepare sets the conf).
-    */
-  private[graft] def requireNonAnsi(df: DataFrame): Unit =
-    require(!df.sparkSession.conf.get("spark.sql.ansi.enabled", "false")
-        .toBoolean,
-      "Dedup.rowSig needs Java-wrap long multiplication: set " +
-        "spark.sql.ansi.enabled=false (Tables.prepare does)")
-
-  private[graft] def bandHashes(docs: DataFrame, numHashes: Int = 64,
-                                bands: Int = 16): DataFrame = {
-    requireNonAnsi(docs)
-    withShingles(docs)
-      .withColumn("_hs", shingleHash64(col("sh")))
-      .withColumn("_sig", rowSig(col("_hs"), numHashes))
-      .select(col("doc_id"),
-        explode(bandHash64(col("_sig"), bands, numHashes / bands)).as("bh64"))
   }
 
   /** MinHash estimate calibration — measured signature quality, the

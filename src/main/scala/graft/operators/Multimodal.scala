@@ -386,40 +386,4 @@ object Multimodal {
       .toDF("doc_id", "n_frames", "total_energy", "peak_frame",
         "peak_energy")
   }
-
-  /** The decoded per-frame energy FEED itself (doc_id, frame_idx,
-    * fenergy) — the rows [[audioFrameEnergy]] folds and the streaming
-    * pager (`FrameStream.audioEnergyStream`) consumes at ingest. Same
-    * writer→parser seam, same Σ|sample| frame fold; one typed scan,
-    * payloads die in-task. Exists so the at-ingest and at-rest paths
-    * provably read the SAME frames (parity pinned in StreamingSpec).
-    */
-  def audioFrameRows(docs: DataFrame, frameLen: Int = 256): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    decodeMeta(docs)
-      .select(col("doc_id"), col("byte_len"), col("checksum"))
-      .as[(Long, Long, Long)]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, blen, csu) =>
-          if (blen <= 0L) Iterator.empty
-          else {
-            val wav = MediaSynth.wavPcm16(synthRate(csu),
-              synthSamples(blen, csu))
-            val it = AudioCodec.samples(wav)
-            val out = Seq.newBuilder[(Long, Long, Long)]
-            var frame = 0L; var acc = 0L; var idx = 0L
-            while (it.hasNext) {
-              val f = idx / frameLen
-              if (f != frame) { out += ((id, frame, acc)); frame = f; acc = 0L }
-              acc += math.abs(it.next().toLong)
-              idx += 1
-            }
-            if (idx > 0) out += ((id, frame, acc))
-            out.result().iterator
-          }
-        }
-      }
-      .toDF("doc_id", "frame_idx", "fenergy")
-  }
 }

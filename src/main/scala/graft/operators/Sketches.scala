@@ -60,8 +60,8 @@ object Sketches {
     * map-side partial max into at most |groups|·512 rows — the ONLY
     * exchange, fixed-size regardless of input rows — and the register →
     * estimate fold is a second tiny aggregate. Registers are mergeable
-    * by construction (max commutes), so the same plan serves streaming
-    * or incremental merges.
+    * by construction (max commutes), so the same plan serves
+    * incremental merges.
     *
     * Estimate arithmetic is exact-integer until the last step: the
     * register sum Σ2^(56−ρ) accumulates as DECIMAL(38,0) (HUGEINT on
@@ -80,24 +80,14 @@ object Sketches {
     * cross-shard union all combine registers with the same max-fold
     * before [[hllFold]] produces the estimate.
     */
-  def hllRegisters(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
-    hllRegistersBy(df, Seq(keyCol), col(valueCol))
-
-  /** [[hllRegisters]] over arbitrary grouping columns. Streaming-safe:
-    * with a watermarked window column among the keys this is a plain
-    * supported streaming aggregate (`max` commutes and never retracts),
-    * and the state is ≤ 512 register rows per group — the streaming
-    * distinct-users state that does NOT grow with traffic.
-    */
-  def hllRegistersBy(df: DataFrame, keyNames: Seq[String],
-                     valueCol: Column): DataFrame = {
-    val h = md5Low64(valueCol)
+  def hllRegisters(df: DataFrame, keyCol: String, valueCol: String): DataFrame = {
+    val h = md5Low64(col(valueCol))
     val bucket = shiftrightunsigned(h, WBits)
     val w = h.bitwiseAND(lit((1L << WBits) - 1))
     val rho = when(w === 0L, lit(WMax))
       .otherwise(lit(WMax) - length(bin(w)))
     df.withColumn("bucket", bucket).withColumn("rho", rho)
-      .groupBy(keyNames.head, (keyNames.tail :+ "bucket"): _*)
+      .groupBy(keyCol, "bucket")
       .agg(max("rho").as("r"))
   }
 
@@ -139,9 +129,9 @@ object Sketches {
     * partial top-k already combines); the sample median estimates the
     * group median with O(1/√k) error. The sample keys on the ROW id,
     * so the contract is exactly-once ids: an at-least-once feed must
-    * dedup by `idCol` upstream (EventStream.dedupStream) or replayed
-    * rows enter the sample twice — unlike the HLL registers, whose
-    * max-fold absorbs replays natively (pinned in MultivariateSpec).
+    * dedup by `idCol` upstream or replayed rows enter the sample
+    * twice — unlike the HLL registers, whose max-fold absorbs replays
+    * natively (pinned in MultivariateSpec).
     *
     * The only exchange carries (group, rank, value) — three narrow
     * columns, never whole rows — and the per-group top-k is the

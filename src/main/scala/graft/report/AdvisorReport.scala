@@ -1,5 +1,6 @@
 package graft.report
 
+import graft.Caches._
 import graft.Num._
 import graft.operators.{ChangePoints, Correlate, TimeSeries}
 import org.apache.spark.sql.DataFrame
@@ -16,14 +17,15 @@ import org.apache.spark.storage.StorageLevel
   * reference plots (metrics_advisor.py:198-224).
   *
   * Caching contract: [[gatedGrid]] persists the shared grid
-  * (MEMORY_AND_DISK); a caller releases it with [[release]] once the
-  * report is rendered. `Main.run` runs each layer once and owns three
-  * persisted frames: the cleaned signals (read by step inference and
-  * the grid build, released as soon as the grid is cached), the grid,
-  * and the [[objectiveAnomalies]] frame that both the advice join and
-  * the chart markers read. It releases all three in a `finally`, so a
-  * failed pass leaves nothing cached. Operator-internal persists are
-  * tracked by `graft.Caches` and freed by `Caches.release()`.
+  * (MEMORY_AND_DISK) and registers it with `graft.Caches`, so
+  * `Caches.release()` frees it like every operator-internal persist; a
+  * caller that holds the grid can free it earlier with [[release]].
+  * `Main.run` runs each layer once and owns three persisted frames: the
+  * cleaned signals (read by step inference and the grid build, released
+  * as soon as the grid is cached), the grid, and the
+  * [[objectiveAnomalies]] frame that both the advice join and the chart
+  * markers read. It releases all three in a `finally`, so a failed pass
+  * leaves nothing cached.
   */
 object AdvisorReport {
 
@@ -96,7 +98,7 @@ object AdvisorReport {
     */
   def gatedGrid(signals: DataFrame, cfg: Config = Config()): DataFrame =
     gateSignals(buildGridFromSignals(signals, cfg), cfg)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK).tracked
 
   /** The anomaly union (outliers ∪ change points) of the objective
     * signals, with the config's detector knobs.
@@ -247,11 +249,28 @@ object AdvisorReport {
     * The chart markers come from `anomalies`, the [[objectiveAnomalies]]
     * frame the advice was joined against; without it the detector runs
     * once more here with the same config.
+    *
+    * `limit` caps the advice rows per objective, in advice order, so
+    * one objective with many anomalous buckets cannot push the others
+    * out of the report; a line under the table names every objective
+    * that was cut.
     */
   def renderMarkdown(advice: DataFrame, grid: Option[DataFrame] = None,
                      limit: Int = 500, cfg: Config = Config(),
                      anomalies: Option[DataFrame] = None): String = {
-    val rows = advice.limit(limit).collect()
+    val perObj = org.apache.spark.sql.expressions.Window.partitionBy("obj_name")
+    // the repartition lets the optimizer drop advice's global sort, so
+    // the cap costs one small exchange, not a range sort plus a second
+    val capped = advice.repartition(col("obj_name"))
+      .withColumn("_i", row_number().over(perObj.orderBy("obj_node", "b", "rank")))
+      .withColumn("_n", count(lit(1)).over(perObj))
+      .filter(col("_i") <= limit)
+      .collect()
+    // advice order, restored on the bounded collected rows
+    val rows = capped.sortBy(r => (r.getAs[String]("obj_name"),
+      r.getAs[String]("obj_node"), r.getAs[Long]("b"), r.getAs[Int]("rank")))
+    val cut = rows.filter(r => r.getAs[Int]("_i") == 1 && r.getAs[Long]("_n") > limit)
+      .map(r => s"`${r.getAs[String]("obj_name")}` (${r.getAs[Long]("_n") - limit})")
     val sb = new StringBuilder
     sb.append("# Metrics advisor report\n\n")
     // the one-line triage answer the reference leads with
@@ -277,6 +296,8 @@ object AdvisorReport {
         s"| ${r.getAs[String]("cand_name")}/${r.getAs[String]("cand_node")} " +
         s"| ${r.getAs[Long]("lag")} | ${r.getAs[Double]("r")} | ${r.getAs[Int]("rank")} |\n")
     }
+    if (cut.nonEmpty)
+      sb.append(s"\nAdvice capped at $limit rows per objective; rows cut: ${cut.mkString(", ")}.\n")
     grid.foreach { g =>
       sb.append("\n## Normalized series per anomalous bucket\n")
       // derive the wanted-signal set from the ALREADY-collected rows —
@@ -289,10 +310,12 @@ object AdvisorReport {
         .flatMap(r => Seq(
           (r.getAs[String]("obj_name"), r.getAs[String]("obj_node"), r.getAs[Long]("b")),
           (r.getAs[String]("cand_name"), r.getAs[String]("cand_node"), r.getAs[Long]("b"))))
-        .distinct.toSeq.toDF("name", "node", "b")
-      val series = bucketSeriesFor(g, wanted)
+        .distinct
+      // a wanted (signal, bucket) holds at most bucketSec / stepSec
+      // samples, so the bound never cuts a chart short
+      val series = bucketSeriesFor(g, wanted.toSeq.toDF("name", "node", "b"))
         .orderBy("b", "name", "node", "i")
-        .limit(limit * 40).collect()
+        .limit(wanted.length * math.max(1, (cfg.bucketSec / cfg.stepSec).toInt)).collect()
       val bySignal = series
         .groupBy(r => (r.getAs[Long]("b"), r.getAs[String]("name"), r.getAs[String]("node")))
         .toSeq.sortBy(_._1)

@@ -200,4 +200,43 @@ class AdvisorReportSpec extends SparkTestBase {
     assert(rels.nonEmpty)
     assert(rels.forall(v => v >= -1.0001 && v <= 1.0001), "normalization out of range")
   }
+
+  test("the row cap applies per objective, so no objective drops out") {
+    // a_obj alone has more rows than the cap; under one global cap on
+    // advice sorted by objective it would fill the table by itself
+    def rowsOf(obj: String, n: Int) = (0 until n).map(i =>
+      (obj, "n0", T0 + i * 86400L, "cpu", "n1", 0L, 0.9, 1))
+    val advice = (rowsOf("a_obj", 5) ++ rowsOf("b_obj", 2) ++ rowsOf("c_obj", 1))
+      .toDF("obj_name", "obj_node", "b", "cand_name", "cand_node", "lag", "r", "rank")
+      .orderBy("obj_name", "obj_node", "b", "rank")
+    val md = AdvisorReport.renderMarkdown(advice, limit = 3, cfg = cfg)
+    val details = md.linesIterator.filter(_.startsWith("| ")).toSeq
+    Seq("a_obj" -> 3, "b_obj" -> 2, "c_obj" -> 1).foreach { case (obj, n) =>
+      assert(details.count(_.contains(s"| $obj/n0 |")) == n, md)
+    }
+    assert(md.contains("rows cut: `a_obj` (2)."), md)
+  }
+
+  test("charts keep every sample of every wanted signal under a tight row cap") {
+    // one advice row wants the objective and its candidate in one
+    // bucket: 2 series × 24 hourly samples, more than a fixed 40 rows
+    val grid = AdvisorReport.gatedGrid(signals, cfg)
+    val md = AdvisorReport.renderMarkdown(AdvisorReport.adviseOnGrid(grid, cfg),
+      Some(grid), limit = 1, cfg = cfg)
+    val series = md.linesIterator.filter(_.startsWith("- bucket ")).toSeq
+    assert(series.size == 2, md)
+    series.foreach(l => assert(l.split(": ")(1).split(", ").length == 24, l))
+  }
+
+  test("Caches.release frees the grid advise persisted") {
+    val sc = spark.sparkContext
+    Caches.release()
+    val before = sc.getPersistentRDDs.keySet
+    val events = signals.select(col("name").as("event_type"), lit(0L).as("user_id"),
+      (col("tsec") * 1000000000L).as("ts"), col("value"))
+    assert(AdvisorReport.advise(events, cfg).collect().nonEmpty)
+    Caches.release()
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"advise left ${added.size} cached RDD(s) behind")
+  }
 }

@@ -589,4 +589,16 @@ class AnalysisSpec extends SparkTestBase {
       ("one", 1L, 30 * 900L, 30 * 900L, 0.0, 0L),
       ("two", 2L, 10 * 900L, 50 * 900L, 36000.0, 36000L)), s"got $out")
   }
+
+  test("sketch heavy hitters never underestimates and nails the top term") {
+    val docs = (1 to 50).map(i =>
+      (i.toLong, "alpha " * 10 + s"beta gamma delta word$i")).toDF("doc_id", "text")
+    val out = graft.operators.TextAnalysis.heavyHitters(docs, 5)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(out.head._1 == "alpha" && out.head._2 == 500L)
+    // CMS structurally never undercounts
+    assert(out.forall { case (_, exact, est) => est >= exact })
+    // at eps=1e-3 over this tiny vocabulary the estimates are exact
+    assert(out.forall { case (_, exact, est) => est == exact })
+  }
 }

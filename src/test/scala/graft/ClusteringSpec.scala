@@ -2,8 +2,6 @@ package graft
 
 import graft.operators.Clustering
 import graft.sources.MetricsTar
-import graft.streaming.EventStream
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.{Files, Paths}
 
 class ClusteringSpec extends SparkTestBase {
@@ -211,29 +209,6 @@ class ClusteringSpec extends SparkTestBase {
     assert(v(0) > 70.0 && v(1) < 0.1)
     // explained ratios from MLlib and projection variances must agree
     assert(math.abs(v(0) / v.sum - ratios(0)) < 0.01)
-  }
-
-  test("streaming sessionize closes sessions when the watermark passes the gap") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Long)]
-    val stream = mem.toDF().toDF("event_id", "ts", "user_id")
-      .selectExpr("event_id", "ts * 1000000000 AS ts", "user_id")
-    val q = EventStream.sessionize(stream, gapSec = 100L, lateness = "0 seconds")
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    // user 7: a burst, then a much later event that advances the
-    // watermark far past start+gap → first session must close
-    mem.addData((1L, 1000L, 7L), (2L, 1050L, 7L))
-    q.processAllAvailable()
-    mem.addData((3L, 5000L, 7L))
-    q.processAllAvailable()
-    mem.addData((4L, 9000L, 7L))
-    q.processAllAvailable()
-    val closed = spark.sql(
-      "SELECT user_id, session_start, session_end, n_events FROM sessions ORDER BY session_start")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    q.stop()
-    assert(closed.contains((7L, 1000L, 1050L, 2L)), s"got $closed")
   }
 
   test("tar bundle extraction reads reference-format bundles") {

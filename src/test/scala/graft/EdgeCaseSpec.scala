@@ -278,15 +278,8 @@ class EdgeCaseSpec extends SparkTestBase {
     assert(Multimodal.phashPairs(
       docs((1L, "a"), (2L, "z"), (3L, "ab"), (4L, "pq"))).count() == 0)
     // an eval set with no ≥ w-word doc yields a NULL bloom sketch; the
-    // stream gate and the batch bloom path both answer "clean" instead
-    // of failing analysis on lit(null)
+    // bloom path answers "clean" instead of failing analysis on lit(null)
     val evalShort = docs((97L, "too short"))
-    val sk = graft.streaming.CurationStream.evalSketch(evalShort, w = 8)
-    assert(sk == null)
-    val gated = graft.streaming.CurationStream.gate(
-      docs((1L, "one two three four five six seven eight nine")), sk, w = 8)
-    assert(gated.count() == 1 &&
-      gated.filter(col("maybe_contaminated") === 1).count() == 0)
     assert(Curation.decontaminateBloom(
       docs((1L, "one two three four five six seven eight nine")),
       evalShort, w = 8).count() == 0)

@@ -334,7 +334,7 @@ class MultivariateSpec extends SparkTestBase {
     one.values.foreach(est =>
       assert(math.abs(est - 700.0) / 700.0 < 0.2, s"estimate $est vs 700"))
     // KMV keys its sample on the row id, so its contract is
-    // exactly-once ids (dedupStream upstream under at-least-once) —
+    // exactly-once ids (dedup upstream under at-least-once) —
     // the property here is the one it does promise: the bottom-k
     // sample median tracks the exact median computed beside it
     val m = Sketches.kmvMedian(df, "event_type", "event_id", "value")
@@ -344,6 +344,22 @@ class MultivariateSpec extends SparkTestBase {
       assert(math.abs(approx - exact) <= 10.0,
         s"sample median $approx should track exact $exact")
     }
+  }
+
+  test("hll registers fold to the exact small-range count per day") {
+    import graft.operators.Sketches
+    // two days, overlapping users; day 2 has exactly 3 distinct users
+    val rows = (1 to 40).map(i =>
+      (i.toLong, (i % 17).toLong * 3600L * 1000000000L, (i % 7).toLong)) ++
+      Seq((100L, 90000L * 1000000000L, 1L), (101L, 91000L * 1000000000L, 2L),
+        (102L, 92000L * 1000000000L, 1L), (103L, 93000L * 1000000000L, 9L))
+    val df = rows.map { case (id, ts, user) => (id, ts / (86400L * 1000000000L), user) }
+      .toDF("event_id", "d", "user_id")
+    // folding the registers gives the exact small-range count (linear
+    // counting is exact when every user occupies its own bucket)
+    val est = Sketches.hllFold(Sketches.hllRegisters(df, "d", "user_id"), "d")
+      .orderBy("d").collect().map(_.getLong(1)).toSeq
+    assert(est == Seq(7L, 3L), est.toString)
   }
 
   test("the scoreboard composition surfaces each leg's signal") {

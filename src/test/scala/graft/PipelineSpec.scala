@@ -102,26 +102,6 @@ class PipelineSpec extends SparkTestBase {
     assert(out.head == 1L)
   }
 
-  test("rowSig (stream-safe expression) equals the grouped signatures " +
-    "over a random corpus") {
-    val rnd = new scala.util.Random(4242)
-    val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-      "eta", "theta", "iota", "kappa", "lambda", "mu")
-    val d = (1 to 60).map { i =>
-      val n = 2 + rnd.nextInt(20)
-      (i.toLong, Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
-    }.toDF("doc_id", "text")
-    val sets = Dedup.withShingles(d)
-    val grouped = Dedup.signatures(sets, 64)
-      .as[(Long, Seq[Long])].collect().toMap
-    val perRow = sets
-      .withColumn("_hs", Dedup.shingleHash64(col("sh")))
-      .select(col("doc_id"), Dedup.rowSig(col("_hs"), 64).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(perRow.keySet == grouped.keySet)
-    perRow.foreach { case (id, sig) => assert(sig == grouped(id), s"doc $id") }
-  }
-
   test("filteredKnn pre-filters by label and flags post-filter recall loss") {
     val e = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f), 0), // query, label 0

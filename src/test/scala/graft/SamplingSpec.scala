@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Dedup, Sampling}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class SamplingSpec extends SparkTestBase {
@@ -244,5 +245,27 @@ class SamplingSpec extends SparkTestBase {
     assert(out.head._4.contains(1.0))
     // doc 2 has 8 bigram shingles, doc 101 shares 7 → jac 7/9
     assert(out(1)._4.contains(0.7778))
+  }
+
+  test("hash sampling is stateless and stream/batch identical") {
+    implicit val sqlCtx = spark.sqlContext
+    val rows = (1 to 200).map(i => (i.toLong, s"doc body $i", s"src${i % 3}"))
+    val rates = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25)
+    val mem = MemoryStream[(Long, String, String)]
+    val streamDF = mem.toDF().toDF("doc_id", "text", "source")
+    val q = graft.operators.Sampling
+      .stratifiedSample(streamDF, "source", col("doc_id").cast("string"), rates)
+      .writeStream.format("memory").queryName("sampled").outputMode("append").start()
+    mem.addData(rows: _*)
+    q.processAllAvailable()
+    val streamed = spark.sql("SELECT doc_id FROM sampled")
+      .collect().map(_.getLong(0)).toSet
+    q.stop()
+    val batch = graft.operators.Sampling
+      .stratifiedSample(rows.toDF("doc_id", "text", "source"), "source",
+        col("doc_id").cast("string"), rates)
+      .collect().map(_.getLong(0)).toSet
+    assert(streamed == batch)
+    assert(streamed.nonEmpty)
   }
 }

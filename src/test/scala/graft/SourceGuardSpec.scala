@@ -5,10 +5,10 @@ import scala.jdk.CollectionConverters._
 
 /** Source-level guards on `src/main/scala`: every main builds its
   * session through `GraftSession.build` (core.scala), every derived
-  * width reads the session width through `Widths` (core.scala), and
+  * width reads the session width through `Widths` (core.scala),
   * operator, function, source and report code never reads the process
-  * environment. Each rule stops one kind of config drift from coming
-  * back a file at a time.
+  * environment, and no code runs a Structured Streaming query. Each
+  * rule stops one kind of drift from coming back a file at a time.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -42,5 +42,15 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       case (p, src) if src.contains("conf.numShufflePartitions") => p.getFileName.toString
     }
     assert(hits == Seq("core.scala"))
+  }
+
+  test("no source imports Structured Streaming or calls writeStream") {
+    // graft is a batch engine: a bundle or a table in, a report or a
+    // frame out
+    val hits = sources(root).collect {
+      case (p, src) if src.contains("org.apache.spark.sql.streaming") ||
+          src.contains(".writeStream") => p.getFileName.toString
+    }
+    assert(hits.isEmpty, s"streaming code in $hits")
   }
 }
