@@ -19,13 +19,15 @@ import org.apache.spark.sql.Dataset
   */
 object Caches {
 
-  private val frames =
-    new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
-  private val rdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+  /** Everything tracked, each with the sequence number it was tracked
+    * under, so [[scoped]] can tell its own entries from earlier ones.
+    */
+  private val entries =
+    new java.util.concurrent.ConcurrentLinkedQueue[(Long, AnyRef)]()
+  private val seq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Number of currently tracked frames and RDDs (test hook). */
-  def trackedCount: Int = frames.size() + rdds.size()
+  def trackedCount: Int = entries.size()
 
   /** Unpersist (non-blocking) and forget every tracked frame and RDD.
     * For a frame this is safe at any point: consumed frames free their
@@ -35,20 +37,38 @@ object Caches {
     * recomputed, so release only after the results are consumed — as
     * Bench, Verify and StageAudit do.
     */
-  def release(): Unit = {
-    var d = frames.poll()
-    while (d != null) { d.unpersist(false); d = frames.poll() }
-    var r = rdds.poll()
-    while (r != null) { r.unpersist(false); r = rdds.poll() }
+  def release(): Unit = releaseFrom(0L)
+
+  /** Run `body`, then release exactly what was tracked while it ran,
+    * also when it throws; whatever was tracked before stays. For a
+    * caller that consumes its results inside `body` (`Main.run`
+    * returns a rendered string) and shares the session with others.
+    */
+  def scoped[T](body: => T): T = {
+    val from = seq.get()
+    try body finally releaseFrom(from)
   }
+
+  private def releaseFrom(from: Long): Unit = {
+    val it = entries.iterator()
+    while (it.hasNext) {
+      val (n, x) = it.next()
+      if (n >= from && entries.remove((n, x))) x match {
+        case d: Dataset[_] => d.unpersist(false)
+        case r: RDD[_] => r.unpersist(false)
+      }
+    }
+  }
+
+  private def track(x: AnyRef): Unit = entries.add((seq.getAndIncrement(), x))
 
   implicit class TrackedDataset[T](private val ds: Dataset[T]) {
     /** Register this (persisted) frame for [[Caches.release]]. */
-    def tracked: Dataset[T] = { frames.add(ds); ds }
+    def tracked: Dataset[T] = { track(ds); ds }
   }
 
   implicit class TrackedRdd[T](private val rdd: RDD[T]) {
     /** Register this (persisted) RDD for [[Caches.release]]. */
-    def tracked: RDD[T] = { rdds.add(rdd); rdd }
+    def tracked: RDD[T] = { track(rdd); rdd }
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
 import graft.report.AdvisorReport
-import graft.sources.{MetricsCsv, MetricsProm, MetricsTar}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Caches._
+import graft.sources.{MetricsCsv, MetricsProm, MetricsTar, TempDirs}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** The CLI the reference exposes (`python metrics_advisor.py <bundle>`,
@@ -51,42 +52,38 @@ object Main {
   /** One advisor pass, each layer computed once: the cleaned signals
     * feed step inference and the grid build from one scan, and one
     * objective anomaly pass feeds both the advice join and the chart
-    * markers. Every frame persisted here is released before returning,
-    * also when the pass throws.
+    * markers. The pass leaves nothing behind, also when it throws: it
+    * releases exactly the frames tracked while it ran (frames cached
+    * before the call stay cached), then deletes the temp dirs its
+    * ingest made (the untarred bundle and the link dir).
     */
   def run(spark: SparkSession, input: String, objNames: Seq[String]): String = {
-    val signals = (
-      // any tar spelling routes to the sniffing tar reader — the
-      // shipped bundles include plain-tar `cluster-4048.gz.tar`
-      if (input.endsWith(".tar.gz") || input.endsWith(".tgz") ||
-          input.endsWith(".tar") || input.endsWith(".gz"))
-        MetricsTar.read(spark, input)
-      else if (input.endsWith(".prom") || input.endsWith(".txt"))
-        MetricsProm.signals(spark, input)
-      else MetricsCsv.read(spark, input)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    var grid: Option[DataFrame] = None
-    var anomalies: Option[DataFrame] = None
-    try {
+    val tmp = new TempDirs
+    try Caches.scoped {
+      val signals = (
+        // any tar spelling routes to the sniffing tar reader — the
+        // shipped bundles include plain-tar `cluster-4048.gz.tar`
+        if (input.endsWith(".tar.gz") || input.endsWith(".tgz") ||
+            input.endsWith(".tar") || input.endsWith(".gz"))
+          MetricsCsv.read(spark, MetricsTar.extractCsvs(input, tmp).toString, minSamples = 20, tmp)
+        else if (input.endsWith(".prom") || input.endsWith(".txt"))
+          MetricsProm.signals(spark, input)
+        else MetricsCsv.read(spark, input, minSamples = 20, tmp)
+      ).persist(StorageLevel.MEMORY_AND_DISK).tracked
       // bucket = 40 samples, the reference's count_bucket × sample step
       // (metrics_advisor.py:124-125: 40 × 15 s = 10 min on its bundles)
       val step = inferStepSec(signals)
       val cfg = AdvisorReport.Config(objNames = objNames,
         stepSec = step, bucketSec = 40L * step)
       val g = AdvisorReport.gatedGrid(signals, cfg)
-      grid = Some(g)
-      val a = AdvisorReport.objectiveAnomalies(g, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-      anomalies = Some(a)
+      val a = AdvisorReport.objectiveAnomalies(g, cfg)
+        .persist(StorageLevel.MEMORY_AND_DISK).tracked
       // the detector's series-length stash has scanned, and so cached,
       // the whole grid: nothing reads the signals again
       signals.unpersist()
       val advice = AdvisorReport.adviseOnGrid(g, cfg, a)
       AdvisorReport.renderMarkdown(advice, Some(g), cfg = cfg, anomalies = Some(a))
-    } finally {
-      signals.unpersist()
-      grid.foreach(AdvisorReport.release)
-      anomalies.foreach(_.unpersist())
-    }
+    } finally tmp.deleteAll()
   }
 
   def main(args: Array[String]): Unit = {

@@ -1038,7 +1038,7 @@ object SparkEntry {
   // ---- e-divisive oracle builder (ad_edivisive, ad_anomaly_union) ----
   // The one kernel the r4 verdict called inexpressible: the engine now
   // runs on ×1e4 integers with md5-keyed SORT-ORDER permutations
-  // (EDivisive.permuted — a sort by precomputed keys is SQL; a
+  // (EDivisive.argsortKeys — a sort by precomputed keys is SQL; a
   // Fisher-Yates walk is not), so the whole hierarchical permutation
   // test replays as one recursive CTE. Exact-integer distance sums via
   // nested list lambdas; let-bindings via the single-element
@@ -1081,7 +1081,7 @@ object SparkEntry {
        |  FROM st s JOIN rk r ON r.lang = s.lang AND r.rk = s.rk + 1)""".stripMargin
   }
 
-  /** Max-Q struct (v, nt := −t) of the engine's bestSplitQ over a
+  /** Max-Q struct (v, nt := −t) of the engine's EDivisive.scanQ over a
     * 1-based BIGINT list expr; NULL when the segment is shorter than
     * 2·minSize (= the engine's (−1, 0.0) leaf). Names suffixed 0 to
     * dodge lambda-param collisions when nested under the perm loop.

@@ -36,15 +36,27 @@ object EDivisive {
     * DuckDB oracle replays the exact draw (the r4 verdict's "splitmix
     * move"; Fisher-Yates is inherently sequential and was the one part
     * of this kernel no oracle could replay).
+    *
+    * So one argsort of all positions per permutation serves every
+    * segment the recursion tests: restricted to [lo, hi) it is that
+    * segment's order. Equal keys keep position order (the j
+    * tie-break), so the order is total even on a key collision.
     */
-  private def permuted(x: Array[Long], lo: Int, hi: Int,
-                       keys: Array[Long]): Array[Long] = {
-    val order = Array.range(lo, hi)
-      .sortBy(j => (keys(j), j)) // idx tie-break: total order even on key collision
-    val out = new Array[Long](order.length)
-    var i = 0
-    while (i < order.length) { out(i) = x(order(i)); i += 1 }
-    out
+  private[graft] def argsortKeys(keys: Array[Long]): Array[Int] = {
+    val n = keys.length
+    val sorted = keys.clone()
+    java.util.Arrays.sort(sorted)
+    val order = new Array[Int](n)
+    // equal keys share one lower bound b; placed(b) of them are placed
+    val placed = new Array[Int](n)
+    var j = 0
+    while (j < n) {
+      val first = lowerBound(sorted, keys(j))
+      order(first + placed(first)) = j
+      placed(first) += 1
+      j += 1
+    }
+    order
   }
 
   /** Fenwick tree over value ranks carrying (count, sum of values);
@@ -168,30 +180,37 @@ object EDivisive {
     }
   }
 
-  /** [[bestSplit]] over the quantized series: exact-Long distance sums,
-    * Q assembled from them by one fixed IEEE sequence (the same
-    * expression the oracle writes verbatim). Q here is scaled ×1e4
-    * against the 4-dp series — callers divide once at the edge.
+  /** Lower-bound rank of each x[lo, hi) value among the segment's
+    * sorted values: equal values share a rank (they contribute zero
+    * distance either way). A permutation of the segment holds the same
+    * values, so its ranks are these, reordered.
     */
-  private[graft] def bestSplitQ(x: Array[Long], lo: Int, hi: Int,
-                                minSize: Int): (Int, Double) = {
+  private def segmentRanks(x: Array[Long], lo: Int, hi: Int): Array[Int] = {
     val n = hi - lo
-    if (n < 2 * minSize) return (-1, 0.0)
-    val seg = java.util.Arrays.copyOfRange(x, lo, hi)
-    val sortedVals = seg.clone()
+    val sortedVals = java.util.Arrays.copyOfRange(x, lo, hi)
     java.util.Arrays.sort(sortedVals)
-    val rank = new Array[Int](n)
-    var r = 0
-    while (r < n) {
-      var lb = 0; var ub = n
-      val v = seg(r)
-      while (lb < ub) {
-        val mid = (lb + ub) >>> 1
-        if (sortedVals(mid) < v) lb = mid + 1 else ub = mid
-      }
-      rank(r) = lb
-      r += 1
+    Array.tabulate(n)(r => lowerBound(sortedVals, x(lo + r)))
+  }
+
+  /** First position of `sorted` holding a value ≥ v. */
+  private def lowerBound(sorted: Array[Long], v: Long): Int = {
+    var lb = 0; var ub = sorted.length
+    while (lb < ub) {
+      val mid = (lb + ub) >>> 1
+      if (sorted(mid) < v) lb = mid + 1 else ub = mid
     }
+    lb
+  }
+
+  /** [[bestSplit]] over a quantized segment `seg` whose value ranks
+    * are `rank` ([[segmentRanks]]): exact-Long distance sums, Q
+    * assembled from them by one fixed IEEE sequence (the same
+    * expression the oracle writes verbatim). τ is relative to the
+    * segment; Q is scaled ×1e4 against the 4-dp series — callers
+    * divide once at the edge.
+    */
+  private def scanQ(seg: Array[Long], rank: Array[Int], minSize: Int): (Int, Double) = {
+    val n = seg.length
     val dLeft = new Array[Long](n)
     val fwd = new L1FenwickQ(n)
     var i = 0
@@ -216,9 +235,8 @@ object EDivisive {
     var j = 1
     while (j < minSize) { left += dLeft(j); j += 1 }
     var bestTau = -1; var bestQ = Double.NegativeInfinity
-    var tau = lo + minSize
-    while (tau <= hi - minSize) {
-      val t = tau - lo
+    var t = minSize
+    while (t <= n - minSize) {
       val right = rightAt(t)
       val cross = total - left - right
       val m = t.toDouble; val k = (n - t).toDouble
@@ -226,32 +244,43 @@ object EDivisive {
       val t2 = if (m > 1) left.toDouble * (2.0 / (m * (m - 1))) else 0.0
       val t3 = if (k > 1) right.toDouble * (2.0 / (k * (k - 1))) else 0.0
       val q = (m * k / (m + k)) * (t1 - t2 - t3)
-      if (q > bestQ) { bestQ = q; bestTau = tau }
+      if (q > bestQ) { bestQ = q; bestTau = t }
       left += dLeft(t)
-      tau += 1
+      t += 1
     }
     (bestTau, bestQ)
   }
 
   /** Permutation test on the quantized series: is q0 significant at
     * `pvalue` on x[lo, hi) against the |keys| sort-order permutations?
-    * Early exit: the test fails as soon as exceed reaches
+    * `order(p)` is permutation p's argsort of the whole series and
+    * `rank` the segment's value ranks ([[segmentRanks]]), so a
+    * permutation costs one pass over the order and one split scan, with
+    * no sort. Early exit: the test fails as soon as exceed reaches
     * ⌊pvalue·(permutations+1)⌋ — most segments in the recursion are NOT
     * significant and bail after a couple of permutations. The verdict
     * equals the full count (remaining permutations only add to exceed),
     * which is what the oracle computes.
     */
   private def significantQ(x: Array[Long], lo: Int, hi: Int, q0: Double,
-                           pvalue: Double, keys: Array[Array[Long]],
-                           minSize: Int): Boolean = {
-    val permutations = keys.length
+                           pvalue: Double, permutations: Int, order: Int => Array[Int],
+                           rank: Array[Int], minSize: Int): Boolean = {
     if (permutations <= 0) return true
     val failAt = math.floor(pvalue * (permutations + 1)).toInt
+    val perm = new Array[Long](hi - lo)
+    val permRank = new Array[Int](hi - lo)
     var exceed = 0
     var p = 0
     while (p < permutations && exceed < failAt) {
-      val perm = permuted(x, lo, hi, keys(p))
-      val (_, q) = bestSplitQ(perm, 0, perm.length, minSize)
+      val o = order(p)
+      var i = 0
+      var k = 0
+      while (k < o.length) {
+        val j = o(k)
+        if (j >= lo && j < hi) { perm(i) = x(j); permRank(i) = rank(j - lo); i += 1 }
+        k += 1
+      }
+      val (_, q) = scanQ(perm, permRank, minSize)
       if (q >= q0) exceed += 1
       p += 1
     }
@@ -260,18 +289,26 @@ object EDivisive {
 
   /** All change points of the ×1e4-quantized series against
     * precomputed permutation keys (keys(p)(i) = sort key of position i
-    * in permutation p — [[permuted]]). qhat is ×1e4-scaled; divide at
-    * the edge. Engine-exact and fully oracle-replayable.
+    * in permutation p — [[argsortKeys]]). qhat is ×1e4-scaled; divide
+    * at the edge. Engine-exact and fully oracle-replayable. Each
+    * permutation is argsorted once, on its first use.
     */
   def changePointsKeyed(q: Array[Long], keys: Array[Array[Long]],
                         pvalue: Double = 0.05, minSize: Int = 5,
                         maxPoints: Int = 64): Seq[ChangePoint] = {
+    val orders = new Array[Array[Int]](keys.length)
+    def order(p: Int): Array[Int] = {
+      if (orders(p) == null) orders(p) = argsortKeys(keys(p))
+      orders(p)
+    }
     val found = scala.collection.mutable.ArrayBuffer.empty[ChangePoint]
     def recurse(lo: Int, hi: Int): Unit = {
-      if (found.size >= maxPoints) return
-      val (tau, qv) = bestSplitQ(q, lo, hi, minSize)
-      if (tau < 0) return
-      if (!significantQ(q, lo, hi, qv, pvalue, keys, minSize)) return
+      if (found.size >= maxPoints || hi - lo < 2 * minSize) return
+      val rank = segmentRanks(q, lo, hi)
+      val (t, qv) = scanQ(java.util.Arrays.copyOfRange(q, lo, hi), rank, minSize)
+      if (t < 0) return
+      if (!significantQ(q, lo, hi, qv, pvalue, keys.length, order, rank, minSize)) return
+      val tau = lo + t
       found += ChangePoint(tau, qv)
       recurse(lo, tau)
       recurse(tau, hi)

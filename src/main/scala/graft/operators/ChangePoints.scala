@@ -73,7 +73,7 @@ object ChangePoints {
   /** Per-signal permutation sort keys for the e-divisive test:
     * keys(p)(i) = signed low-64 md5 of "name|node|p|i" — the house
     * hash, position-local, so the DuckDB oracle regenerates the exact
-    * same permutation draw with its own md5 (EDivisive.permuted
+    * same permutation draw with its own md5 (EDivisive.argsortKeys
     * explains why sort-order permutations replaced Fisher-Yates).
     */
   private[graft] def permKeys(name: String, node: String,

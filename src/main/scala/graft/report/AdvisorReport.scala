@@ -20,12 +20,15 @@ import org.apache.spark.storage.StorageLevel
   * (MEMORY_AND_DISK) and registers it with `graft.Caches`, so
   * `Caches.release()` frees it like every operator-internal persist; a
   * caller that holds the grid can free it earlier with [[release]].
-  * `Main.run` runs each layer once and owns three persisted frames: the
+  * `Main.run` runs each layer once and persists three frames: the
   * cleaned signals (read by step inference and the grid build, released
   * as soon as the grid is cached), the grid, and the
   * [[objectiveAnomalies]] frame that both the advice join and the chart
-  * markers read. It releases all three in a `finally`, so a failed pass
-  * leaves nothing cached.
+  * markers read. It runs the pass under `Caches.scoped`, which releases
+  * exactly what was tracked during the pass (those three and the
+  * operators' own persists, such as the detector's objective slice and
+  * the Granger series), so a pass that returns or throws leaves nothing
+  * cached, and frames the caller tracked before stay cached.
   */
 object AdvisorReport {
 

@@ -55,8 +55,11 @@ object MetricsTar {
     * and `tarfile.open(r:*)` in the reference auto-detects the same
     * way.
     */
-  def extractCsvs(tarGzPath: String): Path = {
-    val out = Files.createTempDirectory("graft_metrics_tar")
+  def extractCsvs(tarGzPath: String): Path = extractCsvs(tarGzPath, new TempDirs)
+
+  /** [[extractCsvs]] into a dir made through `tmp`. */
+  private[graft] def extractCsvs(tarGzPath: String, tmp: TempDirs): Path = {
+    val out = tmp.create("graft_metrics_tar")
     val raw = new BufferedInputStream(new FileInputStream(tarGzPath), 1 << 16)
     raw.mark(2)
     val m0 = raw.read(); val m1 = raw.read()

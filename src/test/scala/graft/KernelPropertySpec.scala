@@ -484,4 +484,165 @@ class KernelPropertySpec extends SparkTestBase {
       }
     }
   }
+
+  test("e-divisive change points equal the per-segment-sort permutation test") {
+    import graft.functions.EDivisive.ChangePoint
+    // the formulation before one argsort per permutation, kept verbatim
+    // as the reference: every segment and permutation sorts boxed
+    // (key, j) pairs and ranks the permuted values afresh
+    object Reference {
+      def permuted(x: Array[Long], lo: Int, hi: Int, keys: Array[Long]): Array[Long] = {
+        val order = Array.range(lo, hi).sortBy(j => (keys(j), j))
+        val out = new Array[Long](order.length)
+        var i = 0
+        while (i < order.length) { out(i) = x(order(i)); i += 1 }
+        out
+      }
+      final class L1FenwickQ(n: Int) {
+        private val cnt = new Array[Long](n + 1)
+        private val sum = new Array[Long](n + 1)
+        private var totalCnt = 0L
+        private var totalSum = 0L
+        def insert(rank: Int, v: Long): Unit = {
+          var i = rank + 1
+          while (i <= n) { cnt(i) += 1; sum(i) += v; i += i & (-i) }
+          totalCnt += 1; totalSum += v
+        }
+        def l1To(rank: Int, p: Long): Long = {
+          var cBelow = 0L; var sBelow = 0L
+          var i = rank + 1
+          while (i > 0) { cBelow += cnt(i); sBelow += sum(i); i -= i & (-i) }
+          p * cBelow - sBelow + (totalSum - sBelow) - p * (totalCnt - cBelow)
+        }
+      }
+      def bestSplitQ(x: Array[Long], lo: Int, hi: Int, minSize: Int): (Int, Double) = {
+        val n = hi - lo
+        if (n < 2 * minSize) return (-1, 0.0)
+        val seg = java.util.Arrays.copyOfRange(x, lo, hi)
+        val sortedVals = seg.clone()
+        java.util.Arrays.sort(sortedVals)
+        val rank = new Array[Int](n)
+        var r = 0
+        while (r < n) {
+          var lb = 0; var ub = n
+          val v = seg(r)
+          while (lb < ub) {
+            val mid = (lb + ub) >>> 1
+            if (sortedVals(mid) < v) lb = mid + 1 else ub = mid
+          }
+          rank(r) = lb
+          r += 1
+        }
+        val dLeft = new Array[Long](n)
+        val fwd = new L1FenwickQ(n)
+        var i = 0
+        while (i < n) { dLeft(i) = fwd.l1To(rank(i), seg(i)); fwd.insert(rank(i), seg(i)); i += 1 }
+        val dRight = new Array[Long](n)
+        val bwd = new L1FenwickQ(n)
+        i = n - 1
+        while (i >= 0) { dRight(i) = bwd.l1To(rank(i), seg(i)); bwd.insert(rank(i), seg(i)); i -= 1 }
+        val rightAt = new Array[Long](n + 1)
+        i = n - 1
+        while (i >= 0) { rightAt(i) = rightAt(i + 1) + dRight(i); i -= 1 }
+        val total = rightAt(0)
+        var left = 0L
+        var j = 1
+        while (j < minSize) { left += dLeft(j); j += 1 }
+        var bestTau = -1; var bestQ = Double.NegativeInfinity
+        var tau = lo + minSize
+        while (tau <= hi - minSize) {
+          val t = tau - lo
+          val right = rightAt(t)
+          val cross = total - left - right
+          val m = t.toDouble; val k = (n - t).toDouble
+          val t1 = cross.toDouble * (2.0 / (m * k))
+          val t2 = if (m > 1) left.toDouble * (2.0 / (m * (m - 1))) else 0.0
+          val t3 = if (k > 1) right.toDouble * (2.0 / (k * (k - 1))) else 0.0
+          val q = (m * k / (m + k)) * (t1 - t2 - t3)
+          if (q > bestQ) { bestQ = q; bestTau = tau }
+          left += dLeft(t)
+          tau += 1
+        }
+        (bestTau, bestQ)
+      }
+      def significantQ(x: Array[Long], lo: Int, hi: Int, q0: Double, pvalue: Double,
+                       keys: Array[Array[Long]], minSize: Int): Boolean = {
+        val permutations = keys.length
+        if (permutations <= 0) return true
+        val failAt = math.floor(pvalue * (permutations + 1)).toInt
+        var exceed = 0
+        var p = 0
+        while (p < permutations && exceed < failAt) {
+          val perm = permuted(x, lo, hi, keys(p))
+          val (_, q) = bestSplitQ(perm, 0, perm.length, minSize)
+          if (q >= q0) exceed += 1
+          p += 1
+        }
+        (exceed + 1).toDouble / (permutations + 1) <= pvalue
+      }
+      def changePointsKeyed(q: Array[Long], keys: Array[Array[Long]], pvalue: Double,
+                            minSize: Int, maxPoints: Int): Seq[ChangePoint] = {
+        val found = scala.collection.mutable.ArrayBuffer.empty[ChangePoint]
+        def recurse(lo: Int, hi: Int): Unit = {
+          if (found.size >= maxPoints) return
+          val (tau, qv) = bestSplitQ(q, lo, hi, minSize)
+          if (tau < 0) return
+          if (!significantQ(q, lo, hi, qv, pvalue, keys, minSize)) return
+          found += ChangePoint(tau, qv)
+          recurse(lo, tau)
+          recurse(tau, hi)
+        }
+        recurse(0, q.length)
+        found.sortBy(_.index).toSeq
+      }
+    }
+    val rng = new scala.util.Random(0xed1L)
+    // the argsort restricted to any segment is that segment's sort by
+    // (key, position), colliding keys included
+    for (trial <- 0 until 200) {
+      val n = rng.nextInt(60)
+      val keys = Array.fill(n)(if (trial % 2 == 0) rng.nextInt(4).toLong - 2 else rng.nextLong())
+      val order = graft.functions.EDivisive.argsortKeys(keys)
+      val lo = if (n == 0) 0 else rng.nextInt(n)
+      val hi = lo + rng.nextInt(n - lo + 1)
+      assert(order.filter(j => j >= lo && j < hi).toSeq == Array.range(lo, hi).sortBy(j => (keys(j), j)).toSeq,
+        s"trial $trial: keys ${keys.toSeq}, segment [$lo, $hi)")
+    }
+    var withPoints = 0
+    for (trial <- 0 until 80) {
+      val n = trial % 8 match {
+        case 0 => rng.nextInt(12) // shorter than two minimum segments, or just above
+        case _ => 20 + rng.nextInt(220)
+      }
+      // steps, ties from a small palette, constant runs, negative values
+      val shifts = Array.fill(1 + rng.nextInt(4))(rng.nextInt(math.max(1, n)))
+      val level = Array.fill(shifts.length)(rng.nextInt(9) * 1.5 - 4.0)
+      val x = Array.tabulate(n) { i =>
+        val base = shifts.indices.filter(k => i >= shifts(k)).map(level(_)).sum
+        trial % 5 match {
+          case 0 => base
+          case 1 => base + (rng.nextInt(4) - 2) * 0.5
+          case _ => base + rng.nextGaussian() * (0.2 + rng.nextDouble())
+        }
+      }
+      val q = x.map(v => math.floor((v + 1e-9) * 1e4 + 0.5).toLong)
+      val permutations = Seq(0, 1, 19, 50, 100)(trial % 5)
+      // md5 keys as the operators draw them, or keys from a tiny domain
+      // so that equal keys fall back to the position order
+      val keys =
+        if (trial % 3 == 2) Array.fill(permutations, n)(rng.nextInt(6).toLong - 3)
+        else graft.operators.ChangePoints.permKeys(s"s$trial", "n", permutations, n)
+      val pvalue = Seq(0.05, 0.2, 0.5)(trial % 3)
+      val minSize = 2 + trial % 5
+      val maxPoints = Seq(64, 3, 1)(trial % 3)
+      val got = graft.functions.EDivisive.changePointsKeyed(q, keys, pvalue, minSize, maxPoints)
+      val want = Reference.changePointsKeyed(q, keys, pvalue, minSize, maxPoints)
+      if (want.nonEmpty) withPoints += 1
+      assert(got.map(_.index) == want.map(_.index) &&
+        got.map(c => java.lang.Double.doubleToRawLongBits(c.qhat)) ==
+          want.map(c => java.lang.Double.doubleToRawLongBits(c.qhat)),
+        s"trial $trial (n $n, $permutations permutations): $got vs $want")
+    }
+    assert(withPoints >= 30, s"only $withPoints of 80 trials found a change point")
+  }
 }

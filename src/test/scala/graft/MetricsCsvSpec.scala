@@ -63,7 +63,8 @@ class MetricsCsvSpec extends SparkTestBase {
   }
 
   test("headers read without a job name columns as Spark's header inference does") {
-    val dir = Files.createTempDirectory("metrics_csv_headers")
+    // a dir path with a space
+    val dir = Files.createDirectory(Files.createTempDirectory("metrics_csv_headers").resolve("a bundle"))
     def write(file: String, header: String, rows: Int => String): Unit =
       Files.writeString(dir.resolve(file),
         (header +: (0 until 30).map(rows)).mkString("\n") + "\n")
@@ -79,6 +80,14 @@ class MetricsCsvSpec extends SparkTestBase {
     write("no_values.csv", "timestamp", i => s"${t(i)}")
     // below the sample gate
     Files.writeString(dir.resolve("tiny.csv"), "timestamp,h\n1,2\n3,4\n")
+    // numeric instance names, timestamp not first, five columns
+    write("latency.csv", "10,11,timestamp,12,\"7\"",
+      i => s"${i * 0.25},${i % 3},${t(i)},${-i * 2.0},$i")
+    // rows shorter than the header (missing cells are NULL) and longer
+    // (extra cells are cut)
+    write("ragged.csv", "timestamp,r1,r2",
+      i => if (i % 5 == 0) s"${t(i)},$i" else if (i % 5 == 1) s"${t(i)},$i,${i + 1},99,98"
+           else s"${t(i)},$i,${i * 3}")
 
     val (read, jobs) = jobsDuring(MetricsCsv.read(spark, dir.toString))
     assert(jobs == 0, s"MetricsCsv.read started $jobs job(s)")
@@ -90,25 +99,78 @@ class MetricsCsvSpec extends SparkTestBase {
     assert(got.map(r => (r._1, r._2)).distinct.toSet == Set(
       ("node_cpu:by_instance", "host a:9100"), ("node_cpu:by_instance", "b,c"),
       ("dup:names", "h11"), ("dup:names", "h12"), ("dup:names", "H13"),
-      ("empty_name", "_c1"), ("empty_name", "h2")))
+      ("empty_name", "_c1"), ("empty_name", "h2"),
+      ("latency", "10"), ("latency", "11"), ("latency", "12"), ("latency", "7"),
+      ("ragged", "r1"), ("ragged", "r2")))
+    // cells past the header are dropped, missing cells are NULL
+    assert(got.count(r => r._1 == "ragged" && r._2 == "r1") == 30)
+    assert(got.count(r => r._1 == "ragged" && r._2 == "r2") == 24)
+    assert(!got.exists(r => r._1 == "ragged" && (r._4 == 99.0 || r._4 == 98.0)))
   }
 
-  test("read plans one file scan per usable CSV") {
+  /** The file scans `read` plans, each as the source files it reads
+    * (links resolved).
+    */
+  private def scans(df: DataFrame): Seq[Seq[String]] =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.inputFiles.toSeq.map { f =>
+          val p = java.nio.file.Paths.get(new java.net.URI(f))
+          (if (Files.isSymbolicLink(p)) Files.readSymbolicLink(p) else p).getFileName.toString
+        }.sorted
+    }
+
+  test("read plans one file scan over exactly the usable CSVs") {
     val dir = Files.createTempDirectory("metrics_csv_scans")
     val rows = (0 until 30).map(i => s"${1640588307L + i * 15},$i,${i * 0.5}")
     for (f <- Seq("node_cpu:by_instance.csv", "qps.csv", "disk_io.csv"))
       Files.writeString(dir.resolve(f), ("timestamp,h1,h2" +: rows).mkString("\n"))
     // below the sample gate, but usable: scanned like the others
     Files.writeString(dir.resolve("tiny.csv"), "timestamp,h\n1,2\n3,4\n")
-    // no value columns: skipped before planning
+    // no value columns, no timestamp, or not a CSV: never scanned
     Files.writeString(dir.resolve("no_values.csv"), "timestamp\n1\n2\n")
-    val plan = MetricsCsv.read(spark, dir.toString).queryExecution.sparkPlan
-    val scanned = plan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.relation.location.rootPaths.map(_.getName).mkString(",")
-    }
-    assert(scanned.sorted == Seq("disk_io.csv", "node_cpu__by_instance.csv", "qps.csv", "tiny.csv"),
-      s"file scans in the plan: $scanned")
+    Files.writeString(dir.resolve("no_ts.csv"), "time,h\n1\n2\n")
+    Files.writeString(dir.resolve("notes.txt"), "timestamp,h\n1,2\n")
+    assert(scans(MetricsCsv.read(spark, dir.toString)) ==
+      Seq(Seq("disk_io.csv", "node_cpu:by_instance.csv", "qps.csv", "tiny.csv")))
+  }
+
+  test("read starts no job and plans one scan for 40 CSVs") {
+    // Spark lists more than 32 explicit paths in a job; one root does not
+    val dir = Files.createTempDirectory("metrics_csv_wide")
+    val rows = (0 until 25).map(i => s"${1640588307L + i * 15},$i,${i * 0.5}")
+    for (k <- 0 until 40)
+      Files.writeString(dir.resolve(s"m:$k.csv"), ("timestamp,a,b" +: rows).mkString("\n"))
+    val (read, jobs) = jobsDuring(MetricsCsv.read(spark, dir.toString))
+    assert(jobs == 0, s"MetricsCsv.read started $jobs job(s)")
+    assert(scans(read).map(_.length) == Seq(40))
+    assert(read.count() == 40 * 2 * 25)
+    assert(read.select("name").distinct().count() == 40)
+  }
+
+  test("colliding colon names keep their own samples") {
+    // both names sanitize to a__b: one link must not stand for both
+    val dir = Files.createTempDirectory("metrics_csv_collide")
+    def write(file: String, base: Int): Unit =
+      Files.writeString(dir.resolve(file),
+        ("timestamp,h" +: (0 until 30).map(i => s"${1640588307L + i * 15},${base + i}")).mkString("\n"))
+    write("a:_b.csv", 100)
+    write("a_:b.csv", 500)
+    val got = MetricsCsv.read(spark, dir.toString).groupBy("name")
+      .agg(min("value"), max("value"), count(lit(1))).as[(String, Double, Double, Long)]
+      .collect().sortBy(_._1).toSeq
+    assert(got == Seq(("a:_b", 100.0, 129.0, 30L), ("a_:b", 500.0, 529.0, 30L)))
+  }
+
+  test("file names that need URL encoding keep their layouts") {
+    // Spark reports scanned files URL-encoded (a%20b, a%25b)
+    val dir = Files.createTempDirectory("metrics_csv_encoded")
+    for ((f, base) <- Seq("disk io.csv" -> 0, "cpu%busy.csv" -> 100, "net#rx.csv" -> 200))
+      Files.writeString(dir.resolve(f),
+        ("timestamp,h" +: (0 until 30).map(i => s"${1640588307L + i * 15},${base + i}")).mkString("\n"))
+    val got = MetricsCsv.read(spark, dir.toString).groupBy("name").agg(min("value"), count(lit(1)))
+      .as[(String, Double, Long)].collect().sortBy(_._1).toSeq
+    assert(got == Seq(("cpu%busy", 100.0, 30L), ("disk io", 0.0, 30L), ("net#rx", 200.0, 30L)))
   }
 
   test("reads wide reshape CSVs into long signals with min-sample gate") {
