@@ -8,24 +8,17 @@ package graft.functions
   * package).
   *
   * Hierarchical binary segmentation: find the split that maximizes the
-  * scaled energy statistic Q(τ); accept it if a seeded permutation test
+  * scaled energy statistic Q(τ); accept it if a keyed permutation test
   * deems it significant; recurse into both halves.
   *
   * O(n log n) per split scan (Fenwick-tree rank queries over the 1-D L1
-  * distances — see bestSplit) with O(n) extra memory; no n×n distance
+  * distances — see scanQ) with O(n) extra memory; no n×n distance
   * matrix. Scale-out happens across signals (one series per task), not
   * within — per-series cost is bounded by retention.
   */
 object EDivisive {
 
   final case class ChangePoint(index: Int, qhat: Double)
-
-  private def splitmix64(seed0: Long): Long = {
-    var z = seed0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
 
   /** Permutations are SORT-ORDERS, not Fisher-Yates walks: permutation
     * p of a segment is its positions sorted by (keys(p)(j), j). A fixed
@@ -60,109 +53,13 @@ object EDivisive {
   }
 
   /** Fenwick tree over value ranks carrying (count, sum of values);
-    * answers Σ|x_a − p| over the inserted set in O(log n).
-    */
-  private final class L1Fenwick(n: Int) {
-    private val cnt = new Array[Long](n + 1)
-    private val sum = new Array[Double](n + 1)
-    private var totalCnt = 0L
-    private var totalSum = 0.0
-    def insert(rank: Int, v: Double): Unit = {
-      var i = rank + 1
-      while (i <= n) { cnt(i) += 1; sum(i) += v; i += i & (-i) }
-      totalCnt += 1; totalSum += v
-    }
-    /** Σ|x_a − p| over inserted points, where `rank` is p's rank. */
-    def l1To(rank: Int, p: Double): Double = {
-      var cBelow = 0L; var sBelow = 0.0
-      var i = rank + 1
-      while (i > 0) { cBelow += cnt(i); sBelow += sum(i); i -= i & (-i) }
-      // points at p's own rank have value p: contribute 0 on either side
-      p * cBelow - sBelow + (totalSum - sBelow) - p * (totalCnt - cBelow)
-    }
-  }
-
-  /** Max Q over all splits of x[lo, hi) with min segment size; returns
-    * (argmax τ as absolute index, maxQ).
-    *
-    * For 1-D series with the |·| metric the pairwise-distance sums that
-    * feed Q are order statistics: Σ_{a<i}|x_a − x_i| is a rank query on
-    * a Fenwick tree of the prefix set. Two O(n log n) passes give the
-    * within-left / within-right sums for every τ (cross follows from
-    * the total), so the whole split scan is O(n log n) instead of the
-    * O(n²) incremental form — this sits inside a 50-permutation test
-    * inside a recursion, so it is the engine's hottest loop.
-    */
-  private[graft] def bestSplit(x: Array[Double], lo: Int, hi: Int, minSize: Int): (Int, Double) = {
-    val n = hi - lo
-    if (n < 2 * minSize) return (-1, 0.0)
-    // rank = lower-bound position in the sorted values; equal values
-    // share a rank (they contribute zero distance either way)
-    val seg = java.util.Arrays.copyOfRange(x, lo, hi)
-    val sortedVals = seg.clone()
-    java.util.Arrays.sort(sortedVals)
-    val rank = new Array[Int](n)
-    var r = 0
-    while (r < n) {
-      var lb = 0; var ub = n
-      val v = seg(r)
-      while (lb < ub) {
-        val mid = (lb + ub) >>> 1
-        if (sortedVals(mid) < v) lb = mid + 1 else ub = mid
-      }
-      rank(r) = lb
-      r += 1
-    }
-    // dLeft(i)  = Σ_{a<i} |x_a − x_i|;  dRight(i) = Σ_{b>i} |x_b − x_i|
-    val dLeft = new Array[Double](n)
-    val fwd = new L1Fenwick(n)
-    var i = 0
-    while (i < n) {
-      dLeft(i) = fwd.l1To(rank(i), seg(i))
-      fwd.insert(rank(i), seg(i))
-      i += 1
-    }
-    val dRight = new Array[Double](n)
-    val bwd = new L1Fenwick(n)
-    i = n - 1
-    while (i >= 0) {
-      dRight(i) = bwd.l1To(rank(i), seg(i))
-      bwd.insert(rank(i), seg(i))
-      i -= 1
-    }
-    // suffix sums of dRight: within-pairs of [τ, hi)
-    val rightAt = new Array[Double](n + 1)
-    i = n - 1
-    while (i >= 0) { rightAt(i) = rightAt(i + 1) + dRight(i); i -= 1 }
-    val total = rightAt(0) // all pairs within [lo, hi)
-    var left = 0.0 // within-pairs of [lo, τ), accumulated as τ advances
-    var j = 1
-    while (j < minSize) { left += dLeft(j); j += 1 }
-    var bestTau = -1; var bestQ = Double.NegativeInfinity
-    var tau = lo + minSize
-    while (tau <= hi - minSize) {
-      val t = tau - lo
-      val right = rightAt(t)
-      val cross = total - left - right
-      val m = t.toDouble; val k = (n - t).toDouble
-      val t1 = cross * (2.0 / (m * k))
-      val t2 = if (m > 1) left * (2.0 / (m * (m - 1))) else 0.0
-      val t3 = if (k > 1) right * (2.0 / (k * (k - 1))) else 0.0
-      val q = (m * k / (m + k)) * (t1 - t2 - t3)
-      if (q > bestQ) { bestQ = q; bestTau = tau }
-      left += dLeft(t)
-      tau += 1
-    }
-    (bestTau, bestQ)
-  }
-
-  /** Long twin of [[L1Fenwick]] for the quantized engine path: with
+    * answers Σ|x_a − p| over the inserted set in O(log n). With
     * ×1e4-integer values every distance sum is an exact Long
     * (order-independent — the property the SQL oracle's list_sum
     * replay rests on; at |q| ≤ ~1e9 and n ≤ ~1e5 nothing approaches
     * 2⁶³).
     */
-  private final class L1FenwickQ(n: Int) {
+  private final class L1Fenwick(n: Int) {
     private val cnt = new Array[Long](n + 1)
     private val sum = new Array[Long](n + 1)
     private var totalCnt = 0L
@@ -202,17 +99,27 @@ object EDivisive {
     lb
   }
 
-  /** [[bestSplit]] over a quantized segment `seg` whose value ranks
-    * are `rank` ([[segmentRanks]]): exact-Long distance sums, Q
-    * assembled from them by one fixed IEEE sequence (the same
-    * expression the oracle writes verbatim). τ is relative to the
-    * segment; Q is scaled ×1e4 against the 4-dp series — callers
-    * divide once at the edge.
+  /** Max Q over all splits of a quantized segment `seg` whose value
+    * ranks are `rank` ([[segmentRanks]]), with min segment size;
+    * returns (argmax τ relative to the segment, maxQ).
+    *
+    * For 1-D series with the |·| metric the pairwise-distance sums that
+    * feed Q are order statistics: Σ_{a<i}|x_a − x_i| is a rank query on
+    * a Fenwick tree of the prefix set. Two O(n log n) passes give the
+    * within-left / within-right sums for every τ (cross follows from
+    * the total), so the whole split scan is O(n log n) instead of the
+    * O(n²) incremental form — this sits inside a permutation test
+    * inside a recursion, so it is the engine's hottest loop.
+    *
+    * The sums are exact Longs; Q is assembled from them by one fixed
+    * IEEE sequence (the same expression the oracle writes verbatim),
+    * scaled ×1e4 against the 4-dp series — callers divide once at the
+    * edge.
     */
-  private def scanQ(seg: Array[Long], rank: Array[Int], minSize: Int): (Int, Double) = {
+  private[graft] def scanQ(seg: Array[Long], rank: Array[Int], minSize: Int): (Int, Double) = {
     val n = seg.length
     val dLeft = new Array[Long](n)
-    val fwd = new L1FenwickQ(n)
+    val fwd = new L1Fenwick(n)
     var i = 0
     while (i < n) {
       dLeft(i) = fwd.l1To(rank(i), seg(i))
@@ -220,7 +127,7 @@ object EDivisive {
       i += 1
     }
     val dRight = new Array[Long](n)
-    val bwd = new L1FenwickQ(n)
+    val bwd = new L1Fenwick(n)
     i = n - 1
     while (i >= 0) {
       dRight(i) = bwd.l1To(rank(i), seg(i))
@@ -315,20 +222,5 @@ object EDivisive {
     }
     recurse(0, q.length)
     found.sortBy(_.index).toSeq
-  }
-
-  /** All change points of `series`, sorted ascending — the seeded
-    * convenience API: quantizes ×1e4 and derives splitmix sort keys
-    * from `seed`. qhat is rescaled back to the 4-dp value scale.
-    */
-  def changePoints(series: Array[Double], pvalue: Double = 0.05,
-                   permutations: Int = 50, minSize: Int = 5,
-                   maxPoints: Int = 16, seed: Long = 42L): Seq[ChangePoint] = {
-    val q = series.map(v => math.floor((v + 1e-9) * 1e4 + 0.5).toLong)
-    val keys = Array.tabulate(permutations, series.length) { (p, i) =>
-      splitmix64(splitmix64(seed + p) ^ (i.toLong * 0x9E3779B97F4A7C15L))
-    }
-    changePointsKeyed(q, keys, pvalue, minSize, maxPoints)
-      .map(cp => cp.copy(qhat = cp.qhat / 1e4))
   }
 }

@@ -446,9 +446,8 @@ object Dedup {
     * corpus scan with no corpus shuffle and no join-key skew — a hot
     * band bucket (boilerplate slice) fans out across the corpus
     * partitions that hold it instead of serializing onto one task. In
-    * production the corpus side is the pre-built signature/digest
-    * index (see `sources.BucketedCorpus` for the bucketed layout) —
-    * deriving it in-query here stands in for that read.
+    * production the corpus side is a pre-built signature/digest
+    * index — deriving it in-query here stands in for that read.
     */
   def incremental(docs: DataFrame, batchPred: Column, numHashes: Int = 64,
                   bands: Int = 16, threshold: Double = 0.1,
@@ -619,8 +618,8 @@ object Dedup {
     // cost and must never run twice
     val pairs = precomputedPairs.getOrElse(jaccardPairs(docs, threshold))
       .select("doc1", "doc2")
-    // the symmetric edge list is persisted (with self-loops, partitioned
-    // by the round-join key) INSIDE minLabelLoop — see its header
+    // the symmetric edge list is persisted (partitioned by the
+    // round-join key) INSIDE minLabelLoop — see its header
     val edges = pairs.unionByName(
       pairs.select(col("doc2").as("doc1"), col("doc1").as("doc2")))
     // only vertices with an edge can ever change label — iterate over
@@ -636,88 +635,37 @@ object Dedup {
   }
 
   /** Distributed min-label propagation over a SYMMETRIC `(doc1, doc2)`
-    * edge list — the shared connected-components core behind
-    * [[clusters]] and `Correlate.corrCluster` (the r7 verdict's one
-    * remaining driver-side graph). Key type is whatever the edge
-    * columns carry (long doc ids, `name|node` signal strings): "min"
-    * is the column MIN of that type, so the component label is the
-    * least member under the type's ordering. Returns `(doc_id, lab)`
-    * for every vertex with ≥1 edge.
+    * long edge list — the one connected-components loop, behind
+    * [[clusters]] and so behind every dedup, ANN and curation query
+    * and `Correlate.corrCluster` (whose `name|node` signals arrive as
+    * dense long ids in string order). Returns `(doc_id, lab)` for every
+    * vertex with ≥1 edge, `lab` the least id of its component.
     *
-    * r12 round shape — ONE join + ONE aggregate per round. The edge
-    * list is persisted HASH-PARTITIONED by the per-round join key
-    * (guide §2.4: operations keyed the same way share one exchange —
-    * the edge side of the round join never re-shuffles), and each
-    * vertex's own previous label enters the round's keyed aggregate as
-    * a unioned self row, so min(nlab) IS least(own, nbr_min) and the
-    * self row doubles as the `old` label for convergence counting. The
-    * former labels⋈prop rejoin — two more n-row exchanges per round —
-    * is gone. Per round: one exchange of the n-row label table into
-    * the join, one exchange for the keyed min, one eager
-    * localCheckpoint. The checkpoint severs lineage (the label table
-    * references its predecessor more than once, so an un-severed plan
-    * grows exponentially with rounds) and carries the convergence
-    * tally as an OBSERVED aggregate, so each round is one driver
-    * round-trip.
+    * Round shape: the edge list is persisted hash-partitioned by the
+    * round-join key (guide §2.4: operations keyed the same way share
+    * one exchange), so each round shuffles only bare `(id, label)`
+    * pairs. Each round's labels are locally checkpointed by the round's
+    * one `count` — one driver round trip per round — which cuts the
+    * lineage that would otherwise grow with every round. A
+    * LongAccumulator counts the changed labels; a task retry can only
+    * over-count, which at worst schedules one extra idempotent round.
     *
-    * From round 3 on, each round ALSO propagates label-of-label
-    * (pointer jumping) as insurance against pathological diameters, so
-    * maxRounds = 50 covers any component a 64-bit id space can hold.
-    * The jump is DEFERRED because it costs an extra n-row shuffle join
-    * per round, and the common near-dup graph (LSH clusters are
-    * near-cliques, diameter ≤ 3) converges in ≤ 4 plain rounds — the
-    * r9 bench measured the unconditional jump costing ~0.8 s/query
-    * across the four label-loop consumers while buying nothing there.
-    * (The r12 probes: applying the jump 2-3× per round did NOT reduce
-    * the 14-round mutual-kNN convergence — label chains are already
-    * shallow after the previous round's jump — and jump-off converged
-    * in 17 rounds at lower cost; the single deferred jump is kept as
-    * the diameter bound, not as a local-bench win.) If the loop still
-    * exits with changed > 0 it THROWS rather than return non-canonical
-    * labels — a silently-split component is a correctness lie four
-    * queries would inherit (dedup_cluster, dedup_cluster_minhash,
-    * mm_dedup_cluster, corr_cluster).
+    * From round 3 on, each round also propagates label-of-label
+    * (pointer jumping), so maxRounds = 50 covers any component a 64-bit
+    * id space can hold. The jump is deferred because it costs an extra
+    * n-row shuffle join per round, and the common near-dup graph (LSH
+    * clusters are near-cliques, diameter ≤ 3) converges in ≤ 4 plain
+    * rounds. If the loop still exits with labels changing it THROWS
+    * rather than return non-canonical labels: a silently split
+    * component is a wrong answer every consumer would inherit.
     *
-    * r13 (guide §1.2 — the distributed algorithm first): the LONG-keyed
-    * arm (all 11 doc_id/vec_id consumers) runs the IDENTICAL rounds on
-    * pre-partitioned pair RDDs. The DataFrame form paid 3-5 driver
-    * round-trips per round — each exchange is an AQE stage-
-    * materialization job plus the eager checkpoint job — and the
-    * round's frames are n-row slivers, so the suite's propagation cost
-    * was stage-latency, not data (measured r13: ann_knn_components 87
-    * jobs, 70 of them AQE futures, for a 14-round loop; dedup_semdedup
-    * 46/37). The RDD rounds are the SAME narrow join on the same
-    * hash-partitioned edge cache, the same keyed min with the same
-    * unioned self row, the same deferred jump, one COUNT action per
-    * round — shuffle bytes unchanged, driver round-trips per round: 1.
-    * The convergence tally moves from `observe` to a LongAccumulator
-    * (task retries can only OVER-count, which at worst schedules one
-    * extra idempotent round). Labels are exact Long mins either way —
-    * MinLabelLoopSpec pins RDD ≡ DataFrame on a long-chain graph that
-    * exercises the jump arm. String-keyed edges (corr_cluster's
-    * `name|node`) keep the DataFrame loop: Scala's String ordering is
-    * UTF-16-code-unit while Spark SQL's min is binary UTF-8 — identical
-    * on ASCII but not in general, so the string arm stays on the
-    * engine's own comparator.
+    * Caches: once a round has counted, the previous round's labels are
+    * released; only the returned final labels stay persisted, and they
+    * are tracked, so `Caches.release()` frees them with every other
+    * operator cache. When a round throws or the loop does not converge,
+    * every cache the loop made is released.
     */
   private[graft] def minLabelLoop(edges: DataFrame, maxRounds: Int): DataFrame = {
-    val longKeyed =
-      edges.schema("doc1").dataType == org.apache.spark.sql.types.LongType &&
-        edges.schema("doc2").dataType == org.apache.spark.sql.types.LongType
-    if (longKeyed) minLabelLoopRdd(edges, maxRounds)
-    else minLabelLoopDF(edges, maxRounds)
-  }
-
-  /** The long-keyed rounds on pair RDDs. Each round's labels are
-    * locally checkpointed (persisted, lineage cut by the round's
-    * `count`), so once a round has counted, the previous round's labels
-    * are released; only the returned final labels stay persisted, and
-    * they are tracked, so `Caches.release()` frees them with every other
-    * operator cache. When a round throws or the loop does not converge,
-    * every cache the loop made is released. The round width is
-    * `Widths.forEdges` of the counted edges.
-    */
-  private[graft] def minLabelLoopRdd(edges: DataFrame, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val sc = spark.sparkContext
@@ -758,11 +706,8 @@ object Dedup {
         // cached pre-partitioned edges and fold map-side into the per-
         // vertex neighbor min — the round's ONE shuffle, bare (id, label)
         // pairs. least(old, nbr_min) then rides a NARROW rejoin: labels
-        // and nbrMin share the partitioner, so the rejoin the DataFrame
-        // form paid two exchanges for is exchange-free here (the reason
-        // the r12 DF round folded the old label in as a unioned self row
-        // — an extra union stage + a 3-field aggregate value — does not
-        // apply to co-partitioned RDDs).
+        // and nbrMin share the partitioner, so the rejoin is
+        // exchange-free.
         val nbrMin = ed.join(labels, partitioner)
           .map { case (_, (d2, lab)) => (d2, lab) }
           .reduceByKey(partitioner, math.min(_: Long, _: Long))
@@ -800,64 +745,6 @@ object Dedup {
       ed0.unpersist(false)
       ed.unpersist(false)
     }
-  }
-
-  private[graft] def minLabelLoopDF(edges: DataFrame, maxRounds: Int): DataFrame = {
-    // the edge list is persisted ONCE, hash-partitioned by the
-    // per-round join key, so the round join never re-shuffles it.
-    // r13: explicit derived width keeps that partitioning exact under
-    // the cached-plan AQE flag (edge frames are usually aggregate
-    // products whose stats saturate the clamp — i.e. session width,
-    // the pre-r13 behavior — but a measured-small edge list runs
-    // its rounds narrow)
-    val ed = edges.repartition(graft.Widths.forCached(edges), col("doc1"))
-      .persist()
-    // seed folds in each vertex's neighbor minimum (one round for free)
-    var labels = ed.groupBy(col("doc1").as("doc_id"))
-      .agg(min("doc2").as("nbr0"))
-      .select(col("doc_id"), least(col("doc_id"), col("nbr0")).as("lab"))
-      .localCheckpoint()
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
-      val obs = org.apache.spark.sql.Observation(s"graft.cc.r$round")
-      // one hop: neighbor labels arrive via the (cached, pre-
-      // partitioned) edge join; each vertex's OWN previous label rides
-      // a unioned self row into the same keyed aggregate — so min(nlab)
-      // IS least(old, nbr_min) and the self row's nlab IS `old`. The
-      // former two-join round (prop, then labels⋈prop to re-attach the
-      // old label) paid two more n-row exchanges per round.
-      val hopped = ed
-        .join(labels.select(col("doc_id").as("doc1"), col("lab").as("nlab")), "doc1")
-        .select(col("doc2"), col("nlab"), lit(false).as("self"))
-        .unionByName(labels.select(col("doc_id").as("doc2"),
-          col("lab").as("nlab"), lit(true).as("self")))
-        .groupBy(col("doc2").as("doc_id"))
-        .agg(min("nlab").as("lab"),
-          min(when(col("self"), col("nlab"))).as("old"))
-      val jump = labels.select(col("doc_id").as("jid"), col("lab").as("jlab"))
-      val jumped =
-        if (round < 3) hopped
-        else hopped.join(jump, hopped("lab") === jump("jid"), "left")
-          .select(hopped("doc_id"),
-            least(hopped("lab"), coalesce(col("jlab"), hopped("lab"))).as("lab"),
-            col("old"))
-      val next = jumped
-        .observe(obs, sum(when(col("lab") =!= col("old"), 1L).otherwise(0L))
-          .as("changed"))
-        .select("doc_id", "lab")
-        .localCheckpoint()
-      changed = Option(obs.get("changed")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      labels = next
-      round += 1
-    }
-    ed.unpersist()
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"minLabelLoop did not converge after $maxRounds rounds " +
-          s"($changed labels still changing) — component labels would be " +
-          "non-canonical; raise maxRounds")
-    labels
   }
 
   /** Char-n-gram Jaccard near-dup pairs (robust to tokenization).

@@ -164,22 +164,6 @@ object Multimodal {
       .toDF("doc_id", "frame_idx", "frame_phash", "score")
   }
 
-  /** Keyframe selection over [[frameSampleDecoded]]'s REAL frame
-    * stream: top-`k` frames per video by decoded saliency (8×8
-    * luma-grid variance), earliest-frame tiebreak — the codec-backed
-    * twin of [[keyframes]] with the identical ranking plumbing.
-    */
-  def keyframesDecoded(docs: DataFrame,
-                       decoder: FrameDecoder = JvmMediaDecoder,
-                       stride: Int = 2, k: Int = 3): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("frame_idx"))
-    frameSampleDecoded(docs, decoder, stride)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("doc_id"), col("rank"), col("frame_idx"), col("score"),
-        col("frame_phash"))
-  }
-
   /** Resize planning over decoded metadata: aspect-preserving fit into
     * `maxDim`×`maxDim` (integer floor arithmetic — deterministic). A
     * codec-backed implementation would consume these target dims; the

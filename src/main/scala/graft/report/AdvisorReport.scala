@@ -141,18 +141,12 @@ object AdvisorReport {
       .orderBy("obj_name", "obj_node", "b", "rank")
   }
 
-  /** Normalized per-bucket series for the signals the report shows —
+  /** Normalized per-bucket series for the wanted (signal, bucket)s —
     * the content of the reference's plots (metrics_advisor.py:198-224:
     * objective + top candidates, each divided by |max|, per anomalous
     * bucket). Bounded by construction: (top-k + objectives) × buckets ×
     * samples-per-bucket.
     */
-  def bucketSeries(grid: DataFrame, advice: DataFrame): DataFrame =
-    bucketSeriesFor(grid,
-      advice.select(col("obj_name").as("name"), col("obj_node").as("node"), col("b"))
-        .unionByName(advice.select(col("cand_name").as("name"), col("cand_node").as("node"), col("b")))
-        .distinct())
-
   private def bucketSeriesFor(grid: DataFrame, wanted: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("name", "node", "b")
     grid.join(wanted, Seq("name", "node", "b"), "left_semi")

@@ -3,7 +3,6 @@ package graft.report
 import graft.operators.Curation
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Markdown curation report over a documents corpus — the LLM-pipeline
   * counterpart of [[AdvisorReport]]'s metrics report (report.tpl
@@ -112,14 +111,13 @@ object CurationReport {
     sb.toString
   }
 
-  /** CLI helper: read a corpus (JSONL via DocumentsJsonl, otherwise
-    * parquet) and render.
+  /** CLI helper: read a corpus (the valid JSONL documents via
+    * DocumentsJsonl, otherwise parquet) and render.
     */
   def run(spark: org.apache.spark.sql.SparkSession, input: String): String = {
     val docs =
       if (input.endsWith(".jsonl") || input.endsWith(".jsonl.gz"))
-        graft.sources.DocumentsJsonl.read(spark, input)
-          .filter(col("_corrupt").isNull).drop("_corrupt")
+        graft.sources.DocumentsJsonl.documents(spark, input)
       else spark.read.parquet(input)
     render(docs)
   }

@@ -50,19 +50,4 @@ object DocumentsJsonl {
       .filter(col(Corrupt).isNull && col("doc_id").isNotNull && col("text").isNotNull)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         length(col("text")).cast("bigint").as("n_chars"))
-
-  /** Ingestion health: valid/corrupt/missing-field counts — the
-    * numbers a curation job reports before anything else runs.
-    */
-  def ingestStats(spark: SparkSession, path: String): DataFrame = {
-    val df = read(spark, path)
-    df.agg(
-      count(lit(1)).as("n_lines"),
-      sum(when(col(Corrupt).isNotNull, 1L).otherwise(0L)).as("n_corrupt"),
-      sum(when(col(Corrupt).isNull &&
-        (col("doc_id").isNull || col("text").isNull), 1L).otherwise(0L))
-        .as("n_missing_fields"),
-      sum(when(col(Corrupt).isNull && col("doc_id").isNotNull &&
-        col("text").isNotNull, 1L).otherwise(0L)).as("n_valid"))
-  }
 }

@@ -193,12 +193,17 @@ class AdvisorReportSpec extends SparkTestBase {
   }
 
   test("bucketSeries normalizes by |max| within (signal, bucket)") {
+    // the report's `- bucket …` lines: one (signal, bucket) each
     val grid = AdvisorReport.gatedGrid(signals, cfg)
-    val advice = AdvisorReport.adviseOnGrid(grid, cfg)
-    val series = AdvisorReport.bucketSeries(grid, advice)
-    val rels = series.select("rel").as[Double].collect()
-    assert(rels.nonEmpty)
-    assert(rels.forall(v => v >= -1.0001 && v <= 1.0001), "normalization out of range")
+    val md = AdvisorReport.renderMarkdown(AdvisorReport.adviseOnGrid(grid, cfg),
+      Some(grid), cfg = cfg)
+    val lines = md.linesIterator.filter(_.startsWith("- bucket ")).toSeq
+    assert(lines.nonEmpty, md)
+    lines.foreach { l =>
+      val rels = l.split(": ")(1).split(", ").map(_.toDouble)
+      assert(rels.forall(v => v >= -1.0001 && v <= 1.0001), s"normalization out of range: $l")
+      assert(math.abs(rels.max - 1.0) < 1e-4, s"the line's max is not its |max|: $l")
+    }
   }
 
   test("the row cap applies per objective, so no objective drops out") {

@@ -318,13 +318,15 @@ class AnalysisSpec extends SparkTestBase {
   }
 
   test("e-divisive finds an obvious level shift") {
-    val series = Array.fill(30)(1.0) ++ Array.fill(30)(10.0)
-    val cps = EDivisive.changePoints(series, pvalue = 0.05, permutations = 30)
+    val q = Array.fill(30)(1L) ++ Array.fill(30)(10L)
+    val cps = EDivisive.changePointsKeyed(q.map(_ * 10000L),
+      graft.operators.ChangePoints.permKeys("m", "a", 30, q.length), pvalue = 0.05)
     assert(cps.map(_.index) == Seq(30))
   }
 
   test("e-divisive finds nothing in constant data") {
-    val cps = EDivisive.changePoints(Array.fill(50)(5.0), permutations = 30)
+    val cps = EDivisive.changePointsKeyed(Array.fill(50)(50000L),
+      graft.operators.ChangePoints.permKeys("m", "a", 30, 50))
     assert(cps.isEmpty)
   }
 
@@ -407,24 +409,25 @@ class AnalysisSpec extends SparkTestBase {
     }
   }
 
-  test("fenwick bestSplit matches the quadratic reference on random series") {
-    // brute-force reference: direct triple-loop energy statistic
-    def naive(x: Array[Double], lo: Int, hi: Int, minSize: Int): (Int, Double) = {
-      val n = hi - lo
-      if (n < 2 * minSize) return (-1, 0.0)
+  test("scanQ matches the quadratic reference on random quantized series") {
+    // brute-force reference: direct triple-loop energy statistic on the
+    // exact Long distance sums, Q assembled by the same IEEE sequence —
+    // so tau is exact and Q bit-equal
+    def naive(x: Array[Long], minSize: Int): (Int, Double) = {
+      val n = x.length
       var bestTau = -1; var bestQ = Double.NegativeInfinity
-      for (tau <- (lo + minSize) to (hi - minSize)) {
-        var cross = 0.0; var left = 0.0; var right = 0.0
-        for (i <- lo until hi; j <- (i + 1) until hi) {
+      for (tau <- minSize to (n - minSize)) {
+        var cross = 0L; var left = 0L; var right = 0L
+        for (i <- 0 until n; j <- (i + 1) until n) {
           val d = math.abs(x(i) - x(j))
           if (j < tau) left += d
           else if (i >= tau) right += d
           else cross += d
         }
-        val m = (tau - lo).toDouble; val k = (hi - tau).toDouble
-        val t1 = cross * (2.0 / (m * k))
-        val t2 = if (m > 1) left * (2.0 / (m * (m - 1))) else 0.0
-        val t3 = if (k > 1) right * (2.0 / (k * (k - 1))) else 0.0
+        val m = tau.toDouble; val k = (n - tau).toDouble
+        val t1 = cross.toDouble * (2.0 / (m * k))
+        val t2 = if (m > 1) left.toDouble * (2.0 / (m * (m - 1))) else 0.0
+        val t3 = if (k > 1) right.toDouble * (2.0 / (k * (k - 1))) else 0.0
         val q = (m * k / (m + k)) * (t1 - t2 - t3)
         if (q > bestQ) { bestQ = q; bestTau = tau }
       }
@@ -436,13 +439,17 @@ class AnalysisSpec extends SparkTestBase {
       // mix of noise, level shifts, and ties to exercise the rank logic
       val x = Array.tabulate(n) { i =>
         val base = if (i < n / 2) 0.0 else (trial % 3).toDouble
-        math.rint((base + rnd.nextGaussian()) * 4) / 4
+        // quarter steps, quantized ×1e4
+        math.rint((base + rnd.nextGaussian()) * 4).toLong * 2500L
       }
-      val (tExp, qExp) = naive(x, 0, n, 5)
-      val (tGot, qGot) = EDivisive.bestSplit(x, 0, n, 5)
+      // lower-bound value ranks: equal values share one
+      val sorted = x.sorted
+      val rank = x.map(v => sorted.indexWhere(_ >= v))
+      val (tExp, qExp) = naive(x, 5)
+      val (tGot, qGot) = EDivisive.scanQ(x, rank, 5)
       assert(tGot == tExp, s"trial $trial tau: ${x.mkString(",")}")
-      assert(math.abs(qGot - qExp) <= 1e-9 * math.max(1.0, math.abs(qExp)),
-        s"trial $trial q")
+      assert(java.lang.Double.doubleToLongBits(qGot) ==
+        java.lang.Double.doubleToLongBits(qExp), s"trial $trial q: $qGot vs $qExp")
     }
   }
 

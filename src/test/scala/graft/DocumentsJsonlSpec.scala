@@ -24,11 +24,6 @@ class DocumentsJsonlSpec extends SparkTestBase {
     assert(docs.head.getString(1) == "hello world")
     assert(docs.head.getLong(4) == 11L) // n_chars derived
 
-    val stats = DocumentsJsonl.ingestStats(spark, path).head()
-    assert(stats.getLong(0) == 5L) // lines
-    assert(stats.getLong(1) == 1L) // corrupt
-    assert(stats.getLong(2) == 1L) // missing text
-    assert(stats.getLong(3) == 3L) // valid
   }
 
   test("jsonl docs flow into the curation pipeline unchanged") {
@@ -41,5 +36,21 @@ class DocumentsJsonlSpec extends SparkTestBase {
     assert(gate.length == 2)
     assert(gate.head.getAs[Int]("keep") == 1)   // english doc passes
     assert(gate.last.getAs[Int]("ok_lang") == 0) // german doc fails the lang gate
+  }
+
+  test("CurationReport.run reads a JSONL corpus through its valid documents") {
+    // a dir named *.jsonl: one corrupt line and one line with no text
+    // drop out, and the two valid documents get their n_chars
+    val dir = Files.createTempDirectory("curate").resolve("docs.jsonl")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("part-0.jsonl"), Seq(
+      """{"doc_id": 1, "text": "the cat is on the mat and it is fine today", "lang": "en", "source": "web"}""",
+      """{"doc_id": 2, "text": "a dog sat by the door and it was not loud", "lang": "en", "source": "web"}""",
+      """not json {{{""",
+      """{"doc_id": 4, "lang": "en", "source": "web"}""").mkString("\n") + "\n")
+    val report = graft.report.CurationReport.run(spark, dir.toString)
+    val summary = report.linesIterator.dropWhile(!_.startsWith("## Summary"))
+      .drop(2).next()
+    assert(summary.matches("""\d+ of 2 documents .*"""), summary)
   }
 }

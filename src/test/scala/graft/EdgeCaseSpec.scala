@@ -113,9 +113,11 @@ class EdgeCaseSpec extends SparkTestBase {
   }
 
   test("e-divisive returns no change points for short or constant series") {
-    assert(functions.EDivisive.changePoints(Array(1.0, 2.0, 3.0)).isEmpty)
-    assert(functions.EDivisive.changePoints(Array.fill(40)(7.0)).isEmpty)
-    assert(functions.EDivisive.changePoints(Array.empty[Double]).isEmpty)
+    def cps(q: Array[Long]) = functions.EDivisive.changePointsKeyed(q,
+      operators.ChangePoints.permKeys("m", "a", 50, q.length))
+    assert(cps(Array(10000L, 20000L, 30000L)).isEmpty)
+    assert(cps(Array.fill(40)(70000L)).isEmpty)
+    assert(cps(Array.empty[Long]).isEmpty)
   }
 
   test("clusters with no near-dups labels every doc as its own canonical") {

@@ -3,14 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
-/** r13: the LONG-keyed connected-components rounds moved from the
-  * DataFrame loop (3-5 driver round-trips per round: AQE stage
-  * materializations + the eager checkpoint) to identical rounds on
-  * pre-partitioned pair RDDs (one count action per round). The labels
-  * are exact Long mins either way; this spec pins RDD ≡ DataFrame on
-  * graphs that exercise every arm — random graphs, a long PATH (the
-  * deferred pointer-jump arm engages from round 3), and a path longer
-  * than maxRounds·hop-reach (the fail-loud unconverged contract).
+/** `Dedup.minLabelLoop` is the one connected-components loop: long
+  * ids, rounds on pre-partitioned pair RDDs. This spec pins its labels
+  * against an in-memory union-find on graphs that exercise every arm —
+  * random graphs, a long PATH (the deferred pointer-jump arm engages
+  * from round 3), a path whose ids descend, and a path longer than
+  * maxRounds·hop-reach (the fail-loud unconverged contract) — and pins
+  * what it leaves persisted.
   */
 class MinLabelLoopSpec extends SparkTestBase {
   import spark.implicits._
@@ -21,30 +20,53 @@ class MinLabelLoopSpec extends SparkTestBase {
       pairs.select(col("doc2").as("doc1"), col("doc1").as("doc2")))
   }
 
-  test("RDD arm equals the DataFrame arm on random and long-chain graphs") {
+  /** Least id of each edged vertex's component, by union-find. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(v: Long): Long = {
+      val p = parent.getOrElseUpdate(v, v)
+      if (p == v) v else { val r = find(p); parent(v) = r; r }
+    }
+    // the root of a merged pair is the lesser root, so every root is
+    // its component's least id
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  test("minLabelLoop equals an in-memory union-find on random and long-chain graphs") {
     val rnd = new scala.util.Random(41)
-    val cases: Seq[Seq[(Long, Long)]] = (0 until 4).map { _ =>
+    val dense: Seq[Seq[(Long, Long)]] = (0 until 4).map { _ =>
       (0 until 40).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
         .filter(e => e._1 != e._2)
-    } :+
-      // a 120-hop path: needs the pointer jump to converge inside the
-      // cap, so both loops run the jump-join arm for many rounds
-      (0L until 119L).map(i => (i, i + 1)) :+
+    }
+    // sparse: 12 edges over 15 ids leave several components and
+    // several ids with no edge at all
+    val bfs = new scala.util.Random(23)
+    val sparse: Seq[Seq[(Long, Long)]] = (0 until 4).map { _ =>
+      (0 until 12).map(_ => (bfs.nextInt(15).toLong, bfs.nextInt(15).toLong))
+        .filter(e => e._1 != e._2)
+    }
+    val paths: Seq[Seq[(Long, Long)]] = Seq(
+      // a 10-hop path converges only through multi-round hops
+      (0L until 10L).map(i => (i, i + 1)),
+      // a 120-hop path needs the pointer jump to converge inside the
+      // cap, so the loop runs the jump-join arm for many rounds
+      (0L until 119L).map(i => (i, i + 1)),
       // ids descending along the path: the min label propagates the
       // slow direction
-      (0L until 60L).map(i => (200L - i, 199L - i))
-    cases.foreach { edges =>
-      val s = sym(edges)
-      val viaRdd = Dedup.minLabelLoopRdd(s, maxRounds = 50)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      val viaDF = Dedup.minLabelLoopDF(s, maxRounds = 50)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      assert(viaRdd.sameElements(viaDF),
-        s"RDD/DF label divergence on $edges:\n${viaRdd.toSeq}\n${viaDF.toSeq}")
+      (0L until 60L).map(i => (200L - i, 199L - i)))
+    (dense ++ sparse ++ paths).foreach { edges =>
+      val got = Dedup.minLabelLoop(sym(edges), maxRounds = 50)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val expect = unionFind(edges)
+      assert(got == expect, s"labels diverge from union-find on $edges")
     }
   }
 
-  test("long-keyed edges dispatch to the RDD arm and still fail loud unconverged") {
+  test("minLabelLoop fails loud rather than return unconverged labels") {
     // an 8-vertex path cannot converge in one round even with the jump
     val e = intercept[IllegalStateException] {
       Dedup.minLabelLoop(sym((0L until 7L).map(i => (i, i + 1))), maxRounds = 1)
@@ -58,7 +80,7 @@ class MinLabelLoopSpec extends SparkTestBase {
     // labels RDD, and every one but the returned labels must be released
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val labels = Dedup.minLabelLoopRdd(sym((0L until 119L).map(i => (i, i + 1))),
+    val labels = Dedup.minLabelLoop(sym((0L until 119L).map(i => (i, i + 1))),
       maxRounds = 50).collect()
     assert(labels.map(_.getLong(1)).distinct.toSeq == Seq(0L))
     val added = sc.getPersistentRDDs.keySet -- before

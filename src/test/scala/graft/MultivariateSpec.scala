@@ -158,12 +158,12 @@ class MultivariateSpec extends SparkTestBase {
   }
 
   test("distributed min-label components match naive BFS on random string graphs") {
-    // corrCluster labels every signal with its component's
-    // lexicographic minimum via the DISTRIBUTED Dedup.minLabelLoop
-    // (r8: the driver union-find is gone — verdict #2). Drive the
-    // actual loop over random string graphs, including a long PATH
-    // graph (worst-case component diameter for label propagation),
-    // against a naive BFS oracle.
+    // corrCluster labels every signal with its component's least
+    // string: signalComponents gives each signal a dense id in Spark's
+    // string order and runs the distributed Dedup.clusters on the ids.
+    // Drive it over random string graphs, including long PATH graphs
+    // (worst-case component diameter for label propagation), against a
+    // naive BFS oracle.
     val rnd = new scala.util.Random(23)
     val cases = (0 until 4).map { _ =>
       val verts = (0 until 15).map(i => f"v$i%02d")
@@ -174,10 +174,9 @@ class MultivariateSpec extends SparkTestBase {
       val verts = (0 until 10).map(i => f"v$i%02d")
       (verts, verts.sliding(2).map(p => (p(0), p(1))).toSeq)
     } :+ {
-      // r8 verdict #2: a path LONGER than maxRounds — plain min-label
-      // propagation needs O(diameter) rounds and would exit the 50-round
-      // loop unconverged; the r9 pointer-jumping makes it O(log d)
-      // (~7 rounds for 120 hops), so this converges well inside the cap
+      // a path LONGER than maxRounds: plain min-label propagation needs
+      // O(diameter) rounds; the pointer jump makes it O(log d) (~7
+      // rounds for 120 hops), so this converges well inside the cap
       val verts = (0 until 120).map(i => f"v$i%03d")
       (verts, verts.sliding(2).map(p => (p(0), p(1))).toSeq)
     }
@@ -192,30 +191,27 @@ class MultivariateSpec extends SparkTestBase {
         }
         seen
       }
-      val expect = verts.map(v => v -> comp(v).min).toMap
-      val pairs = edges.toDF("doc1", "doc2")
-      val sym = pairs.unionByName(
-        pairs.select(col("doc2").as("doc1"), col("doc1").as("doc2")))
-      val got = graft.operators.Dedup.minLabelLoop(sym, maxRounds = 50)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val got = graft.operators.Correlate.signalComponents(verts.toDS(), edges.toDS())
+        .collect().map(r => r.getString(0) -> (r.getString(1), r.getInt(2))).toMap
+      assert(got.keySet == verts.toSet, s"every vertex is labelled for edges $edges")
       verts.foreach { v =>
-        val lab = got.getOrElse(v, v) // isolated vertices label themselves
-        assert(lab == expect(v), s"$v: $lab vs ${expect(v)} for edges $edges")
+        val lab = comp(v).min // isolated vertices label themselves
+        assert(got(v) == (lab, if (lab == v) 0 else 1),
+          s"$v: ${got(v)} vs $lab for edges $edges")
       }
     }
   }
 
   test("minLabelLoop throws rather than return unconverged labels") {
-    // a 6-hop path cannot converge in one round even with the jump —
-    // the fail-loud contract (r8 verdict #2): non-canonical labels must
-    // never be returned silently
-    val verts = (0 until 8).map(i => f"w$i%02d")
-    val edges = verts.sliding(2).map(p => (p(0), p(1))).toSeq
-    val pairs = edges.toDF("doc1", "doc2")
-    val sym = pairs.unionByName(
-      pairs.select(col("doc2").as("doc1"), col("doc1").as("doc2")))
+    // a 7-hop path cannot converge in one round even with the jump —
+    // the fail-loud contract: non-canonical labels must never be
+    // returned silently, and Dedup.clusters (the path corrCluster's
+    // signal ids take) passes the loop's failure through
+    val docs = (0L until 8L).toDF("doc_id")
+    val pairs = (0L until 7L).map(i => (i, i + 1)).toDF("doc1", "doc2")
     val e = intercept[IllegalStateException] {
-      graft.operators.Dedup.minLabelLoop(sym, maxRounds = 1).collect()
+      graft.operators.Dedup.clusters(docs, maxRounds = 1,
+        precomputedPairs = Some(pairs)).collect()
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -303,18 +299,27 @@ class MultivariateSpec extends SparkTestBase {
     // a and b move together; c is independent noise. indexed-grid shape
     // (name, node, b, i, qv consumed via withQuant → needs gval, i, b)
     val rnd = new scala.util.Random(5)
+    // ｱ (U+FF71) and 𐀀 (U+10000) co-move too: UTF-16 code units order
+    // 𐀀 (a surrogate pair, 0xD800…) first, binary UTF-8 orders ｱ
+    // (EF BD B1) first, and Spark's min is the UTF-8 one
     val rows = (0 until 30).flatMap { i =>
       val base = math.sin(i * 0.7) * 10.0
+      val other = math.cos(i * 1.3) * 5.0
       Seq(("ma", "n0", i * 3600L, base, i.toLong, 0L),
         ("mb", "n0", i * 3600L, base * 2.0 + 1.0, i.toLong, 0L),
-        ("mc", "n0", i * 3600L, rnd.nextGaussian(), i.toLong, 0L))
+        ("mc", "n0", i * 3600L, rnd.nextGaussian(), i.toLong, 0L),
+        ("\uFF71", "n0", i * 3600L, other, i.toLong, 0L),
+        ("\uD800\uDC00", "n0", i * 3600L, other * 3.0 - 2.0, i.toLong, 0L))
     }
     val grid = rows.toDF("name", "node", "tsb", "gval", "i", "b")
     val out = graft.operators.Correlate.corrCluster(grid, threshold = 0.8)
       .collect().map(r => r.getString(0) -> (r.getString(1), r.getInt(2))).toMap
+    assert(out.size == 5)
     assert(out("ma|n0") == ("ma|n0", 0))
     assert(out("mb|n0") == ("ma|n0", 1), "mb joins ma's group")
     assert(out("mc|n0") == ("mc|n0", 0), "independent signal stays alone")
+    assert(out("\uFF71|n0") == ("\uFF71|n0", 0), s"$out")
+    assert(out("\uD800\uDC00|n0") == ("\uFF71|n0", 1), "the group is Spark's min, not UTF-16's")
   }
 
   test("sketch estimates are replay-invariant (the mergeable-state property)") {

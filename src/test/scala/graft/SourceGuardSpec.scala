@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
   * session through `GraftSession.build` (core.scala), every derived
   * width reads the session width through `Widths` (core.scala),
   * operator, function, source and report code never reads the process
-  * environment, and no code runs a Structured Streaming query. Each
+  * environment, no code runs a Structured Streaming query, and there
+  * is one connected-components loop. Each
   * rule stops one kind of drift from coming back a file at a time.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
@@ -52,5 +53,20 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
           src.contains(".writeStream") => p.getFileName.toString
     }
     assert(hits.isEmpty, s"streaming code in $hits")
+  }
+
+  test("one connected-components loop, and no Observation") {
+    // every component query, string-keyed corr_cluster too, runs the
+    // RDD rounds of Dedup.minLabelLoop; an observed DataFrame loop pays
+    // several driver round trips per round
+    val loops = sources(root).flatMap { case (p, src) =>
+      "def minLabelLoop\\w*".r.findAllIn(src).map(_ => p.getFileName.toString)
+    }
+    assert(loops == Seq("Dedup.scala"), s"minLabelLoop defined in $loops")
+    val obs = sources(root).collect {
+      case (p, src) if src.contains("sql.Observation") || src.contains("Observation(") =>
+        p.getFileName.toString
+    }
+    assert(obs.isEmpty, s"Observation constructed in $obs")
   }
 }

@@ -17,8 +17,8 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // managed tables (BucketedCorpusSpec) land in a throwaway
-      // warehouse, never in the repo working tree
+      // any managed table lands in a throwaway warehouse, never in
+      // the repo working tree
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()

@@ -155,8 +155,8 @@ class VideoDecoderSpec extends SparkTestBase {
 
   test("a swapped-in FrameDecoder (the ffmpeg seam) drives the frame operators") {
     // the production contract an ffmpeg-backed decoder would fulfil:
-    // a DIFFERENT FrameDecoder injected into frameSampleDecoded /
-    // keyframesDecoded must (a) actually be used — this fake yields
+    // a DIFFERENT FrameDecoder injected into frameSampleDecoded must
+    // (a) actually be used — this fake yields
     // frames for MP4 payloads where JvmMediaDecoder is metadata-only —
     // (b) keep the output schema, and (c) serialize to executor tasks.
     // No real H.264 codec exists in this environment; the fake stands
@@ -185,14 +185,9 @@ class VideoDecoderSpec extends SparkTestBase {
       Seq("doc_id", "frame_idx", "frame_phash", "score"))
     val got = out.filter("doc_id = 1").orderBy("frame_idx").collect()
     assert(got.map(_.getLong(1)).toSeq == Seq(0L, 2L, 4L), "stride broke")
-    val key = Multimodal.keyframesDecoded(docs, FakeH264Decoder, stride = 1, k = 2)
-      .filter("doc_id = 1").collect()
-    assert(key.length == 2)
-    // saliency ranking: the two highest-index frames score highest
-    assert(key.map(_.getAs[Long]("frame_idx")).toSet == Set(4L, 5L))
   }
 
-  test("frameSampleDecoded and keyframesDecoded run the real codec through Spark") {
+  test("frameSampleDecoded runs the real codec through Spark") {
     val docs = Seq((7L, avi), (8L, mp4(640, 480))).toDF("doc_id", "payload")
     val sampled = Multimodal.frameSampleDecoded(docs, JvmMediaDecoder, stride = 1)
       .orderBy("doc_id", "frame_idx").collect()
@@ -203,9 +198,5 @@ class VideoDecoderSpec extends SparkTestBase {
     // checkerboard (frame 1) must out-score the flat frames by a wide margin
     assert(scores(1L) > 100L * math.max(1L, scores(0L)))
     assert(scores(1L) > scores(3L) && scores(3L) > scores(0L))
-    val keys = Multimodal.keyframesDecoded(docs, JvmMediaDecoder, stride = 1, k = 1)
-      .collect()
-    assert(keys.length == 1 && keys(0).getLong(0) == 7L)
-    assert(keys(0).getLong(2) == 1L, "the checkerboard frame is the keyframe")
   }
 }
