@@ -2258,7 +2258,6 @@ object SparkEntry {
         }
         pi = nx
       }
-      val r4d = (v: Double) => math.floor((v + 1e-9) * 1e4 + 0.5) / 1e4
       import s.implicits._
       types.zipWithIndex.map { case (t, i) =>
         (t, rsum(i), r4d(p(i)(i)), r4d(pi(i)))

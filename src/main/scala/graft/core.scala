@@ -45,6 +45,9 @@ object Num {
     */
   def r4(c: Column): Column = rFloor(c, 1e-9, 1e4)
 
+  /** [[r4]] on one double, for in-task kernels: the same op sequence. */
+  def r4d(x: Double): Double = math.floor((x + 1e-9) * 1e4 + 0.5) / 1e4
+
   def r6(c: Column): Column = rFloor(c, 1e-11, 1e6)
 
   /** value × `scale` as an exact integer (DECIMAL(18,0)) — the input to

@@ -139,7 +139,12 @@ object Stats {
     // is engine-independent and a SQL oracle can replay it; inputs off
     // the 1e-6 grid differ from the old raw-double kernel only within
     // quantization distance of a tie/threshold
-    esdOutliersQ(xs.map(v => math.floor(v * 1e6 + 0.5).toLong), kMax, alpha)
+    esdOutliersQ(xs.map(q6), kMax, alpha)
+
+  /** `v` ×1e6 as a long, SQL `floor(v * 1e6 + 0.5)`: the same IEEE ops
+    * and the same double→long conversion.
+    */
+  def q6(v: Double): Long = math.floor(v * 1e6 + 0.5).toLong
 
   /** Exact-integer ESD core on a ×1e6-quantized series. Per round over
     * the m active points: mean is carried as the exact sum S (so the

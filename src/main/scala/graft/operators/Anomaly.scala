@@ -310,11 +310,9 @@ object Anomaly {
   def discords(grid: DataFrame, w: Int = 8, k: Int = 3): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalL(
-      grid.select(col("name"), col("node"), col("tsb"),
-        floor(col("gval") * lit(1e6) + lit(0.5)).cast("long").as("q"))) { (key: (String, String), it: Iterator[(String, String, Long, Long)]) =>
-        val rows = it.toArray.sortBy(_._3)
-        val q = rows.map(_._4)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, xs) =>
+        val q = xs.map(graft.functions.Stats.q6)
         val n = q.length
         val m = n - w + 1 // subsequence count
         if (m < w + 1) Iterator.empty
@@ -346,8 +344,7 @@ object Anomaly {
           }
           val idx = (0 until m).filter(prof(_) != Long.MaxValue)
           idx.sortBy(i => (-prof(i), i)).take(k).sorted.iterator.map { i =>
-            (key._1, key._2, i.toLong, rows(i)._3, prof(i),
-              math.floor((prof(i).toDouble / 1e12 + 1e-9) * 1e4 + 0.5) / 1e4)
+            (name, node, i.toLong, ts(i), prof(i), r4d(prof(i).toDouble / 1e12))
           }
         }
       }
@@ -506,14 +503,11 @@ object Anomaly {
                  level: Double = 3.0, minSamples: Int = 48): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String),
-                        it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        val n = pts.length
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, xs) =>
+        val n = xs.length
         if (n < 2 * m + 1) Iterator.empty
         else {
-          val xs = pts.map(_._4); val ts = pts.map(_._3)
           var sum1 = 0.0; var sum2 = 0.0; var i = 0
           while (i < m) { sum1 += xs(i); i += 1 }
           while (i < 2 * m) { sum2 += xs(i); i += 1 }
@@ -530,10 +524,9 @@ object Anomaly {
             val resid = xs(t) - fc
             if (kk >= minSamples && m2 > 0) {
               val sd = math.sqrt(m2 / (kk - 1))
-              val zr = math.floor(((resid - mu) / sd + 1e-9) * 1e4 + 0.5) / 1e4
+              val zr = r4d((resid - mu) / sd)
               if (zr > level || zr < -level)
-                out += ((key._1, key._2, ts(t), xs(t),
-                  math.floor((fc + 1e-9) * 1e4 + 0.5) / 1e4, zr))
+                out += ((name, node, ts(t), xs(t), r4d(fc), zr))
             }
             val d1 = resid - mu
             kk += 1
@@ -575,10 +568,9 @@ object Anomaly {
                     rFrac: Double = 0.2): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalL(
-      grid.select(col("name"), col("node"), col("tsb"),
-        floor(col("gval") * lit(1e6) + lit(0.5)).cast("long").as("q"))) { (key: (String, String), it: Iterator[(String, String, Long, Long)]) =>
-        val q = it.toArray.sortBy(_._3).map(_._4)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
+        val q = xs.map(graft.functions.Stats.q6)
         val n = q.length
         if (n < 2 * (w + 1)) Iterator.empty
         else {
@@ -617,7 +609,7 @@ object Anomaly {
               Some(math.floor((graft.functions.ExactMath.lnRatio(b, a) + 1e-11) *
                 1e6 + 0.5) / 1e6)
             else None
-          Iterator.single((key._1, key._2, n.toLong, r, b, a, se))
+          Iterator.single((name, node, n.toLong, r, b, a, se))
         }
       }
       .toDF("name", "node", "n", "r_tol", "b_pairs", "a_pairs", "sampen")

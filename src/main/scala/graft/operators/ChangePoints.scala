@@ -1,52 +1,50 @@
 package graft.operators
 
 import graft.Caches._
+import graft.Num.r4d
 import graft.functions.{Dsp, EDivisive}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Whole-series analytics that genuinely need the full per-signal series
-  * in one place (e-divisive change points, FFT seasonality). These use
-  * `groupByKey(signal).flatMapGroups`: one shuffle keyed by signal, each
-  * task materializes just its signal's series (bounded by retention —
-  * thousands of points), the algorithm runs in tight JVM loops, and
+  * in one place (e-divisive change points, PELT, ESD, FFT seasonality
+  * and decomposition). Each one is a [[SignalKernel.series]] kernel:
+  * the grouping is relational on (name, node), so it reuses the grid's
+  * (name, node) exchange instead of adding one, and each task holds one
+  * signal's series as sorted primitive arrays (bounded by retention —
+  * thousands of points) while the algorithm runs in tight JVM loops;
   * output returns to DataFrame land. At 100 TB the parallelism is the
   * number of signals, which is what grows — per-series cost is constant.
   */
 object ChangePoints {
 
-  private def r4d(x: Double): Double = math.floor((x + 1e-9) * 1e4 + 0.5) / 1e4
+  /** The distinct series lengths of `grid`, in one job. The grid is
+    * persisted BEFORE the action: the collect is an extra Spark action
+    * over it, and an un-persisted grid would re-run the whole
+    * events→resample→ffill build here and again in the kernel pass (r7
+    * advice). Only the DISTINCT lengths come back — a handful of rows
+    * however many million signals the fleet has (r7 verdict #3: the
+    * per-signal collect was a driver-OOM path).
+    */
+  private def seriesLengths(grid: DataFrame): Array[Int] = {
+    grid.persist().tracked
+    grid.groupBy("name", "node").count()
+      .select("count").distinct().collect().map(_.getLong(0).toInt)
+  }
 
   /** Stash the DFT twiddle tables this grid's series will use (one pad
     * size per distinct series length) so the oracle consumes the same
-    * StrictMath doubles as literals. One tiny aggregate-collect over
-    * the already-small per-signal grid — bounded by the signal count,
-    * not data volume.
+    * StrictMath doubles as literals.
     */
-  private def stashSpectral(grid: DataFrame): Unit = {
-    // persist BEFORE the stash action: the collect is an extra Spark
-    // action over the grid, and an un-persisted grid would re-run the
-    // whole events→resample→ffill build here and again in the kernel
-    // pass (r7 advice). Only the DISTINCT series lengths come back —
-    // a handful of rows however many million signals the fleet has
-    // (r7 verdict #3: the per-signal collect was a driver-OOM path).
-    grid.persist().tracked
-    val ms = grid.groupBy("name", "node").count()
-      .select("count").distinct().collect()
-      .map(r => Dsp.nextPow2(r.getLong(0).toInt)).distinct.toSeq
-    graft.TwiddleStash.ensure(ms)
-  }
+  private def stashSpectral(grid: DataFrame): Unit =
+    graft.TwiddleStash.ensure(seriesLengths(grid).map(Dsp.nextPow2).distinct.toSeq)
 
   /** Stash the ESD critical values (per active-count m) the per-series
-    * kernels will compare against — same bounded distinct-lengths
-    * collect as [[stashSpectral]]; lam4 comes from the kernel's own
+    * kernels will compare against; lam4 comes from the kernel's own
     * Stats route.
     */
   private def stashEsdLams(grid: DataFrame, kFrac: Double, alpha: Double): Unit = {
-    grid.persist().tracked
-    val ns = grid.groupBy("name", "node").count()
-      .select("count").distinct().collect().map(_.getLong(0).toInt)
-    val ms = ns.flatMap { n =>
+    val ms = seriesLengths(grid).flatMap { n =>
       val kMax = math.max(1, math.ceil(n * kFrac).toInt)
       val k = math.min(kMax, math.max(0, n - 2))
       (0 until k).map(i => (n - i).toLong)
@@ -109,18 +107,15 @@ object ChangePoints {
     // relational grouping reuses the grid pin's (name, node) layout —
     // no kernel exchange, full width (see SignalKernel; the typed
     // groupByKey form ran this whole stage on ONE AQE-coalesced task)
-    SignalKernel.perSignalD(
+    SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) {
-      (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val (name, node) = key
-        val pts = it.toArray.sortBy(_._3)
-        val raw = pts.map(_._4)
+      (name, node, ts, raw) =>
         val series = if (medianW > 0) movingMedian(raw, medianW) else raw
         val q = series.map(v => math.floor((v + 1e-9) * 1e4 + 0.5).toLong)
         EDivisive.changePointsKeyed(q,
             permKeys(name, node, permutations, q.length),
             pvalue, minSize, maxPoints)
-          .map(cp => (name, node, pts(cp.index)._3, r4d(cp.qhat / 1e4)))
+          .map(cp => (name, node, ts(cp.index), r4d(cp.qhat / 1e4)))
       }
       .toDF("name", "node", "cp_tsb", "qhat")
   }
@@ -143,11 +138,9 @@ object ChangePoints {
   def pelt(grid: DataFrame, minSize: Int = 5): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val (name, node) = key
-        val pts = it.toArray.sortBy(_._3)
-        val q = graft.functions.Pelt.quantize(pts.map(_._4))
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, xs) =>
+        val q = graft.functions.Pelt.quantize(xs)
         val cps = graft.functions.Pelt.changePoints(
           q, graft.functions.Pelt.autoPenalty(q), minSize)
         val ps = q.scanLeft(0L)(_ + _)
@@ -157,7 +150,7 @@ object ChangePoints {
           val lo = bounds(j); val hi = bounds(j + 2)
           val meanL = (ps(cp) - ps(lo)).toDouble / (cp - lo) / 1e4
           val meanR = (ps(hi) - ps(cp)).toDouble / (hi - cp) / 1e4
-          (name, node, pts(cp)._3, r4d(meanL), r4d(meanR))
+          (name, node, ts(cp), r4d(meanL), r4d(meanR))
         }
       }
       .toDF("name", "node", "cp_tsb", "mean_before", "mean_after")
@@ -176,14 +169,12 @@ object ChangePoints {
     val spark = grid.sparkSession
     import spark.implicits._
     stashEsdLams(grid, kFrac, alpha)
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val (name, node) = key
-        val pts = it.toArray.sortBy(_._3)
-        val kMax = math.max(1, math.ceil(pts.length * kFrac).toInt)
-        graft.functions.Stats.esdOutliers(pts.map(_._4), kMax, alpha)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, xs) =>
+        val kMax = math.max(1, math.ceil(xs.length * kFrac).toInt)
+        graft.functions.Stats.esdOutliers(xs, kMax, alpha)
           .sorted
-          .map(i => (name, node, pts(i)._3, pts(i)._4))
+          .map(i => (name, node, ts(i), xs(i)))
       }
       .toDF("name", "node", "tsb", "gval")
   }
@@ -200,12 +191,10 @@ object ChangePoints {
     val spark = grid.sparkSession
     import spark.implicits._
     stashSpectral(grid)
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val (name, node) = key
-        val pts = it.toArray.sortBy(_._3)
-        Dsp.dominantPeriod(pts.map(_._4), minCycles).map { case (period, strength) =>
-          (name, node, r4d(period * stepSec), r4d(strength), pts.length.toLong)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
+        Dsp.dominantPeriod(xs, minCycles).map { case (period, strength) =>
+          (name, node, r4d(period * stepSec), r4d(strength), xs.length.toLong)
         }
       }
       .toDF("name", "node", "period_sec", "strength", "n")
@@ -219,11 +208,10 @@ object ChangePoints {
     val spark = grid.sparkSession
     import spark.implicits._
     stashSpectral(grid)
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        Dsp.spectralEntropy(pts.map(_._4)).map { case (h, n) =>
-          (key._1, key._2, n, r4d(h))
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
+        Dsp.spectralEntropy(xs).map { case (h, n) =>
+          (name, node, n, r4d(h))
         }
       }
       .toDF("name", "node", "n", "spec_entropy")
@@ -277,14 +265,11 @@ object ChangePoints {
     val spark = grid.sparkSession
     import spark.implicits._
     stashSpectral(grid)
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val (name, node) = key
-        val pts = it.toArray.sortBy(_._3)
-        val x = pts.map(_._4)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, x) =>
         val (trend, seas, detr) = decomposed(x, stepSec, fMin, w, autoFmin)
-        pts.indices.map { i =>
-          (name, node, pts(i)._3, x(i), r4d(trend(i)), r4d(seas(i)),
+        ts.indices.map { i =>
+          (name, node, ts(i), x(i), r4d(trend(i)), r4d(seas(i)),
             r4d(detr(i) - seas(i)))
         }
       }
@@ -349,11 +334,8 @@ object ChangePoints {
     val spark = grid.sparkSession
     import spark.implicits._
     stashSpectral(grid)
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val (name, node) = key
-        val pts = it.toArray.sortBy(_._3)
-        val x = pts.map(_._4)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, x) =>
         val n = x.length
         val (trend, seas, detr) = decomposed(x, stepSec, fMin, w, autoFmin)
         val noise = Array.tabulate(n)(i => r4d(detr(i) - seas(i)))
@@ -366,7 +348,7 @@ object ChangePoints {
           var i = 0
           while (i < n) {
             if (r4d(math.abs((noise(i) - mu) / sigma)) >= level)
-              out += ((name, node, pts(i)._3, "outlier"))
+              out += ((name, node, ts(i), "outlier"))
             i += 1
           }
         }
@@ -378,7 +360,7 @@ object ChangePoints {
         EDivisive.changePointsKeyed(tq,
             permKeys(name, node, permutations, tq.length), pvalue, minSize,
             maxPoints)
-          .foreach(cp => out += ((name, node, pts(cp.index)._3, "changepoint")))
+          .foreach(cp => out += ((name, node, ts(cp.index), "changepoint")))
         out.result()
       }
       .toDF("name", "node", "tsb", "kind")

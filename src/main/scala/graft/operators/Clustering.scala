@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Caches._
+import graft.Num.r4d
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -453,7 +454,6 @@ object Clustering {
       case Some((n, dim, _, g)) =>
         val trace = (0 until dim).map(i => g(i)(i)).sum
         val lambdas = powerComponents(g, dim, k, iters).map(_._2)
-        val r4d = (v: Double) => math.floor((v + 1e-9) * 1e4 + 0.5) / 1e4
         lambdas.zipWithIndex.map { case (lam, c) =>
           (c, n,
             r4d(lam.toDouble / (n.toDouble * (n - 1)) / 1e12),
@@ -604,9 +604,7 @@ object Clustering {
               var d = 0
               while (d < a.length) { acc += a(d) * b(d); d += 1 }
               val raw = acc / (aNs(i) * bn)
-              val cs =
-                if (java.lang.Double.isNaN(raw) || java.lang.Double.isInfinite(raw)) raw
-                else math.floor((raw + 1e-9) * 1e4 + 0.5) / 1e4
+              val cs = r4d(raw)
               if (keepAll || cs >= thr) {
                 val lo = math.min(aIds(i), bid); val hi = math.max(aIds(i), bid)
                 pending = (lo, hi, cs)
@@ -691,9 +689,7 @@ object Clustering {
               val b = nVs(j)
               while (d < a.length) { acc += a(d) * b(d); d += 1 }
               val raw = acc / (qn * nNs(j))
-              val cs =
-                if (java.lang.Double.isNaN(raw) || java.lang.Double.isInfinite(raw)) raw
-                else math.floor((raw + 1e-9) * 1e4 + 0.5) / 1e4
+              val cs = r4d(raw)
               // insertion position among the current slots
               var p = used
               while (p > 0 && {

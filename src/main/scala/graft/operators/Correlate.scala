@@ -363,7 +363,7 @@ object Correlate {
         else {
           val tau = (c - d).toDouble /
             math.sqrt(((n0 - tx) * (n0 - ty)).toDouble)
-          Some((math.floor((tau + 1e-9) * 1e4 + 0.5) / 1e4, n.toLong))
+          Some((r4d(tau), n.toLong))
         }
       }
     }.withColumnRenamed("stat", "tau")
@@ -444,7 +444,7 @@ object Correlate {
           else {
             val dcor = math.sqrt(
               sxy.doubleValue / math.sqrt(sxx.doubleValue * syy.doubleValue))
-            Some((math.floor((dcor + 1e-9) * 1e4 + 0.5) / 1e4, n.toLong))
+            Some((r4d(dcor), n.toLong))
           }
       }
     }.withColumnRenamed("stat", "dcor")
@@ -702,12 +702,11 @@ object Correlate {
   def dtwDist(grid: DataFrame, objNames: Seq[String], band: Int = 6): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val series = SignalKernel.perSignalD(
+    val series = SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) {
-      (k: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        Iterator.single((k._1, k._2,
-          graft.functions.Dtw.znorm(graft.functions.Dtw.quantize(pts.map(_._4)))))
+      (name, node, _, xs) =>
+        Iterator.single((name, node,
+          graft.functions.Dtw.znorm(graft.functions.Dtw.quantize(xs))))
       }.toDF("name", "node", "series")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).tracked
     val obj = series.filter(col("name").isin(objNames: _*))
@@ -720,7 +719,7 @@ object Correlate {
       .as[(String, String, String, Array[Double], Array[Double])]
       .map { case (o, c, nd, os, cs) =>
         val d = graft.functions.Dtw.distance(os, cs, band)
-        (o, c, nd, math.floor((d + 1e-9) * 1e4 + 0.5) / 1e4, os.length)
+        (o, c, nd, r4d(d), os.length)
       }
       .toDF("obj_name", "cand_name", "node", "dtw", "n")
   }
@@ -740,11 +739,9 @@ object Correlate {
   def grangerF(grid: DataFrame, objNames: Seq[String], p: Int = 2): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val series = SignalKernel.perSignalD(
+    val series = SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) {
-      (k: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        Iterator.single((k._1, k._2, pts.map(_._4)))
+      (name, node, _, xs) => Iterator.single((name, node, xs))
       }.toDF("name", "node", "series")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).tracked
     val obj = series.filter(col("name").isin(objNames: _*))
@@ -758,7 +755,6 @@ object Correlate {
       .flatMap { case (o, c, nd, os, cs) =>
         if (os.length != cs.length) None
         else graft.functions.Granger.test(os, cs, p).map { r =>
-          val r4d = (x: Double) => math.floor((x + 1e-9) * 1e4 + 0.5) / 1e4
           (o, c, nd, r4d(math.min(r.fStat, 1e6)), r4d(r.pValue), r.nEff)
         }
       }

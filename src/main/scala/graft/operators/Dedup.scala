@@ -551,7 +551,6 @@ object Dedup {
         threshold)
       .select("doc1", "doc2").persist().tracked
     val nTrue = truth.count()
-    val r4d = (v: Double) => math.floor((v + 1e-9) * 1e4 + 0.5) / 1e4
     // ALL configs' band keys in one frame → ONE self-join keyed on
     // (config, band, slice) → one candidate frame; per-config counts
     // and truth hits are two aggregates over it. 3 actions total

@@ -326,7 +326,7 @@ object Similarity {
         tables.iterator.filter(_._1 != id).map { case (qid, dt) =>
           var d2 = 0.0; var s = 0
           while (s < m) { d2 += dt(s)(code(s)); s += 1 }
-          (qid, id, math.floor((d2 + 1e-9) * 1e4 + 0.5) / 1e4)
+          (qid, id, r4d(d2))
         }
       }
     }.toDF("qid", "nid", "adist")
@@ -454,9 +454,7 @@ object Similarity {
     * so no engine ever computes a transcendental on the hashed path.
     */
   def cosEstTable(nPlanes: Int = 32): IndexedSeq[Double] =
-    (0 to nPlanes).map { h =>
-      math.floor((math.cos(math.Pi * h / nPlanes) + 1e-9) * 1e4 + 0.5) / 1e4
-    }
+    (0 to nPlanes).map(h => r4d(math.cos(math.Pi * h / nPlanes)))
 
   /** IVF cell-population telemetry: per-cell vector counts and corpus
     * share — the dashboard the mega-cell saltCap knob

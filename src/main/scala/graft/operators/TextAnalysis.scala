@@ -344,12 +344,12 @@ object TextAnalysis {
             i += 1
           }
           val bits = qsum.toDouble / n / 1e6
-          val e4 = math.floor((bits + 1e-9) * 1e4 + 0.5) / 1e4
+          val e4 = r4d(bits)
           // ppl = 2^entropy via the cross-engine exact exp kernel
           // (e4·LN2 then ExactMath.expFixed) — libm pow was the last
           // engine-computed transcendental on this hashed path
-          val ppl = math.floor((graft.functions.ExactMath.expFixed(
-            e4 * graft.functions.ExactMath.LN2) + 1e-9) * 1e4 + 0.5) / 1e4
+          val ppl = r4d(graft.functions.ExactMath.expFixed(
+            e4 * graft.functions.ExactMath.LN2))
           (id, n.toLong, e4, ppl)
         }
       }

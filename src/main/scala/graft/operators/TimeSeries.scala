@@ -75,34 +75,28 @@ object TimeSeries {
     // reuses this exchange, so the per-signal fold runs in-stage wide
     val proj = signals.select(col("name"), col("node"),
       expr(s"tsec div $step").as("cell"), col("value"))
-    SignalKernel.perSignalD(
+    SignalKernel.series(
       // r13: workload-derived width (saturates to session width on any
       // real corpus — see graft.Widths); the exchange stays AQE-exempt
       proj.repartition(graft.Widths.forFrame(proj),
         col("name"), col("node"))) {
-      (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val (name, node) = key
-        val sums = scala.collection.mutable.LongMap
-          .empty[(java.math.BigDecimal, Long)]
-        it.foreach { case (_, _, cell, v) =>
-          // Spark's double→DECIMAL(12,2) cast: valueOf (toString-exact)
-          // then HALF_UP to scale 2 — replicated op-for-op so the fused
-          // mean is bit-identical to avgDec's
-          val d = java.math.BigDecimal.valueOf(v)
-            .setScale(2, java.math.RoundingMode.HALF_UP)
-          val (s0, c0) = sums.getOrElse(cell, (java.math.BigDecimal.ZERO, 0L))
-          sums.update(cell, (s0.add(d), c0 + 1))
-        }
-        val cells = sums.toArray.sortBy(_._1)
-        val t0 = cells.head._1
-        val t1 = cells.last._1
+      (name, node, cells, vs) =>
         var last = 0.0
         var ci = 0
-        (t0 to t1).iterator.map { c =>
-          if (ci < cells.length && cells(ci)._1 == c) {
-            val (s, n) = cells(ci)._2
-            last = s.doubleValue() / n
-            ci += 1
+        (cells(0) to cells(cells.length - 1)).iterator.map { c =>
+          if (ci < cells.length && cells(ci) == c) {
+            // one cell's run: Spark's double→DECIMAL(12,2) cast (valueOf,
+            // toString-exact, then HALF_UP to scale 2) replicated op for
+            // op, summed exactly, so the fused mean is bit-identical to
+            // avgDec's
+            var s = java.math.BigDecimal.ZERO
+            val c0 = ci
+            while (ci < cells.length && cells(ci) == c) {
+              s = s.add(java.math.BigDecimal.valueOf(vs(ci))
+                .setScale(2, java.math.RoundingMode.HALF_UP))
+              ci += 1
+            }
+            last = s.doubleValue() / (ci - c0).toLong
           }
           val tsb = c * step
           (name, node, tsb, last, c, tsb / bucket * bucket)
@@ -390,13 +384,11 @@ object TimeSeries {
   def downsampleLttb(grid: DataFrame, nOut: Int = 200): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        val ts = pts.map(_._3)
-        val qvs = pts.map(p => math.floor((p._4 + 1e-9) * 1e4 + 0.5).toLong)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, xs) =>
+        val qvs = xs.map(v => math.floor((v + 1e-9) * 1e4 + 0.5).toLong)
         graft.functions.Lttb.indices(ts, qvs, nOut)
-          .map(i => (key._1, key._2, pts(i)._3, pts(i)._4))
+          .map(i => (name, node, ts(i), xs(i)))
       }
       .toDF("name", "node", "tsb", "gval")
   }
@@ -404,13 +396,12 @@ object TimeSeries {
   def ewma(grid: DataFrame, alpha: Double = 0.3): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, xs) =>
         var acc = Double.NaN
-        pts.map { case (name, node, tsb, v) =>
-          acc = if (acc.isNaN) v else alpha * v + (1 - alpha) * acc
-          (name, node, tsb, math.floor((acc + 1e-9) * 1e4 + 0.5) / 1e4)
+        ts.indices.map { i =>
+          acc = if (acc.isNaN) xs(i) else alpha * xs(i) + (1 - alpha) * acc
+          (name, node, ts(i), r4d(acc))
         }
       }
       .toDF("name", "node", "tsb", "ewma")
@@ -560,9 +551,8 @@ object TimeSeries {
                   beta: Double = 0.2, gamma: Double = 0.1): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val xs = it.toArray.sortBy(_._3).map(_._4)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
         val n = xs.length
         if (n < 2 * m + 1) Iterator.empty
         else {
@@ -585,9 +575,8 @@ object TimeSeries {
             t += 1
           }
           val sNext = sArr(n % m)
-          val rd = (x: Double) => math.floor((x + 1e-9) * 1e4 + 0.5) / 1e4
-          Iterator((key._1, key._2, n.toLong,
-            rd(l), rd(b), rd(sNext), rd(l + b + sNext)))
+          Iterator((name, node, n.toLong,
+            r4d(l), r4d(b), r4d(sNext), r4d(l + b + sNext)))
         }
       }
       .toDF("name", "node", "n", "level", "trend", "s_next", "fc1")
@@ -608,10 +597,8 @@ object TimeSeries {
                    beta: Double = 0.2, gamma: Double = 0.1): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String),
-                        it: Iterator[(String, String, Long, Double)]) =>
-        val xs = it.toArray.sortBy(_._3).map(_._4)
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
         val n = xs.length
         if (n < 2 * m + 1) Iterator.empty
         else {
@@ -644,10 +631,9 @@ object TimeSeries {
             }
             t += 1
           }
-          val rd = (x: Double) => math.floor((x + 1e-9) * 1e4 + 0.5) / 1e4
-          val hm = rd(hsae / cnt); val wm = rd(wsae / cnt)
+          val hm = r4d(hsae / cnt); val wm = r4d(wsae / cnt)
           val winner = if (wm < hm) "hw" else if (hm < wm) "holt" else "tie"
-          Iterator((key._1, key._2, n.toLong, cnt, hm, wm, winner))
+          Iterator((name, node, n.toLong, cnt, hm, wm, winner))
         }
       }
       .toDF("name", "node", "n", "n_scored", "holt_mae", "hw_mae", "winner")
@@ -656,16 +642,15 @@ object TimeSeries {
   def holt(grid: DataFrame, alpha: Double = 0.3, beta: Double = 0.2): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        if (pts.length < 2) Iterator.empty
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
+        if (xs.length < 2) Iterator.empty
         else {
-          var l = pts(0)._4
-          var b = pts(1)._4 - pts(0)._4
+          var l = xs(0)
+          var b = xs(1) - xs(0)
           var i = 2
-          while (i < pts.length) {
-            val x = pts(i)._4
+          while (i < xs.length) {
+            val x = xs(i)
             // identical expression order to the oracle lambda: l_new is
             // written out twice there, which evaluates to the same double
             val lNew = alpha * x + (1 - alpha) * (l + b)
@@ -673,8 +658,7 @@ object TimeSeries {
             l = lNew
             i += 1
           }
-          val r4d = (v: Double) => math.floor((v + 1e-9) * 1e4 + 0.5) / 1e4
-          Iterator((key._1, key._2, pts.length.toLong, r4d(l), r4d(b),
+          Iterator((name, node, xs.length.toLong, r4d(l), r4d(b),
             r4d(l + b), r4d(l + 3.0 * b)))
         }
       }
@@ -698,20 +682,19 @@ object TimeSeries {
                    beta: Double = 0.2): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        if (pts.length < 3) Iterator.empty
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
+        if (xs.length < 3) Iterator.empty
         else {
-          var l = pts(0)._4
-          var b = pts(1)._4 - pts(0)._4
-          var xp = pts(1)._4
+          var l = xs(0)
+          var b = xs(1) - xs(0)
+          var xp = xs(1)
           var sae = 0.0
           var sse = 0.0
           var pae = 0.0
           var i = 2
-          while (i < pts.length) {
-            val x = pts(i)._4
+          while (i < xs.length) {
+            val x = xs(i)
             // identical expression order to the oracle's recursive arm
             sae = sae + math.abs(x - (l + b))
             sse = sse + (x - (l + b)) * (x - (l + b))
@@ -722,11 +705,10 @@ object TimeSeries {
             xp = x
             i += 1
           }
-          val r4d = (v: Double) => math.floor((v + 1e-9) * 1e4 + 0.5) / 1e4
-          val nf = (pts.length - 2).toDouble
+          val nf = (xs.length - 2).toDouble
           val holtMae = r4d(sae / nf)
           val naiveMae = r4d(pae / nf)
-          Iterator((key._1, key._2, pts.length.toLong - 2, holtMae,
+          Iterator((name, node, xs.length.toLong - 2, holtMae,
             r4d(math.sqrt(sse / nf)), naiveMae,
             if (naiveMae > 0) r4d(1.0 - holtMae / naiveMae) else 0.0))
         }
@@ -927,18 +909,17 @@ object TimeSeries {
                        mult: Long = 2L): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        if (pts.length < 3) Iterator.empty
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
+        if (xs.length < 3) Iterator.empty
         else {
-          var l = pts(0)._4
-          var b = pts(1)._4 - pts(0)._4
-          val nf = pts.length - 2
+          var l = xs(0)
+          var b = xs(1) - xs(0)
+          val nf = xs.length - 2
           val qr = new Array[Long](nf)
           var i = 2
-          while (i < pts.length) {
-            val x = pts(i)._4
+          while (i < xs.length) {
+            val x = xs(i)
             // pre-update forecast residual, the backtest convention
             val resid = x - (l + b)
             qr(i - 2) = math.floor((math.abs(resid) + 1e-9) * 1e6 + 0.5).toLong
@@ -950,10 +931,9 @@ object TimeSeries {
           val sorted = qr.sorted
           val qband = sorted(math.ceil(q * nf).toInt - 1)
           val breaches = qr.count(_ > mult * qband).toLong
-          val r4d = (v: Double) => math.floor((v + 1e-9) * 1e4 + 0.5) / 1e4
           val fc = l + b
           val band = qband.toDouble / 1e6
-          Iterator((key._1, key._2, nf.toLong, r4d(fc), r4d(band),
+          Iterator((name, node, nf.toLong, r4d(fc), r4d(band),
             r4d(fc - mult.toDouble * band), r4d(fc + mult.toDouble * band),
             breaches))
         }
@@ -973,17 +953,16 @@ object TimeSeries {
   def kalman(grid: DataFrame, q: Double = 0.05, r: Double = 1.0): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        if (pts.length < 2) Iterator.empty
+    SignalKernel.series(
+      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
+        if (xs.length < 2) Iterator.empty
         else {
-          var l = pts(0)._4
+          var l = xs(0)
           var p = 1.0
           var k = 0.0
           var i = 1
-          while (i < pts.length) {
-            val x = pts(i)._4
+          while (i < xs.length) {
+            val x = xs(i)
             // op order mirrored verbatim in the oracle CTE
             val pp = p + q
             k = pp / (pp + r)
@@ -991,8 +970,7 @@ object TimeSeries {
             p = (1 - k) * pp
             i += 1
           }
-          val r4d = (v: Double) => math.floor((v + 1e-9) * 1e4 + 0.5) / 1e4
-          Iterator((key._1, key._2, pts.length.toLong, r4d(l), r4d(k), r4d(p)))
+          Iterator((name, node, xs.length.toLong, r4d(l), r4d(k), r4d(p)))
         }
       }
       .toDF("name", "node", "n", "level", "gain", "p_var")
@@ -1472,19 +1450,18 @@ object TimeSeries {
   def macd(grid: DataFrame): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    SignalKernel.perSignalD(
+    SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) {
-      (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.toArray.sortBy(_._3)
-        var fast = pts(0)._4
-        var slow = pts(0)._4
+      (name, node, _, xs) =>
+        var fast = xs(0)
+        var slow = xs(0)
         var sig = 0.0
         var lastSgn = 0L
         var xc = 0L
         var qh = 0L
         var i = 1
-        while (i < pts.length) {
-          val v = pts(i)._4
+        while (i < xs.length) {
+          val v = xs(i)
           fast = 0.25 * v + 0.75 * fast
           slow = 0.0625 * v + 0.9375 * slow
           val m = fast - slow
@@ -1496,9 +1473,7 @@ object TimeSeries {
           i += 1
         }
         val m = fast - slow
-        Iterator.single((key._1, key._2, pts.length.toLong,
-          math.floor((m + 1e-9) * 1e4 + 0.5) / 1e4,
-          math.floor((sig + 1e-9) * 1e4 + 0.5) / 1e4,
+        Iterator.single((name, node, xs.length.toLong, r4d(m), r4d(sig),
           qh.toDouble / 1e4, xc))
       }
       .toDF("name", "node", "n", "macd", "macd_signal", "hist", "n_cross")

@@ -65,14 +65,13 @@ object Trend {
   def mannKendall(grid: DataFrame, zCrit: Double = 1.96): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val stats = SignalKernel.perSignalD(
+    val stats = SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) {
-      (key: (String, String), it: Iterator[(String, String, Long, Double)]) =>
-        val pts = it.map(r => (r._3, r._4)).toArray
+      (name, node, ts, xs) =>
         // S boxed: a nullable BIGINT like the SQL sum it replaces, so
         // the output schema (and any parquet written from it) is unchanged
-        mannKendallS(pts).map { case (s, tieNum) =>
-          (key._1, key._2, pts.length.toLong, java.lang.Long.valueOf(s), tieNum)
+        mannKendallS(ts, xs).map { case (s, tieNum) =>
+          (name, node, ts.length.toLong, java.lang.Long.valueOf(s), tieNum)
         }
     }.toDF("name", "node", "n", "s", "tie_num")
     val varS = (col("n") * (col("n") - 1) * (lit(2) * col("n") + 5) -
@@ -90,15 +89,14 @@ object Trend {
   }
 
   /** (S, Σ t(t−1)(2t+5) over tied-value groups) of one series of
-    * (time, value) samples, or None when no two samples differ in time.
+    * samples `x` at ascending times `t`, or None when no two samples
+    * differ in time.
     */
-  private def mannKendallS(pts: Array[(Long, Double)]): Option[(Long, Long)] = {
-    val n = pts.length
-    val byTime = pts.sortBy(_._1)
-    val t = byTime.map(_._1)
+  private def mannKendallS(t: Array[Long], x: Array[Double]): Option[(Long, Long)] = {
+    val n = t.length
     if (t(0) == t(n - 1)) return None
     // Spark's value grouping: −0.0 ≡ 0.0, every NaN equal (Double.compare)
-    val v = byTime.map(p => if (p._2 == 0.0) 0.0 else p._2)
+    val v = x.map(p => if (p == 0.0) 0.0 else p)
     val sorted = v.clone()
     java.util.Arrays.sort(sorted)
     val distinct = Array.newBuilder[Double]
@@ -114,7 +112,7 @@ object Trend {
     }
     // a NaN difference (a NaN sample, or one infinity at two times) makes
     // the SQL sum NaN, and NaN casts to BIGINT 0
-    def pairedAt(x: Double) = byTime.iterator.filter(_._2 == x).map(_._1).distinct.size > 1
+    def pairedAt(y: Double) = t.indices.iterator.filter(x(_) == y).map(t(_)).distinct.size > 1
     if (v.exists(_.isNaN) || pairedAt(Double.PositiveInfinity) ||
         pairedAt(Double.NegativeInfinity)) return Some((0L, tieNum))
     // otherwise sign(x_j − x_i) is the order of the two values: count the
@@ -122,7 +120,7 @@ object Trend {
     // ranks, inserting each timestamp group only after it is scored so
     // equal-time samples never pair
     val values = distinct.result()
-    val rank = v.map(x => java.util.Arrays.binarySearch(values, x) + 1)
+    val rank = v.map(u => java.util.Arrays.binarySearch(values, u) + 1)
     val tree = new Array[Long](values.length + 1)
     def below(r: Int): Long = {
       var k = r; var c = 0L

@@ -1,0 +1,72 @@
+package graft
+
+import java.nio.file.{Files, Path}
+
+/** A known answer for the whole advisor, `Main.run`, on a bundle this
+  * suite writes itself: TiDB-shaped, colon-named wide CSVs at a 15 s
+  * step, 480 samples (12 buckets of 40). Planted: a level shift on one
+  * reference objective, a candidate on the same instance that carries
+  * the same step `Lag` samples later, one flat series, and a background
+  * series with an empty and a `NaN` cell.
+  */
+class AdvisorKnownAnswerSpec extends SparkTestBase {
+  private val Step = 15L
+  private val Samples = 480
+  private val BucketSamples = 40
+  private val Start = 1700000400L // a multiple of 40 × 15 s: buckets align with the data
+  private val Inst = "inst-0:20180"
+  private val Objective = "tidb_p99_rt:total"
+  private val Leader = "tikv_lead_wait:by_instance"
+  private val Flat = "pd_flat_gauge:total"
+  private val ShiftBucket = 6
+  private val ShiftAt = ShiftBucket * BucketSamples + 18
+  private val Lag = 2
+
+  /** Writes the bundle; returns the metric names written. */
+  private def writeBundle(dir: Path): Seq[String] = {
+    val rng = new scala.util.Random(31L)
+    def noise(level: Double, scale: Double) =
+      Array.fill(Samples)(level + scale * (2 * rng.nextDouble() - 1))
+    val obj = noise(50.0, 1.0)
+    for (i <- ShiftAt until Samples) obj(i) += 10.0
+    val leader = noise(20.0, 1.0)
+    // candidate sample i + Lag mirrors objective sample i
+    for (i <- ShiftAt + Lag until Samples) leader(i) += 20.0
+    def fmt(xs: Array[Double]) = xs.map(v => "%.2f".formatLocal(java.util.Locale.ROOT, v))
+    val background = fmt(noise(60.0, 3.0))
+    background(100) = ""
+    background(300) = "NaN"
+    val metrics = Seq(
+      Objective -> fmt(obj),
+      Leader -> fmt(leader),
+      Flat -> Array.fill(Samples)("7.00"),
+      "node_io_util:by_instance" -> background)
+    metrics.foreach { case (name, cells) =>
+      val lines = s"timestamp,$Inst" +: cells.indices.map(i => s"${Start + Step * i},${cells(i)}")
+      Files.writeString(dir.resolve(s"$name.csv"), lines.mkString("", "\n", "\n"))
+    }
+    metrics.map(_._1)
+  }
+
+  test("Main.run ranks the planted leading candidate first at its lag in the shift's bucket") {
+    val dir = Files.createTempDirectory("advisor_known")
+    val written = writeBundle(dir)
+    val md = Main.run(spark, dir.toString, Main.RefObjectives)
+
+    val details = md.linesIterator.dropWhile(!_.startsWith("## Details")).drop(1)
+      .takeWhile(!_.startsWith("## "))
+      .filter(l => l.startsWith("| ") && !l.startsWith("| bucket") && !l.startsWith("| ---"))
+      .map(_.stripPrefix("|").split('|').map(_.trim).toSeq).toSeq
+    val bucket = Start + ShiftBucket * BucketSamples * Step
+    val here = details.filter(c => c(0) == bucket.toString && c(1) == s"$Objective/$Inst")
+    assert(here.nonEmpty, s"the shift's bucket $bucket is not reported:\n$md")
+    val top = here.filter(_(5) == "1")
+    assert(top.map(c => (c(2), c(3))) == Seq((s"$Leader/$Inst", Lag.toString)),
+      s"rank 1 in bucket $bucket is $top")
+    assert(md.contains(s"### bucket $bucket"), "the shift's bucket has no chart")
+    assert(!md.contains(Flat), "the flat series reached the report")
+    Main.RefObjectives.filter(written.contains).foreach { o =>
+      assert(md.contains(s"| $o/"), s"objective $o missing from Details")
+    }
+  }
+}

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
   * width reads the session width through `Widths` (core.scala),
   * operator, function, source and report code never reads the process
   * environment, no code runs a Structured Streaming query, and there
-  * is one connected-components loop. Each
-  * rule stops one kind of drift from coming back a file at a time.
+  * is one connected-components loop, and only `SignalKernel` spells the
+  * per-signal row tuple. Each rule stops one kind of drift from coming
+  * back a file at a time.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -68,5 +69,16 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
         p.getFileName.toString
     }
     assert(obs.isEmpty, s"Observation constructed in $obs")
+  }
+
+  test("only SignalKernel names the per-signal row tuple") {
+    // whole-series kernels take their series from SignalKernel.series as
+    // sorted primitive arrays; a call site that decodes, sorts and
+    // unzips the boxed rows itself is the layout drifting back
+    val row = "\\(String,\\s*String,\\s*Long,\\s*(Double|Long)\\)".r
+    val hits = sources(root).collect {
+      case (p, src) if row.findFirstIn(src).isDefined => p.getFileName.toString
+    }
+    assert(hits == Seq("SignalKernel.scala"), s"per-signal row tuple named in $hits")
   }
 }
