@@ -18,6 +18,21 @@ import org.apache.spark.sql.functions._
   *  - counts are BIGINT on both sides (DuckDB sums cast from HUGEINT);
   *  - timestamps surface as epoch seconds (BIGINT);
   *  - every query is deterministically ordered by a unique key prefix.
+  *
+  * Contracts that several oracles share are spelled once, as private
+  * fragments of this object: the event grids (`SQL_SIG`,
+  * `SQL_GRID`, `WITH_GRID`, `SQL_CORR_CTES`), sessions (`SQL_SESS`,
+  * `SQL_Q34_SESS`; [[sessions]] on the Spark side), the relative
+  * quantization and its moments (`SQL_MR`, [[sqlQRel]], [[sqlQuant]],
+  * [[sqlKsigma]], [[sqlZMoments]], `SQL_ACF_CELLS`, [[sqlPairCells]]),
+  * the Holt residual band (`SQL_HOLT_Q90`), the text-quality counts
+  * (`SQL_TEXT_COUNTS`), the word-bigram Jaccard graph
+  * ([[sqlBigramPairs]], `SQL_JACCARD_ED`), the components closure
+  * ([[sqlComponents]]), the embedding norms and nearest-centroid cells
+  * ([[sqlEmbNorms]], [[sqlAssign]]) and the spectral chains
+  * ([[sqlDftPowers]]). A new oracle calls these instead of spelling
+  * the contract again, so a fix to one lands everywhere it is used
+  * (SourceGuardSpec keeps each family's text inside its helper).
   */
 object SparkEntry {
 
@@ -30,6 +45,219 @@ object SparkEntry {
       | CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS gval
       | FROM signals GROUP BY 1, 2, 3)""".stripMargin.replace("\n", " ")
   private val WITH_GRID = s"WITH $SQL_SIG, $SQL_GRID"
+
+  /** The scale every relative quantization divides by: the series max
+    * |v| (`mr`), or 1.0 for an all-zero series — TimeSeries.signalScale.
+    */
+  private val SQL_MR = "CASE WHEN mr > 0 THEN mr ELSE 1.0 END"
+
+  /** `v` quantized at 1e-9 of [[SQL_MR]] into an exact HUGEINT — the
+    * oracle twin of TimeSeries.quantRel.
+    */
+  private def sqlQRel(v: String): String =
+    s"CAST(floor(($v / ($SQL_MR)) * 1e9 + 0.5)\n    AS HUGEINT)"
+
+  /** Relative quantization of `v` per (name, node) over `src`: yields
+    * `{mx}` (the series max |v| as `mr`) and `{q}(name, node, qcols…,
+    * out)`, where qcols defaults to `cols` and `scale` also carries the
+    * divisor as `m`.
+    */
+  private def sqlQuant(mx: String, src: String, cols: String, q: String,
+                       out: String, qcols: String = "", v: String = "gval",
+                       scale: Boolean = false): String = {
+    val qc = if (qcols.isEmpty) cols else qcols
+    val m = if (scale) s"\n  $SQL_MR AS m," else ""
+    s"""$mx AS (SELECT name, node, $cols, $v,
+       |  max(abs($v)) OVER (PARTITION BY name, node) AS mr FROM $src),
+       |$q AS (SELECT name, node, $qc,$m
+       |  ${sqlQRel(v)} AS $out FROM $mx)""".stripMargin
+  }
+
+  /** Whole-series moments of [[sqlQuant]]'s `d` beside each row — the
+    * z-score replay's `nd`, `s1`, `s2` as window columns. Yields
+    * `{st}(name, node, tsb, d, nd, s1, s2)` over `{qd}`.
+    */
+  private def sqlZMoments(st: String, qd: String): String =
+    s"""$st AS (SELECT name, node, tsb, d,
+       |  CAST(count(*) OVER w AS DOUBLE) AS nd,
+       |  CAST(sum(d) OVER w AS DOUBLE) AS s1,
+       |  CAST(sum(d * d) OVER w AS DOUBLE) AS s2
+       | FROM $qd WINDOW w AS (PARTITION BY name, node))""".stripMargin
+
+  /** k-sigma moments over [[sqlQuant]]'s `d` — the oracle twin of
+    * Anomaly.ksigma: exact per-series sums of d and d², then the mean
+    * `mu_s` and the sample sigma `sigma_s` in quantized units. Yields
+    * `{p}mx`, `{p}qd`, `{p}st0` and `{p}st(name, node, n, mu_s,
+    * sigma_s)`; `robust` also carries gval's median and quartiles
+    * (`med`, `q1`, `q3`).
+    */
+  private def sqlKsigma(p: String = "", qcols: String = "tsb, gval",
+                        src: String = "grid", v: String = "gval",
+                        robust: Boolean = false): String = {
+    val quant = sqlQuant(s"${p}mx", src, "tsb", s"${p}qd", "d", qcols, v)
+    val q0 = if (robust) ",\n  quantile_cont(gval, 0.5) AS med,\n" +
+      "  quantile_cont(gval, 0.25) AS q1, quantile_cont(gval, 0.75) AS q3" else ""
+    val q1 = if (robust) "med, q1, q3, " else ""
+    s"""$quant,
+       |${p}st0 AS (SELECT name, node, count(*) AS n,
+       |  CAST(sum(d) AS DOUBLE) AS s1, CAST(sum(d * d) AS DOUBLE) AS s2$q0
+       | FROM ${p}qd GROUP BY 1, 2),
+       |${p}st AS (SELECT name, node, n, ${q1}s1 / CAST(n AS DOUBLE) AS mu_s,
+       |  sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1) /
+       |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS sigma_s
+       | FROM ${p}st0)""".stripMargin
+  }
+
+  /** Lag 1–3 autocorrelation moments of the grid — the oracle twin of
+    * TimeSeries.autocorr: [[sqlQuant]]'s `qv`, the leads `ld`, the
+    * (lag, qx, qy) pairs `pr`, their exact sums `cells`, and `fin`
+    * with the scaled variances `vx`, `vy`.
+    */
+  private lazy val SQL_ACF_CELLS: String =
+    s"""${sqlQuant("mx", "grid", "tsb", "mq", "qv")},
+       |ld AS (SELECT name, node, qv,
+       |  lead(qv, 1) OVER w AS y1, lead(qv, 2) OVER w AS y2, lead(qv, 3) OVER w AS y3
+       | FROM mq WINDOW w AS (PARTITION BY name, node ORDER BY tsb)),
+       |pr AS (
+       | SELECT name, node, CAST(1 AS BIGINT) AS lag, qv AS qx, y1 AS qy
+       |  FROM ld WHERE y1 IS NOT NULL
+       | UNION ALL SELECT name, node, CAST(2 AS BIGINT), qv, y2 FROM ld WHERE y2 IS NOT NULL
+       | UNION ALL SELECT name, node, CAST(3 AS BIGINT), qv, y3 FROM ld WHERE y3 IS NOT NULL),
+       |cells AS (SELECT name, node, lag, count(*) AS n,
+       |  CAST(sum(qx) AS DOUBLE) AS sx, CAST(sum(qy) AS DOUBLE) AS sy,
+       |  CAST(sum(qx * qy) AS DOUBLE) AS sxy, CAST(sum(qx * qx) AS DOUBLE) AS sxx,
+       |  CAST(sum(qy * qy) AS DOUBLE) AS syy
+       | FROM pr GROUP BY 1, 2, 3),
+       |fin AS (SELECT *, CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
+       |  CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM cells)""".stripMargin
+
+  /** Exact-integer Pearson moments of every signal pair per bucket over
+    * [[sqlQuant]]'s `{mq}(name, node, b, i, qv)` — the oracle twin of
+    * Correlate.corrMatrix: `{cells}` sums per (a, b, bucket) with a
+    * before b in (name, node) order, and `{fin}` with the scaled
+    * variances `vx`, `vy`.
+    */
+  private def sqlPairCells(mq: String, cells: String = "cells",
+                           fin: String = "fin"): String =
+    s"""$cells AS (SELECT x.name AS a_name, x.node AS a_node, y.name AS b_name, y.node AS b_node,
+       |   x.b AS b, count(*) AS n,
+       |   CAST(sum(x.qv) AS DOUBLE) AS sx, CAST(sum(y.qv) AS DOUBLE) AS sy,
+       |   CAST(sum(x.qv * y.qv) AS DOUBLE) AS sxy,
+       |   CAST(sum(x.qv * x.qv) AS DOUBLE) AS sxx,
+       |   CAST(sum(y.qv * y.qv) AS DOUBLE) AS syy
+       | FROM $mq x JOIN $mq y ON y.i = x.i AND y.b = x.b
+       |  AND (x.name < y.name OR (x.name = y.name AND x.node < y.node))
+       | GROUP BY 1, 2, 3, 4, 5),
+       |$fin AS (SELECT *, CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
+       |   CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM $cells)""".stripMargin
+
+  /** Holt smoothing (α = 0.3, β = 0.2) of each grid series with three
+    * or more cells as the recursive `step(name, node, i, l, bt, resid)`,
+    * the one-step |residuals| quantized ×1e6 as `rs(name, node, i, qr)`,
+    * and their 90th percentile by integer rank, `qb(name, node, qb)`.
+    */
+  private val SQL_HOLT_Q90: String =
+    """iv AS (SELECT name, node, gval,
+      |  row_number() OVER (PARTITION BY name, node ORDER BY tsb) AS i FROM grid),
+      |nn AS (SELECT name, node, count(*) AS n FROM iv GROUP BY 1, 2 HAVING count(*) >= 3),
+      |step AS (
+      |  SELECT a.name, a.node, CAST(2 AS BIGINT) AS i, a.gval AS l,
+      |    b.gval - a.gval AS bt, CAST(NULL AS DOUBLE) AS resid
+      |  FROM iv a JOIN iv b ON a.name = b.name AND a.node = b.node
+      |   AND a.i = 1 AND b.i = 2
+      |  JOIN nn ON nn.name = a.name AND nn.node = a.node
+      |  UNION ALL
+      |  SELECT s.name, s.node, s.i + 1,
+      |    0.3 * v.gval + (1 - 0.3) * (s.l + s.bt),
+      |    0.2 * ((0.3 * v.gval + (1 - 0.3) * (s.l + s.bt)) - s.l) + (1 - 0.2) * s.bt,
+      |    v.gval - (s.l + s.bt)
+      |  FROM step s JOIN iv v ON v.name = s.name AND v.node = s.node
+      |   AND v.i = s.i + 1),
+      |rs AS (SELECT name, node, i,
+      |  CAST(floor((abs(resid) + 1e-9) * 1e6 + 0.5) AS BIGINT) AS qr
+      | FROM step WHERE resid IS NOT NULL),
+      |nf AS (SELECT name, node, count(*) AS nf FROM rs GROUP BY 1, 2),
+      |rr AS (SELECT name, node, qr,
+      |  row_number() OVER (PARTITION BY name, node ORDER BY qr, i) AS rk FROM rs),
+      |qb AS (SELECT rr.name, rr.node, rr.qr AS qb
+      | FROM rr JOIN nf ON nf.name = rr.name AND nf.node = rr.node
+      | WHERE rr.rk = CAST(ceil(0.9 * nf.nf) AS BIGINT))""".stripMargin
+
+  /** Text-quality counts over a `text` column — the inputs of
+    * TextAnalysis' quality score: length, punctuation and digits.
+    */
+  private val SQL_TEXT_COUNTS =
+    """CAST(length(text) AS DOUBLE) AS len,
+      |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
+      |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits""".stripMargin
+
+  /** Distinct word-bigram shingles `{sh}(doc_id, s)` over `{d}(doc_id,
+    * w)` — the twin of Dedup's shingling; `minLen` keeps only docs of
+    * two or more words.
+    */
+  private def sqlShingles(d: String, sh: String, minLen: Boolean): String =
+    s"""$sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
+       |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM $d${if (minLen) " WHERE len(w) >= 2" else ""})""".stripMargin
+
+  /** The word-bigram Jaccard pair counts over `src(doc_id, text)` — the
+    * twin of Dedup.jaccardPairs: `{d}` tokens, `{sh}` shingles, `sz`
+    * set sizes and `pr(doc1, doc2, inter)` shared shingles.
+    */
+  private def sqlBigramPairs(src: String, minLen: Boolean = false,
+                             d: String = "d", sh: String = "sh"): String =
+    s"""$d AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w FROM $src),
+       |${sqlShingles(d, sh, minLen)},
+       |sz AS (SELECT doc_id, count(*) AS n FROM $sh GROUP BY doc_id),
+       |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
+       |  FROM $sh a JOIN $sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)""".stripMargin
+
+  /** The near-dup edges `ed(doc1, doc2)`: [[sqlBigramPairs]]' pairs at
+    * rounded Jaccard ≥ 0.5.
+    */
+  private val SQL_JACCARD_ED =
+    """ed AS (SELECT doc1, doc2
+      |  FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id
+      |  WHERE floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 >= 0.5)""".stripMargin
+
+  /** Connected components of the pair list `ed(doc1, doc2)` over the
+    * vertices `id` of `from` — the recursive twin of Dedup.minLabelLoop:
+    * `edges` in both directions and the closure `comp(doc_id, lab)`,
+    * whose min(lab) per doc_id is the component label.
+    */
+  private def sqlComponents(ed: String, from: String, id: String = "doc_id"): String =
+    s"""edges AS (SELECT doc1 AS a, doc2 AS b FROM $ed
+       |  UNION ALL SELECT doc2, doc1 FROM $ed),
+       |comp AS (SELECT ${if (id == "doc_id") id else s"$id AS doc_id"}, $id AS lab FROM $from
+       |  UNION
+       |  SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id)""".stripMargin
+
+  /** 64-dim embeddings as doubles `e` and their norms `n(vec_id, v,
+    * nrm)`; `label` carries the label column through both.
+    */
+  private def sqlEmbNorms(label: Boolean = false): String = {
+    val l = if (label) "label, " else ""
+    s"""e AS (SELECT vec_id, ${l}list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |  FROM embeddings),
+       |n AS (SELECT vec_id, ${l}v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)""".stripMargin
+  }
+
+  /** Nearest-centroid assignment over `n` — the twin of Similarity's IVF
+    * cells: the vectors below `cells` are the centroids `{c}`, and each
+    * vector takes the centroid of highest rounded cosine, lowest cid on
+    * a tie. Yields `{asg}(vec_id, [label,] v, nrm, cidAs)`.
+    */
+  private def sqlAssign(cells: String, c: String = "c", asg: String = "asg",
+                        cidAs: String = "cid", label: Boolean = false): String = {
+    val (l, nl) = if (label) ("label, ", "n.label, ") else ("", "")
+    s"""$c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < $cells),
+       |$asg AS (SELECT vec_id, ${l}v, nrm, $cidAs FROM (
+       |  SELECT n.vec_id, ${nl}n.v, n.nrm, $c.cid,
+       |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
+       |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * $c.cv[i]))
+       |        / (n.nrm * $c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
+       |      $c.cid ASC) AS crn
+       |  FROM n CROSS JOIN $c) WHERE crn = 1)""".stripMargin
+  }
 
   /** The signal grid is built on an EXPLICIT (name, node) hash
     * partitioning (user repartition with an explicit count is exempt
@@ -71,8 +299,8 @@ object SparkEntry {
     // fused one-exchange grid build (TimeSeries.gridOnePass) — feeds
     // ~30 oracle-checked queries, so the fused path's bit-equality to
     // the composed resample→fillForward→indexed form is re-proven by
-    // every driver correctness run. The typed groupByKey's output
-    // partitioning is opaque (struct key behind SerializeFromObject),
+    // every oracle correctness run. SignalKernel's typed-group output
+    // (MapGroups behind SerializeFromObject) carries no partitioning,
     // so the explicit (name, node) layout every consumer reuses is
     // established by one cheap exempt exchange of the GRID (≪ the raw
     // signal stream the fused build already shuffles once).
@@ -255,14 +483,7 @@ object SparkEntry {
 
   /** IVF assign + probe + rank CTEs → `iranked(qid, rank, nid, cos_sim)`. */
   private val SQL_ANN_IVF =
-    """ic AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-      |iasg AS (SELECT vec_id, v, nrm, cid FROM (
-      |  SELECT n.vec_id, n.v, n.nrm, ic.cid,
-      |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-      |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * ic.cv[i]))
-      |        / (n.nrm * ic.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-      |      ic.cid ASC) AS crn
-      |  FROM n CROSS JOIN ic) WHERE crn = 1),
+    s"""${sqlAssign("8", c = "ic", asg = "iasg")},
       |iq AS (SELECT vec_id AS qid, v AS qv, nrm AS qn, cid AS qc
       | FROM iasg WHERE vec_id < 10),
       |iscored AS (SELECT qid, iasg.vec_id AS nid,
@@ -401,17 +622,8 @@ object SparkEntry {
     * shared by the fixed-cells gate and the autoCells gate.
     */
   private def sqlLabelKnn(cellsExpr: String): String =
-    s"""WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (SELECT vec_id, label, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-       |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < ($cellsExpr)),
-       |asg AS (SELECT vec_id, label, v, nrm, cid FROM (
-       |  SELECT n.vec_id, n.label, n.v, n.nrm, c.cid,
-       |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-       |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * c.cv[i]))
-       |        / (n.nrm * c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-       |      c.cid ASC) AS crn
-       |  FROM n CROSS JOIN c) WHERE crn = 1),
+    s"""WITH ${sqlEmbNorms(label = true)},
+       |${sqlAssign(s"($cellsExpr)", label = true)},
        |ksims AS (SELECT a.vec_id, a.label,
        |  floor((list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
        |    / (a.nrm * b.nrm) + 1e-9) * 1e4 + 0.5) / 1e4 AS sim,
@@ -430,17 +642,8 @@ object SparkEntry {
     * oracles; yields `krk(vec_id, sim, nid, rn)`.
     */
   private lazy val SQL_KNN_EDGES =
-    s"""e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings),
-      |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-      |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < ($SQL_AUTOCELLS)),
-      |asg AS (SELECT vec_id, v, nrm, cid FROM (
-      |  SELECT n.vec_id, n.v, n.nrm, c.cid,
-      |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-      |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * c.cv[i]))
-      |        / (n.nrm * c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-      |      c.cid ASC) AS crn
-      |  FROM n CROSS JOIN c) WHERE crn = 1),
+    s"""${sqlEmbNorms()},
+      |${sqlAssign(s"($SQL_AUTOCELLS)")},
       |ksims AS (SELECT a.vec_id,
       |  floor((list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
       |    / (a.nrm * b.nrm) + 1e-9) * 1e4 + 0.5) / 1e4 AS sim,
@@ -454,9 +657,7 @@ object SparkEntry {
     */
   private def sqlSemDedup(lloyd: String): String =
     s"""WITH RECURSIVE $lloyd,
-       |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
+       |${sqlEmbNorms()},
        |av AS (SELECT af.vec_id, af.cluster, af.dist, n.v, n.nrm
        | FROM af JOIN n USING (vec_id)),
        |pr AS (SELECT a.vec_id AS doc1, b.vec_id AS doc2
@@ -593,8 +794,7 @@ object SparkEntry {
     */
   private def SQL_MINHASH_CTES_FOR(where: String): String =
     s"""d AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w FROM documents WHERE $where),
-      |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-      |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d WHERE len(w) >= 2),
+      |${sqlShingles("d", "sh", true)},
       |h0s AS MATERIALIZED (SELECT doc_id,
       |  CAST(CAST('0x' || substr(md5(s), 17, 16) AS UBIGINT) AS HUGEINT) AS h0 FROM sh),
       |hp AS (SELECT doc_id, p,
@@ -673,16 +873,8 @@ object SparkEntry {
     val zsel = metrics.zipWithIndex.map { case (mname, i) =>
       s" q$i / 1e4 AS z_$mname" }.mkString(",")
     s"""WITH $SQL_CORR_CTES,
-       |mxm AS (SELECT name, node, tsb, gval,
-       |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM ff36),
-       |qdm AS (SELECT name, node, tsb,
-       |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-       |    AS HUGEINT) AS d FROM mxm),
-       |stm AS (SELECT name, node, tsb, d,
-       |  CAST(count(*) OVER w AS DOUBLE) AS nd,
-       |  CAST(sum(d) OVER w AS DOUBLE) AS s1,
-       |  CAST(sum(d * d) OVER w AS DOUBLE) AS s2
-       | FROM qdm WINDOW w AS (PARTITION BY name, node)),
+       |${sqlQuant("mxm", "ff36", "tsb", "qdm", "d")},
+       |${sqlZMoments("stm", "qdm")},
        |zz AS (SELECT name, node, tsb,
        |  CAST(floor(((CAST(d AS DOUBLE) - s1 / nd)
        |    / sqrt((nd * s2 - s1 * s1) / (nd * (nd - 1.0))) + 1e-9) * 1e4 + 0.5)
@@ -741,28 +933,19 @@ object SparkEntry {
       "CASE t.i " + (0 until k).map(i => s"WHEN $i THEN $prefix$i").mkString(" ") + " END"
     def pickIJ(f: Int => String): String =
       "CASE t.i " + (0 until k).map(i => s"WHEN $i THEN ${f(i)}").mkString(" ") + " END"
-    s"""WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec, event_id, event_type FROM events),
-       |b AS (SELECT user_id, tsec, event_id, event_type,
-       |  CASE WHEN tsec - lag(tsec) OVER w > 1800 OR lag(tsec) OVER w IS NULL THEN 1 ELSE 0 END AS brk
-       | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-       |sd AS (SELECT user_id, tsec, event_id, event_type,
-       |  sum(brk) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM b),
-       |px AS (SELECT event_type AS a,
-       |  lead(event_type) OVER (PARTITION BY user_id, sid ORDER BY tsec, event_id) AS nx
-       | FROM sd),
+    s"""WITH $SQL_Q34_SESS,
        |cj AS (SELECT
        |$cs
-       | FROM px WHERE nx IS NOT NULL),
+       | FROM pp),
        |pr AS (SELECT *,
        |$rs
        | FROM cj),
-       |pp AS (SELECT *,
+       |pt AS (SELECT *,
        |$ps
        | FROM pr),
        |it0 AS (SELECT *,
        |$pi0
-       | FROM pp),
+       | FROM pt),
        |$its
        |SELECT t.event_type,
        | ${pick("r")} AS n_out,
@@ -797,25 +980,25 @@ object SparkEntry {
     * raw parquet rows and the kernel is BIGINT-only arithmetic.
     */
   /** Sessionized event stream (user_id, tsec, event_id, event_type,
-    * sid) — the shared first stage of the q34 family; also exposed
-    * alone as the `q34_sessions` probe.
+    * sid): a break where the gap to the user's previous event exceeds
+    * 30 min, and the running break count as the session id. Every
+    * session query starts here (its oracle twin is `SQL_SESS`); also
+    * exposed alone as the `q34_sessions` probe.
     */
-  private def q34Sess(s: SparkSession, dir: String): DataFrame = {
+  private def sessions(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("user_id"), expr("ts div 1000000000").as("tsec"),
         col("event_id"), col("event_type"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("tsec", "event_id")
+    val w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
     val brk = when(col("tsec") - lag("tsec", 1).over(w) > 1800 ||
       lag("tsec", 1).over(w).isNull, 1).otherwise(0)
     ev.withColumn("brk", brk)
-      .withColumn("sid", sum("brk").over(w.rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)))
+      .withColumn("sid", sum("brk").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
   private def q34Pairs(s: SparkSession, dir: String): DataFrame = {
-    val sess = q34Sess(s, dir)
+    val sess = sessions(s, dir)
     val sw = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id", "sid").orderBy("tsec", "event_id")
     sess.withColumn("nxt", lead("event_type", 1).over(sw))
@@ -841,17 +1024,25 @@ object SparkEntry {
     }
   }
 
-  /** Sessionization CTEs shared by the q34 family oracles: yields
-    * `pp(user_id, sid, a, nx)` — the transition pairs.
+  /** Sessionization CTEs, the oracle twin of [[sessions]]: a break
+    * where the gap to the user's previous event exceeds 30 min, and the
+    * running break count as the session id. Yields `sd(user_id, tsec,
+    * event_id, event_type, sid)`.
     */
-  private val SQL_Q34_SESS =
+  private val SQL_SESS =
     """ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec, event_id, event_type FROM events),
       |b AS (SELECT user_id, tsec, event_id, event_type,
       |  CASE WHEN tsec - lag(tsec) OVER w > 1800 OR lag(tsec) OVER w IS NULL THEN 1 ELSE 0 END AS brk
       | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
       |sd AS (SELECT user_id, tsec, event_id, event_type,
       |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sid FROM b),
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sid FROM b)""".stripMargin
+
+  /** In-session transition pairs over [[SQL_SESS]]: yields
+    * `pp(user_id, sid, a, nx)`.
+    */
+  private val SQL_Q34_SESS =
+    s"""$SQL_SESS,
       |px AS (SELECT user_id, sid, event_type AS a,
       |  lead(event_type) OVER (PARTITION BY user_id, sid ORDER BY tsec, event_id) AS nx
       | FROM sd),
@@ -1008,11 +1199,7 @@ object SparkEntry {
     * agree bit for bit. `cr` = rounded r per (obj, cand, bucket, lag).
     */
   private def SQL_NCC_CR_FROM(src: String): String =
-    s"""mx AS (SELECT name, node, b, i, gval,
-      |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM $src),
-      |mq AS (SELECT name, node, b, i,
-      |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-      |    AS HUGEINT) AS qv FROM mx),
+    s"""${sqlQuant("mx", src, "b, i", "mq", "qv")},
       |lags AS (SELECT unnest(range(-3, 4)) AS lag),
       |cells AS (SELECT o.name AS obj_name, o.node AS obj_node,
       |   c.name AS cand_name, c.node AS cand_node, o.b AS b, l.lag AS lag,
@@ -1460,26 +1647,14 @@ object SparkEntry {
         |GROUP BY ROLLUP(r_name, n_name) ORDER BY region_name, nation_name""".stripMargin)),
 
     Q("q10_sessionize", (s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), expr("ts div 1000000000").as("tsec"), col("event_id"))
-      val w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-      val brk = when(col("tsec") - lag("tsec", 1).over(w) > 1800 ||
-        lag("tsec", 1).over(w).isNull, 1).otherwise(0)
-      ev.withColumn("brk", brk)
-        .withColumn("sid", sum("brk").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("bigint"))
+      sessions(s, dir)
         .groupBy("user_id", "sid")
         .agg(count(lit(1)).as("n_events"), min("tsec").as("start_ts"), max("tsec").as("end_ts"))
         .orderBy("user_id", "sid")
     }, Some(
-      """WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec, event_id FROM events),
-        |b AS (SELECT user_id, tsec, event_id,
-        |  CASE WHEN tsec - lag(tsec) OVER w > 1800 OR lag(tsec) OVER w IS NULL THEN 1 ELSE 0 END AS brk
-        | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-        |s2 AS (SELECT user_id, tsec,
-        |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsec, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        | FROM b)
+      s"""WITH $SQL_SESS
         |SELECT user_id, sid, count(*) AS n_events, min(tsec) AS start_ts, max(tsec) AS end_ts
-        |FROM s2 GROUP BY user_id, sid ORDER BY user_id, sid""".stripMargin)),
+        |FROM sd GROUP BY user_id, sid ORDER BY user_id, sid""".stripMargin)),
 
     Q("q29_session_cooccur", (s, dir) => {
       // market-basket affinity over sessions: which event types happen
@@ -1487,15 +1662,7 @@ object SparkEntry {
       // counterpart). Per-session type set is bounded by the type
       // domain, so the pair expansion is in-task and the aggregate is
       // |types|² rows regardless of event volume.
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), expr("ts div 1000000000").as("tsec"),
-          col("event_id"), col("event_type"))
-      val w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-      val brk = when(col("tsec") - lag("tsec", 1).over(w) > 1800 ||
-        lag("tsec", 1).over(w).isNull, 1).otherwise(0)
-      ev.withColumn("brk", brk)
-        .withColumn("sid", sum("brk").over(w.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)).cast("bigint"))
+      sessions(s, dir)
         .groupBy("user_id", "sid")
         .agg(sort_array(collect_set(col("event_type"))).as("ss"))
         .filter(size(col("ss")) >= 2)
@@ -1506,17 +1673,8 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_sessions"))
         .orderBy("type_a", "type_b")
     }, Some(
-      """WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec,
-        |  event_id, event_type FROM events),
-        |b AS (SELECT user_id, tsec, event_id, event_type,
-        |  CASE WHEN tsec - lag(tsec) OVER w > 1800 OR lag(tsec) OVER w IS NULL
-        |    THEN 1 ELSE 0 END AS brk
-        | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-        |s2 AS (SELECT user_id, event_type,
-        |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        | FROM b),
-        |p AS (SELECT DISTINCT user_id, sid, event_type FROM s2)
+      s"""WITH $SQL_SESS,
+        |p AS (SELECT DISTINCT user_id, sid, event_type FROM sd)
         |SELECT a.event_type AS type_a, b.event_type AS type_b,
         | count(*) AS n_sessions
         |FROM p a JOIN p b ON a.user_id = b.user_id AND a.sid = b.sid
@@ -1528,16 +1686,8 @@ object SparkEntry {
       // sequences WITHIN a session (q22_funnel fixes one target path;
       // this surfaces all of them). lead() windows stay in-partition,
       // the aggregate output is ≤ |types|³ rows regardless of volume.
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), expr("ts div 1000000000").as("tsec"),
-          col("event_id"), col("event_type"))
-      val w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-      val brk = when(col("tsec") - lag("tsec", 1).over(w) > 1800 ||
-        lag("tsec", 1).over(w).isNull, 1).otherwise(0)
       val ws = Window.partitionBy("user_id", "sid").orderBy("tsec", "event_id")
-      ev.withColumn("brk", brk)
-        .withColumn("sid", sum("brk").over(w.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)).cast("bigint"))
+      sessions(s, dir)
         .withColumn("step2", lead("event_type", 1).over(ws))
         .withColumn("step3", lead("event_type", 2).over(ws))
         .filter(col("step3").isNotNull)
@@ -1545,20 +1695,11 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_paths"))
         .orderBy("step1", "step2", "step3")
     }, Some(
-      """WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec,
-        |  event_id, event_type FROM events),
-        |b AS (SELECT user_id, tsec, event_id, event_type,
-        |  CASE WHEN tsec - lag(tsec) OVER w > 1800 OR lag(tsec) OVER w IS NULL
-        |    THEN 1 ELSE 0 END AS brk
-        | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-        |s2 AS (SELECT user_id, tsec, event_id, event_type,
-        |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        | FROM b),
+      s"""WITH $SQL_SESS,
         |p AS (SELECT event_type AS step1,
         |  lead(event_type, 1) OVER ws AS step2,
         |  lead(event_type, 2) OVER ws AS step3
-        | FROM s2 WINDOW ws AS (PARTITION BY user_id, sid ORDER BY tsec, event_id))
+        | FROM sd WINDOW ws AS (PARTITION BY user_id, sid ORDER BY tsec, event_id))
         |SELECT step1, step2, step3, count(*) AS n_paths
         |FROM p WHERE step3 IS NOT NULL
         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
@@ -1568,16 +1709,8 @@ object SparkEntry {
       // NON-purchase event earlier in the same session; the session
       // break doubles as the lookback cutoff. One windowed pass —
       // no self-join of the event stream against itself.
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), expr("ts div 1000000000").as("tsec"),
-          col("event_id"), col("event_type"))
-      val w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-      val brk = when(col("tsec") - lag("tsec", 1).over(w) > 1800 ||
-        lag("tsec", 1).over(w).isNull, 1).otherwise(0)
       val ws = Window.partitionBy("user_id", "sid").orderBy("tsec", "event_id")
-      val withTouch = ev.withColumn("brk", brk)
-        .withColumn("sid", sum("brk").over(w.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)).cast("bigint"))
+      val withTouch = sessions(s, dir)
         .withColumn("touch", last(
           when(col("event_type") =!= "purchase", col("event_type")), true)
           .over(ws.rowsBetween(Window.unboundedPreceding, -1)))
@@ -1589,21 +1722,12 @@ object SparkEntry {
           sum("n_conversions").over(Window.partitionBy())))
         .orderBy("touch_type")
     }, Some(
-      """WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec,
-        |  event_id, event_type FROM events),
-        |b AS (SELECT user_id, tsec, event_id, event_type,
-        |  CASE WHEN tsec - lag(tsec) OVER w > 1800 OR lag(tsec) OVER w IS NULL
-        |    THEN 1 ELSE 0 END AS brk
-        | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-        |s2 AS (SELECT user_id, tsec, event_id, event_type,
-        |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        | FROM b),
+      s"""WITH $SQL_SESS,
         |t AS (SELECT event_type,
         |  last_value(CASE WHEN event_type != 'purchase' THEN event_type END IGNORE NULLS)
         |    OVER (PARTITION BY user_id, sid ORDER BY tsec, event_id
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch
-        | FROM s2),
+        | FROM sd),
         |c AS (SELECT touch AS touch_type, count(*) AS n_conversions FROM t
         | WHERE event_type = 'purchase' AND touch IS NOT NULL GROUP BY 1)
         |SELECT touch_type, n_conversions,
@@ -1616,16 +1740,8 @@ object SparkEntry {
       // all sessions, keyed by the first event — the engagement
       // diagnostic next to q23_retention. One session rollup, then a
       // |types|-row aggregate.
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), expr("ts div 1000000000").as("tsec"),
-          col("event_id"), col("event_type"))
-      val w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-      val brk = when(col("tsec") - lag("tsec", 1).over(w) > 1800 ||
-        lag("tsec", 1).over(w).isNull, 1).otherwise(0)
       val ws = Window.partitionBy("user_id", "sid").orderBy("tsec", "event_id")
-      ev.withColumn("brk", brk)
-        .withColumn("sid", sum("brk").over(w.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)).cast("bigint"))
+      sessions(s, dir)
         .withColumn("rn", row_number().over(ws))
         .groupBy("user_id", "sid")
         .agg(max(when(col("rn") === 1, col("event_type"))).as("entry_type"),
@@ -1637,19 +1753,10 @@ object SparkEntry {
           r4(col("n_bounce").cast("double") / col("n_sessions")))
         .orderBy("entry_type")
     }, Some(
-      """WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec,
-        |  event_id, event_type FROM events),
-        |b AS (SELECT user_id, tsec, event_id, event_type,
-        |  CASE WHEN tsec - lag(tsec) OVER w > 1800 OR lag(tsec) OVER w IS NULL
-        |    THEN 1 ELSE 0 END AS brk
-        | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-        |s2 AS (SELECT user_id, tsec, event_id, event_type,
-        |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        | FROM b),
+      s"""WITH $SQL_SESS,
         |r AS (SELECT user_id, sid, event_type,
         |  row_number() OVER (PARTITION BY user_id, sid ORDER BY tsec, event_id) AS rn
-        | FROM s2),
+        | FROM sd),
         |ses AS (SELECT user_id, sid,
         |  max(CASE WHEN rn = 1 THEN event_type END) AS entry_type,
         |  count(*) AS sz
@@ -1979,18 +2086,7 @@ object SparkEntry {
       Anomaly.alertStats(grid(s, dir), 3.0).orderBy("name", "node"),
     Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb, gval,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st0 AS (SELECT name, node, count(*) AS n,
-         |  CAST(sum(d) AS DOUBLE) AS s1, CAST(sum(d * d) AS DOUBLE) AS s2
-         | FROM qd GROUP BY 1, 2),
-         |st AS (SELECT name, node, n, s1 / CAST(n AS DOUBLE) AS mu_s,
-         |  sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1) /
-         |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS sigma_s
-         | FROM st0),
+         |${sqlKsigma()},
          |al AS (SELECT g.name, g.node, g.tsb
          | FROM qd g JOIN st ON g.name = st.name AND g.node = st.node
          | WHERE n >= 3 AND sigma_s > 0
@@ -2014,18 +2110,7 @@ object SparkEntry {
         .orderBy("name", "node", "inc"),
     Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb, gval,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st0 AS (SELECT name, node, count(*) AS n,
-         |  CAST(sum(d) AS DOUBLE) AS s1, CAST(sum(d * d) AS DOUBLE) AS s2
-         | FROM qd GROUP BY 1, 2),
-         |st AS (SELECT name, node, n, s1 / CAST(n AS DOUBLE) AS mu_s,
-         |  sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1) /
-         |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS sigma_s
-         | FROM st0),
+         |${sqlKsigma()},
          |al AS (SELECT g.name, g.node, g.tsb,
          |  floor(((CAST(g.d AS DOUBLE) - mu_s) / sigma_s + 1e-9) * 1e4 + 0.5) / 1e4 AS z
          | FROM qd g JOIN st ON g.name = st.name AND g.node = st.node
@@ -2175,11 +2260,7 @@ object SparkEntry {
         .orderBy("name", "node", "tsb")
     }, Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
+         |${sqlQuant("mx", "grid", "tsb", "qd", "d")},
          |sg AS (SELECT name, node, tsb,
          |  CASE WHEN d * count(*) OVER fr - sum(d) OVER fr > 0 THEN 1
          |       WHEN d * count(*) OVER fr - sum(d) OVER fr < 0 THEN -1
@@ -2219,20 +2300,8 @@ object SparkEntry {
       // unrolled CTE chain executes the identical IEEE sequence
       // (generated from the same loops, see sqlMarkov)
       val types = Seq("click", "error", "purchase", "signup", "view")
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), expr("ts div 1000000000").as("tsec"),
-          col("event_id"), col("event_type"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("tsec", "event_id")
-      val brk = when(col("tsec") - lag("tsec", 1).over(w) > 1800 ||
-        lag("tsec", 1).over(w).isNull, 1).otherwise(0)
-      val sess = ev.withColumn("brk", brk)
-        .withColumn("sid", sum("brk").over(w.rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)))
-      val sw = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id", "sid").orderBy("tsec", "event_id")
-      val cnt = sess.withColumn("nxt", lead("event_type", 1).over(sw))
+      val sw = Window.partitionBy("user_id", "sid").orderBy("tsec", "event_id")
+      val cnt = sessions(s, dir).withColumn("nxt", lead("event_type", 1).over(sw))
         .filter(col("nxt").isNotNull)
         .groupBy("event_type", "nxt").count()
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
@@ -2277,7 +2346,7 @@ object SparkEntry {
       // the r8 verdict: (a) the output is ALL-INTEGER — the derived
       // `surprise` DOUBLE (redundant with surprise_x1e4) was the one
       // FP cell left in the hash; (b) the oracle renders FALLBACK-ONLY
-      // (no OracleLiterals stash — the oracle always re-derives the
+      // (no literal stash — the oracle always re-derives the
       // model from raw data through the same integer-only kernel), so
       // stash-state staleness is out of the hypothesis space; (c) the
       // q34_model / q34_session_sums probe rows below decompose the
@@ -2368,7 +2437,7 @@ object SparkEntry {
       // the session boundaries themselves diverge (contradicting the
       // green q34_model); green narrows any residual divergence to the
       // model-join stage or pure rendering.
-      q34Sess(s, dir)
+      sessions(s, dir)
         .groupBy("user_id", "sid")
         .agg(count(lit(1)).as("n_events"),
           min("tsec").as("t0"), max("tsec").as("t1"))
@@ -2691,12 +2760,7 @@ object SparkEntry {
         .orderBy("name", "node", "tsb")
     }, Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb,
-         |  CASE WHEN mr > 0 THEN mr ELSE 1.0 END AS m,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx)
+         |${sqlQuant("mx", "grid", "tsb", "qd", "d", scale = true)}
          |SELECT name, node, tsb,
          | floor((CAST(sum(d) OVER fr AS DOUBLE) / CAST(count(*) OVER fr AS DOUBLE) / 1e9 * m
          |   + 1e-9) * 1e4 + 0.5) / 1e4 AS ma
@@ -2773,26 +2837,7 @@ object SparkEntry {
         .orderBy("name", "node", "lag")
     }, Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |mq AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mx),
-         |ld AS (SELECT name, node, qv,
-         |  lead(qv, 1) OVER w AS y1, lead(qv, 2) OVER w AS y2, lead(qv, 3) OVER w AS y3
-         | FROM mq WINDOW w AS (PARTITION BY name, node ORDER BY tsb)),
-         |pr AS (
-         | SELECT name, node, CAST(1 AS BIGINT) AS lag, qv AS qx, y1 AS qy
-         |  FROM ld WHERE y1 IS NOT NULL
-         | UNION ALL SELECT name, node, CAST(2 AS BIGINT), qv, y2 FROM ld WHERE y2 IS NOT NULL
-         | UNION ALL SELECT name, node, CAST(3 AS BIGINT), qv, y3 FROM ld WHERE y3 IS NOT NULL),
-         |cells AS (SELECT name, node, lag, count(*) AS n,
-         |  CAST(sum(qx) AS DOUBLE) AS sx, CAST(sum(qy) AS DOUBLE) AS sy,
-         |  CAST(sum(qx * qy) AS DOUBLE) AS sxy, CAST(sum(qx * qx) AS DOUBLE) AS sxx,
-         |  CAST(sum(qy * qy) AS DOUBLE) AS syy
-         | FROM pr GROUP BY 1, 2, 3),
-         |fin AS (SELECT *, CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-         |  CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM cells)
+         |$SQL_ACF_CELLS
          |SELECT name, node, lag,
          | floor(((CAST(n AS DOUBLE) * sxy - sx * sy) / (sqrt(vx) * sqrt(vy))
          |   + 1e-9) * 1e4 + 0.5) / 1e4 AS r, n
@@ -2804,12 +2849,7 @@ object SparkEntry {
         .orderBy("name", "node", "tsb")
     }, Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb,
-         |  CASE WHEN mr > 0 THEN mr ELSE 1.0 END AS m,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
+         |${sqlQuant("mx", "grid", "tsb", "qd", "d", scale = true)},
          |st AS (SELECT name, node, count(*) AS n,
          |  CAST(sum(d) AS DOUBLE) AS s1, CAST(sum(d * d) AS DOUBLE) AS s2
          | FROM qd GROUP BY 1, 2 HAVING count(*) >= 2),
@@ -2834,12 +2874,7 @@ object SparkEntry {
         .orderBy("name", "node")
     }, Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb,
-         |  CASE WHEN mr > 0 THEN mr ELSE 1.0 END AS m,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
+         |${sqlQuant("mx", "grid", "tsb", "qd", "d", scale = true)},
          |ee AS (SELECT name, node, m,
          |  d - lag(d, 12) OVER (PARTITION BY name, node ORDER BY tsb) AS e FROM qd),
          |ag AS (SELECT name, node, m, count(*) AS n,
@@ -2926,26 +2961,7 @@ object SparkEntry {
       TimeSeries.ljungBox(grid(s, dir))
     }, Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |mq AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mx),
-         |ld AS (SELECT name, node, qv,
-         |  lead(qv, 1) OVER w AS y1, lead(qv, 2) OVER w AS y2, lead(qv, 3) OVER w AS y3
-         | FROM mq WINDOW w AS (PARTITION BY name, node ORDER BY tsb)),
-         |pr AS (
-         | SELECT name, node, CAST(1 AS BIGINT) AS lag, qv AS qx, y1 AS qy
-         |  FROM ld WHERE y1 IS NOT NULL
-         | UNION ALL SELECT name, node, CAST(2 AS BIGINT), qv, y2 FROM ld WHERE y2 IS NOT NULL
-         | UNION ALL SELECT name, node, CAST(3 AS BIGINT), qv, y3 FROM ld WHERE y3 IS NOT NULL),
-         |cells AS (SELECT name, node, lag, count(*) AS n,
-         |  CAST(sum(qx) AS DOUBLE) AS sx, CAST(sum(qy) AS DOUBLE) AS sy,
-         |  CAST(sum(qx * qy) AS DOUBLE) AS sxy, CAST(sum(qx * qx) AS DOUBLE) AS sxx,
-         |  CAST(sum(qy * qy) AS DOUBLE) AS syy
-         | FROM pr GROUP BY 1, 2, 3),
-         |fin AS (SELECT *, CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-         |  CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM cells),
+         |$SQL_ACF_CELLS,
          |acf AS (SELECT name, node, lag,
          |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) / (sqrt(vx) * sqrt(vy))
          |    + 1e-9) * 1e4 + 0.5) / 1e4 AS r, n
@@ -3258,16 +3274,8 @@ object SparkEntry {
         .orderBy("name", "node", "tsb")
     }, Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st AS (SELECT name, node, tsb, d,
-         |  CAST(count(*) OVER w AS DOUBLE) AS nd,
-         |  CAST(sum(d) OVER w AS DOUBLE) AS s1,
-         |  CAST(sum(d * d) OVER w AS DOUBLE) AS s2
-         | FROM qd WINDOW w AS (PARTITION BY name, node))
+         |${sqlQuant("mx", "grid", "tsb", "qd", "d")},
+         |${sqlZMoments("st", "qd")}
          |SELECT name, node, tsb,
          | floor(((CAST(d AS DOUBLE) - s1 / nd)
          |   / sqrt((nd * s2 - s1 * s1) / (nd * (nd - 1.0))) + 1e-9) * 1e4 + 0.5) / 1e4 AS z
@@ -3468,18 +3476,7 @@ object SparkEntry {
         .orderBy("name", "node")
     }, Some(
       s"""$WITH_GRID,
-         |fmx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |fqd AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM fmx),
-         |fst0 AS (SELECT name, node, count(*) AS n,
-         |  CAST(sum(d) AS DOUBLE) AS s1, CAST(sum(d * d) AS DOUBLE) AS s2
-         | FROM fqd GROUP BY 1, 2),
-         |fst AS (SELECT name, node, n, s1 / CAST(n AS DOUBLE) AS mu_s,
-         |  sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1) /
-         |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS sigma_s
-         | FROM fst0),
+         |${sqlKsigma("f", qcols = "tsb")},
          |ffl AS (SELECT g.name, g.node, g.tsb
          | FROM fqd g JOIN fst ON g.name = fst.name AND g.node = fst.node
          | WHERE n >= 3 AND sigma_s > 0
@@ -3508,18 +3505,7 @@ object SparkEntry {
         .orderBy("name", "node", "tsb")
     }, Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb, gval,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st0 AS (SELECT name, node, count(*) AS n,
-         |  CAST(sum(d) AS DOUBLE) AS s1, CAST(sum(d * d) AS DOUBLE) AS s2
-         | FROM qd GROUP BY 1, 2),
-         |st AS (SELECT name, node, n, s1 / CAST(n AS DOUBLE) AS mu_s,
-         |  sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1) /
-         |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS sigma_s
-         | FROM st0)
+         |${sqlKsigma()}
          |SELECT g.name, g.node, g.tsb, floor((g.gval + 1e-9) * 1e4 + 0.5) / 1e4 AS gval,
          | floor(((CAST(g.d AS DOUBLE) - mu_s) / sigma_s + 1e-9) * 1e4 + 0.5) / 1e4 AS z
          |FROM qd g JOIN st ON g.name = st.name AND g.node = st.node
@@ -3532,16 +3518,8 @@ object SparkEntry {
         .orderBy("name", "node", "tsb")
     }, Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st AS (SELECT name, node, tsb, d,
-         |  CAST(count(*) OVER w AS DOUBLE) AS nd,
-         |  CAST(sum(d) OVER w AS DOUBLE) AS s1,
-         |  CAST(sum(d * d) OVER w AS DOUBLE) AS s2
-         | FROM qd WINDOW w AS (PARTITION BY name, node)),
+         |${sqlQuant("mx", "grid", "tsb", "qd", "d")},
+         |${sqlZMoments("st", "qd")},
          |zz AS (SELECT name, node, tsb,
          |  (CAST(d AS DOUBLE) - s1 / nd)
          |    / sqrt((nd * s2 - s1 * s1) / (nd * (nd - 1.0))) AS z_raw FROM st),
@@ -3615,11 +3593,7 @@ object SparkEntry {
       TimeSeries.seasonalStrength(grid(s, dir)).orderBy("name", "node"),
     Some(
       s"""$WITH_GRID,
-         |mxs AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qds AS (SELECT name, node, (tsb % 86400) // 3600 AS h,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS dq FROM mxs),
+         |${sqlQuant("mxs", "grid", "tsb", "qds", "dq", qcols = "(tsb % 86400) // 3600 AS h")},
          |hh AS (SELECT name, node, h, count(*) AS nh,
          |  CAST(sum(dq) AS DOUBLE) AS s1h, CAST(sum(dq * dq) AS DOUBLE) AS s2h
          | FROM qds GROUP BY 1, 2, 3),
@@ -3670,11 +3644,7 @@ object SparkEntry {
          |tsl AS (SELECT name, node,
          |  floor((greatest(0.0, 1.0 - vr / vg) + 1e-9) * 1e4 + 0.5) / 1e4 AS trend_strength
          | FROM v9 WHERE n >= 3 AND vg > 0),
-         |mxs AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qds AS (SELECT name, node, (tsb % 86400) // 3600 AS h,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS dq FROM mxs),
+         |${sqlQuant("mxs", "grid", "tsb", "qds", "dq", qcols = "(tsb % 86400) // 3600 AS h")},
          |hh AS (SELECT name, node, h, count(*) AS nh,
          |  CAST(sum(dq) AS DOUBLE) AS s1h, CAST(sum(dq * dq) AS DOUBLE) AS s2h
          | FROM qds GROUP BY 1, 2, 3),
@@ -3712,8 +3682,7 @@ object SparkEntry {
          |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
          |qh AS (SELECT name, node,
          |  CAST(row_number() OVER (PARTITION BY name, node ORDER BY tsb) - 1 AS BIGINT) AS idx,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mxh),
+         |  ${sqlQRel("gval")} AS qv FROM mxh),
          |scl AS (SELECT unnest([8, 16, 32]) AS w),
          |hb AS (SELECT q.name, q.node, s.w, q.idx // s.w AS wid, q.idx, q.qv FROM qh q, scl s),
          |hst AS (SELECT *,
@@ -3788,18 +3757,7 @@ object SparkEntry {
          |  gval - median(gval) OVER (PARTITION BY name, node ORDER BY tsb
          |    ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING) AS resid
          | FROM grid),
-         |mx AS (SELECT name, node, tsb, resid,
-         |  max(abs(resid)) OVER (PARTITION BY name, node) AS mr FROM t),
-         |qd AS (SELECT name, node, tsb, resid,
-         |  CAST(floor((resid / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st0 AS (SELECT name, node, count(*) AS n,
-         |  CAST(sum(d) AS DOUBLE) AS s1, CAST(sum(d * d) AS DOUBLE) AS s2
-         | FROM qd GROUP BY 1, 2),
-         |st AS (SELECT name, node, n, s1 / CAST(n AS DOUBLE) AS mu_s,
-         |  sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1) /
-         |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS sigma_s
-         | FROM st0)
+         |${sqlKsigma(qcols = "tsb, resid", src = "t", v = "resid")}
          |SELECT q.name, q.node, q.tsb, floor((q.resid + 1e-9) * 1e4 + 0.5) / 1e4 AS resid,
          | floor(((CAST(q.d AS DOUBLE) - mu_s) / sigma_s + 1e-9) * 1e4 + 0.5) / 1e4 AS z
          |FROM qd q JOIN st ON q.name = st.name AND q.node = st.node
@@ -3871,22 +3829,8 @@ object SparkEntry {
         .orderBy("a_name", "a_node", "b_name", "b_node", "b")
     }, Some(
       s"""WITH $SQL_CORR_CTES,
-         |mx AS (SELECT name, node, b, i, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM g2),
-         |mq AS (SELECT name, node, b, i,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mx),
-         |cells AS (SELECT x.name AS a_name, x.node AS a_node, y.name AS b_name, y.node AS b_node,
-         |   x.b AS b, count(*) AS n,
-         |   CAST(sum(x.qv) AS DOUBLE) AS sx, CAST(sum(y.qv) AS DOUBLE) AS sy,
-         |   CAST(sum(x.qv * y.qv) AS DOUBLE) AS sxy,
-         |   CAST(sum(x.qv * x.qv) AS DOUBLE) AS sxx,
-         |   CAST(sum(y.qv * y.qv) AS DOUBLE) AS syy
-         | FROM mq x JOIN mq y ON y.i = x.i AND y.b = x.b
-         |  AND (x.name < y.name OR (x.name = y.name AND x.node < y.node))
-         | GROUP BY 1, 2, 3, 4, 5),
-         |fin AS (SELECT *, CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-         |   CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM cells)
+         |${sqlQuant("mx", "g2", "b, i", "mq", "qv")},
+         |${sqlPairCells("mq")}
          |SELECT a_name, a_node, b_name, b_node, b,
          | floor(((CAST(n AS DOUBLE) * sxy - sx * sy) / (sqrt(vx) * sqrt(vy))
          |   + 1e-9) * 1e4 + 0.5) / 1e4 AS r, n
@@ -3898,22 +3842,8 @@ object SparkEntry {
         .orderBy("name", "node")
     }, Some(
       s"""WITH $SQL_CORR_CTES,
-         |mxg AS (SELECT name, node, b, i, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM g2),
-         |mqg AS (SELECT name, node, b, i,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mxg),
-         |gcl AS (SELECT x.name AS a_name, x.node AS a_node, y.name AS b_name, y.node AS b_node,
-         |   x.b AS b, count(*) AS n,
-         |   CAST(sum(x.qv) AS DOUBLE) AS sx, CAST(sum(y.qv) AS DOUBLE) AS sy,
-         |   CAST(sum(x.qv * y.qv) AS DOUBLE) AS sxy,
-         |   CAST(sum(x.qv * x.qv) AS DOUBLE) AS sxx,
-         |   CAST(sum(y.qv * y.qv) AS DOUBLE) AS syy
-         | FROM mqg x JOIN mqg y ON y.i = x.i AND y.b = x.b
-         |  AND (x.name < y.name OR (x.name = y.name AND x.node < y.node))
-         | GROUP BY 1, 2, 3, 4, 5),
-         |gfn AS (SELECT *, CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-         |   CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM gcl),
+         |${sqlQuant("mxg", "g2", "b, i", "mqg", "qv")},
+         |${sqlPairCells("mqg", "gcl", "gfn")},
          |grm AS (SELECT a_name, a_node, b_name, b_node,
          |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) / (sqrt(vx) * sqrt(vy))
          |    + 1e-9) * 1e4 + 0.5) / 1e4 AS r
@@ -3941,22 +3871,8 @@ object SparkEntry {
         .orderBy("signal")
     }, Some(
       s"""WITH RECURSIVE $SQL_CORR_CTES,
-         |mx AS (SELECT name, node, b, i, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM g2),
-         |mq AS (SELECT name, node, b, i,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mx),
-         |cells AS (SELECT x.name AS a_name, x.node AS a_node, y.name AS b_name, y.node AS b_node,
-         |   x.b AS b, count(*) AS n,
-         |   CAST(sum(x.qv) AS DOUBLE) AS sx, CAST(sum(y.qv) AS DOUBLE) AS sy,
-         |   CAST(sum(x.qv * y.qv) AS DOUBLE) AS sxy,
-         |   CAST(sum(x.qv * x.qv) AS DOUBLE) AS sxx,
-         |   CAST(sum(y.qv * y.qv) AS DOUBLE) AS syy
-         | FROM mq x JOIN mq y ON y.i = x.i AND y.b = x.b
-         |  AND (x.name < y.name OR (x.name = y.name AND x.node < y.node))
-         | GROUP BY 1, 2, 3, 4, 5),
-         |fin AS (SELECT *, CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-         |   CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM cells),
+         |${sqlQuant("mx", "g2", "b, i", "mq", "qv")},
+         |${sqlPairCells("mq")},
          |ed AS (SELECT a_name || '|' || a_node AS s1, b_name || '|' || b_node AS s2
          | FROM fin
          | WHERE n >= 8 AND vx > 0 AND vy > 0
@@ -3984,22 +3900,8 @@ object SparkEntry {
          |  rank() OVER (PARTITION BY name, node, b ORDER BY gval)
          |   + (count(*) OVER (PARTITION BY name, node, b, gval) - 1) / 2.0 AS ar
          | FROM g2),
-         |mx AS (SELECT name, node, b, i, ar,
-         |  max(abs(ar)) OVER (PARTITION BY name, node) AS mr FROM rk),
-         |mq AS (SELECT name, node, b, i,
-         |  CAST(floor((ar / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mx),
-         |cells AS (SELECT x.name AS a_name, x.node AS a_node, y.name AS b_name, y.node AS b_node,
-         |   x.b AS b, count(*) AS n,
-         |   CAST(sum(x.qv) AS DOUBLE) AS sx, CAST(sum(y.qv) AS DOUBLE) AS sy,
-         |   CAST(sum(x.qv * y.qv) AS DOUBLE) AS sxy,
-         |   CAST(sum(x.qv * x.qv) AS DOUBLE) AS sxx,
-         |   CAST(sum(y.qv * y.qv) AS DOUBLE) AS syy
-         | FROM mq x JOIN mq y ON y.i = x.i AND y.b = x.b
-         |  AND (x.name < y.name OR (x.name = y.name AND x.node < y.node))
-         | GROUP BY 1, 2, 3, 4, 5),
-         |fin AS (SELECT *, CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-         |   CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM cells)
+         |${sqlQuant("mx", "rk", "b, i", "mq", "qv", v = "ar")},
+         |${sqlPairCells("mq")}
          |SELECT a_name, a_node, b_name, b_node, b,
          | floor(((CAST(n AS DOUBLE) * sxy - sx * sy) / (sqrt(vx) * sqrt(vy))
          |   + 1e-9) * 1e4 + 0.5) / 1e4 AS r, n
@@ -4011,11 +3913,7 @@ object SparkEntry {
         .orderBy("a_name", "a_node", "b_name", "b_node", "b")
     }, Some(
       s"""WITH $SQL_CORR_CTES,
-         |mxk AS (SELECT name, node, b, i, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM g2),
-         |mqk AS (SELECT name, node, b, i,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mxk),
+         |${sqlQuant("mxk", "g2", "b, i", "mqk", "qv")},
          |al AS (SELECT x.name AS a_name, x.node AS a_node, y.name AS b_name, y.node AS b_node,
          |   x.b AS b, x.i AS i, x.qv AS av, y.qv AS bv
          | FROM mqk x JOIN mqk y ON y.i = x.i AND y.b = x.b
@@ -4043,11 +3941,7 @@ object SparkEntry {
         .orderBy("a_name", "a_node", "b_name", "b_node", "b")
     }, Some(
       s"""WITH $SQL_CORR_CTES,
-         |mxd AS (SELECT name, node, b, i, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM g2),
-         |mqd AS (SELECT name, node, b, i,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mxd),
+         |${sqlQuant("mxd", "g2", "b, i", "mqd", "qv")},
          |ald AS (SELECT x.name AS a_name, x.node AS a_node, y.name AS b_name, y.node AS b_node,
          |   x.b AS b, x.i AS i, x.qv AS av, y.qv AS bv
          | FROM mqd x JOIN mqd y ON y.i = x.i AND y.b = x.b
@@ -4085,11 +3979,7 @@ object SparkEntry {
         .orderBy("a_name", "a_node", "b_name", "b_node")
     }, Some(
       s"""WITH $SQL_CORR_CTES,
-         |mx2 AS (SELECT name, node, i, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM g2),
-         |mq2 AS (SELECT name, node, i,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mx2),
+         |${sqlQuant("mx2", "g2", "i", "mq2", "qv")},
          |fl AS (SELECT name, node, i, qv,
          |  row_number() OVER (PARTITION BY name, node ORDER BY qv, i) AS rn,
          |  count(*) OVER (PARTITION BY name, node) AS nsig FROM mq2),
@@ -4480,15 +4370,10 @@ object SparkEntry {
           .limit(1000), 0.1)
         .orderBy("doc1", "doc2")
     }, Some(
-      """WITH d0 AS (SELECT doc_id, text FROM documents
+      s"""WITH d0 AS (SELECT doc_id, text FROM documents
         |  QUALIFY row_number() OVER (ORDER BY
         |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT), doc_id) <= 1000),
-        |d AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM d0),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
+        |${sqlBigramPairs("d0")}
         |SELECT doc1, doc2, inter, n1.n AS n1, n2.n AS n2,
         | floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 AS jac
         |FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id
@@ -4524,22 +4409,11 @@ object SparkEntry {
     }, Some(
       // closure of the near-dup graph: DuckDB reaches the same fixpoint
       // recursively that the Spark side reaches iteratively
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
         |docs5 AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-        |d AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM docs5),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |ed AS (SELECT doc1, doc2
-        |  FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id
-        |  WHERE floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 >= 0.5),
-        |edges AS (SELECT doc1 AS a, doc2 AS b FROM ed
-        |  UNION ALL SELECT doc2, doc1 FROM ed),
-        |comp AS (SELECT doc_id, doc_id AS lab FROM docs5
-        |  UNION
-        |  SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id)
+        |${sqlBigramPairs("docs5")},
+        |$SQL_JACCARD_ED,
+        |${sqlComponents("ed", "docs5")}
         |SELECT doc_id, min(lab) AS canonical_id,
         | CAST(doc_id != min(lab) AS INT) AS is_dup
         |FROM comp GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
@@ -4554,28 +4428,15 @@ object SparkEntry {
           Some(Dedup.minhashLsh(docs, threshold = 0.5).select("doc1", "doc2")))
         .orderBy("source")
     }, Some(
-      """WITH RECURSIVE
-        |d AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d WHERE len(w) >= 2),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |ed AS (SELECT doc1, doc2
-        |  FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id
-        |  WHERE floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 >= 0.5),
-        |edges AS (SELECT doc1 AS a, doc2 AS b FROM ed
-        |  UNION ALL SELECT doc2, doc1 FROM ed),
-        |comp AS (SELECT doc_id, doc_id AS lab FROM documents
-        |  UNION
-        |  SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id),
+      s"""WITH RECURSIVE
+        |${sqlBigramPairs("documents", minLen = true)},
+        |$SQL_JACCARD_ED,
+        |${sqlComponents("ed", "documents")},
         |lb AS (SELECT doc_id, CAST(doc_id != min(lab) AS BIGINT) AS x
         |  FROM comp GROUP BY doc_id),
         |tq AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS wq,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits
+        |  string_split_regex(lower(trim(text)), '\\s+') AS wq,
+        |  $SQL_TEXT_COUNTS
         | FROM documents),
         |qq AS (SELECT doc_id, CAST(floor((1.0 - least(punct / len * 5.0, 0.3)
         |   - least(digits / len * 5.0, 0.3)
@@ -4628,22 +4489,11 @@ object SparkEntry {
           sum("cluster_size").as("n_docs"))
         .orderBy("cluster_size"),
     Some(
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
         |docs5 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-        |d AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM docs5),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |ed AS (SELECT doc1, doc2
-        |  FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id
-        |  WHERE floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 >= 0.5),
-        |edges AS (SELECT doc1 AS a, doc2 AS b FROM ed
-        |  UNION ALL SELECT doc2, doc1 FROM ed),
-        |comp AS (SELECT doc_id, doc_id AS lab FROM docs5
-        |  UNION
-        |  SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id),
+        |${sqlBigramPairs("docs5")},
+        |$SQL_JACCARD_ED,
+        |${sqlComponents("ed", "docs5")},
         |lab AS (SELECT doc_id, min(lab) AS canonical_id FROM comp GROUP BY doc_id),
         |cs AS (SELECT canonical_id, count(*) AS cluster_size FROM lab GROUP BY 1)
         |SELECT cluster_size, count(*) AS n_clusters,
@@ -4668,13 +4518,8 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy("j_bin50"),
     Some(
-      """WITH docs2 AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-        |d AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM docs2),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d WHERE len(w) >= 2),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      s"""WITH docs2 AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
+        |${sqlBigramPairs("docs2", minLen = true)},
         |jc AS (SELECT doc1, doc2,
         |  floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 AS jac
         |  FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id)
@@ -4702,21 +4547,10 @@ object SparkEntry {
       // and sf0.1. A corpus with edges near the 0.5 threshold would
       // demote this query to rows-only (the standard LSH recall trade,
       // measured by ann_recall_eval on the ANN side).
-      """WITH RECURSIVE
-        |d AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d WHERE len(w) >= 2),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |ed AS (SELECT doc1, doc2
-        |  FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id
-        |  WHERE floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 >= 0.5),
-        |edges AS (SELECT doc1 AS a, doc2 AS b FROM ed
-        |  UNION ALL SELECT doc2, doc1 FROM ed),
-        |comp AS (SELECT doc_id, doc_id AS lab FROM documents
-        |  UNION
-        |  SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id)
+      s"""WITH RECURSIVE
+        |${sqlBigramPairs("documents", minLen = true)},
+        |$SQL_JACCARD_ED,
+        |${sqlComponents("ed", "documents")}
         |SELECT doc_id, min(lab) AS canonical_id,
         | CAST(doc_id != min(lab) AS INT) AS is_dup
         |FROM comp GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
@@ -5057,14 +4891,7 @@ object SparkEntry {
     }, Some(
       s"""WITH $SQL_ANN_BASE,
          |$SQL_ANN_TRUTH,
-         |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-         |asgc AS (SELECT vec_id, v, nrm, cid AS cell FROM (
-         |  SELECT n.vec_id, n.v, n.nrm, c.cid,
-         |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-         |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * c.cv[i]))
-         |        / (n.nrm * c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-         |      c.cid ASC) AS crn
-         |  FROM n CROSS JOIN c) WHERE crn = 1),
+         |${sqlAssign("8", asg = "asgc", cidAs = "cid AS cell")},
          |qp AS (SELECT qid, qv, qn, cid, prk FROM (
          |  SELECT b.vec_id AS qid, b.v AS qv, b.nrm AS qn, c.cid,
          |    row_number() OVER (PARTITION BY b.vec_id ORDER BY
@@ -5546,17 +5373,8 @@ object SparkEntry {
       // candidates are Σ|cell_ev|·|cell_tr|, never corpus²
       Similarity.semanticDecontaminate(Tables.embeddings(s, dir)),
     Some(
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-        |asg AS (SELECT vec_id, v, nrm, cid FROM (
-        |  SELECT n.vec_id, n.v, n.nrm, c.cid,
-        |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-        |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * c.cv[i]))
-        |        / (n.nrm * c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-        |      c.cid ASC) AS crn
-        |  FROM n CROSS JOIN c) WHERE crn = 1),
+      s"""WITH ${sqlEmbNorms()},
+        |${sqlAssign("8")},
         |ev AS (SELECT vec_id AS eid, v AS evv, nrm AS en, cid FROM asg WHERE vec_id % 19 = 0),
         |tr AS (SELECT * FROM asg WHERE vec_id % 19 <> 0),
         |fl AS (SELECT tr.vec_id, ev.eid,
@@ -5593,11 +5411,9 @@ object SparkEntry {
     Q("text_quality", (s, dir) => {
       TextAnalysis.qualityScore(Tables.documents(s, dir)).orderBy("doc_id")
     }, Some(
-      """WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits
+      s"""WITH t AS (SELECT doc_id, text,
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS
         | FROM documents)
         |SELECT doc_id,
         | floor((punct / len + 1e-9) * 1e4 + 0.5) / 1e4 AS punct_ratio,
@@ -5634,12 +5450,10 @@ object SparkEntry {
     Q("text_quality_gate", (s, dir) => {
       TextAnalysis.qualityGate(Tables.documents(s, dir)).orderBy("doc_id")
     }, Some(
-      """WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits,
-        |  CAST(length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g')) AS BIGINT) AS zh
+      s"""WITH t AS (SELECT doc_id, text,
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS,
+        |  CAST(length(text) - length(regexp_replace(text, '[\\x{4e00}-\\x{9fff}]', '', 'g')) AS BIGINT) AS zh
         | FROM documents),
         |h AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
         |  floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -5907,13 +5721,9 @@ object SparkEntry {
         .orderBy("doc_id")
     }, Some(SQL_PHASH("SELECT doc_id, text FROM documents") + ",\n" +
       SQL_PHASH_PAIRS(3) +
-      """,
+      s""",
         |ed AS (SELECT doc1, doc2 FROM ppairs WHERE dist <= 3),
-        |edges AS (SELECT doc1 AS a, doc2 AS b FROM ed
-        |  UNION ALL SELECT doc2, doc1 FROM ed),
-        |comp AS (SELECT doc_id, doc_id AS lab FROM documents
-        |  UNION
-        |  SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id)
+        |${sqlComponents("ed", "documents")}
         |SELECT doc_id, min(lab) AS canonical_id,
         | CAST(doc_id != min(lab) AS INT) AS is_dup
         |FROM comp GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
@@ -6174,11 +5984,9 @@ object SparkEntry {
           col("doc_id").cast("string"), col("quality"))
         .orderBy("doc_id")
     }, Some(
-      """WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits
+      s"""WITH t AS (SELECT doc_id, text,
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS
         | FROM documents),
         |q AS (SELECT doc_id,
         |  floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -6663,12 +6471,11 @@ object SparkEntry {
             .limit(1500), 0.8)
         .orderBy("inner_id", "outer_id")
     }, Some(
-      """WITH d0 AS (SELECT doc_id, text FROM documents
+      s"""WITH d0 AS (SELECT doc_id, text FROM documents
         |  QUALIFY row_number() OVER (ORDER BY
         |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT), doc_id) <= 1500),
-        |d AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM d0),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d),
+        |d AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w FROM d0),
+        |${sqlShingles("d", "sh", false)},
         |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
         |pr AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS inter
         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
@@ -6698,28 +6505,15 @@ object SparkEntry {
           Some(Dedup.minhashLsh(docs5, threshold = 0.5).select("doc1", "doc2")))
         .orderBy("doc_id")
     }, Some(
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
         |docs5 AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-        |d AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM docs5),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |ed AS (SELECT doc1, doc2
-        |  FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id
-        |  WHERE floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 >= 0.5),
-        |edges AS (SELECT doc1 AS a, doc2 AS b FROM ed
-        |  UNION ALL SELECT doc2, doc1 FROM ed),
-        |comp AS (SELECT doc_id, doc_id AS lab FROM docs5
-        |  UNION
-        |  SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id),
+        |${sqlBigramPairs("docs5")},
+        |$SQL_JACCARD_ED,
+        |${sqlComponents("ed", "docs5")},
         |cl AS (SELECT doc_id, min(lab) AS cluster_id FROM comp GROUP BY doc_id),
         |t AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS
         | FROM docs5),
         |q AS (SELECT doc_id,
         |  floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -6825,11 +6619,9 @@ object SparkEntry {
           "source", 800L)
         .orderBy("source")
     }, Some(
-      """WITH t AS (SELECT doc_id, source,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits
+      s"""WITH t AS (SELECT doc_id, source,
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS
         | FROM documents),
         |q AS (SELECT doc_id, source, CAST(len(w) AS BIGINT) AS n_tokens,
         |  floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -6882,13 +6674,11 @@ object SparkEntry {
           minTokens = 5, qualityMin = 0.5, w = 4)
         .orderBy("doc_id")
     }, Some(
-      """WITH train AS (SELECT * FROM documents WHERE doc_id % 97 != 0),
+      s"""WITH train AS (SELECT * FROM documents WHERE doc_id % 97 != 0),
         |t AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(len(string_split_regex(lower(text), '\s+')) AS BIGINT) AS n_tokens,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  CAST(len(string_split_regex(lower(text), '\\s+')) AS BIGINT) AS n_tokens,
+        |  $SQL_TEXT_COUNTS
         | FROM train),
         |q AS (SELECT doc_id, n_tokens,
         |  floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -6897,7 +6687,7 @@ object SparkEntry {
         |ex AS (SELECT doc_id,
         |  CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY md5(text)) THEN 1 ELSE 0 END AS is_canonical
         | FROM train),
-        |d2 AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents),
+        |d2 AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS w FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w) - 2),
         |  i -> md5(array_to_string(w[i:(i + 3)], ' '))))) AS ph FROM d2 WHERE len(w) >= 4),
         |cont AS (SELECT DISTINCT t.doc_id FROM sh t JOIN sh e
@@ -6922,13 +6712,8 @@ object SparkEntry {
       Dedup.nearestDup(docs3, precomputedPairs = Some(Dedup.minhashLsh(docs3, threshold = 0.5)))
         .orderBy("doc_id")
     }, Some(
-      """WITH docs3 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-        |d AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM docs3),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d WHERE len(w) >= 2),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      s"""WITH docs3 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
+        |${sqlBigramPairs("docs3", minLen = true)},
         |ed AS (SELECT doc1, doc2,
         |  floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 AS jac
         |  FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id
@@ -7000,12 +6785,10 @@ object SparkEntry {
       TextAnalysis.gateStats(Tables.documents(s, dir))
         .orderBy("source", "lang"),
     Some(
-      """WITH t AS (SELECT doc_id, source, lang, text,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits,
-        |  CAST(length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g')) AS BIGINT) AS zh
+      s"""WITH t AS (SELECT doc_id, source, lang, text,
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS,
+        |  CAST(length(text) - length(regexp_replace(text, '[\\x{4e00}-\\x{9fff}]', '', 'g')) AS BIGINT) AS zh
         | FROM documents),
         |h AS (SELECT doc_id, source, lang, CAST(len(w) AS BIGINT) AS n_tokens,
         |  floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -7056,26 +6839,7 @@ object SparkEntry {
       TimeSeries.pacf(grid(s, dir)).orderBy("name", "node"),
     Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |mq AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mx),
-         |ld AS (SELECT name, node, qv,
-         |  lead(qv, 1) OVER w AS y1, lead(qv, 2) OVER w AS y2, lead(qv, 3) OVER w AS y3
-         | FROM mq WINDOW w AS (PARTITION BY name, node ORDER BY tsb)),
-         |pr AS (
-         | SELECT name, node, CAST(1 AS BIGINT) AS lag, qv AS qx, y1 AS qy
-         |  FROM ld WHERE y1 IS NOT NULL
-         | UNION ALL SELECT name, node, CAST(2 AS BIGINT), qv, y2 FROM ld WHERE y2 IS NOT NULL
-         | UNION ALL SELECT name, node, CAST(3 AS BIGINT), qv, y3 FROM ld WHERE y3 IS NOT NULL),
-         |cells AS (SELECT name, node, lag, count(*) AS n,
-         |  CAST(sum(qx) AS DOUBLE) AS sx, CAST(sum(qy) AS DOUBLE) AS sy,
-         |  CAST(sum(qx * qy) AS DOUBLE) AS sxy, CAST(sum(qx * qx) AS DOUBLE) AS sxx,
-         |  CAST(sum(qy * qy) AS DOUBLE) AS syy
-         | FROM pr GROUP BY 1, 2, 3),
-         |fin AS (SELECT *, CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-         |  CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM cells),
+         |$SQL_ACF_CELLS,
          |ac AS (SELECT name, node, lag,
          |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) / (sqrt(vx) * sqrt(vy))
          |    + 1e-9) * 1e4 + 0.5) / 1e4 AS r
@@ -7103,11 +6867,9 @@ object SparkEntry {
       TextAnalysis.qualityPercentiles(Tables.documents(s, dir))
         .orderBy("source"),
     Some(
-      """WITH t AS (SELECT source,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits
+      s"""WITH t AS (SELECT source,
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS
         | FROM documents),
         |qs AS (SELECT source,
         |  floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -7153,13 +6915,11 @@ object SparkEntry {
       Curation.curationFunnel(Tables.documents(s, dir))
         .orderBy("source"),
     Some(
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
         |t AS (SELECT doc_id, source, text,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits,
-        |  CAST(length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g')) AS BIGINT) AS zh
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS,
+        |  CAST(length(text) - length(regexp_replace(text, '[\\x{4e00}-\\x{9fff}]', '', 'g')) AS BIGINT) AS zh
         | FROM documents WHERE doc_id % 97 != 0),
         |h AS (SELECT doc_id, source, text, CAST(len(w) AS BIGINT) AS n_tokens,
         |  floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -7177,27 +6937,16 @@ object SparkEntry {
         |        WHEN de >= fr AND de >= es THEN 'de'
         |        WHEN fr >= es THEN 'fr' ELSE 'es' END) = 'en'
         |  AND n_tokens >= 5 AND n_tokens <= 5000 AND quality >= 0.5),
-        |d2 AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM k),
-        |sh2 AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w)),
-        |  i -> w[i] || ' ' || w[i + 1]))) AS s FROM d2 WHERE len(w) >= 2),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh2 GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-        |  FROM sh2 a JOIN sh2 b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |ed AS (SELECT doc1, doc2
-        |  FROM pr JOIN sz n1 ON pr.doc1 = n1.doc_id JOIN sz n2 ON pr.doc2 = n2.doc_id
-        |  WHERE floor((CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) + 1e-9) * 1e4 + 0.5) / 1e4 >= 0.5),
-        |edges AS (SELECT doc1 AS a, doc2 AS b FROM ed
-        |  UNION ALL SELECT doc2, doc1 FROM ed),
-        |comp AS (SELECT doc_id, doc_id AS lab FROM k
-        |  UNION
-        |  SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id),
+        |${sqlBigramPairs("k", minLen = true, d = "d2", sh = "sh2")},
+        |$SQL_JACCARD_ED,
+        |${sqlComponents("ed", "k")},
         |lab AS (SELECT doc_id, min(lab) AS canonical FROM comp GROUP BY doc_id),
         |canon AS (SELECT doc_id FROM lab WHERE doc_id = canonical),
         |shc AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w) - 2),
         |  i -> md5(array_to_string(w[i:(i + 3)], ' '))))) AS ph FROM d2 WHERE len(w) >= 4),
         |dev AS (SELECT unnest(list_distinct(list_transform(range(1, len(w) - 2),
         |  i -> md5(array_to_string(w[i:(i + 3)], ' '))))) AS ph
-        | FROM (SELECT string_split_regex(lower(text), '\s+') AS w FROM documents
+        | FROM (SELECT string_split_regex(lower(text), '\\s+') AS w FROM documents
         |   WHERE doc_id % 97 = 0) e0 WHERE len(w) >= 4),
         |cont AS (SELECT DISTINCT s0.doc_id FROM shc s0 JOIN dev e ON s0.ph = e.ph),
         |raw AS (SELECT source, count(*) AS n_raw FROM documents
@@ -7589,7 +7338,7 @@ object SparkEntry {
          |mpx AS (SELECT name, node, tsb, gval,
          |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM ff36),
          |rp AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e6
+         |  CAST(floor((gval / ($SQL_MR)) * 1e6
          |    + 0.5) AS BIGINT) AS qv,
          |  row_number() OVER (PARTITION BY name, node ORDER BY tsb) AS idx
          | FROM mpx),
@@ -7770,10 +7519,9 @@ object SparkEntry {
          |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr,
          |  min(i) OVER (PARTITION BY name, node) AS x0 FROM g2),
          |q AS (SELECT name, node,
-         |  CASE WHEN mr > 0 THEN mr ELSE 1.0 END AS mm,
+         |  $SQL_MR AS mm,
          |  CAST(i - x0 AS HUGEINT) AS xi,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mx),
+         |  ${sqlQRel("gval")} AS qv FROM mx),
          |agg AS (SELECT name, node, count(*) AS n, max(mm) AS mm,
          |  CAST(sum(xi) AS DOUBLE) AS sx, CAST(sum(xi * xi) AS DOUBLE) AS sxx,
          |  CAST(sum(qv) AS DOUBLE) AS sy, CAST(sum(qv * qv) AS DOUBLE) AS syy,
@@ -7892,17 +7640,8 @@ object SparkEntry {
           col("n_pairs"))
         .orderBy("bin"),
     Some(
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-        |asg AS (SELECT vec_id, v, nrm, cid FROM (
-        |  SELECT n.vec_id, n.v, n.nrm, c.cid,
-        |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-        |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * c.cv[i]))
-        |        / (n.nrm * c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-        |      c.cid ASC) AS crn
-        |  FROM n CROSS JOIN c) WHERE crn = 1),
+      s"""WITH ${sqlEmbNorms()},
+        |${sqlAssign("8")},
         |p AS (SELECT CAST(floor(floor((list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
         |    / (a.nrm * b.nrm) + 1e-9) * 1e4 + 0.5) / 1e4 * 20.0) AS BIGINT) AS bin
         | FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id)
@@ -7916,17 +7655,8 @@ object SparkEntry {
       Similarity.oodKnnDist(Tables.embeddings(s, dir), nCells = 8, k = 5,
         topN = 50),
     Some(
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-        |asg AS (SELECT vec_id, v, nrm, cid FROM (
-        |  SELECT n.vec_id, n.v, n.nrm, c.cid,
-        |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-        |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * c.cv[i]))
-        |        / (n.nrm * c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-        |      c.cid ASC) AS crn
-        |  FROM n CROSS JOIN c) WHERE crn = 1),
+      s"""WITH ${sqlEmbNorms()},
+        |${sqlAssign("8")},
         |sims AS (SELECT a.vec_id, a.cid AS cell,
         |  floor((list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
         |    / (a.nrm * b.nrm) + 1e-9) * 1e4 + 0.5) / 1e4 AS sim,
@@ -7944,17 +7674,8 @@ object SparkEntry {
       Dedup.embedCosinePairsIvf(Tables.embeddings(s, dir), nCells = 8,
           threshold = 0.3)
         .orderBy("id1", "id2"), Some(
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-        |asg AS (SELECT vec_id, v, nrm, cid FROM (
-        |  SELECT n.vec_id, n.v, n.nrm, c.cid,
-        |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-        |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * c.cv[i]))
-        |        / (n.nrm * c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-        |      c.cid ASC) AS crn
-        |  FROM n CROSS JOIN c) WHERE crn = 1)
+      s"""WITH ${sqlEmbNorms()},
+        |${sqlAssign("8")}
         |SELECT a.vec_id AS id1, b.vec_id AS id2,
         |  floor((list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
         |    / (a.nrm * b.nrm) + 1e-9) * 1e4 + 0.5) / 1e4 AS cos_sim
@@ -7972,17 +7693,8 @@ object SparkEntry {
       Dedup.embedCosinePairsIvf(Tables.embeddings(s, dir), nCells = 0,
           threshold = 0.3)
         .orderBy("id1", "id2"), Some(
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < ($SQL_AUTOCELLS)),
-        |asg AS (SELECT vec_id, v, nrm, cid FROM (
-        |  SELECT n.vec_id, n.v, n.nrm, c.cid,
-        |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-        |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * c.cv[i]))
-        |        / (n.nrm * c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-        |      c.cid ASC) AS crn
-        |  FROM n CROSS JOIN c) WHERE crn = 1)
+      s"""WITH ${sqlEmbNorms()},
+        |${sqlAssign(s"($SQL_AUTOCELLS)")}
         |SELECT a.vec_id AS id1, b.vec_id AS id2,
         |  floor((list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
         |    / (a.nrm * b.nrm) + 1e-9) * 1e4 + 0.5) / 1e4 AS cos_sim
@@ -8005,27 +7717,14 @@ object SparkEntry {
       // the IVF edge set is deterministic (see dedup_embed_ivf) — the
       // oracle rebuilds it and closes the components recursively, the
       // dedup_cluster shape
-      """WITH RECURSIVE
-        |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n WHERE vec_id < 8),
-        |asg AS (SELECT vec_id, v, nrm, cid FROM (
-        |  SELECT n.vec_id, n.v, n.nrm, c.cid,
-        |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
-        |      floor((list_sum(list_transform(range(1, 65), i -> n.v[i] * c.cv[i]))
-        |        / (n.nrm * c.cn) + 1e-9) * 1e4 + 0.5) / 1e4 DESC,
-        |      c.cid ASC) AS crn
-        |  FROM n CROSS JOIN c) WHERE crn = 1),
+      s"""WITH RECURSIVE
+        |${sqlEmbNorms()},
+        |${sqlAssign("8")},
         |ed AS (SELECT a.vec_id AS doc1, b.vec_id AS doc2
         | FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
         | WHERE floor((list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i]))
         |    / (a.nrm * b.nrm) + 1e-9) * 1e4 + 0.5) / 1e4 >= 0.3),
-        |edges AS (SELECT doc1 AS a, doc2 AS b FROM ed
-        |  UNION ALL SELECT doc2, doc1 FROM ed),
-        |comp AS (SELECT vec_id AS doc_id, vec_id AS lab FROM embeddings
-        |  UNION
-        |  SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id)
+        |${sqlComponents("ed", "embeddings", "vec_id")}
         |SELECT doc_id, min(lab) AS canonical_id,
         | CAST(doc_id != min(lab) AS INT) AS is_dup
         |FROM comp GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
@@ -8238,20 +7937,7 @@ object SparkEntry {
       Anomaly.ensemble(grid(s, dir)).orderBy("name", "node", "tsb"),
     Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb, gval,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st0 AS (SELECT name, node, count(*) AS n,
-         |  CAST(sum(d) AS DOUBLE) AS s1, CAST(sum(d * d) AS DOUBLE) AS s2,
-         |  quantile_cont(gval, 0.5) AS med,
-         |  quantile_cont(gval, 0.25) AS q1, quantile_cont(gval, 0.75) AS q3
-         | FROM qd GROUP BY 1, 2),
-         |st AS (SELECT name, node, n, med, q1, q3, s1 / CAST(n AS DOUBLE) AS mu_s,
-         |  sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1) /
-         |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS sigma_s
-         | FROM st0),
+         |${sqlKsigma(robust = true)},
          |wd AS (SELECT g.name, g.node, g.tsb, g.gval, g.d, st.n, st.med, st.q1,
          |  st.q3, st.mu_s, st.sigma_s, abs(g.gval - st.med) AS dev
          | FROM qd g JOIN st ON g.name = st.name AND g.node = st.node),
@@ -8301,20 +7987,7 @@ object SparkEntry {
         .orderBy("name", "node")
     }, Some(
       s"""WITH RECURSIVE $SQL_SIG, $SQL_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb, gval,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st0 AS (SELECT name, node, count(*) AS n,
-         |  CAST(sum(d) AS DOUBLE) AS s1, CAST(sum(d * d) AS DOUBLE) AS s2,
-         |  quantile_cont(gval, 0.5) AS med,
-         |  quantile_cont(gval, 0.25) AS q1, quantile_cont(gval, 0.75) AS q3
-         | FROM qd GROUP BY 1, 2),
-         |st AS (SELECT name, node, n, med, q1, q3, s1 / CAST(n AS DOUBLE) AS mu_s,
-         |  sqrt((CAST(n AS DOUBLE) * s2 - s1 * s1) /
-         |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS sigma_s
-         | FROM st0),
+         |${sqlKsigma(robust = true)},
          |wd AS (SELECT g.name, g.node, g.tsb, g.gval, g.d, st.n, st.med, st.q1,
          |  st.q3, st.mu_s, st.sigma_s, abs(g.gval - st.med) AS dev
          | FROM qd g JOIN st ON g.name = st.name AND g.node = st.node),
@@ -8353,31 +8026,7 @@ object SparkEntry {
          |tsl AS (SELECT name, node,
          |  floor((greatest(0.0, 1.0 - vr / vg) + 1e-9) * 1e4 + 0.5) / 1e4 AS trend_strength
          | FROM v9 WHERE n >= 3 AND vg > 0),
-         |iv AS (SELECT name, node, gval,
-         |  row_number() OVER (PARTITION BY name, node ORDER BY tsb) AS i FROM grid),
-         |nn AS (SELECT name, node, count(*) AS n FROM iv GROUP BY 1, 2 HAVING count(*) >= 3),
-         |step AS (
-         |  SELECT a.name, a.node, CAST(2 AS BIGINT) AS i, a.gval AS l,
-         |    b.gval - a.gval AS bt, CAST(NULL AS DOUBLE) AS resid
-         |  FROM iv a JOIN iv b ON a.name = b.name AND a.node = b.node
-         |   AND a.i = 1 AND b.i = 2
-         |  JOIN nn ON nn.name = a.name AND nn.node = a.node
-         |  UNION ALL
-         |  SELECT s.name, s.node, s.i + 1,
-         |    0.3 * v.gval + (1 - 0.3) * (s.l + s.bt),
-         |    0.2 * ((0.3 * v.gval + (1 - 0.3) * (s.l + s.bt)) - s.l) + (1 - 0.2) * s.bt,
-         |    v.gval - (s.l + s.bt)
-         |  FROM step s JOIN iv v ON v.name = s.name AND v.node = s.node
-         |   AND v.i = s.i + 1),
-         |rs AS (SELECT name, node, i,
-         |  CAST(floor((abs(resid) + 1e-9) * 1e6 + 0.5) AS BIGINT) AS qr
-         | FROM step WHERE resid IS NOT NULL),
-         |nf AS (SELECT name, node, count(*) AS nf FROM rs GROUP BY 1, 2),
-         |rr AS (SELECT name, node, qr,
-         |  row_number() OVER (PARTITION BY name, node ORDER BY qr, i) AS rk FROM rs),
-         |qb AS (SELECT rr.name, rr.node, rr.qr AS qb
-         | FROM rr JOIN nf ON nf.name = rr.name AND nf.node = rr.node
-         | WHERE rr.rk = CAST(ceil(0.9 * nf.nf) AS BIGINT)),
+         |$SQL_HOLT_Q90,
          |fcl AS (SELECT rs.name, rs.node,
          |  CAST(sum(CASE WHEN rs.qr > 2 * qb.qb THEN 1 ELSE 0 END) AS BIGINT) AS n_breach
          | FROM rs JOIN qb ON qb.name = rs.name AND qb.node = rs.node
@@ -8424,31 +8073,7 @@ object SparkEntry {
       // carrying the per-step pre-update residual; the band is exact
       // integer rank arithmetic over the quantized |residual|
       s"""WITH RECURSIVE $SQL_SIG, $SQL_GRID,
-         |iv AS (SELECT name, node, gval,
-         |  row_number() OVER (PARTITION BY name, node ORDER BY tsb) AS i FROM grid),
-         |nn AS (SELECT name, node, count(*) AS n FROM iv GROUP BY 1, 2 HAVING count(*) >= 3),
-         |step AS (
-         |  SELECT a.name, a.node, CAST(2 AS BIGINT) AS i, a.gval AS l,
-         |    b.gval - a.gval AS bt, CAST(NULL AS DOUBLE) AS resid
-         |  FROM iv a JOIN iv b ON a.name = b.name AND a.node = b.node
-         |   AND a.i = 1 AND b.i = 2
-         |  JOIN nn ON nn.name = a.name AND nn.node = a.node
-         |  UNION ALL
-         |  SELECT s.name, s.node, s.i + 1,
-         |    0.3 * v.gval + (1 - 0.3) * (s.l + s.bt),
-         |    0.2 * ((0.3 * v.gval + (1 - 0.3) * (s.l + s.bt)) - s.l) + (1 - 0.2) * s.bt,
-         |    v.gval - (s.l + s.bt)
-         |  FROM step s JOIN iv v ON v.name = s.name AND v.node = s.node
-         |   AND v.i = s.i + 1),
-         |rs AS (SELECT name, node, i,
-         |  CAST(floor((abs(resid) + 1e-9) * 1e6 + 0.5) AS BIGINT) AS qr
-         | FROM step WHERE resid IS NOT NULL),
-         |nf AS (SELECT name, node, count(*) AS nf FROM rs GROUP BY 1, 2),
-         |rr AS (SELECT name, node, qr,
-         |  row_number() OVER (PARTITION BY name, node ORDER BY qr, i) AS rk FROM rs),
-         |qb AS (SELECT rr.name, rr.node, rr.qr AS qb
-         | FROM rr JOIN nf ON nf.name = rr.name AND nf.node = rr.node
-         | WHERE rr.rk = CAST(ceil(0.9 * nf.nf) AS BIGINT)),
+         |$SQL_HOLT_Q90,
          |fin AS (SELECT s.name, s.node, s.l, s.bt FROM step s
          | JOIN (SELECT name, node, max(i) AS mi FROM step GROUP BY 1, 2) mx
          |  ON s.name = mx.name AND s.node = mx.node AND s.i = mx.mi),
@@ -8513,16 +8138,8 @@ object SparkEntry {
       TimeSeries.sax(grid(s, dir), w = 4).orderBy("name", "node", "win"),
     Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st AS (SELECT name, node, tsb, d,
-         |  CAST(count(*) OVER w AS DOUBLE) AS nd,
-         |  CAST(sum(d) OVER w AS DOUBLE) AS s1,
-         |  CAST(sum(d * d) OVER w AS DOUBLE) AS s2
-         | FROM qd WINDOW w AS (PARTITION BY name, node)),
+         |${sqlQuant("mx", "grid", "tsb", "qd", "d")},
+         |${sqlZMoments("st", "qd")},
          |zz AS (SELECT name, node, tsb,
          |  CAST(floor(((CAST(d AS DOUBLE) - s1 / nd)
          |    / sqrt((nd * s2 - s1 * s1) / (nd * (nd - 1.0))) + 1e-9) * 1e4 + 0.5)
@@ -8544,16 +8161,8 @@ object SparkEntry {
       TimeSeries.motifSax(grid(s, dir)).orderBy("name", "node"),
     Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |qd AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS d FROM mx),
-         |st AS (SELECT name, node, tsb, d,
-         |  CAST(count(*) OVER w AS DOUBLE) AS nd,
-         |  CAST(sum(d) OVER w AS DOUBLE) AS s1,
-         |  CAST(sum(d * d) OVER w AS DOUBLE) AS s2
-         | FROM qd WINDOW w AS (PARTITION BY name, node)),
+         |${sqlQuant("mx", "grid", "tsb", "qd", "d")},
+         |${sqlZMoments("st", "qd")},
          |zz AS (SELECT name, node, tsb,
          |  CAST(floor(((CAST(d AS DOUBLE) - s1 / nd)
          |    / sqrt((nd * s2 - s1 * s1) / (nd * (nd - 1.0))) + 1e-9) * 1e4 + 0.5)
@@ -8589,11 +8198,7 @@ object SparkEntry {
       Anomaly.levelShift(grid(s, dir)).orderBy("name", "node", "tsb"),
     Some(
       s"""$WITH_GRID,
-         |mxl AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |ql AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mxl),
+         |${sqlQuant("mxl", "grid", "tsb", "ql", "qv")},
          |gm AS (SELECT name, node,
          |  list_sort(list(qv))[CAST((count(*) + 1) // 2 AS INT)] AS gmed
          | FROM ql GROUP BY 1, 2),
@@ -8958,15 +8563,7 @@ object SparkEntry {
       // the first peak second comes from max(struct(level, −tsec)) —
       // one aggregate, no second pass. Day clipping fans a session
       // into ≤ 2 segments (sessions are minutes, days are not).
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), expr("ts div 1000000000").as("tsec"),
-          col("event_id"))
-      val w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-      val brk = when(col("tsec") - lag("tsec", 1).over(w) > 1800 ||
-        lag("tsec", 1).over(w).isNull, 1).otherwise(0)
-      val sess = ev.withColumn("brk", brk)
-        .withColumn("sid", sum("brk").over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val sess = sessions(s, dir)
         .groupBy("user_id", "sid")
         .agg(min("tsec").as("st"), max("tsec").as("en"))
       val seg = sess
@@ -8992,15 +8589,9 @@ object SparkEntry {
           (-col("m.nt")).cast("long").as("peak_tsec"))
         .orderBy("day")
     }, Some(
-      """WITH ev AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec, event_id FROM events),
-        |b AS (SELECT user_id, tsec, event_id,
-        |  CASE WHEN tsec - lag(tsec) OVER w > 1800 OR lag(tsec) OVER w IS NULL THEN 1 ELSE 0 END AS brk
-        | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)),
-        |s2 AS (SELECT user_id, tsec,
-        |  sum(brk) OVER (PARTITION BY user_id ORDER BY tsec, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        | FROM b),
+      s"""WITH $SQL_SESS,
         |ss AS (SELECT user_id, sid, min(tsec) AS st, max(tsec) AS en
-        | FROM s2 GROUP BY 1, 2),
+        | FROM sd GROUP BY 1, 2),
         |seg AS (SELECT unnest(range(st // 86400, en // 86400 + 1)) AS day, st, en FROM ss),
         |sc AS (SELECT day, greatest(st, day * 86400) AS cst,
         |  least(en, day * 86400 + 86399) AS cen FROM seg),
@@ -9456,11 +9047,9 @@ object SparkEntry {
       TextAnalysis.qualityAuc(Tables.documents(s, dir), posLang = "en")
         .orderBy("source"),
     Some(
-      """WITH t AS (SELECT doc_id, lang, source,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits
+      s"""WITH t AS (SELECT doc_id, lang, source,
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS
         | FROM documents),
         |sc AS (SELECT source,
         |  CAST(floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -9725,11 +9314,7 @@ object SparkEntry {
         .orderBy("name", "node"),
     Some(
       s"""WITH $SQL_CORR_CTES,
-         |mxa AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM ff36),
-         |qa AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mxa),
+         |${sqlQuant("mxa", "ff36", "tsb", "qa", "qv")},
          |la AS (SELECT name, node, qv,
          |  lag(qv) OVER (PARTITION BY name, node ORDER BY tsb) AS xl FROM qa),
          |ld AS (SELECT name, node, xl, qv - xl AS dy FROM la WHERE xl IS NOT NULL),
@@ -9799,11 +9384,7 @@ object SparkEntry {
       TimeSeries.rollingAutocorr(grid(s, dir)).orderBy("name", "node", "tsb"),
     Some(
       s"""$WITH_GRID,
-         |mx AS (SELECT name, node, tsb, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM grid),
-         |mq AS (SELECT name, node, tsb,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qx FROM mx),
+         |${sqlQuant("mx", "grid", "tsb", "mq", "qx")},
          |lg AS (SELECT name, node, tsb, qx,
          |  lag(qx, 1) OVER (PARTITION BY name, node ORDER BY tsb) AS qy FROM mq),
          |pr AS (SELECT * FROM lg WHERE qy IS NOT NULL),
@@ -10191,11 +9772,9 @@ object SparkEntry {
           col("doc_id"), col("quality"))
         .orderBy("doc_id"),
     Some(
-      """WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(lower(trim(text)), '\s+') AS w,
-        |  CAST(length(text) AS DOUBLE) AS len,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) AS digits
+      s"""WITH t AS (SELECT doc_id, text,
+        |  string_split_regex(lower(trim(text)), '\\s+') AS w,
+        |  $SQL_TEXT_COUNTS
         | FROM documents),
         |q AS (SELECT doc_id,
         |  floor((1.0 - least(punct / len * 5.0, 0.3) - least(digits / len * 5.0, 0.3)
@@ -10250,11 +9829,7 @@ object SparkEntry {
         .orderBy("cand_name", "node", "b"),
     Some(
       s"""WITH $SQL_CORR_CTES,
-         |mx AS (SELECT name, node, b, i, gval,
-         |  max(abs(gval)) OVER (PARTITION BY name, node) AS mr FROM g2),
-         |mq AS (SELECT name, node, b, i,
-         |  CAST(floor((gval / (CASE WHEN mr > 0 THEN mr ELSE 1.0 END)) * 1e9 + 0.5)
-         |    AS HUGEINT) AS qv FROM mx),
+         |${sqlQuant("mx", "g2", "b, i", "mq", "qv")},
          |cells AS (SELECT x.name AS a_name, y.name AS b_name, x.node AS node,
          |   x.b AS b, count(*) AS n,
          |   CAST(sum(x.qv) AS DOUBLE) AS sx, CAST(sum(y.qv) AS DOUBLE) AS sy,

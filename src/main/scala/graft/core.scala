@@ -67,33 +67,23 @@ object Num {
     org.apache.spark.sql.graft.VectorExpressions.roundFloor(c, eps, scale)
 }
 
-/** Spark-computed SQL literal fragments for the DuckDB oracle.
-  *
-  * Some oracle checks share a SMALL Spark-computed model (e.g. q34's
-  * ≤25-row Markov qln table) with the oracle as a VALUES literal, the
-  * same device as the ann_lsh splitmix hyperplanes — the oracle then
-  * replays the engine's integers verbatim and independently re-verifies
-  * everything downstream (sessionization, joins, aggregation, ranking),
-  * while no engine-computed transcendental ever reaches the hashed
-  * columns. Works because `Verify` dumps `oracle_sql.json` AFTER running
-  * every query, and `SparkEntry.defs` is a `def` (SQL re-rendered at
-  * dump time). Each oracle carries a data-independent fallback for the
-  * stash-empty case (focused runs that skip the producing query).
+/** The oracle's literal stashes (TwiddleStash, EsdLamStash) share a few
+  * Spark-computed constants with the DuckDB oracle as VALUES literals,
+  * so the oracle replays the engine's numbers verbatim and re-verifies
+  * everything downstream. `Verify` dumps `oracle_sql.json` after running
+  * every query, and `SparkEntry.defs` is a `def`, so the SQL is rendered
+  * with whatever the queries stashed; each such oracle also carries a
+  * data-independent fallback for an empty stash (a focused run that
+  * skips the producing query).
   */
 object OracleLiterals {
-  /** SPARK_GRAFT_ORACLE_NO_STASH=1 makes every literal-sharing stash
-    * render as empty, forcing ALL oracles onto their engine-computed
-    * fallback branches — the selfcheck runs the full suite this way to
-    * prove that WHICHEVER branch an unknown harness renders, the gate
-    * is green (the r5-r7 q34 lesson, generalized).
+  /** SPARK_GRAFT_ORACLE_NO_STASH=1 makes every stash render as empty,
+    * forcing all oracles onto their fallback branches — the selfcheck
+    * runs the full suite this way to prove that whichever branch a
+    * harness renders, the gate is green.
     */
   private[graft] def suppressed: Boolean =
     sys.env.contains("SPARK_GRAFT_ORACLE_NO_STASH")
-
-  private val stash = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def put(key: String, valuesList: String): Unit = stash.put(key, valuesList)
-  def get(key: String): Option[String] =
-    if (suppressed) None else Option(stash.get(key))
 }
 
 /** DFT twiddle tables shared with the oracle (see functions.Dsp): one

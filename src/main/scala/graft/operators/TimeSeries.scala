@@ -67,12 +67,16 @@ object TimeSeries {
                   bucket: Long = BucketSec): DataFrame = {
     val spark = signals.sparkSession
     import spark.implicits._
-    // the ONE shuffle of the raw signal stream is pinned to an explicit
-    // (name, node) width (AQE-exempt; the r12 SignalKernel finding: the
-    // old groupByKey exchange was opaque-keyed and sub-MB at bench
-    // scale, so AQE's byte-based coalescing serialized the whole
-    // BigDecimal fold onto 1-2 tasks); the relational grouping below
-    // reuses this exchange, so the per-signal fold runs in-stage wide
+    // the raw signal stream is laid out by (name, node) at an explicit
+    // width (AQE-exempt; the r12 SignalKernel finding: an exchange left
+    // to AQE was sub-MB at bench scale, and byte-based coalescing
+    // serialized the whole BigDecimal fold onto 1-2 tasks); the
+    // relational grouping below reuses that layout, so the per-signal
+    // fold runs in-stage wide. An input that already carries
+    // hashpartitioning(name, node) at this width (the advisor's
+    // persisted signals, laid out by MetricsCsv.read's window gate)
+    // needs no repartition, and the planner drops it: there the raw
+    // stream's one shuffle is the read gate's exchange
     val proj = signals.select(col("name"), col("node"),
       expr(s"tsec div $step").as("cell"), col("value"))
     SignalKernel.series(

@@ -49,8 +49,9 @@ object AdvisorReport {
     * value) — the shape every source module emits.
     */
   def buildGridFromSignals(signals: DataFrame, cfg: Config = Config()): DataFrame =
-    // fused resample+ffill+index: ONE exchange of the signal stream
-    // instead of three (TimeSeries.gridOnePass doc; bit-equality to
+    // fused resample+ffill+index: at most ONE exchange of the signal
+    // stream instead of three, none when the signals already carry the
+    // (name, node) layout (TimeSeries.gridOnePass doc; bit-equality to
     // the operator-composed form pinned by TimeSeriesSpec)
     TimeSeries.gridOnePass(signals, cfg.stepSec, cfg.bucketSec)
 
@@ -58,10 +59,13 @@ object AdvisorReport {
     * signals whose whole-series range is ≤ minRange — flat signals
     * carry no information and must not reach anomaly detection.
     * A window max/min over (name, node) instead of aggregate +
-    * semi-join: the ffill grid is already hash-partitioned by signal,
-    * so the gate is one in-partition pass with no extra exchange and
-    * no second execution of the grid-build pipeline for the join's
-    * build side (same rounding contract as TimeSeries.rangeGate).
+    * semi-join, so the grid-build pipeline does not run a second time
+    * for the join's build side (same rounding contract as
+    * TimeSeries.rangeGate). The grid kernel's typed-group output
+    * carries no partitioning, so the window's requirement plans one
+    * `hashpartitioning(name, node)` exchange of the grid
+    * (ENSURE_REQUIREMENTS); that exchange is what gives the persisted
+    * grid its (name, node) layout.
     */
   private def gateSignals(grid: DataFrame, cfg: Config): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("name", "node")

@@ -1,13 +1,17 @@
 package graft
 
+import graft.report.AdvisorReport
+import graft.sources.MetricsCsv
 import java.nio.file.{Files, Path}
 
 /** A known answer for the whole advisor, `Main.run`, on a bundle this
   * suite writes itself: TiDB-shaped, colon-named wide CSVs at a 15 s
   * step, 480 samples (12 buckets of 40). Planted: a level shift on one
   * reference objective, a candidate on the same instance that carries
-  * the same step `Lag` samples later, one flat series, and a background
-  * series with an empty and a `NaN` cell.
+  * the same step `Lag` samples later, a single-sample spike on a second
+  * reference objective in another bucket, one flat series, a background
+  * series with an empty and a `NaN` cell, and a CSV with a `timestamp`
+  * column and no instance column.
   */
 class AdvisorKnownAnswerSpec extends SparkTestBase {
   private val Step = 15L
@@ -21,6 +25,9 @@ class AdvisorKnownAnswerSpec extends SparkTestBase {
   private val ShiftBucket = 6
   private val ShiftAt = ShiftBucket * BucketSamples + 18
   private val Lag = 2
+  private val Spiked = "tidb_p99_get_token_dur"
+  private val SpikeAt = 2 * BucketSamples + 20
+  private val NoColumns = "tidb_no_instance:total"
 
   /** Writes the bundle; returns the metric names written. */
   private def writeBundle(dir: Path): Seq[String] = {
@@ -33,19 +40,24 @@ class AdvisorKnownAnswerSpec extends SparkTestBase {
     // candidate sample i + Lag mirrors objective sample i
     for (i <- ShiftAt + Lag until Samples) leader(i) += 20.0
     def fmt(xs: Array[Double]) = xs.map(v => "%.2f".formatLocal(java.util.Locale.ROOT, v))
+    val spiked = noise(30.0, 1.0)
+    spiked(SpikeAt) += 15.0
     val background = fmt(noise(60.0, 3.0))
     background(100) = ""
     background(300) = "NaN"
     val metrics = Seq(
       Objective -> fmt(obj),
       Leader -> fmt(leader),
+      Spiked -> fmt(spiked),
       Flat -> Array.fill(Samples)("7.00"),
       "node_io_util:by_instance" -> background)
     metrics.foreach { case (name, cells) =>
       val lines = s"timestamp,$Inst" +: cells.indices.map(i => s"${Start + Step * i},${cells(i)}")
       Files.writeString(dir.resolve(s"$name.csv"), lines.mkString("", "\n", "\n"))
     }
-    metrics.map(_._1)
+    val stamps = "timestamp" +: (0 until Samples).map(i => (Start + Step * i).toString)
+    Files.writeString(dir.resolve(s"$NoColumns.csv"), stamps.mkString("", "\n", "\n"))
+    metrics.map(_._1) :+ NoColumns
   }
 
   test("Main.run ranks the planted leading candidate first at its lag in the shift's bucket") {
@@ -65,8 +77,21 @@ class AdvisorKnownAnswerSpec extends SparkTestBase {
       s"rank 1 in bucket $bucket is $top")
     assert(md.contains(s"### bucket $bucket"), "the shift's bucket has no chart")
     assert(!md.contains(Flat), "the flat series reached the report")
+    assert(!md.contains(NoColumns), "the column-less metric reached the report")
     Main.RefObjectives.filter(written.contains).foreach { o =>
       assert(md.contains(s"| $o/"), s"objective $o missing from Details")
     }
+
+    // the outlier branch: the spike is flagged at its own grid time
+    val cfg = AdvisorReport.Config(objNames = Main.RefObjectives,
+      stepSec = Step, bucketSec = BucketSamples * Step)
+    val grid = AdvisorReport.gatedGrid(
+      MetricsCsv.read(spark, dir.toString), cfg)
+    val flagged = AdvisorReport.objectiveAnomalies(grid, cfg)
+      .filter(s"name = '$Spiked' AND kind = 'outlier'")
+      .select("node", "tsb").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(flagged.contains((Inst, Start + Step * SpikeAt)),
+      s"no outlier at the spike's grid time: $flagged")
+    Caches.release()
   }
 }

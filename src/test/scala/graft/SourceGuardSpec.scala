@@ -8,9 +8,10 @@ import scala.jdk.CollectionConverters._
   * width reads the session width through `Widths` (core.scala),
   * operator, function, source and report code never reads the process
   * environment, no code runs a Structured Streaming query, and there
-  * is one connected-components loop, and only `SignalKernel` spells the
-  * per-signal row tuple. Each rule stops one kind of drift from coming
-  * back a file at a time.
+  * is one connected-components loop, only `SignalKernel` spells the
+  * per-signal row tuple, and each oracle fragment `SparkEntry` shares is
+  * spelled once, in its helper. Each rule stops one kind of drift from
+  * coming back a file at a time.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -80,5 +81,33 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       case (p, src) if row.findFirstIn(src).isDefined => p.getFileName.toString
     }
     assert(hits == Seq("SignalKernel.scala"), s"per-signal row tuple named in $hits")
+  }
+
+  test("each shared oracle fragment is spelled only inside its SparkEntry helper") {
+    // a new query or oracle calls the helper; a second spelling of one
+    // of these contracts would let a later fix land in one copy only
+    val src = Files.readString(root.resolve("graft/SparkEntry.scala"))
+    val families = Seq(
+      "val brk = when(" -> "private def sessions(",
+      "CASE WHEN tsec - lag(tsec) OVER w > 1800" -> "private val SQL_SESS =",
+      "CASE WHEN mr > 0 THEN mr ELSE 1.0 END" -> "private val SQL_MR =",
+      "st0 AS (SELECT name, node, count(*) AS n," -> "private def sqlKsigma(",
+      "regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) AS punct" ->
+        "private val SQL_TEXT_COUNTS =",
+      "i -> w[i] || ' ' || w[i + 1]))) AS s FROM" -> "private def sqlShingles(",
+      "SELECT e.b AS doc_id, c.lab FROM comp c JOIN edges e ON e.a = c.doc_id" ->
+        "private def sqlComponents(",
+      "row_number() OVER (PARTITION BY n.vec_id ORDER BY" -> "private def sqlAssign(")
+    families.foreach { case (text, helper) =>
+      val start = src.indexOf(helper)
+      assert(start >= 0, s"no helper `$helper`")
+      val end = src.indexOf("\n\n", start)
+      val at = Iterator.iterate(src.indexOf(text))(i => src.indexOf(text, i + 1))
+        .takeWhile(_ >= 0).toSeq
+      val outside = at.filter(i => i < start || i > end)
+        .map(i => src.substring(0, i).count(_ == '\n') + 1)
+      assert(at.nonEmpty && outside.isEmpty,
+        s"`$text` spelled outside `$helper` at SparkEntry.scala lines $outside")
+    }
   }
 }

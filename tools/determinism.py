@@ -8,20 +8,17 @@ depends on partitioning — a nondeterminism the oracle gate can't see
 Usage: python3 tools/determinism.py [sfdir] [cpusA] [cpusB]
 """
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 
 SFDIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 CPUS = (sys.argv[2] if len(sys.argv) > 2 else "5",
         sys.argv[3] if len(sys.argv) > 3 else "32")
-OUTS = [f"/tmp/graft_det_{c}" for c in CPUS]
 
 
 def run_verify(cpus, out):
-    # fresh output dir: stale results from a previous run would make a
-    # query that failed this time compare as "identical"
-    import shutil
-    shutil.rmtree(out, ignore_errors=True)
     env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
     r = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Verify {SFDIR} {out}"],
@@ -39,19 +36,30 @@ def norm(rows):
 
 
 def main():
+    # both dumps go to one fresh temporary directory, removed on exit
+    # (also when a run fails): a stale dump from an earlier run would
+    # make a query that failed this time compare as "identical"
+    tmp = tempfile.mkdtemp(prefix="graft_det_")
+    try:
+        compare([os.path.join(tmp, c) for c in CPUS])
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def compare(outs):
     import duckdb
-    for cpus, out in zip(CPUS, OUTS):
+    for cpus, out in zip(CPUS, outs):
         run_verify(cpus, out)
     con = duckdb.connect()
-    names = set(os.listdir(OUTS[0])) | set(os.listdir(OUTS[1]))
+    names = set(os.listdir(outs[0])) | set(os.listdir(outs[1]))
     names.discard("oracle_sql.json")
     ok, bad = 0, 0
     for name in sorted(names):
         try:
             a = norm(con.execute(
-                f"SELECT * FROM read_parquet('{OUTS[0]}/{name}/*.parquet')").fetchall())
+                f"SELECT * FROM read_parquet('{outs[0]}/{name}/*.parquet')").fetchall())
             b = norm(con.execute(
-                f"SELECT * FROM read_parquet('{OUTS[1]}/{name}/*.parquet')").fetchall())
+                f"SELECT * FROM read_parquet('{outs[1]}/{name}/*.parquet')").fetchall())
         except Exception as e:
             bad += 1
             print(f"DIFF {name}: unreadable on one side ({e})")

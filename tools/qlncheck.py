@@ -10,9 +10,9 @@ mismatch is a DuckDB semantics difference (shift/divide/bin), which is
 exactly what the oracle-side kernel must not have.
 
 The Scala side is pinned separately: ExactMathSpec runs the generated
-SQL through Spark against the Scala kernel, and the selfcheck's
-SPARK_GRAFT_Q34_FALLBACK=1 run exercises the full q34 fallback branch
-end-to-end in DuckDB.
+SQL through Spark against the Scala kernel, and every selfcheck runs
+the q34 oracles end-to-end in DuckDB (they have no stash branch: the
+model is always re-derived from the raw events through this kernel).
 
 Usage: python3 tools/qlncheck.py
 """
