@@ -130,10 +130,17 @@ object Bench {
     out
   }
 
-  /** `s` as the body of a JSON string literal. */
+  /** `s` as the body of a JSON string literal: backslash, quote, and
+    * ALL control chars (< 0x20) escaped — a tab or CR in an oracle's SQL
+    * would otherwise make a reader's `json.load` of `oracle_sql.json`
+    * fail.
+    */
   private[graft] def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   }

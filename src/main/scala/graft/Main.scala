@@ -4,6 +4,7 @@ import graft.report.AdvisorReport
 import graft.Caches._
 import graft.sources.{MetricsCsv, MetricsProm, MetricsTar, TempDirs}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** The CLI the reference exposes (`python metrics_advisor.py <bundle>`,
@@ -52,7 +53,8 @@ object Main {
   /** One advisor pass, each layer computed once: the cleaned signals
     * feed step inference and the grid build from one scan, and one
     * objective anomaly pass feeds both the advice join and the chart
-    * markers. The pass leaves nothing behind, also when it throws: it
+    * markers. Those three frames (signals, grid, anomalies) are all the
+    * pass tracks. It leaves nothing behind, also when it throws: it
     * releases exactly the frames tracked while it ran (frames cached
     * before the call stay cached), then deletes the temp dirs its
     * ingest made (the untarred bundle and the link dir).
@@ -67,7 +69,9 @@ object Main {
             input.endsWith(".tar") || input.endsWith(".gz"))
           MetricsCsv.read(spark, MetricsTar.extractCsvs(input, tmp).toString, minSamples = 20, tmp)
         else if (input.endsWith(".prom") || input.endsWith(".txt"))
-          MetricsProm.signals(spark, input)
+          // NaN and ±Inf are valid exposition samples, but the advisor
+          // drops them at ingest as MetricsCsv does
+          MetricsProm.signals(spark, input).filter(Num.finite(col("value")))
         else MetricsCsv.read(spark, input, minSamples = 20, tmp)
       ).persist(StorageLevel.MEMORY_AND_DISK).tracked
       // bucket = 40 samples, the reference's count_bucket × sample step
@@ -78,9 +82,6 @@ object Main {
       val g = AdvisorReport.gatedGrid(signals, cfg)
       val a = AdvisorReport.objectiveAnomalies(g, cfg)
         .persist(StorageLevel.MEMORY_AND_DISK).tracked
-      // the detector's series-length stash has scanned, and so cached,
-      // the whole grid: nothing reads the signals again
-      signals.unpersist()
       val advice = AdvisorReport.adviseOnGrid(g, cfg, a)
       AdvisorReport.renderMarkdown(advice, Some(g), cfg = cfg, anomalies = Some(a))
     } finally tmp.deleteAll()

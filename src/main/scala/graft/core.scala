@@ -50,6 +50,10 @@ object Num {
 
   def r6(c: Column): Column = rFloor(c, 1e-11, 1e6)
 
+  /** True for a finite double: false for NULL, NaN and ±Infinity. */
+  def finite(c: Column): Column =
+    c.isNotNull && !isnan(c) && abs(c) =!= lit(Double.PositiveInfinity)
+
   /** value × `scale` as an exact integer (DECIMAL(18,0)) — the input to
     * order-independent moment sums (see Correlate): integer sums are
     * exact in any engine, and their int→double casts are correctly
@@ -65,79 +69,6 @@ object Num {
   // IEEE op sequence, identical values, child evaluated once.
   private def rFloor(c: Column, eps: Double, scale: Double): Column =
     org.apache.spark.sql.graft.VectorExpressions.roundFloor(c, eps, scale)
-}
-
-/** The oracle's literal stashes (TwiddleStash, EsdLamStash) share a few
-  * Spark-computed constants with the DuckDB oracle as VALUES literals,
-  * so the oracle replays the engine's numbers verbatim and re-verifies
-  * everything downstream. `Verify` dumps `oracle_sql.json` after running
-  * every query, and `SparkEntry.defs` is a `def`, so the SQL is rendered
-  * with whatever the queries stashed; each such oracle also carries a
-  * data-independent fallback for an empty stash (a focused run that
-  * skips the producing query).
-  */
-object OracleLiterals {
-  /** SPARK_GRAFT_ORACLE_NO_STASH=1 makes every stash render as empty,
-    * forcing all oracles onto their fallback branches — the selfcheck
-    * runs the full suite this way to prove that whichever branch a
-    * harness renders, the gate is green.
-    */
-  private[graft] def suppressed: Boolean =
-    sys.env.contains("SPARK_GRAFT_ORACLE_NO_STASH")
-}
-
-/** DFT twiddle tables shared with the oracle (see functions.Dsp): one
-  * VALUES row per pad size m — `(m, [cos...], [sin...])` with %.17e
-  * literals (bare decimals are DECIMAL in DuckDB and would silently
-  * decimal-ize the folds). The spectral kernels stash every m they
-  * encounter (per-series nextPow2 counts, a bounded set); the union
-  * across queries is rendered at oracle-dump time.
-  */
-object TwiddleStash {
-  private val rows = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-  def ensure(ms: Iterable[Int]): Unit = ms.foreach { m =>
-    if (m >= 1 && !rows.containsKey(m)) {
-      val (c, s) = graft.functions.Dsp.twiddles(m)
-      rows.put(m, s"($m, [${c.map(v => f"$v%.17e").mkString(", ")}], " +
-        s"[${s.map(v => f"$v%.17e").mkString(", ")}])")
-    }
-  }
-  /** VALUES list for `tw(m, tc, ts)`, or None when nothing is stashed
-    * (focused oracle dumps that skipped every spectral query).
-    */
-  def sqlValues: Option[String] = {
-    if (OracleLiterals.suppressed) return None
-    import scala.jdk.CollectionConverters._
-    val ks = rows.keySet().asScala.toSeq.sorted
-    if (ks.isEmpty) None else Some(ks.map(rows.get).mkString(", "))
-  }
-}
-
-/** Rosner-ESD critical values shared with the oracle: lam4 =
-  * ⌊(λ_m + 1e-9)·1e4 + 0.5⌋ per active-count m, computed by the SAME
-  * Stats route the per-series kernel runs (tQuantile bisection), so
-  * the oracle replays the kernel's integers instead of re-deriving λ
-  * through an independent lgamma t-CDF.
-  */
-object EsdLamStash {
-  private val rows = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-  def ensure(ms: Iterable[Long], alpha: Double): Unit = {
-    // the oracle's elam consumer (and its lgamma fallback chain) is
-    // hardwired to the gate config α = 0.05 — a non-default alpha must
-    // never poison the shared table (kernels always compute their own
-    // λ per call; only the SQL replay reads this stash)
-    if (alpha != 0.05) return
-    ms.foreach { m =>
-      if (m >= 3 && !rows.containsKey(m))
-        rows.put(m, graft.functions.Stats.esdLam4(m.toInt, alpha))
-    }
-  }
-  def sqlValues: Option[String] = {
-    if (OracleLiterals.suppressed) return None
-    import scala.jdk.CollectionConverters._
-    val ks = rows.keySet().asScala.toSeq.sorted
-    if (ks.isEmpty) None else Some(ks.map(m => s"($m, ${rows.get(m)})").mkString(", "))
-  }
 }
 
 /** Workload-derived exchange widths (guide §2.2/§2.5: partition counts

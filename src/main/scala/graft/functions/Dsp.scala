@@ -19,8 +19,8 @@ package graft.functions
   *  - twiddles come from [[twiddles]]: `StrictMath.cos/sin`, which the
   *    JLS pins to fdlibm bit-exactness on EVERY JVM (driver, executor,
   *    any architecture). The oracle consumes the SAME doubles as
-  *    VALUES literals (graft.TwiddleStash), so no engine ever computes
-  *    a trig function on the hashed path;
+  *    VALUES literals (SparkEntry's oracle stash), so no engine ever
+  *    computes a trig function on the hashed path;
   *  - all DFT/convolution folds run in a FIXED order (k- or
   *    j-ascending from 0.0), mirrored by `list_reduce(list_prepend(
   *    0.0, list(... ORDER BY ...)))` on the oracle side — IEEE-exact
@@ -37,13 +37,6 @@ object Dsp {
     p
   }
 
-  /** DFT twiddle tables cos/sin(2π·j/m), j ∈ [0, m), via StrictMath —
-    * the JLS-pinned fdlibm implementations, bit-identical on any JVM.
-    * This is the ONE code path that evaluates trig for the whole
-    * spectral family: per-task kernels call it locally, and the oracle
-    * receives the same doubles as literals (TwiddleStash renders them
-    * from this same function on the driver).
-    */
   /** Soft cost guard (r7 advice): the Dirichlet/direct-DFT kernels are
     * O(m·c)+O(n·m) PER SERIES — deliberate (bit-exactness beats an FFT
     * here) and fine under the retention cap (m ≤ ~8k → ≤10^8 ops), but
@@ -54,6 +47,13 @@ object Dsp {
   final val PadSoftMax = 1 << 14
   private val warnedPads = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
+  /** DFT twiddle tables cos/sin(2π·j/m), j ∈ [0, m), via StrictMath —
+    * the JLS-pinned fdlibm implementations, bit-identical on any JVM.
+    * This is the ONE code path that evaluates trig for the whole
+    * spectral family: per-task kernels call it locally, and the oracle
+    * receives the same doubles as literals (SparkEntry's oracle stash
+    * renders them from this same function on the driver).
+    */
   def twiddles(m: Int): (Array[Double], Array[Double]) = {
     if (m > PadSoftMax && warnedPads.add(m))
       System.err.println(s"[graft.Dsp] pad size m=$m exceeds the soft bound " +

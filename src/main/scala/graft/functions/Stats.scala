@@ -112,9 +112,9 @@ object Stats {
     else regIncBeta(d2 / 2.0, d1 / 2.0, d2 / (d2 + d1 * f))
 
   /** The ESD round-i critical value, ×1e4-floored — the EXACT integer
-    * the per-series kernel compares against; EsdLamStash shares these
-    * with the DuckDB oracle as literals so no lgamma/atan t-CDF runs
-    * on the hashed path. λ_m = (m−1)·t_{p,ν} / √((ν + t²)·m) with
+    * the per-series kernel compares against; SparkEntry's oracle stash
+    * shares these with the DuckDB oracle as literals so no lgamma/atan
+    * t-CDF runs on the hashed path. λ_m = (m−1)·t_{p,ν} / √((ν + t²)·m) with
     * p = 1 − α/(2m), ν = m − 2 (Rosner 1983).
     */
   def esdLam4(m: Int, alpha: Double = 0.05): Long = {
@@ -154,8 +154,8 @@ object Stats {
     * R = bestDev·√(m−1)/√S2 is a fixed 4-op IEEE sequence over
     * correctly-rounded casts. The verdict compares ⌊(R+1e-9)·1e4+0.5⌋
     * > lam4 as integers, with lam4 = [[esdLam4]] — the same integers
-    * the oracle consumes as EsdLamStash literals (StrictMath chain, so
-    * driver stash ≡ executor kernel on any JVM).
+    * the oracle consumes as SparkEntry-stashed literals (StrictMath
+    * chain, so driver stash ≡ executor kernel on any JVM).
     */
   def esdOutliersQ(qs: Array[Long], kMax: Int, alpha: Double = 0.05): Seq[Int] = {
     val n = qs.length

@@ -18,40 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object ChangePoints {
 
-  /** The distinct series lengths of `grid`, in one job. The grid is
-    * persisted BEFORE the action: the collect is an extra Spark action
-    * over it, and an un-persisted grid would re-run the whole
-    * events→resample→ffill build here and again in the kernel pass (r7
-    * advice). Only the DISTINCT lengths come back — a handful of rows
-    * however many million signals the fleet has (r7 verdict #3: the
-    * per-signal collect was a driver-OOM path).
-    */
-  private def seriesLengths(grid: DataFrame): Array[Int] = {
-    grid.persist().tracked
-    grid.groupBy("name", "node").count()
-      .select("count").distinct().collect().map(_.getLong(0).toInt)
-  }
-
-  /** Stash the DFT twiddle tables this grid's series will use (one pad
-    * size per distinct series length) so the oracle consumes the same
-    * StrictMath doubles as literals.
-    */
-  private def stashSpectral(grid: DataFrame): Unit =
-    graft.TwiddleStash.ensure(seriesLengths(grid).map(Dsp.nextPow2).distinct.toSeq)
-
-  /** Stash the ESD critical values (per active-count m) the per-series
-    * kernels will compare against; lam4 comes from the kernel's own
-    * Stats route.
-    */
-  private def stashEsdLams(grid: DataFrame, kFrac: Double, alpha: Double): Unit = {
-    val ms = seriesLengths(grid).flatMap { n =>
-      val kMax = math.max(1, math.ceil(n * kFrac).toInt)
-      val k = math.min(kMax, math.max(0, n - 2))
-      (0 until k).map(i => (n - i).toLong)
-    }.distinct.toSeq
-    graft.EsdLamStash.ensure(ms, alpha)
-  }
-
   /** Centered rolling median, window w (odd), edge-shrunk — mathbox
     * `moving_median` as pinned in SURVEY §4 (min_periods=1). Shared
     * with the report renderer, which draws the filtered overlay the
@@ -168,7 +134,6 @@ object ChangePoints {
   def esd(grid: DataFrame, alpha: Double = 0.05, kFrac: Double = 0.05): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    stashEsdLams(grid, kFrac, alpha)
     SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, xs) =>
         val kMax = math.max(1, math.ceil(xs.length * kFrac).toInt)
@@ -190,7 +155,6 @@ object ChangePoints {
                    minCycles: Int = 3): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    stashSpectral(grid)
     SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
         Dsp.dominantPeriod(xs, minCycles).map { case (period, strength) =>
@@ -207,7 +171,6 @@ object ChangePoints {
   def spectralEntropy(grid: DataFrame): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    stashSpectral(grid)
     SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, _, xs) =>
         Dsp.spectralEntropy(xs).map { case (h, n) =>
@@ -264,7 +227,6 @@ object ChangePoints {
                     autoFmin: Boolean = false): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    stashSpectral(grid)
     SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, x) =>
         val (trend, seas, detr) = decomposed(x, stepSec, fMin, w, autoFmin)
@@ -333,7 +295,6 @@ object ChangePoints {
                    maxPoints: Int = 64): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    stashSpectral(grid)
     SignalKernel.series(
       grid.select(col("name"), col("node"), col("tsb"), col("gval"))) { (name, node, ts, x) =>
         val n = x.length

@@ -343,42 +343,6 @@ object Clustering {
       .orderBy("cluster")
   }
 
-  /** PCA diagnostics over the embedding column: per-component explained
-    * variance ratio plus the projection variance — the dimensionality
-    * audit run before quantizing or truncating vectors.
-    *
-    * ENGINE-EXACT, replacing the MLlib Gramian+SVD (whose kmeans‖-free
-    * determinism still rests on float summation order and LAPACK):
-    *
-    *  1. ONE distributed pass builds the exact integer second moments
-    *     of the ×1e6-quantized coordinates — m_i = Σ qx_i and
-    *     S_ij = Σ qx_i·qx_j — so the scaled covariance Gram
-    *     G = n·S − m·mᵀ is an exact BigInt matrix (the standard
-    *     n·(n−1)-scaled moment identity; no centering pass, no float
-    *     cancellation).
-    *  2. Top-k eigenpairs by QUANTIZED POWER ITERATION with deflation,
-    *     driver-side over the d×d Gram: every matvec is exact integer
-    *     arithmetic (G · qv); each round rescales by the exact max
-    *     component (nonneg-mod floor-div), takes the norm of the ≤1e6
-    *     integer vector (Σw² < 2⁵³ — exact in double, order-free), and
-    *     re-quantizes with the repo's IEEE floor sequence. Fixed 12
-    *     rounds; λ = ⌊qvᵀGqv / qvᵀqv⌋; deflation G ← G − ⌊λ·qv qvᵀ/1e12⌋
-    *     stays integer. Every step is replayed verbatim by the DuckDB
-    *     oracle (unrolled CTEs, like the Lloyd oracle).
-    *
-    * explained_var_ratio = λ_c / trace(G) (trace = Σ all eigenvalues,
-    * exact); proj_var = λ_c / (n(n−1)) / 1e12 (de-quantized sample
-    * variance of the projection). Output is engine-deterministic and
-    * partition-invariant by construction.
-    *
-    * λ is the Rayleigh quotient of the FIXED-ITERATION iterate, not an
-    * exact eigenvalue: on a well-separated spectrum (the case the
-    * audit exists for — "is there a dominant axis worth truncating
-    * to?") 12 rounds converge to 4 dp; on a near-isotropic spectrum
-    * the components are interchangeable and the reported λs answer
-    * the audit question ("no dominant axis") without ordering
-    * guarantees.
-    */
   /** Exact-integer Gram pipeline shared by [[pcaStats]] and
     * [[pcaWhiten]]: quantized cells → (n, dim, column sums m,
     * G = n·S − m·mᵀ as BigInt). None when n < 2 (no sample variance).
@@ -442,6 +406,42 @@ object Clustering {
     }
   }
 
+  /** PCA diagnostics over the embedding column: per-component explained
+    * variance ratio plus the projection variance — the dimensionality
+    * audit run before quantizing or truncating vectors.
+    *
+    * ENGINE-EXACT, replacing the MLlib Gramian+SVD (whose kmeans‖-free
+    * determinism still rests on float summation order and LAPACK):
+    *
+    *  1. ONE distributed pass builds the exact integer second moments
+    *     of the ×1e6-quantized coordinates — m_i = Σ qx_i and
+    *     S_ij = Σ qx_i·qx_j — so the scaled covariance Gram
+    *     G = n·S − m·mᵀ is an exact BigInt matrix (the standard
+    *     n·(n−1)-scaled moment identity; no centering pass, no float
+    *     cancellation).
+    *  2. Top-k eigenpairs by QUANTIZED POWER ITERATION with deflation,
+    *     driver-side over the d×d Gram: every matvec is exact integer
+    *     arithmetic (G · qv); each round rescales by the exact max
+    *     component (nonneg-mod floor-div), takes the norm of the ≤1e6
+    *     integer vector (Σw² < 2⁵³ — exact in double, order-free), and
+    *     re-quantizes with the repo's IEEE floor sequence. Fixed 12
+    *     rounds; λ = ⌊qvᵀGqv / qvᵀqv⌋; deflation G ← G − ⌊λ·qv qvᵀ/1e12⌋
+    *     stays integer. Every step is replayed verbatim by the DuckDB
+    *     oracle (unrolled CTEs, like the Lloyd oracle).
+    *
+    * explained_var_ratio = λ_c / trace(G) (trace = Σ all eigenvalues,
+    * exact); proj_var = λ_c / (n(n−1)) / 1e12 (de-quantized sample
+    * variance of the projection). Output is engine-deterministic and
+    * partition-invariant by construction.
+    *
+    * λ is the Rayleigh quotient of the FIXED-ITERATION iterate, not an
+    * exact eigenvalue: on a well-separated spectrum (the case the
+    * audit exists for — "is there a dominant axis worth truncating
+    * to?") 12 rounds converge to 4 dp; on a near-isotropic spectrum
+    * the components are interchangeable and the reported λs answer
+    * the audit question ("no dominant axis") without ordering
+    * guarantees.
+    */
   def pcaStats(embs: DataFrame, k: Int = 4, iters: Int = 12): DataFrame = {
     val spark = embs.sparkSession
     import spark.implicits._

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Caches._
 import graft.Num._
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -47,13 +47,9 @@ object Correlate {
     * (they quantize to constant 0 and fall to the zero-variance
     * filter on both engines).
     */
-  private[operators] def withQuant(grid: DataFrame, out: String = "qv"): DataFrame = {
-    val w = Window.partitionBy("name", "node")
-    val mRaw = max(abs(col("gval"))).over(w)
-    val m = when(mRaw > 0, mRaw).otherwise(lit(1.0))
+  private[operators] def withQuant(grid: DataFrame, out: String = "qv"): DataFrame =
     grid.withColumn(out,
-      floor((col("gval") / m) * lit(1e9) + lit(0.5)).cast(DecimalType(18, 0)))
-  }
+      TimeSeries.quantRel(col("gval"), TimeSeries.signalScale("gval")))
 
   /** Exact integer moment aggregates over quantized columns x, y.
     * Sums are DECIMAL (order-independent, exact); the cast to double is
@@ -504,14 +500,6 @@ object Correlate {
         col("nb").cast("double")))
   }
 
-  /** Full pairwise correlation matrix per bucket (zero lag), upper
-    * triangle only. Self-join on (bucket, index) → one shuffle. Same
-    * exact-integer-moment determinism as [[nccLag]].
-    *
-    * `sameNodeOnly` restricts pairs to signals on the same node (the
-    * node becomes an extra equi-join key, so the cross-node cells are
-    * never generated, not generated-then-filtered).
-    */
   /** Orthonormal-projection (PAA) sketch of a bucket series for the
     * THRESHOLD consumers' candidate pruning — unit-z-normalize the
     * quantized values (so pair Pearson r over an identical index range
@@ -560,6 +548,14 @@ object Correlate {
     out
   }
 
+  /** Full pairwise correlation matrix per bucket (zero lag), upper
+    * triangle only. Self-join on (bucket, index) → one shuffle. Same
+    * exact-integer-moment determinism as [[nccLag]].
+    *
+    * `sameNodeOnly` restricts pairs to signals on the same node (the
+    * node becomes an extra equi-join key, so the cross-node cells are
+    * never generated, not generated-then-filtered).
+    */
   def corrMatrix(indexedGrid: DataFrame, minOverlap: Int = 8,
                  sameNodeOnly: Boolean = false, widthCap: Int = 512,
                  pruneAbsR: Option[Double] = None): DataFrame = {
@@ -692,36 +688,15 @@ object Correlate {
     * node and 5 on another still matches), which fixed-lag NCC
     * structurally cannot express. Series are z-normalized (shape, not
     * scale) and compared under a Sakoe-Chiba band: O(n·band) per
-    * pair, not O(n²).
-    *
-    * Plan: each signal's series is collected ONCE in its own task
-    * (bounded by retention, the repo's per-signal contract), the
-    * tiny obj side broadcasts, and each pair's DP runs in a typed
-    * map — no driver involvement, parallelism = pair count.
+    * pair, not O(n²). Plan: [[perObjective]].
     */
   def dtwDist(grid: DataFrame, objNames: Seq[String], band: Int = 6): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val series = SignalKernel.series(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) {
-      (name, node, _, xs) =>
-        Iterator.single((name, node,
-          graft.functions.Dtw.znorm(graft.functions.Dtw.quantize(xs))))
-      }.toDF("name", "node", "series")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).tracked
-    val obj = series.filter(col("name").isin(objNames: _*))
-      .select(col("name").as("obj_name"), col("node"), col("series").as("os"))
-    val cand = series.filter(!col("name").isin(objNames: _*))
-      .select(col("name").as("cand_name"), col("node").as("cnode"),
-        col("series").as("cs"))
-    broadcast(obj).join(cand, col("node") === col("cnode"))
-      .select(col("obj_name"), col("cand_name"), col("node"), col("os"), col("cs"))
-      .as[(String, String, String, Array[Double], Array[Double])]
-      .map { case (o, c, nd, os, cs) =>
-        val d = graft.functions.Dtw.distance(os, cs, band)
-        (o, c, nd, r4d(d), os.length)
-      }
-      .toDF("obj_name", "cand_name", "node", "dtw", "n")
+    perObjective(grid, objNames)(xs =>
+      graft.functions.Dtw.znorm(graft.functions.Dtw.quantize(xs))) { (o, c, nd, os, cs) =>
+      Iterator.single((o, c, nd, r4d(graft.functions.Dtw.distance(os, cs, band)), os.length))
+    }.toDF("obj_name", "cand_name", "node", "dtw", "n")
   }
 
   /** Granger-causality F-test obj×candidate per node: does the
@@ -729,36 +704,44 @@ object Correlate {
     * (functions.Granger)? Correlation ranks "moves together"; this
     * ranks "its past predicts the objective" — direction-aware, so a
     * metric that merely reacts to the objective scores low where NCC
-    * scores it the same as a driver.
-    *
-    * Same plan shape as [[dtwDist]]: per-signal series collected once
-    * in their own tasks (retention-bounded), the tiny objective side
-    * broadcast, each pair's two small OLS solves running in a typed
-    * map — parallelism = pair count, one keyed shuffle total.
+    * scores it the same as a driver. Plan: [[perObjective]]; a pair
+    * whose series differ in length is skipped.
     */
   def grangerF(grid: DataFrame, objNames: Seq[String], p: Int = 2): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val series = SignalKernel.series(
-      grid.select(col("name"), col("node"), col("tsb"), col("gval"))) {
-      (name, node, _, xs) => Iterator.single((name, node, xs))
-      }.toDF("name", "node", "series")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).tracked
-    val obj = series.filter(col("name").isin(objNames: _*))
-      .select(col("name").as("obj_name"), col("node"), col("series").as("os"))
-    val cand = series.filter(!col("name").isin(objNames: _*))
-      .select(col("name").as("cand_name"), col("node").as("cnode"),
-        col("series").as("cs"))
-    broadcast(obj).join(cand, col("node") === col("cnode"))
-      .select(col("obj_name"), col("cand_name"), col("node"), col("os"), col("cs"))
-      .as[(String, String, String, Array[Double], Array[Double])]
-      .flatMap { case (o, c, nd, os, cs) =>
-        if (os.length != cs.length) None
-        else graft.functions.Granger.test(os, cs, p).map { r =>
-          (o, c, nd, r4d(math.min(r.fStat, 1e6)), r4d(r.pValue), r.nEff)
-        }
+    perObjective(grid, objNames)(identity) { (o, c, nd, os, cs) =>
+      if (os.length != cs.length) None
+      else graft.functions.Granger.test(os, cs, p).map { r =>
+        (o, c, nd, r4d(math.min(r.fStat, 1e6)), r4d(r.pValue), r.nEff)
       }
-      .toDF("obj_name", "cand_name", "node", "f_stat", "p_value", "n_eff")
+    }.toDF("obj_name", "cand_name", "node", "f_stat", "p_value", "n_eff")
+  }
+
+  /** The pairwise whole-series kernels' plan, the shape [[nccLag]] has:
+    * the objective slice of `grid` (name, node, tsb, gval) is collected
+    * when this is called ([[SignalKernel.collect]] sorts each series by
+    * `tsb`), passed through `prep` and broadcast by node; every
+    * candidate series gets the same `prep` inside its own (name, node)
+    * group on the grid's signal partitioning and is scored against each
+    * objective of its node as `score(obj_name, cand_name, node,
+    * objective, candidate)`. No series frame is persisted and nothing
+    * is joined.
+    */
+  private def perObjective[U: Encoder](grid: DataFrame, objNames: Seq[String])(
+      prep: Array[Double] => Array[Double])(
+      score: (String, String, String, Array[Double], Array[Double]) => IterableOnce[U])
+      : Dataset[U] = {
+    val isObj = col("name").isin(objNames: _*)
+    val cols = Seq("name", "node", "tsb", "gval").map(col)
+    val objs = SignalKernel.collect(grid.filter(isObj && col("node").isNotNull).select(cols: _*))
+      .groupBy(_._2).map { case (node, ss) => node -> ss.map(s => (s._1, prep(s._4))) }
+    val objBc = grid.sparkSession.sparkContext.broadcast(objs)
+    SignalKernel.series(grid.filter(!isObj).select(cols: _*)) { (name, node, _, xs) =>
+      val cs = prep(xs)
+      objBc.value.getOrElse(node, Array.empty[(String, Array[Double])]).iterator
+        .flatMap { case (o, os) => score(o, name, node, os, cs) }
+    }
   }
 
   /** First-order partial correlation per (candidate, node, bucket):
@@ -804,6 +787,25 @@ object Correlate {
           .as("r_partial"))
   }
 
+  /** The grid slice (name, node, i, gval), persisted — it feeds the
+    * range aggregate AND the bin join-back, so the grid-build pipeline
+    * runs once (prefixJaccard release convention) — and each sample's
+    * equal-width bin in [0, bins) over its series' [min, max] range (0
+    * for a flat series) as (name, node, i, bin): the discretization
+    * [[mutualInfo]] and [[transferEntropy]] count over.
+    */
+  private def binnedGrid(indexedGrid: DataFrame, bins: Int): (DataFrame, DataFrame) = {
+    val g = indexedGrid.select("name", "node", "i", "gval").persist().tracked
+    val rng = g.groupBy("name", "node")
+      .agg(min("gval").as("lo"), max("gval").as("hi"))
+    (g, g.join(rng, Seq("name", "node"))
+      .withColumn("bin", when(col("hi") > col("lo"),
+        least(floor((col("gval") - col("lo")) * lit(bins.toDouble) /
+          (col("hi") - col("lo"))).cast("int"), lit(bins - 1)))
+        .otherwise(lit(0)))
+      .select("name", "node", "i", "bin"))
+  }
+
   /** Binned mutual information I(obj; cand) per (candidate, node) —
     * the nonlinear complement to NCC/Spearman: a candidate driving the
     * objective through a V-shaped or saturating response has r ≈ 0
@@ -824,18 +826,7 @@ object Correlate {
     */
   def mutualInfo(indexedGrid: DataFrame, objName: String = "error",
                  bins: Int = 8): DataFrame = {
-    // the grid feeds the range aggregate AND the bin join-back —
-    // persisted so the grid-build pipeline runs once (prefixJaccard
-    // release convention)
-    val g = indexedGrid.select("name", "node", "i", "gval").persist().tracked
-    val rng = g.groupBy("name", "node")
-      .agg(min("gval").as("lo"), max("gval").as("hi"))
-    val binned = g.join(rng, Seq("name", "node"))
-      .withColumn("bin", when(col("hi") > col("lo"),
-        least(floor((col("gval") - col("lo")) * lit(bins.toDouble) /
-          (col("hi") - col("lo"))).cast("int"), lit(bins - 1)))
-        .otherwise(lit(0)))
-      .select("name", "node", "i", "bin")
+    val (g, binned) = binnedGrid(indexedGrid, bins)
     val o = binned.filter(col("name") === objName)
       .select(col("node"), col("i"), col("bin").as("ob"))
     val c = binned.filter(col("name") =!= objName)
@@ -903,15 +894,7 @@ object Correlate {
     */
   def transferEntropy(indexedGrid: DataFrame, objName: String = "error",
                       bins: Int = 8): DataFrame = {
-    val g = indexedGrid.select("name", "node", "i", "gval").persist().tracked
-    val rng = g.groupBy("name", "node")
-      .agg(min("gval").as("lo"), max("gval").as("hi"))
-    val binned = g.join(rng, Seq("name", "node"))
-      .withColumn("bin", when(col("hi") > col("lo"),
-        least(floor((col("gval") - col("lo")) * lit(bins.toDouble) /
-          (col("hi") - col("lo"))).cast("int"), lit(bins - 1)))
-        .otherwise(lit(0)))
-      .select("name", "node", "i", "bin")
+    val (g, binned) = binnedGrid(indexedGrid, bins)
     val wo = Window.partitionBy("node").orderBy("i")
     val o = binned.filter(col("name") === objName)
       .select(col("node"), col("i"), col("bin").as("yt"))

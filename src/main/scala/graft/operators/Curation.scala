@@ -24,8 +24,7 @@ import org.apache.spark.sql.graft.VectorExpressions.sortedIntersect
   *     the sorted merge-scan verify kernel.
   */
 object Curation {
-
-  private def words(c: org.apache.spark.sql.Column) = split(lower(c), "\\s+")
+  import Dedup.{spread, words}
 
   /** Cross-document passage duplication stats (the passage/paragraph
     * analogue of CCNet's line dedup — this corpus has no newlines, so
@@ -56,13 +55,6 @@ object Curation {
       .withColumn("dup_frac", r4(col("n_dup").cast("double") / col("n_passages")))
   }
 
-  /** Benchmark decontamination: overlapping `w`-word shingle collisions
-    * between the training corpus and an evaluation set. One row per
-    * (train doc, eval doc) pair sharing ≥ 1 shingle, with the count of
-    * DISTINCT shared shingles — the standard n-gram-overlap leak check
-    * run before any training job. Documents shorter than `w` words
-    * cannot form a shingle and are clean by definition.
-    */
   /** Distinct `w`-word shingle digests per doc: 128-bit md5 (exact join
     * identity) + 64-bit xxhash (bloom key). Raw shingle strings die
     * inside the task.
@@ -75,21 +67,17 @@ object Curation {
         s"i -> array_join(slice(w, i, $w), ' '))"))).as("p"))
     .select(col(idAs), md5(col("p")).as("ph"), xxhash64(col("p")).as("h64"))
 
-  /** Spread the CORPUS side before digesting (the Dedup.spread /
-    * text_ngram_novelty convention, r12): tokenize + per-shingle md5 is
-    * CPU-bound and the train corpus arrives as a single-file scan — one
-    * task digests everything while the session idles. One keyed
-    * exchange of the slim (doc_id, text) rows buys full-width digest
-    * compute; eval sides stay unspread (broadcast-sized by contract).
+  /** Benchmark decontamination: overlapping `w`-word shingle collisions
+    * between the training corpus and an evaluation set. One row per
+    * (train doc, eval doc) pair sharing ≥ 1 shingle, with the count of
+    * DISTINCT shared shingles — the standard n-gram-overlap leak check
+    * run before any training job. Documents shorter than `w` words
+    * cannot form a shingle and are clean by definition.
     */
-  private def spreadDocs(docs: DataFrame): DataFrame =
-    // r13: width from the measured corpus size, not the core count —
-    // saturates to full width on any real corpus. Dense budget: the
-    // shingle-digest pass is 10-20 s of CPU per MB (graft.Widths).
-    docs.repartition(graft.Widths.forDense(docs), col("doc_id"))
-
   def decontaminate(train: DataFrame, eval: DataFrame, w: Int = 8): DataFrame =
-    shingleDigests(spreadDocs(train), "doc_id", w)
+    // only the corpus side is spread before digesting; eval sides are
+    // broadcast-sized by contract
+    shingleDigests(spread(train), "doc_id", w)
       .join(broadcast(shingleDigests(eval, "eval_doc_id", w).select("eval_doc_id", "ph")), "ph")
       .groupBy("doc_id", "eval_doc_id")
       .agg(count(lit(1)).as("n_shared"))
@@ -111,7 +99,7 @@ object Curation {
     */
   def decontaminateFuzzy(train: DataFrame, eval: DataFrame, w: Int = 8,
                          minFrac: Double = 0.8): DataFrame = {
-    val tr = shingleDigests(spreadDocs(train), "doc_id", w).persist().tracked
+    val tr = shingleDigests(spread(train), "doc_id", w).persist().tracked
     val perDoc = tr.groupBy("doc_id").agg(count(lit(1)).as("n_train"))
     tr.join(broadcast(shingleDigests(eval, "eval_doc_id", w).select("eval_doc_id", "ph")), "ph")
       .groupBy("doc_id", "eval_doc_id")

@@ -16,7 +16,10 @@ import org.apache.spark.sql.graft.VectorExpressions.{sortedIntersect, vecDot, ve
   */
 object Dedup {
 
-  private def words(text: Column): Column = split(lower(text), "\\s+")
+  /** Lower-cased whitespace tokens, untrimmed (a leading blank yields
+    * an empty first token, unlike TextAnalysis' trimmed split).
+    */
+  private[operators] def words(text: Column): Column = split(lower(text), "\\s+")
 
   /** Sorted distinct bigram shingles from a word array. Caller
     * guarantees size(w) ≥ 2 (sequence(1, 0) DESCENDS and
@@ -43,11 +46,13 @@ object Dedup {
       .select(col("doc_id"), bigramShingles(col("w")).as("sh"))
 
   /** A text corpus often arrives as few large files; per-doc expression
-    * work (shingling, hashing) is CPU-bound, so spread it across all
-    * cores first. Keyed repartition keeps results deterministic (every
-    * downstream op aggregates by doc_id).
+    * work (tokenize, shingle, hash) is CPU-bound, so spread it across
+    * all cores first. Keyed repartition keeps results deterministic
+    * (every downstream op aggregates by doc_id, and keyed aggregates
+    * that include doc_id reuse this exchange). Shared by the dedup,
+    * text and curation operators.
     */
-  private def spread(docs: DataFrame): DataFrame =
+  private[operators] def spread(docs: DataFrame): DataFrame =
     // r13: width from the measured corpus size, not the core count —
     // saturates to full width on any real corpus. DENSE budget: the
     // downstream shingle/minhash digests burn 10-20 s of CPU per MB,
@@ -144,23 +149,6 @@ object Dedup {
     prefixJaccard(withShingles(docs).select(col("doc_id"), col("sh").as("tok")),
       threshold)
 
-  /** MinHash signatures + LSH banding → candidate pairs, verified with
-    * exact shingle Jaccard. numHashes=64, bands=16 (r=4) targets
-    * J ≈ 0.5+ candidates.
-    *
-    * Each shingle is hashed ONCE (variable-length string → long); the
-    * permutation family re-hashes that fixed-width long, so the per-row
-    * cost is 1 string hash + numHashes integer hashes instead of
-    * numHashes string hashes (~10× cheaper at corpus scale).
-    *
-    * ENGINE-EXACT (r4): the base hash is the repo's cross-engine
-    * md5-low-64 (not xxhash64 — no DuckDB analogue), the permutation
-    * family is pure wrapping-integer splitmix (replayable in HUGEINT
-    * mod 2⁶⁴), and band keys are the RAW signature slices (array join
-    * keys) instead of Spark's Murmur3 `hash` — so the ENTIRE
-    * bucket-then-verify pipeline, candidates included, replays in the
-    * DuckDB oracle.
-    */
   /** MinHash signatures per doc: min over shingles of the splitmix
     * permutation family applied to the md5-low-64 shingle hash.
     * A 64-column min-aggregate makes Catalyst generate (and Janino
@@ -393,6 +381,23 @@ object Dedup {
   private def sliceKey(prefix: Seq[Column], slice: Column): Column =
     concat(array(prefix.map(_.cast("long")): _*), slice)
 
+  /** MinHash signatures + LSH banding → candidate pairs, verified with
+    * exact shingle Jaccard. numHashes=64, bands=16 (r=4) targets
+    * J ≈ 0.5+ candidates.
+    *
+    * Each shingle is hashed ONCE (variable-length string → long); the
+    * permutation family re-hashes that fixed-width long, so the per-row
+    * cost is 1 string hash + numHashes integer hashes instead of
+    * numHashes string hashes (~10× cheaper at corpus scale).
+    *
+    * ENGINE-EXACT (r4): the base hash is the repo's cross-engine
+    * md5-low-64 (not xxhash64 — no DuckDB analogue), the permutation
+    * family is pure wrapping-integer splitmix (replayable in HUGEINT
+    * mod 2⁶⁴), and band keys are the RAW signature slices (array join
+    * keys) instead of Spark's Murmur3 `hash` — so the ENTIRE
+    * bucket-then-verify pipeline, candidates included, replays in the
+    * DuckDB oracle.
+    */
   def minhashLsh(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
                  threshold: Double = 0.6): DataFrame = {
     val rows = numHashes / bands

@@ -54,6 +54,18 @@ private[operators] object SignalKernel {
       f(key._1, key._2, ts, vs)
     }
 
+  /** [[series]]' contract on the driver: the rows of a small frame (an
+    * objective slice a pairwise kernel broadcasts) collected and handed
+    * over per (name, node) as the same sorted arrays, in no particular
+    * series order.
+    */
+  def collect(rows: DataFrame): Array[(String, String, Array[Long], Array[Double])] =
+    rows.toDF(rowEnc.schema.fieldNames.toIndexedSeq: _*).as(rowEnc).collect()
+      .groupBy(r => (r._1, r._2)).toArray.map { case ((name, node), rs) =>
+        val (ts, vs) = sortedByTime(rs.map(_._3), rs.map(_._4))
+        (name, node, ts, vs)
+      }
+
   /** [[Correlate.nccLag]]'s form: 5 columns — name, node, bucket (long),
     * sample index (long), value (double) — handed over as rows in no
     * particular order. Its bucket is not a function of the index alone,

@@ -431,22 +431,6 @@ object Similarity {
         r4(col("sxy") / (sqrt(col("sxx")) * sqrt(col("syy")))).as("cos_global"))
   }
 
-  /** Sign-sketch compression audit: fold each embedding to an
-    * nPlanes-bit sign sketch (bit p = sign⟨v, plane_p⟩ over the shared
-    * splitmix hyperplanes), then measure — per hamming distance — how
-    * well the sketch's angular estimate cos(π·h/nPlanes) tracks the
-    * true cosine over the IVF-cell candidate pairs. This is the
-    * decision table for replacing 256-byte float vectors with 4-byte
-    * sketches in the dedup/ANN exchanges (a 64× shuffle-width cut):
-    * read mean_abs_err at the hamming band your threshold lives in.
-    *
-    * Determinism: sketches are integer bitmasks from sign comparisons
-    * (the LSH bucketing contract); hamming is exact; true cosines
-    * round 4 dp and aggregate as exact ×1e4 integers, so the per-band
-    * means are single IEEE divisions over exact sums. Scale: the only
-    * pair generation is in-cell (Σ|cell|², [[autoCells]]-governed);
-    * sketch construction is one codegen scan.
-    */
   /** Estimated cosine per hamming band, cos(π·h/nPlanes) rounded 4 dp —
     * computed ONCE here (driver-side libm) and consumed as the SAME
     * double literals by the engine column and the oracle's VALUES list
@@ -480,6 +464,22 @@ object Similarity {
           .as("share"))
   }
 
+  /** Sign-sketch compression audit: fold each embedding to an
+    * nPlanes-bit sign sketch (bit p = sign⟨v, plane_p⟩ over the shared
+    * splitmix hyperplanes), then measure — per hamming distance — how
+    * well the sketch's angular estimate cos(π·h/nPlanes) tracks the
+    * true cosine over the IVF-cell candidate pairs. This is the
+    * decision table for replacing 256-byte float vectors with 4-byte
+    * sketches in the dedup/ANN exchanges (a 64× shuffle-width cut):
+    * read mean_abs_err at the hamming band your threshold lives in.
+    *
+    * Determinism: sketches are integer bitmasks from sign comparisons
+    * (the LSH bucketing contract); hamming is exact; true cosines
+    * round 4 dp and aggregate as exact ×1e4 integers, so the per-band
+    * means are single IEEE divisions over exact sums. Scale: the only
+    * pair generation is in-cell (Σ|cell|², [[autoCells]]-governed);
+    * sketch construction is one codegen scan.
+    */
   def bitSketchCalibration(embs: DataFrame, nPlanes: Int = 32,
                            nCells: Int = 8, sampleN: Int = 4096): DataFrame = {
     val planes = hyperplanes(nPlanes, 64)

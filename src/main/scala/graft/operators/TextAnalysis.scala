@@ -16,19 +16,6 @@ object TextAnalysis {
 
   private def words(text: Column): Column = split(lower(trim(text)), "\\s+")
 
-  /** A corpus often arrives as few large files, and per-doc explode
-    * work (tokenize, md5 every shingle) is CPU-bound — spread it across
-    * all cores BEFORE the explode (the Dedup.spread convention). Keyed
-    * repartition keeps results deterministic; downstream keyed
-    * aggregates that include doc_id reuse this exchange. Applied to the
-    * explode-heavy operators only — a plain one-pass column scan does
-    * not pay an exchange for parallelism it doesn't need.
-    */
-  private def spread(docs: DataFrame): DataFrame =
-    // r13: width from the measured corpus size, not the core count —
-    // saturates to full width on any real corpus (graft.Widths)
-    docs.repartition(graft.Widths.forDense(docs), col("doc_id"))
-
   val Stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "is", "of", "to", "in", "that", "it", "for", "on"),
     "de" -> Seq("der", "die", "und", "das", "ist", "nicht", "mit", "ein", "zu", "den"),
@@ -486,7 +473,10 @@ object TextAnalysis {
     * then a per-doc ratio of exact integers.
     */
   def ngramNovelty(docs: DataFrame): DataFrame = {
-    val grams = spread(docs)
+    // spread before the explode (Dedup.spread): applied to the
+    // explode-heavy operators only — a plain one-pass column scan does
+    // not pay an exchange for parallelism it doesn't need
+    val grams = Dedup.spread(docs)
       .select(col("doc_id"), words(col("text")).as("w"))
       // single-word docs have no bigrams; sequence(1, 0) DESCENDS
       .filter(size(col("w")) >= 2)

@@ -368,9 +368,6 @@ object TimeSeries {
     grid.withColumn("rel", col("gval") / (abs(max("gval").over(w)) + lit(1e-10)))
   }
 
-  /** Exponentially-weighted moving average per signal (recursive — a
-    * whole-series op, so a typed per-signal loop like e-divisive).
-    */
   /** LTTB downsampling to `nOut` points per signal — the shape-
     * preserving decimation a dashboard/report layer runs before
     * plotting (the reference renders every signal as a PNG; at real
@@ -397,6 +394,9 @@ object TimeSeries {
       .toDF("name", "node", "tsb", "gval")
   }
 
+  /** Exponentially-weighted moving average per signal (recursive — a
+    * whole-series op, so a typed per-signal loop like e-divisive).
+    */
   def ewma(grid: DataFrame, alpha: Double = 0.3): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
@@ -526,16 +526,6 @@ object TimeSeries {
         r4(sqrt(col("sse") / nd) / lit(1e9) * col("mm")).as("rmse"))
   }
 
-  /** Holt's linear (double) exponential smoothing per signal: level +
-    * trend state folded over the series, emitting the final state and
-    * 1-/3-step-ahead forecasts — the trend-aware upgrade of [[ewma]].
-    * Seed: l₀ = x₀, b₀ = x₁ − x₀; fold from x₂. A whole-series
-    * recursion → typed per-signal loop (one shuffle, series bounded by
-    * retention); the oracle replays the identical IEEE fold through a
-    * DuckDB RECURSIVE CTE — NOT a list_reduce struct fold, whose
-    * sequential field evaluation against a half-updated accumulator
-    * silently corrupts coupled recursions (see the verify skill notes).
-    */
   /** Additive Holt–Winters (level + trend + m-period season) — the
     * seasonal completion of [[holt]]: for fleets with daily rhythm the
     * two-state Holt chases the cycle into its trend; the seasonal state
@@ -643,6 +633,16 @@ object TimeSeries {
       .toDF("name", "node", "n", "n_scored", "holt_mae", "hw_mae", "winner")
   }
 
+  /** Holt's linear (double) exponential smoothing per signal: level +
+    * trend state folded over the series, emitting the final state and
+    * 1-/3-step-ahead forecasts — the trend-aware upgrade of [[ewma]].
+    * Seed: l₀ = x₀, b₀ = x₁ − x₀; fold from x₂. A whole-series
+    * recursion → typed per-signal loop (one shuffle, series bounded by
+    * retention); the oracle replays the identical IEEE fold through a
+    * DuckDB RECURSIVE CTE — NOT a list_reduce struct fold, whose
+    * sequential field evaluation against a half-updated accumulator
+    * silently corrupts coupled recursions (see the verify skill notes).
+    */
   def holt(grid: DataFrame, alpha: Double = 0.3, beta: Double = 0.2): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._

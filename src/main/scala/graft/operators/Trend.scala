@@ -142,26 +142,6 @@ object Trend {
     Some((s, tieNum))
   }
 
-  /** Theil-Sen slope per signal: the median of all pairwise slopes —
-    * the robust trend-rate estimate (breakdown point ~29%, immune to
-    * the outliers the advisor itself flags). Median interpolation is
-    * the shared exact-selection convention (Spark `percentile` ≡
-    * DuckDB `quantile_cont`). Slope in value-units per hour.
-    */
-  /** OLS linear trend per signal — slope (value-units/hour),
-    * intercept (fitted value at the series start), and r² — from
-    * exact integer moments: x = hours since the signal's first
-    * sample, y = the ×1e9 relative-quantized value (Correlate's
-    * scheme). Every sum is exact DECIMAL; slope/intercept/r² are
-    * fixed IEEE sequences rescaled by the (exactly-selected) signal
-    * magnitude, so the result is engine-deterministic end-to-end —
-    * the companion fit to [[theilSen]] (OLS is the efficient
-    * estimator when residuals are clean; Theil-Sen holds up when the
-    * advisor's own outliers contaminate them).
-    *
-    * One window for the per-signal scale/origin + one hash aggregate:
-    * map-side combinable, |signals| output rows.
-    */
   /** Dickey-Fuller unit-root test per signal: Δq_t = α + β·q_{t−1} + ε
     * on the scale-normalized ×1e9-quantized series, τ = β̂/se(β̂) from
     * EXACT integer moments (one lag window + one hash aggregate; every
@@ -173,13 +153,9 @@ object Trend {
     * (needs mean reversion) and the differencing/rate operators.
     */
   def adf(grid: DataFrame): DataFrame = {
-    val bySig = org.apache.spark.sql.expressions.Window.partitionBy("name", "node")
-    val ord = bySig.orderBy("tsb")
-    val mRaw = max(abs(col("gval"))).over(bySig)
-    val mm = when(mRaw > 0, mRaw).otherwise(lit(1.0))
-    val dec18 = org.apache.spark.sql.types.DecimalType(18, 0)
+    val ord = org.apache.spark.sql.expressions.Window.partitionBy("name", "node").orderBy("tsb")
     val q = grid.select(col("name"), col("node"), col("tsb"), col("gval"))
-      .withColumn("qv", floor((col("gval") / mm) * lit(1e9) + lit(0.5)).cast(dec18))
+      .withColumn("qv", TimeSeries.quantRel(col("gval"), TimeSeries.signalScale("gval")))
       .withColumn("xl", lag("qv", 1).over(ord))
       .filter(col("xl").isNotNull)
       .withColumn("dy", col("qv") - col("xl"))
@@ -204,17 +180,28 @@ object Trend {
         (col("tau") < lit(-2.86)).cast("int").as("stationary"))
   }
 
+  /** OLS linear trend per signal — slope (value-units/hour),
+    * intercept (fitted value at the series start), and r² — from
+    * exact integer moments: x = hours since the signal's first
+    * sample, y = the ×1e9 relative-quantized value (Correlate's
+    * scheme). Every sum is exact DECIMAL; slope/intercept/r² are
+    * fixed IEEE sequences rescaled by the (exactly-selected) signal
+    * magnitude, so the result is engine-deterministic end-to-end —
+    * the companion fit to [[theilSen]] (OLS is the efficient
+    * estimator when residuals are clean; Theil-Sen holds up when the
+    * advisor's own outliers contaminate them).
+    *
+    * One window for the per-signal scale/origin + one hash aggregate:
+    * map-side combinable, |signals| output rows.
+    */
   def olsTrend(indexedGrid: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("name", "node")
-    val mRaw = max(abs(col("gval"))).over(w)
-    val m = when(mRaw > 0, mRaw).otherwise(lit(1.0))
-    val dec18 = org.apache.spark.sql.types.DecimalType(18, 0)
     val q = indexedGrid.select(col("name"), col("node"), col("i"), col("gval"))
-      .withColumn("mm", m)
+      .withColumn("mm", TimeSeries.signalScale("gval"))
       .withColumn("x0", min(col("i")).over(w))
-      .withColumn("qv",
-        floor((col("gval") / col("mm")) * lit(1e9) + lit(0.5)).cast(dec18))
-      .withColumn("xi", (col("i") - col("x0")).cast(dec18))
+      .withColumn("qv", TimeSeries.quantRel(col("gval"), col("mm")))
+      .withColumn("xi", (col("i") - col("x0"))
+        .cast(org.apache.spark.sql.types.DecimalType(18, 0)))
     val agg = q.groupBy("name", "node")
       .agg(count(lit(1)).as("n"), max("mm").as("mm"),
         sum(col("xi")).cast("double").as("sx"),
@@ -238,6 +225,12 @@ object Trend {
           .otherwise(lit(0.0)).as("r2"))
   }
 
+  /** Theil-Sen slope per signal: the median of all pairwise slopes —
+    * the robust trend-rate estimate (breakdown point ~29%, immune to
+    * the outliers the advisor itself flags). Median interpolation is
+    * the shared exact-selection convention (Spark `percentile` ≡
+    * DuckDB `quantile_cont`). Slope in value-units per hour.
+    */
   def theilSen(grid: DataFrame): DataFrame =
     pairs(gridOnce(grid))
       .withColumn("slope",

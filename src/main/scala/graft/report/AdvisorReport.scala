@@ -20,15 +20,16 @@ import org.apache.spark.storage.StorageLevel
   * (MEMORY_AND_DISK) and registers it with `graft.Caches`, so
   * `Caches.release()` frees it like every operator-internal persist; a
   * caller that holds the grid can free it earlier with [[release]].
-  * `Main.run` runs each layer once and persists three frames: the
-  * cleaned signals (read by step inference and the grid build, released
-  * as soon as the grid is cached), the grid, and the
-  * [[objectiveAnomalies]] frame that both the advice join and the chart
-  * markers read. It runs the pass under `Caches.scoped`, which releases
-  * exactly what was tracked during the pass (those three and the
-  * operators' own persists, such as the detector's objective slice and
-  * the Granger series), so a pass that returns or throws leaves nothing
-  * cached, and frames the caller tracked before stay cached.
+  * Nothing else here persists: building [[objectiveAnomalies]] runs no
+  * job, and the NCC and Granger kernels score candidates against a
+  * collected, broadcast objective slice instead of a cached series
+  * frame. `Main.run` runs each layer once and tracks exactly three
+  * frames: the cleaned signals (read by step inference and the grid
+  * build), the grid, and the [[objectiveAnomalies]] frame that both the
+  * advice join and the chart markers read. It runs the pass under
+  * `Caches.scoped`, which releases exactly what was tracked during the
+  * pass, so a pass that returns or throws leaves nothing cached, and
+  * frames the caller tracked before stay cached.
   */
 object AdvisorReport {
 
@@ -36,7 +37,6 @@ object AdvisorReport {
       objNames: Seq[String] = Seq("click", "error"),
       stepSec: Long = 3600L,
       bucketSec: Long = 86400L,
-      nodeMod: Int = 4,
       topK: Int = 5,
       minRange: Double = 0.005,
       // anomaly-detector knobs, threaded into ChangePoints.anomalyUnion;
@@ -44,16 +44,6 @@ object AdvisorReport {
       // composite replays in the DuckDB oracle — see SparkEntry
       permutations: Int = 100,
       maxPoints: Int = 64)
-
-  /** Dense forward-filled grid from long signals (name, node, tsec,
-    * value) — the shape every source module emits.
-    */
-  def buildGridFromSignals(signals: DataFrame, cfg: Config = Config()): DataFrame =
-    // fused resample+ffill+index: at most ONE exchange of the signal
-    // stream instead of three, none when the signals already carry the
-    // (name, node) layout (TimeSeries.gridOnePass doc; bit-equality to
-    // the operator-composed form pinned by TimeSeriesSpec)
-    TimeSeries.gridOnePass(signals, cfg.stepSec, cfg.bucketSec)
 
   /** The reference's validity gate (metrics_advisor.py:146): drop
     * signals whose whole-series range is ≤ minRange — flat signals
@@ -88,23 +78,16 @@ object AdvisorReport {
       .drop("_rng")
   }
 
-  /** The advisor answer: for each bucket where an objective signal is
-    * anomalous, the top-k correlated candidate signals (reference
-    * :177-230). One DataFrame, driver-collect-free until render.
-    */
-  def advise(events: DataFrame, cfg: Config = Config()): DataFrame =
-    adviseSignals(TimeSeries.signalsFromEvents(events, cfg.nodeMod), cfg)
-
-  /** advise over long signals — what the CSV/tar bundle sources emit. */
-  def adviseSignals(signals: DataFrame, cfg: Config = Config()): DataFrame =
-    adviseOnGrid(gatedGrid(signals, cfg), cfg)
-
-  /** The gated, persisted grid the whole pipeline shares — exposed so a
-    * caller that also renders the per-bucket series (Main) reuses one
-    * grid instead of rebuilding the ffill pipeline.
+  /** The gated, persisted grid the whole pipeline shares, from long
+    * signals (name, node, tsec, value) — the shape every source module
+    * emits. The dense forward-filled grid is the fused
+    * resample+ffill+index build: at most ONE exchange of the signal
+    * stream instead of three, none when the signals already carry the
+    * (name, node) layout (TimeSeries.gridOnePass doc; bit-equality to
+    * the operator-composed form pinned by TimeSeriesSpec).
     */
   def gatedGrid(signals: DataFrame, cfg: Config = Config()): DataFrame =
-    gateSignals(buildGridFromSignals(signals, cfg), cfg)
+    gateSignals(TimeSeries.gridOnePass(signals, cfg.stepSec, cfg.bucketSec), cfg)
       .persist(StorageLevel.MEMORY_AND_DISK).tracked
 
   /** The anomaly union (outliers ∪ change points) of the objective
@@ -125,9 +108,12 @@ object AdvisorReport {
         .select("name", "node", "tsb", "gval"), bucket = cfg.bucketSec,
       permutations = cfg.permutations, maxPoints = cfg.maxPoints)
 
-  /** Advisor core over an already-gated grid: the grid feeds three
-    * independent analyses (outliers, change points, correlation), which
-    * is why callers persist it.
+  /** The advisor answer over an already-gated grid: for each bucket
+    * where an objective signal is anomalous, the top-k correlated
+    * candidate signals (reference :177-230). One DataFrame; building it
+    * collects only the objective slice that NCC broadcasts. The grid
+    * feeds three independent analyses (outliers, change points,
+    * correlation), which is why [[gatedGrid]] persists it.
     */
   def adviseOnGrid(grid: DataFrame, cfg: Config = Config()): DataFrame =
     adviseOnGrid(grid, cfg, objectiveAnomalies(grid, cfg))

@@ -137,11 +137,12 @@ object MetricsCsv {
         col("ts").cast("bigint").as("tsec"),
         col("cells")(col("c.pos")).cast("double").as("value"))
     // the reference drops NaN cells on ingest (metrics_advisor.py:88):
-    // empty cells and non-numeric strings cast to NULL above, and a
-    // literal "NaN" casts to NaN — neither may reach downstream
-    // aggregates. Dropped BEFORE the sample gate so signal validity
-    // counts real samples only.
-    val clean = all.filter(col("value").isNotNull && !isnan(col("value")))
+    // empty cells and non-numeric strings cast to NULL above, a literal
+    // "NaN" casts to NaN and "inf"/"-Infinity" to ±Infinity — none may
+    // reach downstream aggregates (the grid's exact-decimal mean cannot
+    // take a non-finite sample). Dropped BEFORE the sample gate so
+    // signal validity counts real samples only.
+    val clean = all.filter(graft.Num.finite(col("value")))
     // the sample gate is a window count, not an aggregate joined back to
     // the rows: the join would scan (and parse) every CSV twice
     clean.withColumn("n_samples", count(lit(1)).over(Window.partitionBy("name", "node")))

@@ -10,8 +10,10 @@ import java.nio.file.{Files, Path}
   * reference objective, a candidate on the same instance that carries
   * the same step `Lag` samples later, a single-sample spike on a second
   * reference objective in another bucket, one flat series, a background
-  * series with an empty and a `NaN` cell, and a CSV with a `timestamp`
-  * column and no instance column.
+  * series with an empty and a `NaN` cell, `inf` and `-Infinity` cells on
+  * the candidate outside the shift's bucket, and a CSV with a
+  * `timestamp` column and no instance column. A second known answer
+  * runs a Prometheus dump with `NaN` and `+Inf` samples.
   */
 class AdvisorKnownAnswerSpec extends SparkTestBase {
   private val Step = 15L
@@ -42,12 +44,15 @@ class AdvisorKnownAnswerSpec extends SparkTestBase {
     def fmt(xs: Array[Double]) = xs.map(v => "%.2f".formatLocal(java.util.Locale.ROOT, v))
     val spiked = noise(30.0, 1.0)
     spiked(SpikeAt) += 15.0
+    val leaderCells = fmt(leader)
+    leaderCells(2 * BucketSamples + 5) = "inf"
+    leaderCells(9 * BucketSamples + 30) = "-Infinity"
     val background = fmt(noise(60.0, 3.0))
     background(100) = ""
     background(300) = "NaN"
     val metrics = Seq(
       Objective -> fmt(obj),
-      Leader -> fmt(leader),
+      Leader -> leaderCells,
       Spiked -> fmt(spiked),
       Flat -> Array.fill(Samples)("7.00"),
       "node_io_util:by_instance" -> background)
@@ -93,5 +98,27 @@ class AdvisorKnownAnswerSpec extends SparkTestBase {
     assert(flagged.contains((Inst, Start + Step * SpikeAt)),
       s"no outlier at the spike's grid time: $flagged")
     Caches.release()
+  }
+
+  test("Main.run drops NaN and +Inf samples of a Prometheus dump") {
+    // the exposition format allows both; the grid cannot average them
+    val rng = new scala.util.Random(7L)
+    val n = 3 * BucketSamples
+    val shiftAt = BucketSamples + 18
+    val obj = Array.tabulate(n)(i => 50.0 + rng.nextDouble() + (if (i >= shiftAt) 10.0 else 0.0))
+    val cand = Array.tabulate(n)(i => 20.0 + rng.nextDouble() + (if (i >= shiftAt) 20.0 else 0.0))
+    def lines(name: String, xs: Array[Double], special: Int, v: String) =
+      xs.indices.map { i =>
+        val cell = if (i == special) v else "%.2f".formatLocal(java.util.Locale.ROOT, xs(i))
+        s"""$name{instance="$Inst"} $cell ${(Start + Step * i) * 1000}"""
+      }
+    val dir = Files.createTempDirectory("advisor_prom")
+    val dump = dir.resolve("metrics.prom")
+    Files.writeString(dump, (lines(Objective, obj, 10, "NaN") ++
+      lines(Leader, cand, 2 * BucketSamples + 5, "+Inf")).mkString("", "\n", "\n"))
+    val md = Main.run(spark, dump.toString, Seq(Objective))
+    val bucket = Start + BucketSamples * Step
+    assert(md.contains(s"| $bucket | $Objective/$Inst | $Leader/$Inst | 0 |"),
+      s"the shift's bucket does not rank the candidate:\n$md")
   }
 }

@@ -29,7 +29,7 @@ class AdvisorReportSpec extends SparkTestBase {
   }
 
   test("flat signals never appear as ranked candidates") {
-    val advice = AdvisorReport.adviseSignals(signals, cfg).collect()
+    val advice = AdvisorReport.adviseOnGrid(AdvisorReport.gatedGrid(signals, cfg), cfg).collect()
     assert(advice.nonEmpty, "step change must produce an anomalous bucket")
     val cands = advice.map(_.getAs[String]("cand_name")).toSet
     assert(!cands.contains("flatline"), s"flat signal ranked: $cands")
@@ -239,9 +239,37 @@ class AdvisorReportSpec extends SparkTestBase {
     val before = sc.getPersistentRDDs.keySet
     val events = signals.select(col("name").as("event_type"), lit(0L).as("user_id"),
       (col("tsec") * 1000000000L).as("ts"), col("value"))
-    assert(AdvisorReport.advise(events, cfg).collect().nonEmpty)
+    val grid = AdvisorReport.gatedGrid(
+      graft.operators.TimeSeries.signalsFromEvents(events, 4), cfg)
+    assert(AdvisorReport.adviseOnGrid(grid, cfg).collect().nonEmpty)
     Caches.release()
     val added = sc.getPersistentRDDs.keySet -- before
     assert(added.isEmpty, s"advise left ${added.size} cached RDD(s) behind")
+  }
+
+  test("building the objective anomalies runs no job and caches nothing") {
+    val grid = AdvisorReport.gatedGrid(signals, cfg)
+    grid.count()
+    val listener = new TaskSkewListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val tracked = Caches.trackedCount
+      listener.reset()
+      val anomalies = AdvisorReport.objectiveAnomalies(grid, cfg)
+      assert(listener.settledCounters(maxWaitMs = 1000L).jobs == 0)
+      assert(Caches.trackedCount == tracked)
+      assert(anomalies.count() > 0, "the step change must be detected")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      Caches.release()
+    }
+  }
+
+  test("the Granger verdicts cache nothing") {
+    val grid = AdvisorReport.gatedGrid(signals, cfg)
+    val tracked = Caches.trackedCount
+    AdvisorReport.causalSignals(grid, cfg).collect()
+    assert(Caches.trackedCount == tracked)
+    Caches.release()
   }
 }

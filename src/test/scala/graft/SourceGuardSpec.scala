@@ -9,9 +9,10 @@ import scala.jdk.CollectionConverters._
   * operator, function, source and report code never reads the process
   * environment, no code runs a Structured Streaming query, and there
   * is one connected-components loop, only `SignalKernel` spells the
-  * per-signal row tuple, and each oracle fragment `SparkEntry` shares is
-  * spelled once, in its helper. Each rule stops one kind of drift from
-  * coming back a file at a time.
+  * per-signal row tuple, each oracle fragment `SparkEntry` shares is
+  * spelled once, in its helper, only `SparkEntry` names the oracle's
+  * literal stash, and every doc comment sits on a definition. Each rule
+  * stops one kind of drift from coming back a file at a time.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -109,5 +110,27 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       assert(at.nonEmpty && outside.isEmpty,
         s"`$text` spelled outside `$helper` at SparkEntry.scala lines $outside")
     }
+  }
+
+  test("only SparkEntry names the oracle's literal stash") {
+    // the entries whose oracles replay the stash fill it; an operator
+    // that stashes runs a job that only the oracle needs
+    val hits = sources(root).collect {
+      case (p, src) if Seq("TwiddleStash", "EsdLamStash", "OracleLiterals").exists(src.contains) =>
+        p.getFileName.toString
+    }
+    assert(hits == Seq("SparkEntry.scala"), s"stash named in $hits")
+  }
+
+  test("no doc comment sits directly above another") {
+    // Scaladoc attaches only the second one to the definition; the
+    // first documents nothing
+    val hits = sources(root).flatMap { case (p, src) =>
+      src.linesIterator.sliding(2).zipWithIndex.collect {
+        case (Seq(a, b), i) if a.trim.endsWith("*/") && b.trim.startsWith("/**") =>
+          s"${p.getFileName}:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, s"orphaned doc comments end at $hits")
   }
 }
