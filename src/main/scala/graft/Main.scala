@@ -1,7 +1,8 @@
 package graft
 
-import graft.report.AdvisorReport
 import graft.Caches._
+import graft.operators.TimeSeries
+import graft.report.AdvisorReport
 import graft.sources.{MetricsCsv, MetricsProm, MetricsTar, TempDirs}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -27,37 +28,21 @@ object Main {
   val RefObjectives: Seq[String] =
     Seq("tidb_p99_rt:total", "tidb_p99_get_token_dur", "tidb_heap_size:by_instance")
 
-  /** Native sample step of a signal frame: each (name, node) series'
-    * smallest positive timestamp delta, then the MODE across series
-    * (smallest step on ties). The reference hardcodes 15 s for its
-    * bundles (metrics_advisor.py:125); inferring it keeps one CLI
-    * working for 15 s TiDB bundles and hourly synthetic dumps alike.
-    * Per-series first matters: the old union-of-all-timestamps min
-    * would infer 5 s from two 15 s metrics scraped 5 s out of phase
-    * and shift every bucket boundary. Bounded collect: one row.
-    */
-  private def inferStepSec(signals: org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy("name", "node").orderBy("tsec")
-    val perSeries = signals.select(col("name"), col("node"), col("tsec"))
-      .withColumn("d", col("tsec") - lag("tsec", 1).over(w))
-      .filter(col("d") > 0)
-      .groupBy("name", "node").agg(min("d").as("step"))
-    val mode = perSeries.groupBy("step").count()
-      .orderBy(col("count").desc, col("step").asc)
-      .limit(1).collect()
-    if (mode.isEmpty) 3600L else mode(0).getLong(0)
-  }
-
   /** One advisor pass, each layer computed once: the cleaned signals
-    * feed step inference and the grid build from one scan, and one
-    * objective anomaly pass feeds both the advice join and the chart
-    * markers. Those three frames (signals, grid, anomalies) are all the
-    * pass tracks. It leaves nothing behind, also when it throws: it
-    * releases exactly the frames tracked while it ran (frames cached
-    * before the call stay cached), then deletes the temp dirs its
-    * ingest made (the untarred bundle and the link dir).
+    * feed step inference and the grid build from one scan. The objective
+    * anomalies and the objective series are collected once, before NCC
+    * (`AdvisorReport.objectives`), and those driver-side rows feed NCC,
+    * which scores only the anomalous buckets, the chart markers and
+    * Granger. The signals and the grid are all the pass tracks. It
+    * leaves nothing behind, also when it throws: it releases exactly the
+    * frames tracked while it ran (frames cached before the call stay
+    * cached), then deletes the temp dirs its ingest made (the untarred
+    * bundle and the link dir).
+    *
+    * The step is inferred (`TimeSeries.sampleStep`): the reference
+    * hardcodes 15 s for its bundles (metrics_advisor.py:125); inferring
+    * it keeps one CLI working for 15 s TiDB bundles and hourly
+    * synthetic dumps alike.
     */
   def run(spark: SparkSession, input: String, objNames: Seq[String]): String = {
     val tmp = new TempDirs
@@ -75,15 +60,16 @@ object Main {
         else MetricsCsv.read(spark, input, minSamples = 20, tmp)
       ).persist(StorageLevel.MEMORY_AND_DISK).tracked
       // bucket = 40 samples, the reference's count_bucket × sample step
-      // (metrics_advisor.py:124-125: 40 × 15 s = 10 min on its bundles)
-      val step = inferStepSec(signals)
+      // (metrics_advisor.py:124-125: 40 × 15 s = 10 min on its bundles),
+      // and the reference's seasonal cutoff of 0.01 cycles per sample
+      // (metrics_advisor.py:57: f_min = 0.01 / T)
+      val step = TimeSeries.sampleStep(signals)
       val cfg = AdvisorReport.Config(objNames = objNames,
-        stepSec = step, bucketSec = 40L * step)
+        stepSec = step, bucketSec = 40L * step, fMin = 0.01 / step)
       val g = AdvisorReport.gatedGrid(signals, cfg)
-      val a = AdvisorReport.objectiveAnomalies(g, cfg)
-        .persist(StorageLevel.MEMORY_AND_DISK).tracked
-      val advice = AdvisorReport.adviseOnGrid(g, cfg, a)
-      AdvisorReport.renderMarkdown(advice, Some(g), cfg = cfg, anomalies = Some(a))
+      val objs = AdvisorReport.objectives(g, cfg)
+      AdvisorReport.renderMarkdown(AdvisorReport.adviseOnGrid(g, cfg, objs), Some(g),
+        cfg = cfg, objectives = Some(objs))
     } finally tmp.deleteAll()
   }
 

@@ -20,6 +20,15 @@ import org.apache.spark.sql.types.DecimalType
   * 100 TB the candidate grid is streamed in place — no exchange, no
   * joined-row fan-out, no pair-keyed aggregate.
   *
+  * Two forms of the advisor's question live here. [[nccLag]] (every
+  * cell of every lag and bucket) and [[topCorr]] (best lag, then top-k)
+  * are the composed operators that the DuckDB oracle replays and that
+  * `lagConsistency` and the suite call. [[adviseCells]] is the advisor
+  * pass's fused kernel: it scores only the buckets where an objective
+  * is anomalous and emits only the best lag per (objective, candidate,
+  * bucket), equal to the composed form on those buckets bit for bit
+  * (KernelPropertySpec), so the pass skips the cells it would discard.
+  *
   * Cross-engine determinism: the built-in `corr` aggregate is a parallel
   * double co-moment whose summation order (and algorithm) differs per
   * engine — ill-conditioned series (large mean, small variance) amplify
@@ -137,16 +146,120 @@ object Correlate {
   /** [[withQuant]] over one whole series of (b, i, gval) rows: M is the
     * series' max |gval| (1 if that is 0), q = floor(gval / M · 1e9 + 0.5)
     * — the same IEEE op sequence, so the same integers.
+    *
+    * With `minRange`, a bucket whose r4(max − min) is not above it is
+    * dropped first, as the advisor's per-bucket range gate drops it, so
+    * M is taken over the gated rows only. `keep` then selects the
+    * buckets that are quantized and returned; it does not change M.
     */
-  private def quantSeries(name: String, node: String,
-                          rows: Array[(Long, Long, Double)]): QSeries = {
+  private def quantSeries(name: String, node: String, rows: Array[(Long, Long, Double)],
+                          minRange: Option[Double] = None,
+                          keep: Long => Boolean = _ => true): QSeries = {
+    val gated = rows.groupBy(_._1).filter { case (_, rs) =>
+      minRange.forall { g =>
+        var hi = rs(0)._3; var lo = hi
+        rs.foreach { r => hi = math.max(hi, r._3); lo = math.min(lo, r._3) }
+        r4d(hi - lo) > g
+      }
+    }
     var mRaw = 0.0
-    rows.foreach(r => mRaw = math.max(mRaw, math.abs(r._3)))
+    gated.valuesIterator.foreach(_.foreach(r => mRaw = math.max(mRaw, math.abs(r._3))))
     val m = if (mRaw > 0) mRaw else 1.0
-    QSeries(name, node, rows.groupBy(_._1).map { case (b, rs) =>
+    QSeries(name, node, gated.collect { case (b, rs) if keep(b) =>
       val sorted = rs.sortBy(_._2)
       b -> (sorted.map(_._2), sorted.map(r => math.floor(r._3 / m * 1e9 + 0.5).toLong))
     })
+  }
+
+  /** One series of a grid slice collected to the driver: the bucket,
+    * sample index and value of its rows, in `tsb` order. The advisor
+    * pass collects its objectives in this form once and hands them to
+    * both [[adviseCells]] and [[grangerF]].
+    */
+  final case class GridSeries(name: String, node: String, b: Array[Long],
+                              i: Array[Long], gval: Array[Double])
+
+  /** The `objNames` series of a grid (name, node, tsb, b, i, gval),
+    * collected: one [[GridSeries]] per (name, node), in no particular
+    * order.
+    */
+  def collectSeries(grid: DataFrame, objNames: Seq[String]): Array[GridSeries] = {
+    val spark = grid.sparkSession
+    import spark.implicits._
+    grid.filter(col("name").isin(objNames: _*))
+      .select(Seq("name", "node", "tsb", "b", "i", "gval").map(col): _*)
+      .as[(String, String, Long, Long, Long, Double)].collect()
+      .groupBy(r => (r._1, r._2)).toArray.map { case ((name, node), rs) =>
+        val s = rs.sortBy(_._3)
+        GridSeries(name, node, s.map(_._4), s.map(_._5), s.map(_._6))
+      }
+  }
+
+  /** The advisor's NCC, anomaly first: for each anomalous (objective,
+    * bucket) in `anomalous` and each candidate series, the one cell of
+    * the best lag. It equals [[topCorr]]'s best-lag pick over
+    * `nccLag(gate(grid))` restricted to those buckets, bit for bit in
+    * `r`, where gate is the advisor's per-bucket range gate at
+    * `minRange`; the `nccLag`/`topCorr` forms stay as the oracle-checked
+    * composition.
+    *
+    * Plan: the objective series (`objs`, collected once by the caller)
+    * are gated and quantized on the driver, M over their gated rows,
+    * and only their anomalous buckets are broadcast. One
+    * [[SignalKernel.perSignalBI]] kernel per candidate series gates its
+    * buckets, quantizes, scores the 2·lagMax + 1 lags against each
+    * broadcast bucket and emits the largest |r| (smallest lag on ties).
+    * The grid's (name, node) layout carries the kernel, so nothing is
+    * exchanged, joined or persisted. An objective row with a NULL node
+    * has no anomalous bucket, as the anomalous-bucket equi-join had none.
+    */
+  private[graft] def adviseCells(grid: DataFrame, objNames: Seq[String],
+                                 objs: Array[GridSeries], anomalous: Set[(String, String, Long)],
+                                 minRange: Double, lagMax: Int = 3,
+                                 minOverlap: Int = 8): DataFrame = {
+    val spark = grid.sparkSession
+    import spark.implicits._
+    val objQ = objs.filter(_.node != null).map { o =>
+      quantSeries(o.name, o.node, o.b.indices.map(k => (o.b(k), o.i(k), o.gval(k))).toArray,
+        Some(minRange), b => anomalous((o.name, o.node, b)))
+    }.filter(_.buckets.nonEmpty)
+    val wanted = objQ.flatMap(_.buckets.keys).toSet
+    val objBc = spark.sparkContext.broadcast(objQ)
+    val lags = (-lagMax.toLong to lagMax.toLong).toArray
+    val cols = Seq("name", "node", "b", "i", "gval").map(col)
+    SignalKernel.perSignalBI(grid.filter(!col("name").isin(objNames: _*)).select(cols: _*)) {
+      (key: (String, String), it: Iterator[(String, String, Long, Long, Double)]) =>
+        val c = quantSeries(key._1, key._2, it.map(r => (r._3, r._4, r._5)).toArray,
+          Some(minRange), wanted)
+        for {
+          o <- objBc.value.iterator
+          (b, (oi, oq)) <- o.buckets.iterator
+          (ci, cq) <- c.buckets.get(b).iterator
+          (lag, n, r) <- bestLag(oi, oq, ci, cq, lags, minOverlap)
+        } yield (o.name, o.node, c.name, c.node, b, lag, n, r)
+    }.toDF("obj_name", "obj_node", "cand_name", "cand_node", "b", "lag", "n", "r")
+  }
+
+  /** The lag with the largest |r| over `lags` (ascending, so the
+    * smallest lag wins a tie), as (lag, n, r); r is [[pearsonFromMoments]]'
+    * op sequence on [[lagMoments]]' sums. None when no lag keeps a cell.
+    */
+  private def bestLag(xi: Array[Long], xq: Array[Long], yi: Array[Long], yq: Array[Long],
+                      lags: Array[Long], minOverlap: Int): Option[(Long, Long, Double)] = {
+    var best: Option[(Long, Long, Double)] = None
+    var bestAbs = -1.0
+    lags.foreach { lag =>
+      lagMoments(xi, xq, yi, yq, lag).foreach { case (n, sx, sy, sxy, sxx, syy) =>
+        val nd = n.toDouble
+        val vx = nd * sxx - sx * sx
+        val vy = nd * syy - sy * sy
+        if (n >= minOverlap && vx > 0 && vy > 0) {
+          val r = r4d((nd * sxy - sx * sy) / (math.sqrt(vx) * math.sqrt(vy)))
+          if (math.abs(r) > bestAbs) { best = Some((lag, n, r)); bestAbs = math.abs(r) }
+        }
+      }
+    }
+    best
   }
 
   /** Exact moments (n, Σx, Σy, Σxy, Σx², Σy²) of the pairs (x at index
@@ -206,12 +319,18 @@ object Correlate {
     val bestLag = Window
       .partitionBy("obj_name", "obj_node", "cand_name", "cand_node", "b")
       .orderBy(abs(col("r")).desc, col("lag").asc)
-    val perPair = cells
+    rankCandidates(cells
       .withColumn("rn", row_number().over(bestLag))
-      .filter(col("rn") === 1).drop("rn")
+      .filter(col("rn") === 1).drop("rn"), k)
+  }
+
+  /** [[topCorr]]'s ranking of best-lag cells: the top-k candidates per
+    * (obj_name, obj_node, b) by |r|, then cand_name, cand_node.
+    */
+  private[graft] def rankCandidates(best: DataFrame, k: Int): DataFrame = {
     val rankW = Window.partitionBy("obj_name", "obj_node", "b")
       .orderBy(abs(col("r")).desc, col("cand_name").asc, col("cand_node").asc)
-    perPair.withColumn("rank", row_number().over(rankW))
+    best.withColumn("rank", row_number().over(rankW))
       .filter(col("rank") <= k)
   }
 
@@ -693,7 +812,7 @@ object Correlate {
   def dtwDist(grid: DataFrame, objNames: Seq[String], band: Int = 6): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    perObjective(grid, objNames)(xs =>
+    perObjective(grid, objNames, objectiveValues(grid, objNames))(xs =>
       graft.functions.Dtw.znorm(graft.functions.Dtw.quantize(xs))) { (o, c, nd, os, cs) =>
       Iterator.single((o, c, nd, r4d(graft.functions.Dtw.distance(os, cs, band)), os.length))
     }.toDF("obj_name", "cand_name", "node", "dtw", "n")
@@ -707,10 +826,24 @@ object Correlate {
     * scores it the same as a driver. Plan: [[perObjective]]; a pair
     * whose series differ in length is skipped.
     */
-  def grangerF(grid: DataFrame, objNames: Seq[String], p: Int = 2): DataFrame = {
+  def grangerF(grid: DataFrame, objNames: Seq[String], p: Int = GrangerOrder): DataFrame =
+    grangerOn(grid, objNames, objectiveValues(grid, objNames), p)
+
+  private val GrangerOrder = 2
+
+  /** [[grangerF]] at its default order against objective series the
+    * caller already collected ([[collectSeries]] of the same grid and
+    * `objNames`), so the slice is not collected again.
+    */
+  private[graft] def grangerF(grid: DataFrame, objNames: Seq[String],
+                              objs: Array[GridSeries]): DataFrame =
+    grangerOn(grid, objNames, objs.map(s => (s.name, s.node, s.gval)), GrangerOrder)
+
+  private def grangerOn(grid: DataFrame, objNames: Seq[String],
+                        objs: Array[(String, String, Array[Double])], p: Int): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    perObjective(grid, objNames)(identity) { (o, c, nd, os, cs) =>
+    perObjective(grid, objNames, objs)(identity) { (o, c, nd, os, cs) =>
       if (os.length != cs.length) None
       else graft.functions.Granger.test(os, cs, p).map { r =>
         (o, c, nd, r4d(math.min(r.fStat, 1e6)), r4d(r.pValue), r.nEff)
@@ -718,26 +851,36 @@ object Correlate {
     }.toDF("obj_name", "cand_name", "node", "f_stat", "p_value", "n_eff")
   }
 
-  /** The pairwise whole-series kernels' plan, the shape [[nccLag]] has:
-    * the objective slice of `grid` (name, node, tsb, gval) is collected
-    * when this is called ([[SignalKernel.collect]] sorts each series by
-    * `tsb`), passed through `prep` and broadcast by node; every
-    * candidate series gets the same `prep` inside its own (name, node)
-    * group on the grid's signal partitioning and is scored against each
-    * objective of its node as `score(obj_name, cand_name, node,
-    * objective, candidate)`. No series frame is persisted and nothing
-    * is joined.
+  /** The objective slice of `grid` (name, node, tsb, gval), collected
+    * ([[SignalKernel.collect]] sorts each series by `tsb`), as (name,
+    * node, values).
     */
-  private def perObjective[U: Encoder](grid: DataFrame, objNames: Seq[String])(
+  private def objectiveValues(grid: DataFrame, objNames: Seq[String])
+      : Array[(String, String, Array[Double])] =
+    SignalKernel.collect(grid.filter(col("name").isin(objNames: _*))
+        .select(Seq("name", "node", "tsb", "gval").map(col): _*))
+      .map(s => (s._1, s._2, s._4))
+
+  /** The pairwise whole-series kernels' plan, the shape [[nccLag]] has:
+    * the collected objective series `objs` (values in time order) are
+    * passed through `prep` and broadcast by node; every candidate series
+    * of `grid` (name, node, tsb, gval) gets the same `prep` inside its
+    * own (name, node) group on the grid's signal partitioning and is
+    * scored against each objective of its node as `score(obj_name,
+    * cand_name, node, objective, candidate)`. No series frame is
+    * persisted and nothing is joined; an objective with a NULL node is
+    * skipped, as a node equi-join would skip it.
+    */
+  private def perObjective[U: Encoder](grid: DataFrame, objNames: Seq[String],
+                                       objs: Array[(String, String, Array[Double])])(
       prep: Array[Double] => Array[Double])(
       score: (String, String, String, Array[Double], Array[Double]) => IterableOnce[U])
       : Dataset[U] = {
-    val isObj = col("name").isin(objNames: _*)
+    val byNode = objs.filter(_._2 != null).groupBy(_._2)
+      .map { case (node, ss) => node -> ss.map(s => (s._1, prep(s._3))) }
+    val objBc = grid.sparkSession.sparkContext.broadcast(byNode)
     val cols = Seq("name", "node", "tsb", "gval").map(col)
-    val objs = SignalKernel.collect(grid.filter(isObj && col("node").isNotNull).select(cols: _*))
-      .groupBy(_._2).map { case (node, ss) => node -> ss.map(s => (s._1, prep(s._4))) }
-    val objBc = grid.sparkSession.sparkContext.broadcast(objs)
-    SignalKernel.series(grid.filter(!isObj).select(cols: _*)) { (name, node, _, xs) =>
+    SignalKernel.series(grid.filter(!col("name").isin(objNames: _*)).select(cols: _*)) { (name, node, _, xs) =>
       val cs = prep(xs)
       objBc.value.getOrElse(node, Array.empty[(String, Array[Double])]).iterator
         .flatMap { case (o, os) => score(o, name, node, os, cs) }

@@ -66,7 +66,7 @@ private[operators] object SignalKernel {
         (name, node, ts, vs)
       }
 
-  /** [[Correlate.nccLag]]'s form: 5 columns — name, node, bucket (long),
+  /** [[Correlate.nccLag]]'s and [[Correlate.adviseCells]]' form: 5 columns — name, node, bucket (long),
     * sample index (long), value (double) — handed over as rows in no
     * particular order. Its bucket is not a function of the index alone,
     * so it cannot ride the 4-column [[series]] form.

@@ -109,6 +109,34 @@ object TimeSeries {
       .toDF("name", "node", "tsb", "gval", "i", "b")
   }
 
+  /** Native sample step of long signals (name, node, tsec, value): each
+    * series' smallest positive timestamp delta, then the MODE across
+    * series (the smaller step on ties); 3600 when no series has a
+    * positive delta. Per series first matters: the union of all
+    * timestamps would infer 5 s from two 15 s metrics scraped 5 s out
+    * of phase. One [[SignalKernel.series]] pass, which reuses a (name,
+    * node) layout the signals already carry, and a collect of one long
+    * per series; the mode is taken on the driver.
+    */
+  def sampleStep(signals: DataFrame): Long = {
+    val spark = signals.sparkSession
+    import spark.implicits._
+    val steps = SignalKernel.series(
+      signals.select(col("name"), col("node"), col("tsec"), col("value"))) { (_, _, t, _) =>
+        var d = Long.MaxValue
+        var k = 1
+        while (k < t.length) {
+          val x = t(k) - t(k - 1)
+          if (x > 0 && x < d) d = x
+          k += 1
+        }
+        if (d == Long.MaxValue) None else Some(d)
+      }.collect()
+    if (steps.isEmpty) 3600L
+    else steps.groupBy(identity).toSeq.map { case (s, ss) => (s, ss.length) }
+      .minBy { case (s, n) => (-n, s) }._1
+  }
+
   /** Grid with sample index and correlation bucket columns. */
   def indexed(grid: DataFrame, step: Long = StepSec, bucket: Long = BucketSec): DataFrame =
     grid

@@ -3,7 +3,7 @@ package graft.report
 import graft.Caches._
 import graft.Num._
 import graft.operators.{ChangePoints, Correlate, TimeSeries}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -23,10 +23,12 @@ import org.apache.spark.storage.StorageLevel
   * Nothing else here persists: building [[objectiveAnomalies]] runs no
   * job, and the NCC and Granger kernels score candidates against a
   * collected, broadcast objective slice instead of a cached series
-  * frame. `Main.run` runs each layer once and tracks exactly three
-  * frames: the cleaned signals (read by step inference and the grid
-  * build), the grid, and the [[objectiveAnomalies]] frame that both the
-  * advice join and the chart markers read. It runs the pass under
+  * frame. The pass is anomaly first: [[objectives]] collects the
+  * objective anomalies and the objective series once, and those small
+  * driver-side rows feed NCC (only anomalous buckets are scored), the
+  * chart markers and Granger. `Main.run` runs each layer once and
+  * tracks exactly two frames: the cleaned signals (read by step
+  * inference and the grid build) and the grid. It runs the pass under
   * `Caches.scoped`, which releases exactly what was tracked during the
   * pass, so a pass that returns or throws leaves nothing cached, and
   * frames the caller tracked before stay cached.
@@ -43,7 +45,30 @@ object AdvisorReport {
       // the gate's advisor_report query pins (19, unbound) so the whole
       // composite replays in the DuckDB oracle — see SparkEntry
       permutations: Int = 100,
-      maxPoints: Int = 64)
+      maxPoints: Int = 64,
+      // the noise decomposition's seasonal lowpass cutoff, in Hz, for a
+      // series with no confident dominant period; the reference's is
+      // 0.01 cycles per sample (metrics_advisor.py:57, 0.01 / 15 s), and
+      // `Main.run` sets 0.01 / stepSec. The default keeps the daily
+      // cutoff the advisor_report oracle replays
+      fMin: Double = 1.0 / 86400.0)
+
+  /** What the advisor pass collects once about its objectives: the
+    * [[objectiveAnomalies]] rows (name, node, tsb, kind, b) and the
+    * objective series of the grid. NCC scores only the anomalous
+    * buckets, the chart markers read the change points, and Granger
+    * reads the series.
+    */
+  final case class Objectives(anomalies: Array[Row], series: Array[Correlate.GridSeries])
+
+  /** [[Objectives]] of a [[gatedGrid]]: the anomalies collected first
+    * (the first action on a fresh grid also builds its cache), then the
+    * objective series.
+    */
+  def objectives(grid: DataFrame, cfg: Config = Config()): Objectives = {
+    val anomalies = objectiveAnomalies(grid, cfg).collect()
+    Objectives(anomalies, Correlate.collectSeries(grid, cfg.objNames))
+  }
 
   /** The reference's validity gate (metrics_advisor.py:146): drop
     * signals whose whole-series range is ≤ minRange — flat signals
@@ -70,8 +95,13 @@ object AdvisorReport {
     * Same window-not-join shape as [[gateSignals]]: (name, node)
     * partitioning satisfies the (name, node, b) clustering, so this is
     * a sort within the cached partitions, not a shuffle.
+    *
+    * [[adviseOnGrid]] applies the same gate inside its NCC kernel
+    * ([[Correlate.adviseCells]]); this composed form is the one
+    * `nccLag` takes, the reference the kernel is property-tested
+    * against, and the NCC input of the benchmark's traced pass.
     */
-  private def gateBuckets(grid: DataFrame, cfg: Config): DataFrame = {
+  private[graft] def gateBuckets(grid: DataFrame, cfg: Config): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("name", "node", "b")
     grid.withColumn("_rng", r4(max("gval").over(w) - min("gval").over(w)))
       .filter(col("_rng") > cfg.minRange)
@@ -91,7 +121,8 @@ object AdvisorReport {
       .persist(StorageLevel.MEMORY_AND_DISK).tracked
 
   /** The anomaly union (outliers ∪ change points) of the objective
-    * signals, with the config's detector knobs.
+    * signals, with the config's detector knobs and the noise
+    * decomposition at the grid's own step and `cfg.fMin` cutoff.
     *
     * Detection runs on the OBJECTIVE slice only. The reference detects
     * on every signal because candidate anomalies gate its per-bucket
@@ -106,28 +137,36 @@ object AdvisorReport {
     ChangePoints.anomalyUnion(
       grid.filter(col("name").isin(cfg.objNames: _*))
         .select("name", "node", "tsb", "gval"), bucket = cfg.bucketSec,
+      stepSec = cfg.stepSec.toDouble, fMin = cfg.fMin,
       permutations = cfg.permutations, maxPoints = cfg.maxPoints)
 
   /** The advisor answer over an already-gated grid: for each bucket
     * where an objective signal is anomalous, the top-k correlated
-    * candidate signals (reference :177-230). One DataFrame; building it
-    * collects only the objective slice that NCC broadcasts. The grid
-    * feeds three independent analyses (outliers, change points,
-    * correlation), which is why [[gatedGrid]] persists it.
+    * candidate signals (reference :177-230), ordered by (obj_name,
+    * obj_node, b, rank). One DataFrame; building it collects the
+    * [[objectives]]. The grid feeds three independent analyses
+    * (outliers, change points, correlation), which is why [[gatedGrid]]
+    * persists it.
     */
   def adviseOnGrid(grid: DataFrame, cfg: Config = Config()): DataFrame =
-    adviseOnGrid(grid, cfg, objectiveAnomalies(grid, cfg))
+    adviseOnGrid(grid, cfg, objectives(grid, cfg))
 
-  /** [[adviseOnGrid]] over an [[objectiveAnomalies]] frame the caller
-    * already holds (and also hands to [[renderMarkdown]]).
+  /** [[adviseOnGrid]] over [[objectives]] the caller already holds (and
+    * also hands to [[renderMarkdown]]). The answer equals
+    * `topCorr(nccLag(gateBuckets(grid)))` joined with the anomalous
+    * objective buckets; the fused kernel ([[Correlate.adviseCells]])
+    * scores only those buckets and emits only each pair's best lag, and
+    * the rank window runs over an obj_name hash layout, which the
+    * render's per-objective cap reuses, so ranking and capping cost one
+    * exchange.
     */
-  def adviseOnGrid(grid: DataFrame, cfg: Config, anomalies: DataFrame): DataFrame = {
-    val anomalousObjBuckets = anomalies
-      .select(col("name").as("obj_name"), col("node").as("obj_node"), col("b"))
-      .distinct()
-    val ranked = Correlate.topCorr(
-      Correlate.nccLag(gateBuckets(grid, cfg), cfg.objNames), cfg.topK)
-    ranked.join(anomalousObjBuckets, Seq("obj_name", "obj_node", "b"))
+  def adviseOnGrid(grid: DataFrame, cfg: Config, objs: Objectives): DataFrame = {
+    val anomalous = objs.anomalies
+      .map(r => (r.getAs[String]("name"), r.getAs[String]("node"), r.getAs[Long]("b")))
+      .toSet
+    val cells = Correlate.adviseCells(grid, cfg.objNames, objs.series, anomalous, cfg.minRange)
+    Correlate.rankCandidates(cells.repartition(col("obj_name")), cfg.topK)
+      .select("obj_name", "obj_node", "b", "cand_name", "cand_node", "lag", "n", "r", "rank")
       .orderBy("obj_name", "obj_node", "b", "rank")
   }
 
@@ -137,9 +176,14 @@ object AdvisorReport {
     * bucket). Bounded by construction: (top-k + objectives) × buckets ×
     * samples-per-bucket.
     */
-  private def bucketSeriesFor(grid: DataFrame, wanted: DataFrame): DataFrame = {
+  private def bucketSeriesFor(grid: DataFrame, wanted: Seq[(String, String, Long)]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("name", "node", "b")
-    grid.join(wanted, Seq("name", "node", "b"), "left_semi")
+    // a literal IN over the bounded wanted set, not a semi-join: the
+    // join's broadcast of a local relation ran a job of its own. A NULL
+    // node never matched the join's equality, so it is left out here
+    val keys = wanted.filter(_._2 != null)
+      .map { case (name, node, b) => struct(lit(name), lit(node), lit(b)) }
+    grid.filter(struct(col("name"), col("node"), col("b")).isin(keys: _*))
       .withColumn("rel", r4(col("gval") / (abs(max("gval").over(w)) + lit(1e-10))))
       .select("name", "node", "b", "i", "rel")
   }
@@ -162,13 +206,17 @@ object AdvisorReport {
     * follow-up question — "which of the correlated candidates looks
     * like a driver rather than a fellow victim". Significant pairs
     * only, strongest evidence first, deterministic tiebreaks.
+    * `objectives`, the grid's objective series already collected
+    * ([[Objectives]]), spares collecting them again.
     */
-  def causalSignals(grid: DataFrame, cfg: Config = Config(),
-                    alpha: Double = 0.05): DataFrame =
-    Correlate.grangerF(grid.select("name", "node", "tsb", "gval"), cfg.objNames)
+  def causalSignals(grid: DataFrame, cfg: Config = Config(), alpha: Double = 0.05,
+                    objectives: Option[Array[Correlate.GridSeries]] = None): DataFrame = {
+    val g = grid.select("name", "node", "tsb", "gval")
+    objectives.fold(Correlate.grangerF(g, cfg.objNames))(Correlate.grangerF(g, cfg.objNames, _))
       .filter(col("p_value") < alpha)
       .orderBy(col("p_value").asc, col("f_stat").desc,
         col("obj_name").asc, col("cand_name").asc, col("node").asc)
+  }
 
   /** Release the pipeline's cached grid — scoped to the frame the
     * pipeline itself persisted, never the caller's session-wide cache.
@@ -233,9 +281,10 @@ object AdvisorReport {
     * involved, both as data lines and as a rendered inline-SVG chart
     * (what the reference's PNGs draw). Collects only the
     * ranked table and the gated per-bucket series — both top-k-bounded.
-    * The chart markers come from `anomalies`, the [[objectiveAnomalies]]
-    * frame the advice was joined against; without it the detector runs
-    * once more here with the same config.
+    * The chart markers and the Granger objectives come from `objectives`,
+    * the [[Objectives]] the advice was built from; without them the
+    * detector runs and the objective slice is collected once more here
+    * with the same config.
     *
     * `limit` caps the advice rows per objective, in advice order, so
     * one objective with many anomalous buckets cannot push the others
@@ -244,10 +293,10 @@ object AdvisorReport {
     */
   def renderMarkdown(advice: DataFrame, grid: Option[DataFrame] = None,
                      limit: Int = 500, cfg: Config = Config(),
-                     anomalies: Option[DataFrame] = None): String = {
+                     objectives: Option[Objectives] = None): String = {
     val perObj = org.apache.spark.sql.expressions.Window.partitionBy("obj_name")
-    // the repartition lets the optimizer drop advice's global sort, so
-    // the cap costs one small exchange, not a range sort plus a second
+    // the repartition drops advice's global sort, and over adviseOnGrid's
+    // obj_name layout it adds no exchange: ranking and the cap share one
     val capped = advice.repartition(col("obj_name"))
       .withColumn("_i", row_number().over(perObj.orderBy("obj_node", "b", "rank")))
       .withColumn("_n", count(lit(1)).over(perObj))
@@ -291,8 +340,6 @@ object AdvisorReport {
       // re-using the advice DataFrame here would re-execute the whole
       // advisor DAG (anomaly union + permutation tests) a second time,
       // since only the input grid is cached
-      val spark = g.sparkSession
-      import spark.implicits._
       val wanted = rows
         .flatMap(r => Seq(
           (r.getAs[String]("obj_name"), r.getAs[String]("obj_node"), r.getAs[Long]("b")),
@@ -300,7 +347,7 @@ object AdvisorReport {
         .distinct
       // a wanted (signal, bucket) holds at most bucketSec / stepSec
       // samples, so the bound never cuts a chart short
-      val series = bucketSeriesFor(g, wanted.toSeq.toDF("name", "node", "b"))
+      val series = bucketSeriesFor(g, wanted.toSeq)
         .orderBy("b", "name", "node", "i")
         .limit(wanted.length * math.max(1, (cfg.bucketSec / cfg.stepSec).toInt)).collect()
       val bySignal = series
@@ -315,9 +362,8 @@ object AdvisorReport {
       // its axvlines at the CHANGEPOINT timestamps of the objective
       // (metrics_advisor.py:156 builds anomaly_ts from cp only)
       val anomTs: Map[(String, String, Long), Seq[Long]] =
-        anomalies.getOrElse(objectiveAnomalies(g, cfg))
-          .filter(col("kind") === "changepoint")
-          .collect()
+        objectives.fold(objectiveAnomalies(g, cfg).collect())(_.anomalies)
+          .filter(_.getAs[String]("kind") == "changepoint")
           .groupBy(r => (r.getAs[String]("name"), r.getAs[String]("node"),
             r.getAs[Long]("b")))
           .view.mapValues(_.map(_.getAs[Long]("tsb")).toSeq.sorted).toMap
@@ -350,7 +396,8 @@ object AdvisorReport {
       }
     }
     grid.foreach { g =>
-      val causal = causalSignals(g, cfg).limit(50).collect()
+      val causal = causalSignals(g, cfg, objectives = objectives.map(_.series))
+        .limit(50).collect()
       if (causal.nonEmpty) {
         sb.append("\n## Likely drivers (Granger)\n\n")
         sb.append("| objective | candidate | F | p |\n")

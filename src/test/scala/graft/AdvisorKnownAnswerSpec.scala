@@ -100,6 +100,38 @@ class AdvisorKnownAnswerSpec extends SparkTestBase {
     Caches.release()
   }
 
+  test("a warm Main.run pass runs at most 12 jobs and caches only the signals and the grid") {
+    val dir = Files.createTempDirectory("advisor_budget")
+    writeBundle(dir)
+    val sc = spark.sparkContext
+    Main.run(spark, dir.toString, Main.RefObjectives) // warm-up
+    val jobs = new TaskSkewListener
+    // RDDs that stored a block while the pass ran: its cached frames
+    val cached = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val blocks = new org.apache.spark.scheduler.SparkListener {
+      override def onBlockUpdated(e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId.asRDDId
+          .filter(_ => e.blockUpdatedInfo.storageLevel.isValid)
+          .foreach(id => cached.add(id.rddId))
+    }
+    sc.addSparkListener(jobs)
+    sc.addSparkListener(blocks)
+    try {
+      val persisted = sc.getPersistentRDDs.keySet
+      val tracked = Caches.trackedCount
+      jobs.reset()
+      Main.run(spark, dir.toString, Main.RefObjectives)
+      val c = jobs.settledCounters()
+      assert(c.jobs <= 12, s"${c.jobs} jobs: ${c.sites.mkString("; ")}")
+      assert(cached.size == 2, s"the pass cached ${cached.size} frames, not the signals and the grid")
+      assert(Caches.trackedCount == tracked, "the pass left a tracked frame behind")
+      assert(sc.getPersistentRDDs.keySet == persisted, "the pass left a frame cached")
+    } finally {
+      sc.removeSparkListener(jobs)
+      sc.removeSparkListener(blocks)
+    }
+  }
+
   test("Main.run drops NaN and +Inf samples of a Prometheus dump") {
     // the exposition format allows both; the grid cannot average them
     val rng = new scala.util.Random(7L)

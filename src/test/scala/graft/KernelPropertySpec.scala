@@ -485,6 +485,85 @@ class KernelPropertySpec extends SparkTestBase {
     }
   }
 
+  test("the advisor's fused NCC kernel equals topCorr(nccLag(gateBuckets)) on anomalous buckets") {
+    import graft.operators.Correlate
+    import graft.report.AdvisorReport
+    import org.apache.spark.sql.DataFrame
+    val rng = new scala.util.Random(0xad71L)
+    val objNames = Seq("o1", "o2")
+    val width = 12
+    for (trial <- 0 until 4) {
+      // a few base shapes, reused under several names so that |r| ties
+      // across candidates (copies) and across lags (periodic, negated)
+      def shape(kind: Int, seed: Int)(i: Int, b: Long): Double = kind match {
+        case 0 => ((i * 7919 + seed * 104729) % 1000) / 10.0 - 50.0
+        // period 3: lags 0 and ±3 tie at |r| = 1 where the overlap allows
+        case 1 => Array(1.0, 4.0, -2.0)((i + seed) % 3)
+        // flat within some buckets: gated there on either side
+        case 2 => if ((b / 60 / width + seed) % 2 == 0) 4.0 else math.sin(i * 0.7 + seed)
+        // all zero: M = 0 quantizes with M = 1, gated everywhere
+        case 3 => if (seed % 2 == 0) 0.0 else -0.0
+        // ranges just at (gated) and just above (kept) the 0.005 gate
+        case 4 => 4.0 + (if ((b / 60 / width) % 2 == 0) 0.005 else 0.0051) * ((i + seed) % 2)
+        case _ => ((i * 31 + seed * 17) % 11) * 0.25
+      }
+      // per node, o1's shape cycles through the kinds by trial; c0 and
+      // c1 copy it and c7 negates it (ties across candidates and, for a
+      // periodic o1, across lags); every other series draws its own
+      val spec = (for (name <- objNames ++ (0 until 8).map(c => s"c$c"); node <- Seq("n0", "n1"))
+        yield (name, node) -> (rng.nextInt(6), rng.nextInt(5), 1.0)).toMap
+      val copied = spec ++ Seq("n0", "n1").flatMap { node =>
+        val o = (Seq(1, 2, 4, 0)(trial), rng.nextInt(5), 1.0)
+        Seq(("o1", node) -> o, ("c0", node) -> o, ("c1", node) -> o,
+          ("c7", node) -> o.copy(_3 = -1.0))
+      }
+      val rows = for {
+        ((name, node), (kind, seed, sign)) <- copied.toSeq.sortBy(_._1)
+        // series start mid-bucket and end anywhere, so edge buckets are
+        // short and only some lags reach minOverlap there
+        start = rng.nextInt(2 * width)
+        i <- start until start + 2 * width + rng.nextInt(4 * width)
+        b = i / width * width * 60L
+      } yield (name, node, i * 60L, sign * shape(kind, seed)(i, b), i.toLong, b)
+      val g = rng.shuffle(rows).toDF("name", "node", "tsb", "gval", "i", "b").repartition(3)
+      val cfg = AdvisorReport.Config(objNames = objNames)
+      // anomalous buckets: a random subset of each objective's buckets,
+      // none at all for one objective series
+      val objBuckets = rows.filter(r => objNames.contains(r._1))
+        .map(r => (r._1, r._2, r._6)).distinct.sortBy(identity)
+      val skipped = objBuckets.head._1 -> objBuckets.head._2
+      val anomalous = objBuckets.filter(t => (t._1, t._2) != skipped && rng.nextInt(3) != 0)
+      val anomalies = anomalous.map(t => (t._1, t._2, t._3 + 60L, "outlier", t._3))
+        .toDF("name", "node", "tsb", "kind", "b")
+      for ((k, minOverlap) <- Seq((5, 8), (2, 3), (10, 12))) {
+        val objs = AdvisorReport.Objectives(anomalies.collect(), Correlate.collectSeries(g, objNames))
+        val got = Correlate.rankCandidates(
+          Correlate.adviseCells(g, objNames, objs.series, anomalous.toSet, cfg.minRange,
+            minOverlap = minOverlap), k)
+        val want = Correlate.topCorr(Correlate.nccLag(AdvisorReport.gateBuckets(g, cfg), objNames,
+            minOverlap = minOverlap), k)
+          .join(anomalies.select(col("name").as("obj_name"), col("node").as("obj_node"), col("b"))
+            .distinct(), Seq("obj_name", "obj_node", "b"))
+        def sorted(df: DataFrame) =
+          df.select("obj_name", "obj_node", "b", "cand_name", "cand_node", "lag", "n", "r", "rank")
+            .as[(String, String, Long, String, String, Long, Long, Double, Int)].collect()
+            .sortBy(r => (r._1, r._2, r._3, r._9)).toSeq
+        val (a, e) = (sorted(got), sorted(want))
+        assert(e.nonEmpty, s"trial $trial k $k minOverlap $minOverlap: no reference rows")
+        assert(a.size == e.size, s"trial $trial k $k minOverlap $minOverlap: " +
+          s"${a.size} kernel rows vs ${e.size} reference rows")
+        a.zip(e).foreach { case (x, y) =>
+          assert(x.copy(_8 = 0.0) == y.copy(_8 = 0.0) &&
+            java.lang.Double.doubleToRawLongBits(x._8) == java.lang.Double.doubleToRawLongBits(y._8),
+            s"trial $trial: kernel $x vs reference $y")
+        }
+        // the same rows through the pass entry point, at its minOverlap
+        if (minOverlap == 8)
+          assert(sorted(AdvisorReport.adviseOnGrid(g, cfg.copy(topK = k), objs)) == a)
+      }
+    }
+  }
+
   test("e-divisive change points equal the per-segment-sort permutation test") {
     import graft.functions.EDivisive.ChangePoint
     // the formulation before one argsort per permutation, kept verbatim
